@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   * A warmup pass (table footers + one tiny query) runs first so the
@@ -239,10 +237,17 @@ object Bench {
         v.toString
       case None => cpus
     }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
+    val stateStore = sys.env.get("SPARK_GRAFT_STATE_STORE").map(_.toLowerCase) match {
+      case Some("rocksdb") => Map("spark.sql.streaming.stateStore.providerClass" ->
+        graft.streaming.StateStoreConf.RocksDbProvider)
+      case Some("hdfs") | None => Map.empty[String, String]
+      // loud: a typo'd provider name must never silently mislabel an
+      // A/B measurement as the default provider
+      case Some(other) => sys.error(
+        s"SPARK_GRAFT_STATE_STORE='$other' unrecognized (want rocksdb|hdfs)")
+    }
+    val spark = Sessions.local(cpus.toInt, Some(shufflePartitions.toInt), Map(
+      "spark.sql.adaptive.enabled" -> "true",
       // let AQE size-coalesce CACHED plan output too (off by Spark
       // default): the staged operators (c19/c27/c32/c42) persist small
       // intermediate frames whose downstream scans otherwise run at the
@@ -250,35 +255,27 @@ object Bench {
       // c42 at 32 threads: 3.7 -> 2.3 s with results bit-identical (the
       // repo's order-free integer-sum discipline means partitioning can
       // never change a value, only the task count)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "true"))
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" ->
+        sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "true"),
       // A/B knob: false = AQE coalesces post-shuffle partitions to the
       // advisory size instead of keeping one per core — at bench scale
       // the model-table stages of the staged operators (c42/c27/c19)
       // are kilobytes across 32 tasks, pure scheduling overhead
       // (results/c42_parallelism_ab.json)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = (sys.env.get("SPARK_GRAFT_STATE_STORE").map(_.toLowerCase) match {
-      case Some("rocksdb") => builder.config(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      case Some("hdfs") | None => builder
-      // loud: a typo'd provider name must never silently mislabel an
-      // A/B measurement as the default provider
-      case Some(other) => sys.error(
-        s"SPARK_GRAFT_STATE_STORE='$other' unrecognized (want rocksdb|hdfs)")
-    }).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" ->
+        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true")) ++ stateStore)
 
-    // warmup: open every table once (footer reads, codec init, JIT)
+    // warmup: open every table once (footer reads, codec init, JIT).
+    // Only the tables the dir holds: a replica slice (e.g. the
+    // documents-only tools/make_lm_slice.py output) carries just the
+    // tables its SPARK_GRAFT_BENCH_ONLY keys read.
+    def present(t: String) =
+      java.nio.file.Files.exists(java.nio.file.Paths.get(sfDir, s"$t.parquet"))
     Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "documents", "embeddings").foreach { t =>
+      "lineitem", "documents", "embeddings").filter(present).foreach { t =>
       Tables.load(spark, sfDir, t).count()
     }
-    Tables.events(spark, sfDir).count()
+    if (present("events")) Tables.events(spark, sfDir).count()
     spark.range(1000000L).selectExpr("sum(id)").collect()
 
     // Stateful streaming queries: every micro-batch commits one state

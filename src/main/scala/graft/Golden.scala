@@ -106,13 +106,7 @@ object GoldenGen {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else Golden.SnapshotPath
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-golden-gen")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = Sessions.local(4, conf = Map("spark.app.name" -> "graft-golden-gen"))
     try {
       val lines = Golden.rowsOnlyKeys.map { k =>
         val df = SparkEntry.queries(k)(spark, sfDir)

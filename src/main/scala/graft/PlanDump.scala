@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic main: run ONE SparkEntry query on a dir and print the
   * EXECUTED physical plan (AQE-final, so runtime join strategies and
@@ -21,22 +20,15 @@ object PlanDump {
       sys.error("SPARK_GRAFT_KEY is required"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString).toInt
+    val shuffle = sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt)
     require(SparkEntry.queries.contains(key), s"unknown query key '$key'")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plan-dump")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
     // SPARK_GRAFT_LOCAL_DIR (e.g. /dev/shm/spark-local): shuffle/spill
-    // dir override — this VM's virtio disk writes ~330 MB/s, so
-    // disk-path shuffles at sf50 measure the disk, not the plan
-    val spark = sys.env.get("SPARK_GRAFT_LOCAL_DIR")
-      .fold(builder)(d => builder.config("spark.local.dir", d))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // dir override — a virtio disk writing ~330 MB/s makes disk-path
+    // shuffles at sf50 measure the disk, not the plan
+    val spark = Sessions.local(cpus, shuffle, Map(
+      "spark.app.name" -> "graft-plan-dump",
+      "spark.sql.adaptive.enabled" -> "true") ++
+      sys.env.get("SPARK_GRAFT_LOCAL_DIR").map("spark.local.dir" -> _))
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {

@@ -1,7 +1,7 @@
 package graft
 
 /** The ONE JSON-string escape for every JSON-emitting main (Bench,
-  * the probes): env-derived strings (paths, labels) are spliced into
+  * Verify): env-derived strings (paths, labels) are spliced into
   * hand-built JSON lines, and a quote/backslash/control char in one
   * would emit an invalid artifact. Numbers from env go through
   * `.toInt` at the call site so a non-numeric value fails loudly

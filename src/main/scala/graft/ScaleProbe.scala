@@ -59,10 +59,8 @@ object ScaleProbe {
   }
 
   /** THE probe corpus: ~40 tokens per doc from a 5000-token random
-    * vocab, 10% near-dups (doc id−1 with one token changed). ONE copy
-    * shared by the focused A/B probes (C27Probe/C33Probe) — their
-    * "ScaleProbe's shape" comparability claim holds only if this
-    * generator is the single source of truth. */
+    * vocab, 10% near-dups (doc id−1 with one token changed) — the
+    * "100k-doc probe shape" the committed A/B artifacts cite. */
   private[graft] def synthDocs(
       spark: SparkSession, nDocs: Int): DataFrame = {
     import spark.implicits._
@@ -162,16 +160,10 @@ object ScaleProbe {
     val nVecs = sys.env.getOrElse("SPARK_GRAFT_PROBE_VECS", "200000").toInt
     val dim = sys.env.getOrElse("SPARK_GRAFT_PROBE_DIM", "64").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // the large-state streaming deployment conf (RocksDB provider +
-      // changelog checkpointing) — shared, see [[ScaleProbe.largeStateConf]]
-      .config(ScaleProbe.largeStateConf)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the large-state streaming deployment conf (RocksDB provider +
+    // changelog checkpointing) — shared, see [[ScaleProbe.largeStateConf]]
+    val spark = Sessions.local(cpus.toInt,
+      conf = Map("spark.sql.adaptive.enabled" -> "true") ++ ScaleProbe.largeStateConf)
     import spark.implicits._
 
     val docs = ScaleProbe.synthDocs(spark, nDocs)
@@ -490,17 +482,10 @@ object D12Probe {
     // SPARK_GRAFT_SHUFFLE: state-partition A/B at probe scale (the
     // Bench stateful-class knob, here against REAL state volume)
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the large-state streaming deployment conf (RocksDB provider +
-      // changelog checkpointing) — shared, see [[ScaleProbe.largeStateConf]]
-      .config(ScaleProbe.largeStateConf)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the large-state streaming deployment conf (RocksDB provider +
+    // changelog checkpointing) — shared, see [[ScaleProbe.largeStateConf]]
+    val spark = Sessions.local(cpus.toInt, Some(shuffle.toInt),
+      Map("spark.sql.adaptive.enabled" -> "true") ++ ScaleProbe.largeStateConf)
     try {
       val events = ScaleProbe.synthEvents(spark, nEvents)
       val (stateMax, wall, triggers) =

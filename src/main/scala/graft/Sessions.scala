@@ -1,0 +1,26 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one place a graft SparkSession is built. Every main and spec
+  * runs local mode on the same base: `cpus` worker threads, one shuffle
+  * partition per thread unless `shufflePartitions` says otherwise, no
+  * UI, UTC session time zone (the oracle compares timestamps as UTC)
+  * and WARN logging. `conf` carries a caller's own settings on top of
+  * the base (an entry here wins over it). */
+object Sessions {
+  def local(
+      cpus: Int,
+      shufflePartitions: Option[Int] = None,
+      conf: Map[String, String] = Map.empty): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions.getOrElse(cpus).toString)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config(conf)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}

@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Emits the nprobe-sweep (b11) as a CSV artifact with the exact column
   * shape the reference publishes (results/exrabitq/openai1536_exhaf4
   * .csv: `nprobe,QPS,recall,ratio`), so the two engines' headline
@@ -21,13 +19,7 @@ object SweepCsv {
       s"results/sweep_$sf.csv"
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-sweep-csv")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = Sessions.local(cpus.toInt, conf = Map("spark.app.name" -> "graft-sweep-csv"))
     try {
       import spark.implicits._
       val rows = operators.AnnQueries.nprobeSweepTimed(spark, sfDir)

@@ -47,10 +47,8 @@ object SweepRef {
   private def env(name: String, dflt: Int): Int =
     sys.env.get(name).map(_.toInt).getOrElse(dflt)
 
-  /** The seeded Gaussian-mixture embedding generator — ONE copy,
-    * shared by the sweep and the SearchProfile harness so profile
-    * corpora are bit-identical to sweep corpora. */
-  private[graft] def synthDf(
+  /** The seeded Gaussian-mixture embedding generator. */
+  private def synthDf(
       bcCenters: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
       blend: Float,
       noise: Float,
@@ -81,7 +79,7 @@ object SweepRef {
   }
 
   /** The deterministic topic centers for a given (topics, dim). */
-  private[graft] def topicCenters(topics: Int, dim: Int): Array[Array[Float]] = {
+  private def topicCenters(topics: Int, dim: Int): Array[Array[Float]] = {
     val rnd = new scala.util.Random(7L)
     Array.fill(topics)(Array.fill(dim)(rnd.nextGaussian().toFloat))
   }
@@ -143,10 +141,8 @@ object SweepRef {
     // quantized path instead.
     val highAcc = sys.env.getOrElse("SPARK_GRAFT_SWEEP_MODE", "highacc") == "highacc"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-sweep-ref")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = Sessions.local(cpus.toInt, conf = Map(
+      "spark.app.name" -> "graft-sweep-ref",
       // d=1536 float arrays are ~6 KB/row: the default 4096-row
       // columnar batch tries to reserve multi-MB contiguous child
       // vectors per column and the r15 rerun died in
@@ -154,11 +150,7 @@ object SweepRef {
       // keeps batches ~3 MB; array-heavy tables want batch size sized
       // to ROW BYTES, not row count (the same rule a 100 TB embedding
       // table needs).
-      .config("spark.sql.parquet.columnarReaderBatchSize", "512")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.parquet.columnarReaderBatchSize" -> "512"))
     import spark.implicits._
     try {
       // --- synthetic corpus: seeded Gaussian-mixture embeddings ---
@@ -250,7 +242,7 @@ object SweepRef {
       // make a one-shot caller pay a full-index pack), and the batch
       // phase that would otherwise build the cache runs after the
       // ladder
-      if (IVFIndex.packedEnabled) model.packedIndex(spark)
+      model.packedIndex(spark)
       // one untimed warm search: JIT + codegen compile, not the kernel,
       // would otherwise dominate the first (smallest-nprobe) row
       searchAt(ladder.head).count()
@@ -367,10 +359,10 @@ object SweepRef {
             s""""nprobe":${p.nprobe},"nq":${p.nQueries},"verdict":"${p.verdict}",""" +
             s""""k_flat":${p.kFlat},"k_split":${p.kSplit}}"""
         }.getOrElse("null")
-        // the kernel-roofline row (graft.KernelProbe): how far the LUT
-        // estimate kernel sits from measured stream bandwidth — embeds
-        // the probe artifact verbatim when present so the sweep's QPS
-        // ladder and its kernel bound travel together
+        // the kernel-roofline row: how far the LUT estimate kernel
+        // sits from measured stream bandwidth — embeds the committed
+        // results/kernel_roofline.json verbatim when present so the
+        // sweep's QPS ladder and its kernel bound travel together
         // wrapped with the artifact file's mtime: the file is a
         // COMMITTED artifact, so it is always present after checkout —
         // the timestamp is what tells a reader whether the embedded

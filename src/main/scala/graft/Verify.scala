@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -23,13 +22,7 @@ object Verify {
       System.err.println(s"[verify] SUBSET MODE: ${ks.size} of " +
         s"${SparkEntry.queries.size} queries; oracle_sql.json covers only the subset")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt)
     new java.io.File(outDir).mkdirs()
     // enable the model-derived oracle sidecars (see OracleSide): the
     // DuckDB compare that follows this run reads them from the fixed

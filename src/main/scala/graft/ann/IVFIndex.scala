@@ -37,46 +37,26 @@ object IVFIndex {
     * (v2 = bit-packed ex_code). Load fails fast on mismatch. */
   val FormatVersion = 2L
 
-  /** SPARK_GRAFT_SEARCH_PROFILE=1 prints per-chunk stage walls
-    * (driver ranking, broadcast, job) and cumulative kernel counters —
-    * the instrumentation behind SURVEY §6's chunk-cost breakdown. */
-  /** SPARK_GRAFT_PACKED=0 disables the model-lifetime packed object
-    * cache (searchOn falls back to the per-chunk entry scan) — the
-    * A/B knob behind the committed layout comparison; results are
-    * identical either way (one scanRuns kernel). */
-  private[graft] val packedEnabled =
-    !sys.env.get("SPARK_GRAFT_PACKED").contains("0")
-
-  /** SPARK_GRAFT_PACKED_SIDECAR=0 makes [[IVFModel.load]] ignore an
-    * at-rest packed sidecar (the cold model re-packs from the entries
-    * instead) — the A/B knob behind the committed cold-start
-    * comparison; results are identical either way. */
-  private[graft] val packedSidecarEnabled =
-    !sys.env.get("SPARK_GRAFT_PACKED_SIDECAR").contains("0")
-
-  private[graft] val profileSearch =
-    sys.env.get("SPARK_GRAFT_SEARCH_PROFILE").contains("1")
-
   /** Cumulative kernel counters (entries buffered / estimates /
-    * reranks), registered once per SparkContext when profiling —
-    * keyed by context, not JVM lifetime, so a session restart in the
-    * same JVM (the test-suite pattern) gets fresh accumulators instead
-    * of silently adding to (or failing on) stale ones. Counters are
-    * cumulative across concurrent chunks: with two chunks in flight,
-    * per-chunk deltas printed from these interleave. */
-  @transient @volatile private var profAccsV: (
+    * reranks), always on: each scan task adds its three totals once.
+    * Registered once per SparkContext — keyed by context, not JVM
+    * lifetime, so a session restart in the same JVM (the test-suite
+    * pattern) gets fresh accumulators instead of silently adding to
+    * (or failing on) stale ones. Counters are cumulative across
+    * concurrent chunks; a listener reads per-task deltas. */
+  @transient @volatile private var searchAccsV: (
     org.apache.spark.SparkContext,
     (org.apache.spark.util.LongAccumulator,
      org.apache.spark.util.LongAccumulator,
      org.apache.spark.util.LongAccumulator)) = _
-  private[graft] def profAccs(spark: SparkSession) = synchronized {
+  private[graft] def searchAccs(spark: SparkSession) = synchronized {
     val sc = spark.sparkContext
-    if (profAccsV == null || (profAccsV._1 ne sc))
-      profAccsV = (sc, (
+    if (searchAccsV == null || (searchAccsV._1 ne sc))
+      searchAccsV = (sc, (
         sc.longAccumulator("graft.search.entries"),
         sc.longAccumulator("graft.search.estimates"),
         sc.longAccumulator("graft.search.reranks")))
-    profAccsV._2
+    searchAccsV._2
   }
 
   /** Placement granularity of the cached index: entries are assigned
@@ -100,17 +80,7 @@ object IVFIndex {
     * tie-breaks are (dist, id); goldens pin the results unchanged at
     * sf0.001. The on-disk layout needs no analogue: parquet scans
     * already split fat cluster dirs at `maxPartitionBytes`. */
-  val ClusterBlockRows: Int =
-    sys.env.get("SPARK_GRAFT_BLOCK_ROWS").map { s =>
-      // validate HERE with a real message: a bare .toInt in a static
-      // initializer surfaces as ExceptionInInitializerError at the
-      // first unrelated IVFIndex touch, hiding the actual typo
-      val v = s.toIntOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"SPARK_GRAFT_BLOCK_ROWS must be a positive int, got '$s'"))
-      require(v > 0, s"SPARK_GRAFT_BLOCK_ROWS must be positive, got $v")
-      v
-    }.getOrElse(2048)
+  val ClusterBlockRows: Int = 2048
 
   /** One indexed vector (columnar analogue of SHORT_DATA/LONG_CODE/
     * EX_FACTOR/IDs, IVF.hpp:29-33). */
@@ -298,7 +268,7 @@ object IVFIndex {
     * between them. Per (query, cluster): ONE residual/LUT prepare,
     * then a sequential stream through the cluster's packed blocks.
     * `runs` maps cluster id → that cluster's packed blocks in cached
-    * order; `accs` are the profile accumulators (null when off);
+    * order; `accs` are the search counters ([[searchAccs]]);
     * `nEntries` is the partition's probed-entry count (counted at
     * buffer/filter time by the caller). */
   private[graft] def scanRuns(
@@ -405,9 +375,7 @@ object IVFIndex {
       }
       qi += 1
     }
-    if (accs != null) {
-      accs._1.add(nEntries); accs._2.add(nEst); accs._3.add(nRerank)
-    }
+    accs._1.add(nEntries); accs._2.add(nEst); accs._3.add(nRerank)
     heaps.iterator.zipWithIndex.flatMap { case (h, hq) =>
       h.drain().map { case (d, id) => (qs(hq)._1, id, d) }
     }
@@ -967,7 +935,6 @@ object IVFIndex {
     val sampledP =
       if (doSplit) sampled.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else sampled
-    val tKm = System.nanoTime()
     val trained: Array[Array[Float]] =
       if (params.kmeansInitMode == "spread")
         spreadKMeans(spark, sampledP, params)
@@ -982,9 +949,6 @@ object IVFIndex {
           .setFeaturesCol("features")
         km.fit(train).clusterCenters.map(_.toArray.map(_.toFloat))
       }
-    if (profileSearch)
-      println(f"[build-profile] kmeans k=${params.k}%d init=${params.kmeansInitMode}%s " +
-        f"iters=${params.kmeansMaxIter}%d wall=${(System.nanoTime() - tKm) / 1e9}%.1f s")
     val centroids =
       if (doSplit)
         try splitFatClusters(spark, sampledP, trained, params)
@@ -1053,10 +1017,8 @@ object IVFIndex {
   }
 
   /** The deterministic cached (cluster_id, hashed-block) layout —
-    * ONE copy of the layout rule (see the comment above), reusable to
-    * re-cache an index read back from disk (e.g. the SearchProfile
-    * harness re-establishing the build-time layout after a load). */
-  private[graft] def cachedBlockLayout(
+    * ONE copy of the layout rule (see the comment above). */
+  private def cachedBlockLayout(
       spark: SparkSession, entries: Dataset[Entry]): Dataset[Entry] = {
     import spark.implicits._
     val n = spark.sessionState.conf.numShufflePartitions
@@ -1482,23 +1444,21 @@ object IVFModel {
     // the entries: it is a pure cache of `entries`, so any overlay —
     // tombstones, committed ingest batches — or a torn write
     // (no _SUCCESS) means load ignores it (compact folds overlays and
-    // rewrites it). SPARK_GRAFT_PACKED_SIDECAR=0 is the A/B knob.
-    if (IVFIndex.packedSidecarEnabled) {
-      import org.apache.hadoop.fs.Path
-      val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-      val packedDir = new Path(s"$path/packed")
-      // overlay check filters batch dirs by DATA, exactly like
-      // entriesMinusDeletes: the _ingest_log markers survive compaction
-      // by design, so a marker-only check would permanently disable
-      // sidecar adoption after any ingest+compact cycle — turning
-      // compact's own sidecar rebuild into dead work and re-packing on
-      // every load forever
-      if (fs.exists(new Path(packedDir, "_SUCCESS")) &&
-          hasDataFiles(fs, packedDir) &&
-          !fs.exists(new Path(s"$path/deletes")) &&
-          !committedBatchDirs(fs, path).exists(hasDataFiles(fs, _)))
-        m.packedAtRestDir = Some(packedDir.toString)
-    }
+    // rewrites it).
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    val packedDir = new Path(s"$path/packed")
+    // overlay check filters batch dirs by DATA, exactly like
+    // entriesMinusDeletes: the _ingest_log markers survive compaction
+    // by design, so a marker-only check would permanently disable
+    // sidecar adoption after any ingest+compact cycle — turning
+    // compact's own sidecar rebuild into dead work and re-packing on
+    // every load forever
+    if (fs.exists(new Path(packedDir, "_SUCCESS")) &&
+        hasDataFiles(fs, packedDir) &&
+        !fs.exists(new Path(s"$path/deletes")) &&
+        !committedBatchDirs(fs, path).exists(hasDataFiles(fs, _)))
+      m.packedAtRestDir = Some(packedDir.toString)
     m
   }
 
@@ -1793,8 +1753,6 @@ final class IVFModel(
     // the at-rest sidecar travels with the shared search state: the
     // documented load → withQueryBits(N) → searchAll flow must keep
     // the cold-start win, not silently re-pack the whole index
-    // (PackedColdProbe used to hand-copy this field to dodge exactly
-    // that)
     m.packedAtRestDir = packedAtRest
     m
   }
@@ -2006,7 +1964,7 @@ final class IVFModel(
     // pipeline (idempotent; shared across withQueryBits copies): batch
     // search is where the one-time pack amortizes. Ad-hoc search()
     // never packs — it rides this cache only if some searchAll built it.
-    if (IVFIndex.packedEnabled) packedIndex(spark)
+    packedIndex(spark)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     val pool = scala.concurrent.ExecutionContext.fromExecutorService(
@@ -2026,7 +1984,6 @@ final class IVFModel(
     def runChunk(chunkQ: Array[(Long, Array[Float])], idx: Int): DataFrame = {
       spark.sparkContext.setJobGroup(jobGroup,
         s"searchAll chunk $idx", interruptOnCancel = true)
-      val w0 = System.nanoTime()
       val bcs = scala.collection.mutable.ArrayBuffer
         .empty[org.apache.spark.broadcast.Broadcast[_]]
       val res = searchOn(spark, index, chunkQ, k, nprobe, bcs)
@@ -2042,12 +1999,6 @@ final class IVFModel(
       // deterministically (not when driver GC happens to collect the
       // handle), enforcing the documented O(2·chunk·dim) bound
       bcs.foreach(_.destroy())
-      if (IVFIndex.profileSearch) {
-        val (aE, aS, aR) = IVFIndex.profAccs(spark)
-        println(f"[search-profile] chunk=$idx%d nq=${chunkQ.length}%d " +
-          f"wall=${(System.nanoTime() - w0) / 1e9}%.2f s " +
-          f"cumEntries=${aE.value}%d cumEstimates=${aS.value}%d cumReranks=${aR.value}%d")
-      }
       out
     }
     def flush(): Unit = if (buf.nonEmpty) {
@@ -2123,7 +2074,6 @@ final class IVFModel(
     import spark.implicits._
     val exBits = params.exBits
     val queryBits = params.queryBits
-    val t0 = System.nanoTime()
     // --- driver-side centroid ranking: flat scan for small K (the
     // reference's FlatInitializer), two-level routed ranking above
     // the threshold (its HNSWInitializer role, IVF.hpp:155-160).
@@ -2157,17 +2107,11 @@ final class IVFModel(
       .groupBy(_._1)
       .foreach { case (c, xs) => probeArr(c) = xs.map(_._2).toArray }
     val probedClusters = probeArr.indices.filter(probeArr(_) != null)
-    val t1 = System.nanoTime()
     // centroids ride the model-lifetime broadcast; only the per-call
     // query state (probes + routing table) ships per chunk
     val bcCent = centroidsBroadcast(spark)
     val bc = spark.sparkContext.broadcast((probes, probeArr))
     if (bcOut != null) bcOut += bc
-    if (IVFIndex.profileSearch) {
-      val t2 = System.nanoTime()
-      println(f"[search-profile] nq=${queries.length}%d rank=${(t1 - t0) / 1e9}%.2f s " +
-        f"bc=${(t2 - t1) / 1e9}%.2f s probedClusters=${probedClusters.length}%d")
-    }
 
     // --- scan only probed clusters; estimate → prune → rerank → local
     // top-k. The scan is QUERY-MAJOR over BLOCK-MAJOR PACKED runs (see
@@ -2190,8 +2134,7 @@ final class IVFModel(
     //
     // Both feed the ONE scanRuns kernel, so results are identical by
     // construction (and golden-pinned). ---
-    val profile = IVFIndex.profileSearch
-    val accs = if (profile) IVFIndex.profAccs(spark) else null
+    val accs = IVFIndex.searchAccs(spark)
     val scanK = k
     val qb = queryBits
     val eb = exBits

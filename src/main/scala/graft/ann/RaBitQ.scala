@@ -385,7 +385,7 @@ object RaBitQ {
       facIp: Float, facErr: Float): Double =
     // delegate to the packed core (the rerankDist precedent): the
     // widened-bound arithmetic must exist ONCE so the per-entry path
-    // (AnnQueries/KernelProbe) and the packed scan can never diverge
+    // (AnnQueries) and the packed scan can never diverge
     estimateLowerLutPacked(q, signBits, 0, signBits.length, x2, facIp, facErr)
 
   /** Packed-layout twin of [[estimateLowerLut]]: sign bits read from

@@ -708,20 +708,41 @@ object AnnQueries {
       // neither reads the other's output; only IVFModel.load below
       // needs both. Submitting saveMeta from its own thread lets the
       // scheduler back-fill its tasks into the stream's idle gaps
-      // (job descriptions are thread-local, FIFO scheduling). The
-      // await rethrows a saveMeta failure BEFORE load, so a
-      // half-written meta can never be served; a crash mid-overlap
-      // leaves only an unreferenced Scratch temp dir, same as the
-      // sequential form.
-      val metaJob = java.util.concurrent.CompletableFuture.runAsync(
-        () => m.saveMeta(idxDir))
-      IVFIndex.appendStream(spark, m, src, idxDir)
-      metaJob.join()
+      // (job descriptions are thread-local, FIFO scheduling). See
+      // [[overlapped]] for the failure contract.
+      overlapped(() => m.saveMeta(idxDir)) {
+        IVFIndex.appendStream(spark, m, src, idxDir)
+      }
       IVFModel.load(spark, idxDir).index.toDF()
         .groupBy("cluster_id")
         .agg(count(lit(1)).as("n_vectors"))
         .orderBy("cluster_id")
     }
+
+  /** Runs `side` on a pool thread while `body` runs on this one, and
+    * returns only once BOTH have finished — also when `body` throws:
+    * an orphaned side job would keep writing into a directory the
+    * caller is about to unwind (b13: saveMeta into the Scratch dir a
+    * later reap deletes). A `side` failure rethrows its own exception
+    * (not the future's CompletionException wrapper), so b13 never
+    * loads a half-written meta; when both fail, `body`'s exception
+    * wins and carries the side's as suppressed. */
+  private[graft] def overlapped[T](side: () => Unit)(body: => T): T = {
+    val job = java.util.concurrent.CompletableFuture.runAsync(() => side())
+    def await(): Unit =
+      try job.join()
+      catch { case e: java.util.concurrent.CompletionException if e.getCause != null =>
+        throw e.getCause
+      }
+    val out =
+      try body
+      catch { case e: Throwable =>
+        try await() catch { case s: Throwable => e.addSuppressed(s) }
+        throw e
+      }
+    await()
+    out
+  }
 
   /** b14: attribute-filtered search — only even vec_ids are eligible
     * (standing in for any metadata predicate); the filter is a

@@ -273,16 +273,7 @@ object PipelineQueries {
     * (CCNet: Wenzek et al., arXiv:1911.00359). One row per URL-gate
     * survivor; selection columns NULL for tier-dropped docs, selected
     * coalesced to 0. */
-  def pipelineE2e(spark: SparkSession, dir: String): DataFrame =
-    pipelineE2e(spark, dir, stageS2 = true)
-
-  /** `stageS2 = false` runs the s2 survivor prefix lazily — probe-only
-    * (C46Probe's A/B arm). A parameter rather than an env var read in
-    * the library path: a stray value in the environment must never
-    * silently change the committed default
-    * (results/c46_stage_profile_r15.json picked staged). */
-  private[graft] def pipelineE2e(
-      spark: SparkSession, dir: String, stageS2: Boolean): DataFrame = {
+  def pipelineE2e(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val gate = graft.ops.UrlGate.urlGate(
         docs.select(col("doc_id"),
@@ -295,11 +286,10 @@ object PipelineQueries {
     // composition point a whole-corpus c45 rerun would miss.
     // s2 feeds TWO eager consumers (pplBucket materializes internally;
     // budgetSelect scans it again), so its url-gate + lang-id prefix
-    // evaluates twice when lazy. The C46Probe A/B
-    // (results/c46_stage_profile_r15.json) measures the staging
-    // choice; the committed default follows it.
-    val s2Lazy = s1.select(col("doc_id"), col("text")).join(lang, Seq("doc_id"))
-    val s2 = if (stageS2) s2Lazy.localCheckpoint(true) else s2Lazy
+    // evaluates twice when lazy — staged, as the A/B in
+    // results/c46_stage_profile_r15.json picked.
+    val s2 = s1.select(col("doc_id"), col("text")).join(lang, Seq("doc_id"))
+      .localCheckpoint(true)
     val tiers = graft.ops.LmScore.pplBucket(s2)
     val sel = CorpusOps.budgetSelect(
       s2.join(tiers.filter(col("kept") === 1).select("doc_id"),

@@ -50,17 +50,20 @@ object Relational {
     * broadcast payload (the hinted frames are filtered ~5× and
     * projected to 2-3 columns), so the gate trips strictly before the
     * broadcast becomes dangerous. Default 256 MB ≈ TPC-H sf≈180 for
-    * supplier / sf≈6 for customer; override via
-    * SPARK_GRAFT_DIM_BCAST_MAX_BYTES (production knob — at cluster
-    * scale with big executors a larger cap can be right; 0 forces the
-    * shuffle form, which is how the committed forced-large plan probe
-    * was captured). */
-  private def dimBcastMaxBytes: Long =
-    sys.env.get("SPARK_GRAFT_DIM_BCAST_MAX_BYTES").flatMap(_.toLongOption)
-      .getOrElse(256L << 20)
+    * supplier / sf≈6 for customer; override per session via
+    * [[DimBroadcastMaxBytesKey]] (production knob — at cluster scale
+    * with big executors a larger cap can be right; 0 forces the
+    * shuffle form). Read on every call; a malformed or negative value
+    * fails the query instead of silently falling back to the default. */
+  val DimBroadcastMaxBytesKey = "spark.graft.dimBroadcastMaxBytes"
+  private def dimBcastMaxBytes(spark: SparkSession): Long =
+    spark.conf.getOption(DimBroadcastMaxBytesKey).fold(256L << 20) { s =>
+      s.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+        s"$DimBroadcastMaxBytesKey must be a non-negative byte count, got '$s'"))
+    }
   private def gatedBroadcast(
       spark: SparkSession, dir: String, table: String, dim: DataFrame): DataFrame =
-    if (tableBytes(spark, dir, table) <= dimBcastMaxBytes) broadcast(dim)
+    if (tableBytes(spark, dir, table) <= dimBcastMaxBytes(spark)) broadcast(dim)
     else dim.hint("shuffle_hash")
 
   private def dec(c: Column, p: Int, s: Int): Column = c.cast(DecimalType(p, s))
@@ -174,7 +177,7 @@ object Relational {
     // it is still FACT-PROPORTIONAL, and an explicit broadcast() hint
     // is honored regardless of size (a too-big dim FAILS the job, it
     // does not fall back), so the hint is size-gated: past
-    // SPARK_GRAFT_DIM_BCAST_MAX_BYTES the supplier join degrades to a
+    // DimBroadcastMaxBytesKey the supplier join degrades to a
     // shuffled-hash build of the 3-column ASIA slice (one extra fact
     // exchange on l_suppkey — slower, never fatal).
     Tables.lineitem(spark, dir)

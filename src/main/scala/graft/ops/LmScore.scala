@@ -147,46 +147,20 @@ object LmScore {
     // the scoring probe) and the bigram table three more (unigram
     // context, vocab size, the scoring join) — unpersisted, each branch
     // re-tokenized the corpus (measured ~3× DuckDB at sf1, the same
-    // recompute class c42/c32 closed). Both persist; the bounded
-    // per-doc result checkpoints eagerly so unpersist can never push
-    // the final job back through the kernel (the c42 pattern).
-    // occurrence-stream persist: the model build and the scoring join
-    // are two corpus passes over the narrow hashed rows; whether the
-    // second pass is cheaper recomputed or read back from cache is
-    // scale-dependent (A/B'd at sf0.1 and the 100k-doc probe shape —
-    // results/c27_occ_persist_ab.json). SPARK_GRAFT_LM_PERSIST_OCC
-    // ∈ {1,0} overrides for measurement.
-    ngramLmStagedForProbe(docs, persistOccFromEnv)
-  }
-
-  /** The SPARK_GRAFT_LM_PERSIST_OCC ∈ {1,0} override, shared by the
-    * c27 and c42 staged paths so the knob can never diverge. */
-  private[graft] def persistOccFromEnv: Boolean =
-    sys.env.get("SPARK_GRAFT_LM_PERSIST_OCC") match {
-      case Some("1") => true
-      case Some("0") => false
-      case _ => PersistOccDefault
-    }
-
-  /** [[ngramLmStaged]] with the occurrence-persist choice explicit —
-    * the C27Probe A/B seam. */
-  private[graft] def ngramLmStagedForProbe(
-      docs: DataFrame, persistOcc: Boolean): DataFrame = {
+    // recompute class c42/c32 closed). The bigram table persists; the
+    // narrow hashed kernel rows are recomputed for the second corpus
+    // pass, which measured faster than reading them back from cache
+    // (A/B'd at sf0.1 and the 100k-doc probe shape —
+    // results/c27_occ_persist_ab.json). The bounded per-doc result
+    // checkpoints eagerly so unpersist can never push the final job
+    // back through the kernel (the c42 pattern).
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val rows0 = bigramRows(docs)
-    val rows = if (persistOcc) rows0.persist(lvl) else rows0
+    val rows = bigramRows(docs)
     val bc = rows.groupBy("ga", "gb", "ca", "cb", "ua", "ub")
       .agg(count(lit(1)).as("c2")).persist(lvl)
     try ngramScored(docs, rows, bc).localCheckpoint(true)
-    finally {
-      bc.unpersist(blocking = false)
-      if (persistOcc) rows.unpersist(blocking = false)
-    }
+    finally bc.unpersist(blocking = false)
   }
-
-  /** Default for the staged occurrence-stream persist (see
-    * [[ngramLmStaged]]); set from the committed A/B. */
-  private[graft] val PersistOccDefault = false
 
   /** The unpersisted c27 pipeline — the plan PlanSpec inspects (the
     * public [[ngramLm]] checkpoints eagerly, which erases the lineage
@@ -490,20 +464,14 @@ object LmScore {
     // the two O(model) fan-out tables persist; the occurrence stream
     // is deliberately RECOMPUTED per branch (the r13 c27/c42 choice:
     // the narrow hashed-key kernel pass is cheaper than caching a
-    // corpus-sized stream — A/B'd for c27 in
-    // results/c27_occ_persist_ab.json; the r9 form whose re-tokenize
-    // cost 8.8 s at sf1 was the heavy STRING kernel this round
-    // replaced). The bounded result checkpoints eagerly (c32/Dedup
-    // pattern) so unpersist can never push the final job back through
-    // the kernel.
+    // corpus-sized stream — A/B'd in results/c27_occ_persist_ab.json
+    // and results/c42_occ_persist_ab.json; the r9 form whose
+    // re-tokenize cost 8.8 s at sf1 was the heavy STRING kernel this
+    // round replaced). The bounded result checkpoints eagerly
+    // (c32/Dedup pattern) so unpersist can never push the final job
+    // back through the kernel.
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // same A/B seam as c27's (SPARK_GRAFT_LM_PERSIST_OCC): whether the
-    // scoring pass re-runs the kernel or reads the cached stream is
-    // scale-dependent; the committed default follows the measured A/B
-    // (results/c42_occ_persist_ab.json)
-    val persistOcc = persistOccFromEnv
-    val occ0 = trigramRows(docs)
-    val occ = if (persistOcc) occ0.persist(lvl) else occ0
+    val occ = trigramRows(docs)
     // t3 groups by the trigram key and CARRIES the derived-space keys
     // (functionally determined by the trigram — same cardinality);
     // b2 likewise carries the w2/w3 keys for its own fan-out
@@ -518,7 +486,6 @@ object LmScore {
     finally {
       t3.unpersist(blocking = false)
       b2.unpersist(blocking = false)
-      if (persistOcc) occ.unpersist(blocking = false)
     }
   }
 

@@ -65,17 +65,7 @@ object QualityModel {
   def qualityClassifier(
       docs: DataFrame,
       targetSources: Seq[String] = LmScore.DsirTargetSources,
-      trainFraction: Int = 1): DataFrame =
-    qualityClassifierStagedForProbe(docs, targetSources, trainFraction,
-      stageFeat = true)
-
-  /** [[qualityClassifier]] with the featurization-staging choice
-    * explicit — the C33Probe A/B seam. */
-  private[graft] def qualityClassifierStagedForProbe(
-      docs: DataFrame,
-      targetSources: Seq[String],
-      trainFraction: Int,
-      stageFeat: Boolean): DataFrame = {
+      trainFraction: Int = 1): DataFrame = {
     val labeled = docs
       .filter(col("text").isNotNull)
       .select(
@@ -94,8 +84,7 @@ object QualityModel {
     // scale — MLlib persists the featurized train slice internally for
     // the L-BFGS loop anyway. A/B'd at sf0.1 and the 100k-doc probe
     // shape (results/c33_stage_ab.json).
-    val feat0 = tf.transform(labeled)
-    val feat = if (stageFeat) feat0.localCheckpoint(true) else feat0
+    val feat = tf.transform(labeled).localCheckpoint(true)
     // deterministic hash sample, never randomSplit: the trained model
     // must not depend on partitioning or a sampler's RNG stream
     val train = if (trainFraction <= 1) feat
@@ -149,7 +138,7 @@ object QualityModel {
   /** c43 L-BFGS iteration budget. Each iteration is one treeAggregate
     * JOB, so at bench scale the wall is iterations × job floor, not
     * gradient compute — size it to measured convergence (see the
-    * QualityProbe sweep in SURVEY §6), not to a round number. */
+    * c43 iteration sweep in SURVEY §6), not to a round number. */
   val LangMaxIter = 25
 
   /** c43: TRAINED language ID — the fastText-style classifier real
@@ -183,7 +172,7 @@ object QualityModel {
     // materialization and again under scoring. Staging is the same
     // storage class at 100 TB (MLlib already persists the featurized
     // 75% train slice internally for the L-BFGS loop) while saving a
-    // full featurization pass. Measured (C43Probe, sf0.1): 5.25 →
+    // full featurization pass. Measured (sf0.1): 5.25 →
     // 3.14 s at 32 cores; identical outputs (golden-pinned). The
     // residual wall is featurize 1.3 s + 25 treeAggregate jobs 1.7 s
     // (fit intercept 0.4 s, ~0.05 s/iteration) — job floor, not
@@ -223,8 +212,8 @@ object QualityModel {
   /** The c43 featurization pass: char bi+trigrams in a typed kernel
     * (one linear pass per doc; emits the n-gram multiset, hashed
     * next — never a collected vocabulary), the c6 heuristic label
-    * join, and HashingTF. Split out so the phase profile
-    * ([[graft.C43Probe]]) can time featurize / fit / score
+    * join, and HashingTF. Split out (with [[langFit]] and
+    * [[langScore]]) so a spec can drive featurize / fit / score
     * separately on the exact production plan. */
   private[graft] def langFeatures(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession

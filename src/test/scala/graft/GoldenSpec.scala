@@ -9,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * intentional change regenerates the snapshot in the same commit
   * (`runMain graft.GoldenGen`). */
 class GoldenSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
   val sf = "/root/testdata/sf0.001"
 
   private lazy val snapshot: Map[String, (Long, String)] = {

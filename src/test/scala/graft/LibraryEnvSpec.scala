@@ -1,0 +1,36 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Library code takes its settings as parameters or session conf,
+  * never from the process environment: an env var read inside a
+  * library object is an input no caller can see, and a stray value in
+  * any deployment silently changes behaviour. The mains directly under
+  * `graft/` (Bench, Verify, the sweeps and probes) are the only env
+  * readers. */
+class LibraryEnvSpec extends AnyFunSuite {
+  val LibraryPackages =
+    Seq("ann", "ops", "operators", "functions", "streaming", "sources", "plans")
+
+  test("library packages read no environment variables") {
+    val root = Paths.get("src/main/scala/graft")
+    val files = LibraryPackages.flatMap { pkg =>
+      val dir = root.resolve(pkg)
+      assert(Files.isDirectory(dir), s"library package dir $dir is missing")
+      val walk = Files.walk(dir)
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    assert(files.size > 20, s"scan found only ${files.size} library sources")
+    val hits = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("sys.env") || line.contains("System.getenv")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("library code reads the environment:\n", "\n", ""))
+  }
+}

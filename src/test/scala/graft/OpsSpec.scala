@@ -7,12 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Dedup, Multimodal, TextAnalysis}
 
 class OpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
   import spark.implicits._
 
   private def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")

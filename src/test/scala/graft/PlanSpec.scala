@@ -7,12 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * queries scale (broadcast dims, pushed filters, pruned columns)
   * should survive refactors. */
 class PlanSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
   val sf = "/root/testdata/sf0.001"
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
@@ -41,6 +36,42 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin"))
     assert(p.contains("ShuffledHashJoin"), s"fact join lost the shuffle_hash build:\n$p")
     assert(!p.contains("SortMergeJoin"), "a join fell back to SMJ")
+  }
+
+  test("e2/e3 at dim-broadcast cap 0: gated dims shuffle-hash, nothing sorts; bad caps rejected") {
+    import operators.Relational.DimBroadcastMaxBytesKey
+    // the join line of a physical operator on a given key, e.g.
+    // "BroadcastHashJoin [l_suppkey#12L], [s_suppkey#40L], Inner, ..."
+    def joins(p: String, op: String, key: String): Int =
+      p.linesIterator.count(l => l.contains(op) && l.contains(key))
+    def plans(): (String, String) =
+      (plan(operators.Relational.q3Join(spark, sf)),
+        plan(operators.Relational.q5MultiJoin(spark, sf)))
+    def withCap[A](v: String)(body: => A): A = {
+      spark.conf.set(DimBroadcastMaxBytesKey, v)
+      try body finally spark.conf.unset(DimBroadcastMaxBytesKey)
+    }
+    // default cap: the fact-proportional dims (e2 customer, e3 supplier)
+    // ride broadcasts at spec scale
+    val (e2, e3) = plans()
+    assert(joins(e2, "BroadcastHashJoin", "c_custkey") == 1, e2)
+    assert(joins(e3, "BroadcastHashJoin", "s_suppkey") == 1, e3)
+    // cap 0 forces the large-dim form: both gated joins become
+    // shuffled-hash builds, the constant-size nation/region dims keep
+    // their broadcast, and no join falls back to a sort-merge
+    val (e2f, e3f) = withCap("0")(plans())
+    assert(joins(e2f, "BroadcastHashJoin", "c_custkey") == 0, e2f)
+    assert(joins(e2f, "ShuffledHashJoin", "c_custkey") == 1, e2f)
+    assert(joins(e3f, "BroadcastHashJoin", "s_suppkey") == 0, e3f)
+    assert(joins(e3f, "ShuffledHashJoin", "s_suppkey") == 1, e3f)
+    assert(joins(e3f, "BroadcastHashJoin", "n_regionkey") == 1, e3f)
+    assert(!e3f.contains("SortMergeJoin"), s"a join fell back to SMJ:\n$e3f")
+    // a malformed or negative cap fails loudly, naming the key
+    Seq("256MB", "-1", "").foreach { bad =>
+      val e = intercept[IllegalArgumentException](
+        withCap(bad)(operators.Relational.q5MultiJoin(spark, sf)))
+      assert(e.getMessage.contains(DimBroadcastMaxBytesKey), e.getMessage)
+    }
   }
 
   test("e2 pushes the segment filter into the customer scan") {

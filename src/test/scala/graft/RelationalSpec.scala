@@ -7,12 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * oracle: every SparkEntry query runs at sf0.001 and returns rows
   * (streaming queries included). */
 class RelationalSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
   val sf = "/root/testdata/sf0.001"
 
   test("every SparkEntry query returns rows at sf0.001") {

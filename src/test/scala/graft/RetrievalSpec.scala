@@ -10,12 +10,7 @@ import graft.ops.{Dedup, Retrieval}
   * hand-built corpora where the expected answer is computed by hand.
   */
 class RetrievalSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
   import spark.implicits._
 
   // ------------------------------ c24 ------------------------------

@@ -10,12 +10,7 @@ import graft.functions.TextShingleFunctions
   * to the declarative formulations they replaced — the oracle hashes
   * of c17/c39/c41/d9/d14/d15 depend on this equivalence exactly. */
 class ShingleExprSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
   import spark.implicits._
 
   /** The pre-round-14 declarative chain, verbatim. */

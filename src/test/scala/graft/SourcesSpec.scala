@@ -10,12 +10,7 @@ import graft.functions.GraftFunctions
 import graft.sources.VecsIO
 
 class SourcesSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
   import spark.implicits._
 
   /** Write one parquet file of (vec_id, embedding) rows into `dir` —
@@ -239,6 +234,35 @@ class SourcesSpec extends AnyFunSuite {
       .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
     assert(out == expected,
       "overlapped b13 must reproduce the batch assignment counts")
+  }
+
+  test("b13 overlap: a failing ingest waits for saveMeta; a failing saveMeta surfaces its cause") {
+    import operators.AnnQueries.overlapped
+    // the ingest body throws while the meta job is still running: the
+    // exception may surface only after the meta job has finished (an
+    // orphaned saveMeta would keep writing into the unwound Scratch dir)
+    val metaDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val ingest = intercept[IllegalStateException] {
+      overlapped(() => { Thread.sleep(300); metaDone.set(true) }) {
+        throw new IllegalStateException("ingest failed")
+      }
+    }
+    assert(ingest.getMessage == "ingest failed")
+    assert(metaDone.get, "the ingest failure surfaced before the meta job finished")
+    // a failing meta job rethrows its own exception, not the future's
+    // CompletionException wrapper, even when the body succeeded
+    val meta = intercept[java.io.IOException] {
+      overlapped(() => throw new java.io.IOException("meta failed"))(42)
+    }
+    assert(meta.getMessage == "meta failed")
+    // both fail: the body's exception wins, the meta failure rides along
+    val both = intercept[IllegalStateException] {
+      overlapped(() => throw new java.io.IOException("meta failed")) {
+        throw new IllegalStateException("ingest failed")
+      }
+    }
+    assert(both.getSuppressed.toSeq.map(_.getMessage) == Seq("meta failed"))
+    assert(overlapped(() => ())(42) == 42)
   }
 
   test("streaming ingest: append to a batch-saved index; second call only new files") {

@@ -9,12 +9,7 @@ import graft.ops.Dedup
 import graft.streaming.StreamDedup
 
 class StreamingSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
   import spark.implicits._
 
   /** Write one parquet file of documents-schema rows — with explicit

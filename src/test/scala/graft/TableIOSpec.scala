@@ -13,12 +13,7 @@ import graft.sources.TableIO
   * NULL vs empty string, newlines, micro-precision timestamps, and
   * doubles needing shortest-exact formatting. */
 class TableIOSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
   import spark.implicits._
 
   private def tmp(): String = Files.createTempDirectory("tableio").toString

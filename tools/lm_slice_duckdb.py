@@ -1,8 +1,12 @@
 #!/usr/bin/env python3
-"""DuckDB side of the LM-family scale adjudication (see
-graft.LmScaleProbe): times the c27 / c28 / c42 oracle SQL on the
-documents-only slice built by make_lm_slice.py, min-of-N with all raw
-runs reported (the round-15 dispersion discipline).
+"""DuckDB side of the LM-family scale adjudication: times the c27 /
+c28 / c42 oracle SQL on the documents-only slice built by
+make_lm_slice.py, min-of-N with all raw runs reported (the round-15
+dispersion discipline). The Spark side runs the same keys on the same
+slice:
+    SPARK_GRAFT_SF_DIR=.scratch/sf5lm \\
+    SPARK_GRAFT_BENCH_ONLY=c27_lm_perplexity,c28_dsir_weight,c42_trigram_lm \\
+        sbt "runMain graft.Bench"
 
 Usage: python3 tools/lm_slice_duckdb.py <oracle_sql.json> [sliceDir] [runs]
 (the oracle_sql.json from any graft.Verify run supplies the SQL texts;

@@ -6,8 +6,11 @@ all raw runs reported (the round-15 dispersion discipline). Registers
 EVERY *.parquet table in the slice dir, so relational/events keys
 (e1/e3/d1) work as well as documents-only keys (c25/c32).
 
-The Spark twin is graft.LmScaleProbe with SPARK_GRAFT_KEYS on the same
-slice dir; the committed JSON pair is the adjudication artifact.
+The Spark twin is graft.Bench on the same slice dir and keys:
+    SPARK_GRAFT_SF_DIR=<sliceDir> SPARK_GRAFT_BENCH_ONLY=<key1,key2,...> \\
+        sbt "runMain graft.Bench"
+(min-of-3 after a table warmup pass; the printed line's "query_runs"
+holds every raw run). The pair of outputs is the adjudication artifact.
 
 Usage: python3 tools/slice_duckdb.py <oracle_sql.json> <sliceDir> <key1,key2,...> [runs]
 (keys must read only base tables - no OracleSide sidecars)
@@ -17,7 +20,7 @@ import duckdb
 
 oracle_path = sys.argv[1]
 slice_dir = sys.argv[2]
-# trim each key: the Spark twin (LmScaleProbe) does .map(_.trim), and
+# trim each key: the Spark twin (Bench) does .map(_.trim), and
 # "c32, e3" must mean the same keys on both sides of the A/B
 keys = [k.strip() for k in sys.argv[3].split(",") if k.strip()]
 # first run is discarded as warmup, so the min needs >= 2
