@@ -29,8 +29,12 @@ import graft.functions.VectorFunctions.l2sq
   *  - only partitions holding probed clusters are scanned; each task
   *    keeps per-query bounded heaps: 1-bit estimate → error-bound prune
   *    (vs the local kth distance) → extended-code rerank;
-  *  - the shuffle carries O(partitions × queries × k) rows, independent
-  *    of corpus size.
+  *  - each partition returns at most queries × k candidates,
+  *    independent of corpus size. Ad-hoc `search`/`searchFiltered`
+  *    merge them on the driver as task results arrive (one job, no
+  *    shuffle — the reference's single result pool); batch `searchAll`
+  *    merges each chunk's candidates through a shuffle so its results
+  *    stay on the executors.
   */
 object IVFIndex {
   /** Persisted-index layout version; bump when Entry encoding changes
@@ -97,15 +101,17 @@ object IVFIndex {
 
   /** One probed cluster's entries in BLOCK-MAJOR PACKED form — the
     * scan-side analogue of the reference's `fastscan/pack_codes.hpp`
-    * layout, built per (partition, chunk) inside searchOn and scanned
-    * by every probing query of the chunk. Sign-bit words of all
+    * layout, built per (partition, scan) by [[IVFModel.scan]] or once
+    * per model by [[IVFModel.packedIndex]], and scanned by every
+    * probing query of the call. Sign-bit words of all
     * entries live in ONE contiguous long array (entry i's words at
     * [i·words, (i+1)·words)); the per-entry estimate factors are
     * parallel primitive columns. The packing replaces a per-(query,
     * entry) object-pointer chase on the estimate hot loop with a
     * sequential stream; `exCode` stays a reference column because it
-    * is only touched on the rare post-prune rerank. Never serialized
-    * (partition-local scratch). */
+    * is only touched on the rare post-prune rerank. Serializable so the
+    * model-lifetime cache can spill (MEMORY_AND_DISK); at rest it is a
+    * [[PackedRow]]. */
   private[graft] final class PackedRun(
       val words: Int, val dim: Int, val exBits: Int) extends Serializable {
     /** exBits ≤ 7 ⇒ F_d = bit·2^exBits + code fits a byte: pre-unpack
@@ -262,7 +268,7 @@ object IVFIndex {
   }
 
   /** The per-partition QUERY-MAJOR scan over packed runs — one copy
-    * shared by both searchOn paths (the model-lifetime packed cache
+    * shared by both [[IVFModel.scan]] sources (the model-lifetime packed cache
     * and the filtered/ad-hoc entry scan, which packs per chunk), so
     * the estimate → prune → rerank trajectory can never diverge
     * between them. Per (query, cluster): ONE residual/LUT prepare,
@@ -1679,8 +1685,8 @@ final class IVFModel(
           // split across partitions, per-partition runs sort by the
           // writer's (part_id, seq), and the search result is
           // partitioning-independent anyway (scanRuns emits
-          // per-partition candidates; mergeTopK takes the global top-k
-          // by (distance, id), a pure value order). A forced
+          // per-partition candidates; both top-k merges rank by
+          // (distance, id), a pure value order). A forced
           // rebuild-the-writer's-partitioning shuffle measured as
           // expensive as re-packing from the entries — it erased the
           // whole cold-start win.
@@ -1858,12 +1864,20 @@ final class IVFModel(
       .coalesce(1).write.mode("overwrite").json(s"$path/meta")
   }
 
-  /** Approximate top-k: returns (query_id, neighbor_id, rk). */
+  /** Approximate top-k: (query_id, neighbor_id, rk), rk 1-based in
+    * (distance, id) order. EAGER: the call runs ONE Spark job (the
+    * probed-cluster scan, no exchange) and merges each partition's
+    * per-query top-k on the driver as its task result arrives
+    * ([[KnnExact.mergeTopKOnDriver]]); the returned DataFrame is local
+    * (a `LocalTableScan`), so collecting or joining it runs no scan
+    * again. The rows are those [[searchAll]]'s distributed merge returns
+    * for the same queries. Holds queries × k result rows on the driver;
+    * past ~100k queries use [[searchAll]]. */
   def search(
       spark: SparkSession,
       queries: Array[(Long, Array[Float])],
       k: Int,
-      nprobe: Int): DataFrame = searchOn(spark, index, queries, k, nprobe)
+      nprobe: Int): DataFrame = searchOnDriver(spark, index, queries, k, nprobe)
 
   /** Attribute-filtered search: only ids present in `allowedIds`
     * (single column of longs) are eligible results. The filter is a
@@ -1872,17 +1886,25 @@ final class IVFModel(
     * (post-filtering the top-k would return fewer). No broadcast hint:
     * the planner broadcasts small allowed sets and shuffles large ones
     * — a selective-but-large metadata predicate (billions of ids at
-    * 100 TB) must not be forced through the driver. */
+    * 100 TB) must not be forced through the driver. Eager and merged
+    * on the driver like [[search]]: the scan is one job, plus whatever
+    * jobs the semi-join's own planning needs (a broadcast of the
+    * allowed set, or its shuffle). */
   def searchFiltered(
       spark: SparkSession,
       queries: Array[(Long, Array[Float])],
       k: Int,
       nprobe: Int,
-      allowedIds: DataFrame): DataFrame = {
+      allowedIds: DataFrame): DataFrame =
+    searchOnDriver(spark, allowedOnly(allowedIds), queries, k, nprobe)
+
+  /** The index semi-joined to `allowedIds` — [[searchFiltered]]'s scan
+    * source. */
+  private[graft] def allowedOnly(allowedIds: DataFrame): Dataset[Entry] = {
+    val spark = index.sparkSession
     import spark.implicits._
     val allowed = allowedIds.toDF("id").select(col("id").cast("long"))
-    val filtered = index.join(allowed, Seq("id"), "left_semi").as[Entry]
-    searchOn(spark, filtered, queries, k, nprobe)
+    index.join(allowed, Seq("id"), "left_semi").as[Entry]
   }
 
   /** [[search]] over an arbitrarily large query set. `search` holds the
@@ -1890,7 +1912,11 @@ final class IVFModel(
     * to ~100k queries; past that, THIS is the path: queries arrive as a
     * DataFrame and stream through the driver `chunk` rows at a time
     * (toLocalIterator — one partition resident, never the full set),
-    * each chunk running the normal broadcast search. Chunks run
+    * each chunk running the normal broadcast scan. Unlike [[search]],
+    * each chunk's top-k merge stays DISTRIBUTED
+    * ([[KnnExact.mergeTopK]], one shuffle of the chunk's candidates)
+    * and the returned frame lives on the executors: chunk × k result
+    * rows can run to millions. Chunks run
     * through a TWO-DEEP pipeline (see the inline note): per-chunk
     * results (Q_chunk × k rows) are materialized eagerly as each
     * chunk's future completes, so at most two chunks' broadcasts are
@@ -1984,9 +2010,8 @@ final class IVFModel(
     def runChunk(chunkQ: Array[(Long, Array[Float])], idx: Int): DataFrame = {
       spark.sparkContext.setJobGroup(jobGroup,
         s"searchAll chunk $idx", interruptOnCancel = true)
-      val bcs = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.broadcast.Broadcast[_]]
-      val res = searchOn(spark, index, chunkQ, k, nprobe, bcs)
+      val (candidates, bc) = scan(spark, index, chunkQ, k, nprobe)
+      val res = KnnExact.mergeTopK(spark, candidates, k)
       val out = outputDir match {
         case Some(dir) =>
           val path = s"$dir/chunk-$idx"
@@ -1998,7 +2023,7 @@ final class IVFModel(
       // materialized above — destroy it NOW so executor blocks free
       // deterministically (not when driver GC happens to collect the
       // handle), enforcing the documented O(2·chunk·dim) bound
-      bcs.foreach(_.destroy())
+      bc.destroy()
       out
     }
     def flush(): Unit = if (buf.nonEmpty) {
@@ -2051,21 +2076,34 @@ final class IVFModel(
     else parts.reduce(_.unionByName(_))
   }
 
-  private def searchOn(
+  /** [[search]] / [[searchFiltered]]: [[scan]] `idx`, merge on the
+    * driver, then destroy the call's query broadcast — the scan job has
+    * finished, and the local result no longer needs it. */
+  private def searchOnDriver(
       spark: SparkSession,
       idx: Dataset[Entry],
       queries: Array[(Long, Array[Float])],
       k: Int,
-      nprobe: Int,
-      // when non-null, the per-call query broadcast is appended here so
-      // the caller can destroy() it once the result is MATERIALIZED —
-      // searchAll's many-chunk pipeline must not leave its O(chunk·dim)
-      // broadcasts to driver-GC luck (the documented two-live-chunks
-      // bound was GC-dependent, not enforced). One-shot search()
-      // callers pass nothing: a single leftover broadcast dies with
-      // the context.
-      bcOut: scala.collection.mutable.Buffer[
-        org.apache.spark.broadcast.Broadcast[_]] = null): DataFrame = {
+      nprobe: Int): DataFrame = {
+    val (candidates, bc) = scan(spark, idx, queries, k, nprobe)
+    try KnnExact.mergeTopKOnDriver(spark, candidates, k, queries.map(_._1))
+    finally bc.destroy()
+  }
+
+  /** The probed-cluster scan: per partition, each query's local top-k
+    * as (query_id, neighbor_id, dist) rows — at most partitions ×
+    * queries × k candidates, whatever the corpus size. Lazy: nothing
+    * runs until the caller merges the candidates ([[searchOnDriver]] on
+    * the driver, [[searchAll]] through a shuffle) — and the caller
+    * destroys the returned per-call query broadcast once that merge is
+    * materialized, so a long searchAll pipeline never leaves its
+    * O(chunk·dim) broadcasts to driver GC. */
+  private[graft] def scan(
+      spark: SparkSession,
+      idx: Dataset[Entry],
+      queries: Array[(Long, Array[Float])],
+      k: Int,
+      nprobe: Int): (Dataset[(Long, Long, Double)], Broadcast[_]) = {
     // fail loudly on the driver: nprobe <= 0 would silently return an
     // empty frame (empty probe set -> isin filter drops everything),
     // which reads as "no neighbors" instead of a caller bug
@@ -2111,7 +2149,6 @@ final class IVFModel(
     // query state (probes + routing table) ships per chunk
     val bcCent = centroidsBroadcast(spark)
     val bc = spark.sparkContext.broadcast((probes, probeArr))
-    if (bcOut != null) bcOut += bc
 
     // --- scan only probed clusters; estimate → prune → rerank → local
     // top-k. The scan is QUERY-MAJOR over BLOCK-MAJOR PACKED runs (see
@@ -2189,8 +2226,7 @@ final class IVFModel(
             IVFIndex.scanRuns(qs, m, rotCents, scanK, qb, eb, accs, nEntries)
           }
       }
-
-    KnnExact.mergeTopK(spark, candidates, k)
+    (candidates, bc)
   }
 
   /** High-accuracy search (the Spark analogue of the reference's
@@ -2211,9 +2247,16 @@ final class IVFModel(
       nprobe: Int,
       overFetch: Int = 4,
       idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame =
+      vecCol: String = "embedding"): DataFrame = {
+    // checked here: a bad overFetch would otherwise surface from
+    // search() as a misleading "search k must be positive"
+    require(k > 0, s"searchHighAcc k must be positive, got $k")
+    require(overFetch >= 1, s"searchHighAcc overFetch must be >= 1, got $overFetch")
+    require(k.toLong * overFetch <= Int.MaxValue,
+      s"searchHighAcc k * overFetch overflows Int: k=$k, overFetch=$overFetch")
     KnnExact.rerankExact(spark, corpus, queries,
       search(spark, queries, k * overFetch, nprobe)
         .select("query_id", "neighbor_id"),
       k, idCol, vecCol)
+  }
 }

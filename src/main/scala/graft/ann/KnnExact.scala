@@ -1,6 +1,6 @@
 package graft.ann
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -51,20 +51,79 @@ object KnnExact {
     }
   }
 
+  /** The (dist, id) order both top-k merges rank by: a total order on
+    * the distance (`java.lang.Double.compare`), ties to the smaller id. */
+  private[graft] val DistIdOrder: Ordering[(Double, Long)] =
+    Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
+
   /** Merge per-partition candidate rows (query_id, neighbor_id, dist)
     * into the global per-query top-k with deterministic (dist, id)
-    * tie-breaking. Shared by exact and IVF search. */
+    * tie-breaking. Shared by exact search and IVF searchAll; the
+    * result stays distributed (one shuffle of the candidates). */
   def mergeTopK(
       spark: SparkSession,
-      partial: org.apache.spark.sql.Dataset[(Long, Long, Double)],
+      partial: Dataset[(Long, Long, Double)],
       k: Int): DataFrame = {
     import spark.implicits._
     partial.groupByKey(_._1)
       .flatMapGroups { (q, it) =>
-        it.toArray.sortBy(t => (t._3, t._2)).take(k).iterator.zipWithIndex
+        it.toArray.sortBy(t => (t._3, t._2))(DistIdOrder).take(k).iterator.zipWithIndex
           .map { case ((_, id, _), i) => (q, id, i + 1) }
       }
       .toDF("query_id", "neighbor_id", "rk")
+  }
+
+  /** [[mergeTopK]] without the exchange, for candidate sets small
+    * enough to hold on the driver (queries × k rows): runs `partial` as
+    * ONE Spark job and folds each partition's rows into a bounded
+    * per-query top-k on the driver as its task result arrives
+    * (`RDD.takeOrdered`'s pattern). The global top-k under
+    * [[DistIdOrder]] is the top-k of the partition top-k's, so the rows,
+    * rk included, equal mergeTopK's whatever order partitions finish
+    * in; driver memory is O(queries × k) plus the partitions in
+    * flight. Eager: the job runs here, and the result is a local
+    * DataFrame with mergeTopK's schema, queries in `queryIds` order,
+    * rk ascending. The job runs as one SQL execution of `partial`'s
+    * plan, so query listeners and the UI see it. */
+  private[graft] def mergeTopKOnDriver(
+      spark: SparkSession,
+      partial: Dataset[(Long, Long, Double)],
+      k: Int,
+      queryIds: Array[Long]): DataFrame = {
+    import spark.implicits._
+    require(k > 0, s"top-k bound must be positive, got $k")
+    val best = scala.collection.mutable.HashMap.empty[Long, Array[(Double, Long)]]
+    if (queryIds.nonEmpty) {
+      val qe = partial.queryExecution
+      org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("mergeTopKOnDriver")) {
+        spark.sparkContext.runJob(qe.toRdd, partitionColumns _,
+          (_: Int, part: (Array[Long], Array[Long], Array[Double])) => {
+            val (qids, ids, dists) = part
+            qids.indices.groupBy(qids(_)).foreach { case (q, is) =>
+              best(q) = (best.getOrElse(q, Array.empty[(Double, Long)]) ++
+                is.map(i => (dists(i), ids(i)))).sorted(DistIdOrder).take(k)
+            }
+          })
+      }
+    }
+    val seen = scala.collection.mutable.HashSet.empty[Long]
+    queryIds.iterator.filter(seen.add).flatMap { q =>
+      best.getOrElse(q, Array.empty[(Double, Long)]).iterator.zipWithIndex
+        .map { case ((_, id), i) => (q, id, i + 1) }
+    }.toSeq.toDF("query_id", "neighbor_id", "rk")
+  }
+
+  /** One partition of (query_id, neighbor_id, dist) rows as three
+    * primitive columns — the compact task result [[mergeTopKOnDriver]]
+    * ships to the driver. */
+  private def partitionColumns(
+      it: Iterator[org.apache.spark.sql.catalyst.InternalRow])
+      : (Array[Long], Array[Long], Array[Double]) = {
+    val qids = Array.newBuilder[Long]
+    val ids = Array.newBuilder[Long]
+    val dists = Array.newBuilder[Double]
+    it.foreach { r => qids += r.getLong(0); ids += r.getLong(1); dists += r.getDouble(2) }
+    (qids.result(), ids.result(), dists.result())
   }
 
   /** The shared exact-top-k kernel, keeping the squared distance:

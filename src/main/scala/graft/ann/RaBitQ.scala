@@ -341,7 +341,7 @@ object RaBitQ {
 
   /** Packed-core form: the entry's `words` sign-bit longs start at
     * `base` inside a run-contiguous array (the block-major packed
-    * layout searchOn builds per partition — streaming longs instead
+    * layout IVFModel.scan builds per partition — streaming longs instead
     * of chasing one small array object per entry). The per-entry
     * API above delegates here, so the nibble arithmetic exists once. */
   private def lutSumPop(

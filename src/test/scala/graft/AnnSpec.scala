@@ -13,6 +13,84 @@ class AnnSpec extends AnyFunSuite {
   private def randVec(rnd: scala.util.Random, d: Int): Array[Float] =
     Array.fill(d)(rnd.nextGaussian().toFloat)
 
+  /** Listener events are async but delivered FIFO: run a job with a
+    * unique description and wait until its JobStart arrives — every
+    * event posted before it has then been delivered too. */
+  private def drainListenerBus(tag: String, seen: String => Boolean): Unit = {
+    spark.sparkContext.setJobDescription(tag)
+    try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (!seen(tag) && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(seen(tag), s"sentinel job $tag never reached the listener")
+  }
+
+  /** `body`'s result with the executed plans of the SQL executions the
+    * `mergeTopKOnDriver` scans in it ran. */
+  private def executedPlans[T](body: => T): (T, Seq[String]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (funcName == "mergeTopKOnDriver") plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sentinel = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(j.properties).fold("")(_.getProperty("spark.job.description", "")))
+    }
+    spark.listenerManager.register(listener)
+    spark.sparkContext.addSparkListener(sentinel)
+    try {
+      val out = body
+      drainListenerBus(s"plans-${java.util.UUID.randomUUID()}", t => jobs.contains(t))
+      (out, plans.toArray(Array.empty[String]).toSeq)
+    } finally {
+      spark.sparkContext.removeSparkListener(sentinel)
+      spark.listenerManager.unregister(listener)
+    }
+  }
+
+  /** The Spark jobs `body` runs (each as its stage names), and the
+    * shuffle bytes (read + written) of their tasks, from a
+    * SparkListener bracketed by two sentinel jobs. */
+  private def jobsAndShuffleBytes(body: => Unit): (Seq[String], Long) = {
+    import org.apache.spark.scheduler._
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerEvent]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = events.add(j)
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = events.add(t)
+    }
+    def desc(j: SparkListenerJobStart) =
+      Option(j.properties).fold("")(_.getProperty("spark.job.description", ""))
+    def started(tag: String) = events.toArray.exists {
+      case j: SparkListenerJobStart => desc(j) == tag
+      case _ => false
+    }
+    val id = java.util.UUID.randomUUID()
+    val (begin, end) = (s"begin-$id", s"end-$id")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      drainListenerBus(begin, started)
+      body
+      drainListenerBus(end, started)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // a sentinel count can run as several jobs (one per adaptive query
+    // stage), all carrying its description
+    val window = events.toArray.toSeq
+      .dropWhile { case j: SparkListenerJobStart => desc(j) != begin; case _ => true }
+      .takeWhile { case j: SparkListenerJobStart => desc(j) != end; case _ => true }
+    val jobs = window.collect { case j: SparkListenerJobStart if desc(j) != begin => j }
+    val stages = jobs.flatMap(_.stageIds).toSet
+    val shuffle = window.collect {
+      case t: SparkListenerTaskEnd if stages(t.stageId) && t.taskMetrics != null =>
+        t.taskMetrics.shuffleReadMetrics.totalBytesRead +
+          t.taskMetrics.shuffleWriteMetrics.bytesWritten
+    }.sum
+    (jobs.map(_.stageInfos.map(_.name).mkString(", ")), shuffle)
+  }
+
   test("rotator is orthonormal: norms and dots preserved") {
     val rot = new Rotator(64, seed = 7)
     val rnd = new scala.util.Random(1)
@@ -304,13 +382,17 @@ class AnnSpec extends AnyFunSuite {
     // semi-join, the path a billions-of-ids allowed set takes at scale.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val got = m.searchFiltered(spark, qs, 10, nprobe = m.params.k, allowed)
+      // searchFiltered is eager and returns a local frame: the semi-join
+      // lives in the scan it ran, so read that execution's plan
+      val (got, scans) = executedPlans(
+        m.searchFiltered(spark, qs, 10, nprobe = m.params.k, allowed))
+      assert(scans.length == 1, s"expected one scan execution, saw ${scans.length}")
       // scope the check to the semi-join's own plan lines: the cached
       // index's BUILD plan (which legitimately broadcasts the tiny
       // per-cluster block-count table) renders inside InMemoryRelation
       // and would trip a whole-string BroadcastExchange match, but
       // nothing in it executes at search time
-      val plan = got.queryExecution.executedPlan.toString
+      val plan = scans.head
       val semiLines = plan.linesIterator.filter(_.contains("LeftSemi")).toSeq
       assert(semiLines.nonEmpty, s"expected a semi-join in the filtered-search plan:\n$plan")
       assert(semiLines.forall(l => !l.contains("Broadcast")),
@@ -716,5 +798,95 @@ class AnnSpec extends AnyFunSuite {
     assert(res.forall(_.getLong(1) != 0L),
       "compacted sidecar resurrected a deleted id")
     after.freeSearchCaches()
+  }
+
+  test("search/searchFiltered: the driver merge returns the distributed merge's rows") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(41)
+    val dim = 16
+    val base = (0 until 400).map(i => (i.toLong, randVec(rnd, dim)))
+    // exact duplicates under far ids: equal codes, equal distances, so
+    // the (distance, id) order must break every such tie by id
+    val dups = base.take(40).map { case (i, v) => (i + 1000L, v.clone()) }
+    val df = (base ++ dups).toDF("vec_id", "embedding")
+    val m = IVFIndex.build(spark, df, IVFIndex.Params(k = 8, totalBits = 4))
+    val qs = (base.take(6) ++ (0 until 6).map(i => (500L + i, randVec(rnd, dim)))).toArray
+    val evenIds = df.filter($"vec_id" % 2 === 0).select($"vec_id")
+    val noIds = df.filter($"vec_id" < 0).select($"vec_id")
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.as[(Long, Long, Int)].collect().toSeq.sortBy(r => (r._1, r._3))
+    def distributed(idx: org.apache.spark.sql.Dataset[IVFIndex.Entry],
+        q: Array[(Long, Array[Float])], k: Int, np: Int) = {
+      val (cands, bc) = m.scan(spark, idx, q, k, np)
+      try { val d = graft.ann.KnnExact.mergeTopK(spark, cands, k); (d.schema, rows(d)) }
+      finally bc.destroy()
+    }
+    def same(got: org.apache.spark.sql.DataFrame,
+        want: (org.apache.spark.sql.types.StructType, Seq[(Long, Long, Int)]), what: String) = {
+      assert(got.schema == want._1, s"$what: schema ${got.schema} != ${want._1}")
+      assert(rows(got) == want._2, s"$what: rows differ from the distributed merge")
+    }
+    for (path <- Seq("entry", "packed")) {
+      if (path == "packed") m.packedIndex(spark)
+      val top10 = m.search(spark, qs, 10, 3)
+      same(top10, distributed(m.index, qs, 10, 3), s"$path search k=10")
+      // searchAll packs the index, so it is compared on the packed pass
+      if (path == "packed") assert(rows(top10) ==
+        rows(m.searchAll(spark, qs.toSeq.toDF("vec_id", "embedding"), 10, 3)),
+        "searchAll differs")
+      // the fixture must exercise the tie: a query's duplicate pair sits
+      // at adjacent ranks, the smaller id first
+      assert(base.take(6).exists { case (q, _) =>
+        val r = rows(top10).filter(_._1 == q).map(_._2)
+        r.indexOf(q) >= 0 && r.indexOf(q + 1000L) == r.indexOf(q) + 1
+      }, s"$path: no query ranked a duplicate pair")
+      // k beyond the probed cells' size: every candidate, fewer than k
+      val wide = m.search(spark, qs, 500, 1)
+      same(wide, distributed(m.index, qs, 500, 1), s"$path search k=500")
+      assert(rows(wide).groupBy(_._1).values.forall(_.length < 500))
+      same(m.search(spark, Array.empty, 10, 3),
+        distributed(m.index, Array.empty, 10, 3), s"$path empty query set")
+      same(m.searchFiltered(spark, qs, 10, 3, evenIds),
+        distributed(m.allowedOnly(evenIds), qs, 10, 3), s"$path filtered")
+      val none = m.searchFiltered(spark, qs, 10, 3, noIds)
+      same(none, distributed(m.allowedOnly(noIds), qs, 10, 3), s"$path filtered to nothing")
+      assert(none.count() == 0)
+    }
+    m.freeSearchCaches()
+    m.index.unpersist()
+  }
+
+  test("search runs ONE Spark job and shuffles nothing; the result is local") {
+    val m = operators.AnnQueries.model(spark, sf)
+    val qs = operators.VectorQueries.queryVectors(spark, sf, 5)
+    // a fresh model over the same index: no packed cache, the entry path
+    val adhoc = new graft.ann.IVFModel(m.params, m.rotator, m.centroids,
+      m.rotatedCentroids, m.index)
+    for ((model, path) <- Seq(adhoc -> "entry", m -> "packed")) {
+      if (path == "packed") model.packedIndex(spark)
+      var res: org.apache.spark.sql.DataFrame = null
+      val (jobs, shuffle) = jobsAndShuffleBytes {
+        res = model.search(spark, qs, 10, 12)
+        assert(res.collect().length == qs.length * 10)
+      }
+      assert(jobs.length == 1,
+        s"$path: search + collect ran ${jobs.length} Spark jobs, want 1: ${jobs.mkString("; ")}")
+      assert(shuffle == 0L, s"$path: search moved $shuffle shuffle bytes, want 0")
+      val plan = res.queryExecution.executedPlan.toString
+      assert(plan.contains("LocalTableScan"), s"$path: result is not local:\n$plan")
+    }
+    m.freeSearchCaches()
+  }
+
+  test("searchHighAcc rejects overFetch < 1 and an overflowing k * overFetch") {
+    val m = operators.AnnQueries.model(spark, sf)
+    val e = Tables.embeddings(spark, sf)
+    val qs = operators.VectorQueries.queryVectors(spark, sf, 2)
+    for ((k, over) <- Seq(10 -> 0, 10 -> -3, (Int.MaxValue / 2) -> 4)) {
+      val ex = intercept[IllegalArgumentException] {
+        m.searchHighAcc(spark, e, qs, k, 4, overFetch = over)
+      }
+      assert(ex.getMessage.contains("overFetch"), ex.getMessage)
+    }
   }
 }
