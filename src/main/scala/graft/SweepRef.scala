@@ -44,8 +44,28 @@ import graft.ann.{IVFIndex, KnnExact, SweepEval}
   * SPARK_GRAFT_SWEEP_{VECS,DIM,K,NQ,TOPK,TRAIN} for smoke runs.)
   */
 object SweepRef {
-  private def env(name: String, dflt: Int): Int =
-    sys.env.get(name).map(_.toInt).getOrElse(dflt)
+  private def env(name: String, dflt: Int): Int = envAs(name, dflt)(_.toInt)
+
+  private def envAs[T](name: String, dflt: T)(parse: String => T): T =
+    parseKnob(name, sys.env.get(name), dflt)(parse)
+
+  /** A comma-separated Int list knob ("5,20,100"). */
+  private[graft] def ints(s: String): Seq[Int] =
+    s.split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq
+
+  /** `raw` parsed, or `dflt` when unset. A malformed value is rejected
+    * with a message naming the variable, not a bare
+    * NumberFormatException. */
+  private[graft] def parseKnob[T](name: String, raw: Option[String], dflt: T)(
+      parse: String => T): T =
+    raw.fold(dflt) { v =>
+      try parse(v)
+      catch {
+        case e: NumberFormatException =>
+          throw new IllegalArgumentException(
+            s"$name=\"$v\" is malformed: ${e.getMessage}", e)
+      }
+    }
 
   /** The seeded Gaussian-mixture embedding generator. */
   private def synthDf(
@@ -126,8 +146,8 @@ object SweepRef {
     // rising-curve corpus on the HARD side of the reference's
     // operating point (the r8 corpus was on the easy side at 0.807).
     val topics = env("SPARK_GRAFT_SWEEP_TOPICS", math.max(64, nVecs / 20))
-    val noise = sys.env.get("SPARK_GRAFT_SWEEP_NOISE").map(_.toFloat).getOrElse(0.50f)
-    val blend = sys.env.get("SPARK_GRAFT_SWEEP_BLEND").map(_.toFloat).getOrElse(0f)
+    val noise = envAs("SPARK_GRAFT_SWEEP_NOISE", 0.50f)(_.toFloat)
+    val blend = envAs("SPARK_GRAFT_SWEEP_BLEND", 0f)(_.toFloat)
     // fail smoke-run misconfiguration in milliseconds, not after the
     // expensive synth+build+GT phases
     require(kClusters >= 5, s"K=$kClusters leaves the nprobe ladder empty (min 5)")
@@ -140,8 +160,8 @@ object SweepRef {
     // exactly IVFModel.searchHighAcc. "plain" sweeps the pure
     // quantized path instead.
     val highAcc = sys.env.getOrElse("SPARK_GRAFT_SWEEP_MODE", "highacc") == "highacc"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.local(cpus.toInt, conf = Map(
+    val cpus = env("SPARK_GRAFT_CPUS", 32)
+    val spark = Sessions.local(cpus, conf = Map(
       "spark.app.name" -> "graft-sweep-ref",
       // d=1536 float arrays are ~6 KB/row: the default 4096-row
       // columnar batch tries to reserve multi-MB contiguous child
@@ -167,7 +187,7 @@ object SweepRef {
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(baseDir)))
       val t0 = System.nanoTime()
       synth(spark.range(nVecs).as[java.lang.Long]
-        .repartition(cpus.toInt * 2), seedBase = 0x5DEECE66DL)
+        .repartition(cpus * 2), seedBase = 0x5DEECE66DL)
         .write.mode("overwrite").parquet(baseDir)
       val base = spark.read.parquet(baseDir)
       val tSynth = (System.nanoTime() - t0) / 1e9
@@ -187,15 +207,13 @@ object SweepRef {
       // catch-all cells on the micro-topic corpus) with ~6× the
       // estimate volume per query — the cheap init costs more at
       // search time than it saves at build time. ---
-      val initMode = sys.env.getOrElse("SPARK_GRAFT_SWEEP_INIT", "k-means||")
       val initSteps = env("SPARK_GRAFT_SWEEP_INIT_STEPS", 1)
       val routedAssign =
         sys.env.get("SPARK_GRAFT_SWEEP_ROUTED_ASSIGN").contains("1")
       // balanced-IVF fat-cell split (0 = off): cap cells at this factor
       // × the mean size — the round-9 profile's catch-all cells (~100×
       // mean) drove 54M estimates per 2048-query chunk
-      val splitFactor = sys.env.get("SPARK_GRAFT_SWEEP_SPLIT_FACTOR")
-        .map(_.toDouble).getOrElse(0.0)
+      val splitFactor = envAs("SPARK_GRAFT_SWEEP_SPLIT_FACTOR", 0.0)(_.toDouble)
       // split policy: "auto" (product default — self-probe decides when
       // factor is 0) or "off" (byte-identical flat build, for curve
       // comparisons against pre-r11 sweeps). factor > 0 still forces.
@@ -203,7 +221,7 @@ object SweepRef {
       val t1 = System.nanoTime()
       val model = IVFIndex.build(spark, base,
         IVFIndex.Params(k = kClusters, totalBits = 4, maxTrainRows = trainRows.toLong,
-          kmeansInitMode = initMode, kmeansInitSteps = initSteps,
+          kmeansInitSteps = initSteps,
           routedAssign = routedAssign, maxClusterFactor = splitFactor,
           splitPolicy = splitPolicy))
       val splitProbe = IVFIndex.lastSplitProbe
@@ -229,11 +247,10 @@ object SweepRef {
       // the recall stop rule, which the filter + stop below reproduce)
       // SPARK_GRAFT_SWEEP_LADDER overrides the ladder (e.g. "5" for a
       // single-rung corpus-difficulty calibration trial)
-      val ladder = (sys.env.get("SPARK_GRAFT_SWEEP_LADDER") match {
-        case Some(s) => s.split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq
-        case None => Seq(5) ++ (10 until 200 by 10) ++ (200 until 400 by 40) ++
+      val ladder = envAs("SPARK_GRAFT_SWEEP_LADDER",
+        Seq(5) ++ (10 until 200 by 10) ++ (200 until 400 by 40) ++
           (400 to 1500 by 100) ++ (2000 to 4000 by 500) ++ Seq(6000, 10000, 15000)
-      }).filter(_ <= kClusters)
+      )(ints).filter(_ <= kClusters)
       def searchAt(np: Int) =
         if (highAcc) model.searchHighAcc(spark, base, queries, topk, np)
         else model.search(spark, queries, topk, np)
@@ -378,7 +395,7 @@ object SweepRef {
           } else "null"
         }
         val meta =
-          s"""{"commit":"$commit","dim":$dim,"n_vecs":$nVecs,"k":$kClusters,"nq":$nq,"topk":$topk,"mode":"${if (highAcc) "highacc" else "plain"}","batch_nq":$batchNq,"batch_query_bits":14,"build_s":$buildS,"gt_s":$gtS,"topics":$topics,"noise":$noise,"blend":$blend,"init_mode":"$initMode","init_steps":$initSteps,"routed_assign":$routedAssign,"split_factor":$splitFactor,"split_policy":"$splitPolicy","split_probe":$probeJson,"kernel_roofline":$rooflineJson,"k_final":$kFinal,"calibration_target":"openai1536_exhaf4 row 1 recall@5=0.653; two-knob series (r10): noise alone (0.35:0.807R,0.40:0.884F,0.45:0.892F,0.50:0.354-0.452R; R=rising,F=catch-all-collapsed) and split-factor on the rising corpora (0.50+f4:0.152@5, 0.45+f16:0.197@5 - f16 split the 0.45 regime's single 84%-of-corpus cell). recall@5 on this mixture family is either catch-all-inflated or well below 0.653; the published run keeps the hard-side rising curve (series in SURVEY 6)"}""" + "\n"
+          s"""{"commit":"$commit","dim":$dim,"n_vecs":$nVecs,"k":$kClusters,"nq":$nq,"topk":$topk,"mode":"${if (highAcc) "highacc" else "plain"}","batch_nq":$batchNq,"batch_query_bits":14,"build_s":$buildS,"gt_s":$gtS,"topics":$topics,"noise":$noise,"blend":$blend,"init_mode":"k-means||","init_steps":$initSteps,"routed_assign":$routedAssign,"split_factor":$splitFactor,"split_policy":"$splitPolicy","split_probe":$probeJson,"kernel_roofline":$rooflineJson,"k_final":$kFinal,"calibration_target":"openai1536_exhaf4 row 1 recall@5=0.653; two-knob series (r10): noise alone (0.35:0.807R,0.40:0.884F,0.45:0.892F,0.50:0.354-0.452R; R=rising,F=catch-all-collapsed) and split-factor on the rising corpora (0.50+f4:0.152@5, 0.45+f16:0.197@5 - f16 split the 0.45 regime's single 84%-of-corpus cell). recall@5 on this mixture family is either catch-all-inflated or well below 0.653; the published run keeps the hard-side rising curve (series in SURVEY 6)"}""" + "\n"
         Files.write(Paths.get(out + ".meta.json"), meta.getBytes(StandardCharsets.UTF_8))
       }
       // write the ladder-only CSV + its meta sibling now: a failure in
@@ -399,11 +416,10 @@ object SweepRef {
       // CSV rows); a held-out query stream, like the ladder's
       val batchRungs =
         if (batchNq <= 0) Seq.empty[Int]
-        else sys.env.getOrElse("SPARK_GRAFT_SWEEP_BATCH_RUNGS", "5,20,100,500,2000")
-          .split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq
+        else envAs("SPARK_GRAFT_SWEEP_BATCH_RUNGS", Seq(5, 20, 100, 500, 2000))(ints)
           .filter(np => rows.exists(_._1 == np))
       val batchQdf = synth(spark.range(batchNq.toLong.max(1L)).as[java.lang.Long]
-        .repartition(cpus.toInt), seedBase = 0x9E3779B97F4A7C15L)
+        .repartition(cpus), seedBase = 0x9E3779B97F4A7C15L)
       // LUT estimate kernel (queryBits=14): the Spark analogue of the
       // reference's FastScan accumulation, which is what its QPS
       // numbers measure — the scalar per-set-bit kernel is the

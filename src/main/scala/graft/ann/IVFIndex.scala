@@ -110,8 +110,9 @@ object IVFIndex {
     * entry) object-pointer chase on the estimate hot loop with a
     * sequential stream; `exCode` stays a reference column because it
     * is only touched on the rare post-prune rerank. Serializable so the
-    * model-lifetime cache can spill (MEMORY_AND_DISK); at rest it is a
-    * [[PackedRow]]. */
+    * model-lifetime cache can spill (MEMORY_AND_DISK). Never persisted:
+    * the index's only on-disk form is its entries, and runs are always
+    * packed from them in memory ([[packRuns]]). */
   private[graft] final class PackedRun(
       val words: Int, val dim: Int, val exBits: Int) extends Serializable {
     /** exBits ≤ 7 ⇒ F_d = bit·2^exBits + code fits a byte: pre-unpack
@@ -120,7 +121,7 @@ object IVFIndex {
       * refs and reranks through the unpack path. */
     val packExF: Boolean = exBits >= 1 && exBits <= 7
     /** Hard row bound per run: callers roll over to a fresh run when
-      * [[isFull]] (both packers do). Bounds every backing-array length
+      * [[isFull]] ([[packRuns]] does). Bounds every backing-array length
       * to safe Int territory — a monster catch-all cluster landing in
       * one partition must never push `cap * dim` / `cap * words` past
       * Int.MaxValue (2^21 entries at d=1536 would), and scanRuns
@@ -167,35 +168,6 @@ object IVFIndex {
       if (packExF) exF = java.util.Arrays.copyOf(exF, cap * dim)
       else exCode = java.util.Arrays.copyOf(exCode, cap)
     }
-    /** Adopt already-packed column data read back from the at-rest
-      * sidecar (see [[IVFModel.savePacked]]): arrays are exactly
-      * `rows` entries (the writer trims), so cap == n and the run is
-      * scan-ready with zero repacking. */
-    private[graft] def loadData(rows: Int, pIds: Array[Long],
-        pSign: Array[Long], pX2: Array[Float], pFacIp: Array[Float],
-        pFacErr: Array[Float], pXipnorm: Array[Float],
-        pExF: Array[Byte], pExCode: Array[Array[Byte]]): Unit = {
-      // every column is checked, not just ids/sign: a truncated factor
-      // or code blob that passed adoption would be persisted into the
-      // packed cache and only throw at scan time — OUTSIDE the
-      // adopt-time try/catch, so the entry-re-pack fallback would
-      // never engage and searches would stay broken for the model
-      // lifetime
-      require(pIds.length == rows && pSign.length == rows * words &&
-        pX2.length == rows && pFacIp.length == rows &&
-        pFacErr.length == rows && pXipnorm.length == rows &&
-        (if (packExF) pExF != null && pExF.length == rows * dim
-         else pExCode != null && pExCode.length == rows),
-        s"sidecar run shape mismatch: $rows rows, ${pIds.length} ids, " +
-          s"${pSign.length} sign words (want ${rows * words}), " +
-          s"${pX2.length}/${pFacIp.length}/${pFacErr.length}/${pXipnorm.length} factors, " +
-          s"exF=${if (pExF == null) "null" else pExF.length.toString}" +
-          s"/exCode=${if (pExCode == null) "null" else pExCode.length.toString}")
-      n = rows; cap = math.max(rows, 1)
-      ids = pIds; sign = pSign; x2 = pX2
-      facIp = pFacIp; facErr = pFacErr; xipnorm = pXipnorm
-      if (packExF) { exF = pExF; exCode = null } else { exF = null; exCode = pExCode }
-    }
     /** Trim backing arrays to exactly n rows — called once by the
       * model-lifetime packed cache before persisting (grow() doubles,
       * so an untrimmed run can hold ~2× its data for the model
@@ -213,58 +185,29 @@ object IVFIndex {
     }
   }
 
-  /** One [[PackedRun]] as a parquet row — the AT-REST half of the
-    * `fastscan/pack_codes.hpp` role (reference FastScan packs once at
-    * index-construction time and persists the packed blocks inside the
-    * index blob, IVF.hpp:219-252). `part_id`/`seq` pin the exact
-    * partition layout and in-partition run order of the in-memory
-    * cache that wrote it, so a cold load reconstructs a bit-identical
-    * scan. Exactly one of `exf` (pre-unpacked F bytes, exBits ≤ 7) and
-    * `ex_code` (bit-packed refs, exBits = 8) is non-null. */
-  private[graft] final case class PackedRow(
-      part_id: Int,
-      seq: Int,
-      cluster_id: Int,
-      n: Int,
-      words: Int,
-      dim: Int,
-      ex_bits: Int,
-      // primitive columns as little-endian BINARY blobs, not typed
-      // parquet lists: list<float>/list<long> decode element-wise
-      // through the row deserializer and measured as the whole
-      // cold-adopt budget — a binary column decodes as one memcpy
-      ids: Array[Byte], // n longs LE
-      sign: Array[Byte], // n*words longs LE
-      x2: Array[Byte], // n floats LE
-      fac_ip: Array[Byte],
-      fac_err: Array[Byte],
-      xipnorm: Array[Byte],
-      exf: Array[Byte],
-      ex_code: Array[Array[Byte]])
-
-  private[graft] def longsToBytes(a: Array[Long]): Array[Byte] = {
-    val out = new Array[Byte](a.length * 8)
-    java.nio.ByteBuffer.wrap(out).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      .asLongBuffer().put(a)
-    out
-  }
-  private[graft] def bytesToLongs(b: Array[Byte]): Array[Long] = {
-    val out = new Array[Long](b.length / 8)
-    java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      .asLongBuffer().get(out)
-    out
-  }
-  private[graft] def floatsToBytes(a: Array[Float]): Array[Byte] = {
-    val out = new Array[Byte](a.length * 4)
-    java.nio.ByteBuffer.wrap(out).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      .asFloatBuffer().put(a)
-    out
-  }
-  private[graft] def bytesToFloats(b: Array[Byte]): Array[Float] = {
-    val out = new Array[Float](b.length / 4)
-    java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      .asFloatBuffer().get(out)
-    out
+  /** Pack one partition's entries into per-cluster [[PackedRun]] lists:
+    * clusters in first-seen order, each cluster's entries in stream
+    * order, rolling over to a fresh run when the last one
+    * [[PackedRun.isFull]]. Only clusters where `keep` holds are packed.
+    * The one pack loop behind both [[IVFModel.scan]] sources (the
+    * model-lifetime [[IVFModel.packedIndex]] and the per-call entry
+    * pack), so the two scan identically by construction. */
+  private[graft] def packRuns(entries: Iterator[Entry], dim: Int, exBits: Int)(
+      keep: Int => Boolean)
+      : scala.collection.mutable.LinkedHashMap[
+        Int, scala.collection.mutable.ArrayBuffer[PackedRun]] = {
+    val runs = scala.collection.mutable.LinkedHashMap.empty[
+      Int, scala.collection.mutable.ArrayBuffer[PackedRun]]
+    entries.foreach { e =>
+      if (keep(e.cluster_id)) {
+        val rs = runs.getOrElseUpdate(e.cluster_id,
+          scala.collection.mutable.ArrayBuffer(
+            new PackedRun(e.sign_bits.length, dim, exBits)))
+        if (rs.last.isFull) rs += new PackedRun(e.sign_bits.length, dim, exBits)
+        rs.last.add(e)
+      }
+    }
+    runs
   }
 
   /** The per-partition QUERY-MAJOR scan over packed runs — one copy
@@ -274,12 +217,11 @@ object IVFIndex {
     * between them. Per (query, cluster): ONE residual/LUT prepare,
     * then a sequential stream through the cluster's packed blocks.
     * `runs` maps cluster id → that cluster's packed blocks in cached
-    * order; `accs` are the search counters ([[searchAccs]]);
-    * `nEntries` is the partition's probed-entry count (counted at
-    * buffer/filter time by the caller). */
+    * order (the partition's probed clusters only); `accs` are the
+    * search counters ([[searchAccs]]). */
   private[graft] def scanRuns(
       qs: Array[(Long, Array[Float], Array[Int])],
-      runs: scala.collection.mutable.HashMap[
+      runs: scala.collection.Map[
         Int, scala.collection.mutable.ArrayBuffer[PackedRun]],
       rotCents: Array[Array[Float]],
       k: Int,
@@ -287,10 +229,11 @@ object IVFIndex {
       exBits: Int,
       accs: (org.apache.spark.util.LongAccumulator,
         org.apache.spark.util.LongAccumulator,
-        org.apache.spark.util.LongAccumulator),
-      nEntries: Long): Iterator[(Long, Long, Double)] = {
+        org.apache.spark.util.LongAccumulator)): Iterator[(Long, Long, Double)] = {
     val heaps = Array.fill(qs.length)(new KnnExact.BoundedTopK(k))
     var nEst = 0L; var nRerank = 0L
+    var nEntries = 0L
+    runs.valuesIterator.foreach(_.foreach(nEntries += _.n))
     // partition-owned prepare scratch: one residual + one LUT buffer
     // reused across every (query, cluster) prepare — fresh allocation
     // per prepare measured ~10 GB/chunk of GC load at the reference
@@ -400,15 +343,6 @@ object IVFIndex {
       // (Searcher.hpp:16,122-172), trading a sliver of estimate
       // accuracy for a cheaper per-entry hot loop.
       queryBits: Int = 0,
-      // k-means init: "k-means||" (MLlib default — its driver-side
-      // finishing step clusters O(initSteps·2k) candidates serially,
-      // which at K=4096/d=1536 dominates the whole index build) or
-      // "random" (the faiss-style IVF recipe: random init + Lloyd on
-      // a bounded sample; measured recall delta on the reference-shape
-      // sweep is recorded in the sweep meta). Default keeps the MLlib
-      // behavior; large-K reference-shape builds pass "random".
-      kmeansInitMode: String = "k-means||",
-      kmeansMaxIter: Int = 12,
       // k-means|| init rounds: each round D²-samples ~2k candidates
       // AND the collected candidate set feeds a SERIAL driver-side
       // k-means++ finish whose cost grows with rounds·k — at K=4096,
@@ -482,6 +416,11 @@ object IVFIndex {
     * on real skew. */
   val AutoSplitFactor: Double = 8.0
 
+  /** Lloyd iterations of the centroid training: recall is insensitive
+    * beyond ~10 on these corpora (verified by the recall specs), and
+    * train time is the dominant one-time build cost. */
+  private val KMeansMaxIter = 12
+
   /** Outcome of the auto-split build-time self-probe (sweep meta
     * records it; [[lastSplitProbe]] holds the most recent build's). */
   final case class SplitProbe(
@@ -500,82 +439,6 @@ object IVFIndex {
   private[graft] def lastSplitProbe: Option[SplitProbe] = lastSplitProbeTl.get
   private[graft] def lastSplitProbe_=(v: Option[SplitProbe]): Unit =
     lastSplitProbeTl.set(v)
-
-  /** `kmeansInitMode = "spread"`: large-K k-means WITHOUT the serial
-    * driver finish. MLlib's k-means|| collects O(rounds·2K) candidates
-    * and runs a SINGLE-THREADED local k-means++ over them — at
-    * K=4096/d=1536 that one driver phase was measured at ~15 min of a
-    * 20-min build (the round-8 sweep's build_s 1897 bottleneck).
-    * Published alternative (Bahmani et al. 2012 observe the oversample
-    * already lands near every true cluster): ONE distributed D²
-    * round — distances to a single deterministic seed, candidates
-    * sampled with probability ∝ d² (expected ~4K of them) — then K
-    * picked from the candidates by seeded D²-weighted order on the
-    * driver (an O(cand) weighted pick, NO local Lloyd), and Lloyd
-    * itself runs DISTRIBUTED via the RDD-API `setInitialModel` path.
-    * The init is deliberately rougher than k-means++: the distributed
-    * Lloyd iterations do the refinement in parallel instead of the
-    * driver doing it serially. Recall parity is validated per-corpus
-    * (sweep meta records the init); the default stays "k-means||". */
-  private def spreadKMeans(
-      spark: SparkSession,
-      sampled: org.apache.spark.rdd.RDD[Array[Float]],
-      params: Params): Array[Array[Float]] = {
-    import org.apache.spark.mllib.clustering.{KMeans => MllibKMeans, KMeansModel => MllibKMeansModel}
-    import org.apache.spark.mllib.linalg.Vectors
-    val data = sampled.map(v => Vectors.dense(v.map(_.toDouble)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val seedVec = data.take(1).headOption.getOrElse(
-        throw new IllegalArgumentException("empty training sample"))
-      val bcSeed = spark.sparkContext.broadcast(seedVec)
-      val target = 4L * params.k
-      // Σd² first (one pass), then sample candidates ∝ d² (second
-      // pass) — both narrow; weights ride along for the driver pick
-      val sumD2 = data.map(v => Vectors.sqdist(v, bcSeed.value)).sum()
-      val frac = if (sumD2 > 0) target / sumD2 else 0.0
-      val cands: Array[(Double, org.apache.spark.mllib.linalg.Vector)] =
-        data.mapPartitionsWithIndex { (pi, it) =>
-          val rnd = new scala.util.Random(params.seed ^ (pi * 0x9E3779B97F4A7C15L))
-          it.flatMap { v =>
-            val d2 = Vectors.sqdist(v, bcSeed.value)
-            if (sumD2 <= 0 || rnd.nextDouble() < d2 * frac) Some((d2, v)) else None
-          }
-        }.collect()
-      // driver pick: K candidates by seeded D²-weighted order
-      // (Efraimidis-Spirakis keys — the c40 mechanism), topped up from
-      // the sample if the draw came in under K
-      val rnd = new scala.util.Random(params.seed)
-      val picked = cands
-        .map { case (d2, v) => (math.log(rnd.nextDouble()) / math.max(d2, 1e-12), v) }
-        .sortBy(_._1)(Ordering[Double].reverse)
-        .take(params.k).map(_._2)
-      // top-up de-duplicates against the already-picked vectors (the
-      // D² draw can undershoot K); a still-short init shrinks K, which
-      // must be loud — silently collapsed cells would read as a recall
-      // regression with no build-side evidence
-      val init =
-        if (picked.length >= params.k) picked
-        else {
-          val have = scala.collection.mutable.LinkedHashSet.empty[
-            org.apache.spark.mllib.linalg.Vector]
-          have ++= picked
-          data.take(params.k * 4).iterator
-            .takeWhile(_ => have.size < params.k).foreach(have += _)
-          if (have.size < params.k)
-            println(s"[spread-init] WARNING: only ${have.size} distinct initial " +
-              s"centers for K=${params.k}; proceeding with the reduced K")
-          have.toArray
-        }
-      require(init.length > 0, "spread init produced no centers")
-      val km = new MllibKMeans()
-        .setK(init.length)
-        .setMaxIterations(params.kmeansMaxIter)
-        .setSeed(params.seed)
-        .setInitialModel(new MllibKMeansModel(init))
-      km.run(data).clusterCenters.map(_.toArray.map(_.toFloat))
-    } finally data.unpersist(blocking = false)
-  }
 
   /** Nearest centroid under the sizing-pass rule: routed (approximate,
     * ~free) above the search threshold, exact flat below. */
@@ -930,9 +793,6 @@ object IVFIndex {
       }
       buf.iterator
     }
-    // 12 Lloyd iterations by default: recall is insensitive beyond ~10
-    // on these corpora (verified by the recall specs), and train time
-    // is the dominant one-time build cost.
     // The split path re-traverses the sample twice after training
     // (cell sizing + member subsample; auto adds the self-probe pass)
     // — persist it for those passes
@@ -941,20 +801,19 @@ object IVFIndex {
     val sampledP =
       if (doSplit) sampled.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else sampled
-    val trained: Array[Array[Float]] =
-      if (params.kmeansInitMode == "spread")
-        spreadKMeans(spark, sampledP, params)
-      else {
-        val train = sampledP.toDF("vec")
-          .withColumn("features", array_to_vector(col("vec")))
-        val km = new KMeans()
-          .setK(params.k).setSeed(params.seed)
-          .setMaxIter(params.kmeansMaxIter)
-          .setInitMode(params.kmeansInitMode)
-          .setInitSteps(params.kmeansInitSteps)
-          .setFeaturesCol("features")
-        km.fit(train).clusterCenters.map(_.toArray.map(_.toFloat))
-      }
+    // MLlib's default k-means|| init. SURVEY §6 records the two
+    // cheaper inits measured against it at the reference shape:
+    // random (recall@5 0.81 → 0.24) and a one-round D² oversample
+    // (0.39) — the serial k-means++ finish is where the recall comes
+    // from on micro-topic corpora
+    val train = sampledP.toDF("vec")
+      .withColumn("features", array_to_vector(col("vec")))
+    val trained: Array[Array[Float]] = new KMeans()
+      .setK(params.k).setSeed(params.seed)
+      .setMaxIter(KMeansMaxIter)
+      .setInitSteps(params.kmeansInitSteps)
+      .setFeaturesCol("features")
+      .fit(train).clusterCenters.map(_.toArray.map(_.toFloat))
     val centroids =
       if (doSplit)
         try splitFatClusters(spark, sampledP, trained, params)
@@ -1268,16 +1127,8 @@ object IVFModel {
     // would lose them. The next successful compact clears it.
     // Renames tolerate a concurrent recoverer: losing the race is fine
     // as long as someone installed the entries dir.
-    // any recovery action below means a compact died mid-flight: the
-    // packed sidecar (if one survives — compacts newer than r16 delete
-    // it before the swap, but a crash under the old order could leave
-    // one) caches pre-compact entries and must not be adopted by the
-    // next load. Deleting it here is idempotent and the next compact
-    // or load re-packs.
-    def dropStalePacked(): Unit = fs.delete(new Path(s"$path/packed"), true)
     if (!fs.exists(entries)) {
       if (fs.exists(neu) && fs.exists(new Path(neu, "_SUCCESS"))) {
-        dropStalePacked()
         // the compacted copy is complete (_SUCCESS is the write's own
         // commit marker; for an index with a real entries dir, staging
         // it aside also only happens after the copy completed) — finish
@@ -1307,7 +1158,6 @@ object IVFModel {
       // swap finished, cleanup didn't: entries_old is the commit
       // evidence, so the folded batch dirs are deleted first — if THIS
       // cleanup crashes too, the evidence is still there next time
-      dropStalePacked()
       deleteFoldedBatches(fs, path)
       fs.delete(old, true)
     }
@@ -1426,9 +1276,13 @@ object IVFModel {
     meta
   }
 
-  /** Load a persisted index (analogue of IVF::load, IVF.hpp:254-293).
-    * Tombstoned ids (see [[deleteIds]]) are subtracted with a
-    * broadcast anti-join. */
+  /** Load a persisted index (analogue of IVF::load, IVF.hpp:254-293)
+    * from its one on-disk form: `meta`, `centroids`, `rotation` and
+    * `entries` plus any committed ingest batches. Tombstoned ids (see
+    * [[deleteIds]]) are subtracted with an anti-join. Packed scan runs
+    * are never read from disk: [[IVFModel.packedIndex]] packs them from
+    * the loaded entries. A `packed/` directory left by an older build
+    * is ignored and can be deleted by hand. */
   def load(spark: SparkSession, path: String): IVFModel = {
     import spark.implicits._
     val meta = checkVersion(spark, path)
@@ -1445,27 +1299,7 @@ object IVFModel {
       .as[(Int, Array[Float])].collect().sortBy(_._1).map(_._2)
     val rotator = Rotator.fromMatrix(dim, params.seed, matrix)
     val index = entriesMinusDeletes(spark, path).as[IVFIndex.Entry]
-    val m = new IVFModel(params, rotator, centroids, rotator.rotateAll(centroids), index)
-    // adopt the at-rest packed sidecar ONLY when it is coherent with
-    // the entries: it is a pure cache of `entries`, so any overlay —
-    // tombstones, committed ingest batches — or a torn write
-    // (no _SUCCESS) means load ignores it (compact folds overlays and
-    // rewrites it).
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    val packedDir = new Path(s"$path/packed")
-    // overlay check filters batch dirs by DATA, exactly like
-    // entriesMinusDeletes: the _ingest_log markers survive compaction
-    // by design, so a marker-only check would permanently disable
-    // sidecar adoption after any ingest+compact cycle — turning
-    // compact's own sidecar rebuild into dead work and re-packing on
-    // every load forever
-    if (fs.exists(new Path(packedDir, "_SUCCESS")) &&
-        hasDataFiles(fs, packedDir) &&
-        !fs.exists(new Path(s"$path/deletes")) &&
-        !committedBatchDirs(fs, path).exists(hasDataFiles(fs, _)))
-      m.packedAtRestDir = Some(packedDir.toString)
-    m
+    new IVFModel(params, rotator, centroids, rotator.rotateAll(centroids), index)
   }
 
   /** Compaction: apply tombstones physically and merge the small files
@@ -1501,19 +1335,6 @@ object IVFModel {
       .write.mode("overwrite").partitionBy("cluster_id").parquet(entriesNew.toString)
     val entries = new Path(s"$path/entries")
     val entriesOld = new Path(s"$path/entries_old")
-    // the packed sidecar caches the PRE-compaction entries: delete it
-    // BEFORE the swap begins (the save() order), not after the
-    // cleanup — a crash anywhere past this point then leaves NO
-    // sidecar (the next load just re-packs) instead of a stale one
-    // the load-time coherence check would happily adopt (entries_old
-    // gone, no deletes dir), silently missing every folded ingest row
-    // and resurrecting tombstoned ids. A crash during the compacted
-    // WRITE above is still fully coherent (no swap happened, old
-    // entries + old sidecar intact), which is why the delete sits
-    // here and not at the top.
-    val packedDir = new Path(s"$path/packed")
-    val hadPacked = fs.exists(packedDir)
-    if (hadPacked) fs.delete(packedDir, true)
     fs.delete(entriesOld, true)
     // a meta-only index (saveMeta before any batch-written entries) has
     // nothing to stage aside; an empty entries_old still gets created —
@@ -1530,13 +1351,6 @@ object IVFModel {
     deleteFoldedBatches(fs, path)
     fs.delete(entriesOld, true)
     fs.delete(new Path(s"$path/deletes"), true)
-    // rebuild the sidecar from the compacted index so a later load
-    // keeps its cold-start win (it was deleted before the swap)
-    if (hadPacked) {
-      val m = load(spark, path)
-      try m.savePacked(path)
-      finally m.freeSearchCaches()
-    }
   }
 }
 
@@ -1644,103 +1458,22 @@ final class IVFModel(
     * spill serialized under pressure); at 100 TB search reads the
     * partitioned parquet instead, this cache is the
     * single-node/hot-working-set path. Shared across withQueryBits
-    * copies like the router. */
-  /** When [[IVFIndex.load]] found a coherent at-rest packed sidecar
-    * (see [[savePacked]]), its directory — [[packedIndex]] then
-    * reconstructs the runs from parquet instead of re-packing the
-    * entry cache (the cold-start path). */
-  @transient private[graft] var packedAtRestDir: Option[String] = None
-
-  /** [[packedAtRestDir]] with the transient-null case folded in: a
-    * deserialized copy has the field as Java's null, not None (the
-    * sharedState rule) — reading it raw would NPE in [[packedIndex]]
-    * on any serialize/round-tripped model. */
-  private def packedAtRest: Option[String] = {
-    if (packedAtRestDir == null) packedAtRestDir = None
-    packedAtRestDir
-  }
-
+    * copies like the router. Built only in memory, from the entries
+    * ([[IVFIndex.packRuns]] over every cluster, then `trim()`): the
+    * index persists no packed form. */
   private[graft] def packedIndex(
       spark: SparkSession): org.apache.spark.rdd.RDD[(Int, IVFIndex.PackedRun)] = {
     val s = sharedState
     if (s.packed == null) s.synchronized {
-      if (s.packed == null && packedAtRest.isDefined) try {
-        // cold-load path: adopt the persisted runs (layout pinned by
-        // (part_id, seq) — bit-identical scan to the cache that wrote
-        // them); one read job instead of a full re-pack
-        import spark.implicits._
-        // default file splits: forcing finer splits (32 MB) to chase
-        // parallelism measured 2.2x SLOWER on the adopt read (row-group
-        // skew — runs are up to ~50 MB rows), and a forced
-        // rebuild-the-writer's-partitioning shuffle measured as
-        // expensive as re-packing; both probed and rejected,
-        // results/packed_sidecar_ab.json
-        val rows = spark.read.parquet(packedAtRestDir.get).as[IVFIndex.PackedRow]
-        val maxPart = rows.agg(max(col("part_id"))).head()
-        // a zero-run sidecar (index compacted to empty) has nothing to
-        // adopt — fall through to the entry path below, which packs
-        // the (empty) entry cache trivially
-        if (!maxPart.isNullAt(0)) {
-          // natural parquet splits, NO shuffle: a run row is never
-          // split across partitions, per-partition runs sort by the
-          // writer's (part_id, seq), and the search result is
-          // partitioning-independent anyway (scanRuns emits
-          // per-partition candidates; both top-k merges rank by
-          // (distance, id), a pure value order). A forced
-          // rebuild-the-writer's-partitioning shuffle measured as
-          // expensive as re-packing from the entries — it erased the
-          // whole cold-start win.
-          val rdd = rows.rdd.mapPartitions({ it =>
-            it.toArray.sortBy(r => (r.part_id, r.seq)).iterator.map { r =>
-              val run = new IVFIndex.PackedRun(r.words, r.dim, r.ex_bits)
-              run.loadData(r.n, IVFIndex.bytesToLongs(r.ids),
-                IVFIndex.bytesToLongs(r.sign), IVFIndex.bytesToFloats(r.x2),
-                IVFIndex.bytesToFloats(r.fac_ip), IVFIndex.bytesToFloats(r.fac_err),
-                IVFIndex.bytesToFloats(r.xipnorm), r.exf, r.ex_code)
-              (r.cluster_id, run)
-            }
-          }, preservesPartitioning = false)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          rdd.foreachPartition(_ => ())
-          s.packed = rdd
-        }
-      } catch {
-        // a cache read must NEVER brick a search: an unreadable or
-        // schema-incompatible sidecar (older format, torn files a
-        // filesystem lied about) logs and falls through to the entry
-        // re-pack below — correctness never depended on the sidecar
-        case e: Exception =>
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"packed sidecar at ${packedAtRestDir.get} unreadable " +
-              s"(${e.getMessage}); re-packing from entries")
-          packedAtRestDir = None
-      }
       if (s.packed == null) {
         val pDim = rotator.paddedDim // residual/ex_code length is the PADDED dim
         val pExBits = params.exBits
         val rdd = index.rdd.mapPartitions({ it =>
-          // LinkedHashMap: preserve first-seen cluster order AND
-          // within-cluster cached entry order (scan parity with the
-          // entry path)
-          val runs = new java.util.LinkedHashMap[
-            Integer, scala.collection.mutable.ArrayBuffer[IVFIndex.PackedRun]]
-          it.foreach { e =>
-            val rs = runs.computeIfAbsent(e.cluster_id, _ =>
-              scala.collection.mutable.ArrayBuffer(
-                new IVFIndex.PackedRun(e.sign_bits.length, pDim, pExBits)))
-            // roll over at the run row bound (Int-safe array math for
-            // monster catch-all cells; order-neutral, scanRuns walks a
-            // cluster's runs in insertion order)
-            if (rs.last.isFull)
-              rs += new IVFIndex.PackedRun(e.sign_bits.length, pDim, pExBits)
-            rs.last.add(e)
+          IVFIndex.packRuns(it, pDim, pExBits)(_ => true).iterator.flatMap {
+            case (cid, rs) =>
+              rs.foreach(_.trim()) // 2x grow overshoot freed pre-persist
+              rs.iterator.map(r => (cid, r))
           }
-          scala.jdk.CollectionConverters.IteratorHasAsScala(
-            runs.entrySet().iterator()).asScala
-            .flatMap { kv =>
-              kv.getValue.foreach(_.trim()) // 2x grow overshoot freed pre-persist
-              kv.getValue.iterator.map(r => (kv.getKey.intValue, r))
-            }
         }, preservesPartitioning = true)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         rdd.foreachPartition(_ => ()) // materialize once, outside chunk timing
@@ -1753,22 +1486,17 @@ final class IVFModel(
   /** Same model, same (cached) index, same shared router/broadcast,
     * different query-side estimate precision (Params.queryBits) — the
     * knob costs nothing to flip. */
-  def withQueryBits(bits: Int): IVFModel = {
-    val m = new IVFModel(params.copy(queryBits = bits), rotator, centroids,
+  def withQueryBits(bits: Int): IVFModel =
+    new IVFModel(params.copy(queryBits = bits), rotator, centroids,
       rotatedCentroids, index, sharedState)
-    // the at-rest sidecar travels with the shared search state: the
-    // documented load → withQueryBits(N) → searchAll flow must keep
-    // the cold-start win, not silently re-pack the whole index
-    m.packedAtRestDir = packedAtRest
-    m
-  }
 
   /** Persist the index columnar, partitioned by cluster (the Spark
     * analogue of IVF::save, IVF.hpp:219-252). Partitioning by
     * cluster_id means a search with nprobe probes reads only those
-    * directories (real partition pruning at 100 TB). The rotator is
-    * NOT persisted — it is deterministic from (dim, seed) in the
-    * metadata, unlike the reference which must serialize its matrix.
+    * directories (real partition pruning at 100 TB). `entries`,
+    * `centroids`, `rotation` and `meta` ([[saveMeta]]) are the index's
+    * only persisted form: no packed scan runs are written, and a
+    * loaded model packs them from its entries ([[packedIndex]]).
     *
     * save is a FULL REPLACE of whatever index lived at `path`: besides
     * overwriting entries, it clears tombstones, streaming-ingest batch
@@ -1785,23 +1513,10 @@ final class IVFModel(
     * static overwrite clears the dir before writing) — save to a fresh
     * path, or use [[IVFModel.compact]] for the crash-safe in-place
     * rewrite. */
-  def save(path: String): Unit = save(path, packed = true)
-
-  /** [[save]] with the packed sidecar optional: `packed = false` skips
-    * the pack pass (and removes any stale sidecar at `path`) — for
-    * indexes that will only ever be searched through the partitioned
-    * entries (the 100 TB nprobe-pruned path), where paying a full
-    * extra scan + a second on-disk copy at save time buys nothing. */
-  def save(path: String, packed: Boolean): Unit = {
+  def save(path: String): Unit = {
     val spark = index.sparkSession
     import org.apache.hadoop.fs.Path
     val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    // drop any PREVIOUS save's packed sidecar before touching entries:
-    // save() is not crash-safe, but a crash between the entries write
-    // and the (packed) sidecar rewrite must leave NO sidecar — a stale
-    // one still has its _SUCCESS and no overlays, so a load would
-    // silently adopt it against the NEW entries and serve wrong results
-    fs.delete(new Path(s"$path/packed"), true)
     // repartition on the partition column BEFORE partitionBy: without
     // it every task writes one file per cluster it holds (tasks × K
     // files — at K=4096 on a 1000-executor cluster that is a
@@ -1816,33 +1531,6 @@ final class IVFModel(
     Seq("deletes", "entries_batches", "_ingest_log", "_ingest_checkpoint",
       "entries_old", "entries_compacting")
       .foreach(d => fs.delete(new Path(s"$path/$d"), true))
-    if (packed) savePacked(path)
-  }
-
-  /** Persist the model-lifetime packed scan cache as the index's
-    * AT-REST packed sidecar (`$path/packed`) — the other half of the
-    * reference's pack-once-at-construction design
-    * (`fastscan/pack_codes.hpp` + the index blob, IVF.hpp:219-252):
-    * a cold [[IVFIndex.load]] adopts the runs from parquet instead of
-    * re-deserializing and re-packing the whole entry cache before its
-    * first chunk. (part_id, seq) pin the writer's exact layout, so the
-    * reconstructed scan is bit-identical. The sidecar is a pure cache
-    * of `entries`: any overlay (tombstones, ingest batches) makes load
-    * ignore it until [[IVFIndex.compact]] folds the overlays and
-    * rewrites it. */
-  def savePacked(path: String): Unit = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val rows = packedIndex(spark).mapPartitionsWithIndex { (pid, it) =>
-      it.zipWithIndex.map { case ((cid, r), seq) =>
-        IVFIndex.PackedRow(pid, seq, cid, r.n, r.words, r.dim, r.exBits,
-          IVFIndex.longsToBytes(r.ids), IVFIndex.longsToBytes(r.sign),
-          IVFIndex.floatsToBytes(r.x2), IVFIndex.floatsToBytes(r.facIp),
-          IVFIndex.floatsToBytes(r.facErr), IVFIndex.floatsToBytes(r.xipnorm),
-          r.exF, r.exCode)
-      }
-    }
-    spark.createDataset(rows).write.mode("overwrite").parquet(s"$path/packed")
   }
 
   /** Persist only the model metadata (centroids, rotation, params) —
@@ -2169,14 +1857,14 @@ final class IVFModel(
     //    search touches ~0.1% of the index here and must not pay a
     //    full-index pack.
     //
-    // Both feed the ONE scanRuns kernel, so results are identical by
-    // construction (and golden-pinned). ---
+    // Both sources pack through IVFIndex.packRuns and feed the ONE
+    // scanRuns kernel, so results are identical by construction (and
+    // golden-pinned). ---
     val accs = IVFIndex.searchAccs(spark)
     val scanK = k
     val qb = queryBits
     val eb = exBits
     val fDim = rotator.paddedDim // residual/ex_code length is the PADDED dim
-    val fExBits = exBits
     // Packed cache only when it ALREADY exists (searchAll builds it
     // up front; an ad-hoc one-shot search must not pay a full-index
     // pack — at nprobe=5/K=4096 the entry path's probed-cluster
@@ -2192,15 +1880,12 @@ final class IVFModel(
           // spans several blocks), probed clusters only
           val m = new scala.collection.mutable.HashMap[
             Int, scala.collection.mutable.ArrayBuffer[IVFIndex.PackedRun]]
-          var nEntries = 0L
           it.foreach { case (cid, run) =>
-            if (byCluster(cid) != null) {
-              nEntries += run.n
+            if (byCluster(cid) != null)
               m.getOrElseUpdate(cid,
                 scala.collection.mutable.ArrayBuffer.empty) += run
-            }
           }
-          IVFIndex.scanRuns(qs, m, rotCents, scanK, qb, eb, accs, nEntries)
+          IVFIndex.scanRuns(qs, m, rotCents, scanK, qb, eb, accs)
         }
         spark.createDataset(rdd)
       } else {
@@ -2208,22 +1893,9 @@ final class IVFModel(
           .filter(col("cluster_id").isin(probedClusters.map(_.asInstanceOf[AnyRef]): _*))
           .mapPartitions { iter =>
             val (qs, byCluster) = bc.value
-            val rotCents = bcCent.value
-            val m = new scala.collection.mutable.HashMap[
-              Int, scala.collection.mutable.ArrayBuffer[IVFIndex.PackedRun]]
-            var nEntries = 0L
-            iter.foreach { e =>
-              if (byCluster(e.cluster_id) != null) {
-                nEntries += 1
-                val rs = m.getOrElseUpdate(e.cluster_id,
-                  scala.collection.mutable.ArrayBuffer(
-                    new IVFIndex.PackedRun(e.sign_bits.length, fDim, fExBits)))
-                if (rs.last.isFull) // Int-safe rollover, same as packedIndex
-                  rs += new IVFIndex.PackedRun(e.sign_bits.length, fDim, fExBits)
-                rs.last.add(e)
-              }
-            }
-            IVFIndex.scanRuns(qs, m, rotCents, scanK, qb, eb, accs, nEntries)
+            IVFIndex.scanRuns(qs,
+              IVFIndex.packRuns(iter, fDim, eb)(byCluster(_) != null),
+              bcCent.value, scanK, qb, eb, accs)
           }
       }
     (candidates, bc)

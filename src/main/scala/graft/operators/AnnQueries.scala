@@ -791,14 +791,7 @@ object AnnQueries {
       // hash gate (a tombstone missed, applied twice, or leaked by
       // compact changes a count and fails it)
       writeCentroidSidecar(spark, m)
-      // packed=false: the packed sidecar is a pure scan cache that the
-      // compact below would immediately invalidate and rebuild — an
-      // index about to absorb deletes + compaction should not pay a
-      // full pack pass first (at 100 TB that's an extra full-index
-      // write); pack once the churn settles (compact rebuilds it iff
-      // present, savePacked adds it on demand). r12's b15 bench
-      // regression was exactly this double pack, not operator cost.
-      m.save(idxDir, packed = false)
+      m.save(idxDir)
       val odd = m.index.toDF().select(col("id")).filter(col("id") % 2 =!= 0)
       IVFModel.deleteIds(idxDir, odd)
       IVFModel.compact(spark, idxDir)

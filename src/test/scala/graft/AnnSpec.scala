@@ -691,7 +691,7 @@ class AnnSpec extends AnyFunSuite {
       def scan(runs: scala.collection.mutable.HashMap[
           Int, scala.collection.mutable.ArrayBuffer[IVFIndex.PackedRun]]) =
         IVFIndex.scanRuns(qs, runs, Array(cent), 5, queryBits, exBits,
-          IVFIndex.searchAccs(spark), 0L).toVector.sorted
+          IVFIndex.searchAccs(spark)).toVector.sorted
       val whole = scan(runsOf(Seq(0 until 10)))
       val rolled = runsOf(Seq(0 until 4, 4 until 8, 8 until 10))
       assert(scan(rolled) == whole, s"rollover changed results (qb=$queryBits)")
@@ -734,70 +734,6 @@ class AnnSpec extends AnyFunSuite {
     assert(entry == (80L,
       "c8111588e50b9c032e933e917d24eb75f03c2cf94803c236b74864fdde38e2e9"),
       "search result drifted from the pinned b7 raw-search row")
-  }
-
-  test("packed sidecar: cold load adopts it, overlays invalidate it, scans identical") {
-    import spark.implicits._
-    val sfd = "/root/testdata/sf0.001"
-    val m = graft.operators.AnnQueries.model(spark, sfd)
-    val qs = graft.operators.VectorQueries.queryVectors(spark, sfd, 4)
-    val dir = java.nio.file.Files.createTempDirectory("packed_sidecar").toString
-    m.save(dir) // save writes entries + the packed sidecar
-    m.freeSearchCaches()
-    assert(new java.io.File(s"$dir/packed/_SUCCESS").exists,
-      "save(path) must persist the packed sidecar")
-
-    // cold load adopts the sidecar; its scan must equal the re-pack scan
-    val cold = graft.ann.IVFModel.load(spark, dir)
-    assert(cold.packedAtRestDir.isDefined, "coherent sidecar not adopted")
-    cold.packedIndex(spark) // built FROM the sidecar
-    val viaSidecar = cold.search(spark, qs, 10, 12)
-      .orderBy("query_id", "rk").collect().toSeq
-    cold.freeSearchCaches()
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm); f.delete()
-    }
-    rm(new java.io.File(s"$dir/packed"))
-    val repack = graft.ann.IVFModel.load(spark, dir)
-    assert(repack.packedAtRestDir.isEmpty)
-    repack.packedIndex(spark) // entry re-pack path
-    val viaRepack = repack.search(spark, qs, 10, 12)
-      .orderBy("query_id", "rk").collect().toSeq
-    repack.freeSearchCaches()
-    assert(viaSidecar == viaRepack,
-      "sidecar scan diverged from the entry re-pack scan")
-
-    // an UNREADABLE sidecar (wrong schema — an old format, a torn
-    // write the coherence checks missed) must fall back to the entry
-    // re-pack, never brick the search
-    locally {
-      import spark.implicits._
-      Seq((1, "garbage")).toDF("part_id", "junk")
-        .write.mode("overwrite").parquet(s"$dir/packed")
-      val broken = graft.ann.IVFModel.load(spark, dir)
-      assert(broken.packedAtRestDir.isDefined, "coherence checks still pass")
-      broken.packedIndex(spark) // must not throw
-      val viaFallback = broken.search(spark, qs, 10, 12)
-        .orderBy("query_id", "rk").collect().toSeq
-      assert(viaFallback == viaRepack, "fallback scan diverged")
-      broken.freeSearchCaches()
-    }
-
-    // a tombstone overlay makes load IGNORE the (now stale) sidecar...
-    m.save(dir)
-    m.freeSearchCaches()
-    graft.ann.IVFModel.deleteIds(dir, Seq(0L).toDF("id"))
-    assert(graft.ann.IVFModel.load(spark, dir).packedAtRestDir.isEmpty,
-      "a tombstoned index must not adopt the stale sidecar")
-    // ...and compact folds the tombstone and REBUILDS a coherent sidecar
-    graft.ann.IVFModel.compact(spark, dir)
-    val after = graft.ann.IVFModel.load(spark, dir)
-    assert(after.packedAtRestDir.isDefined, "compact must rebuild the sidecar")
-    after.packedIndex(spark)
-    val res = after.search(spark, qs, 10, 12).collect()
-    assert(res.forall(_.getLong(1) != 0L),
-      "compacted sidecar resurrected a deleted id")
-    after.freeSearchCaches()
   }
 
   test("search/searchFiltered: the driver merge returns the distributed merge's rows") {

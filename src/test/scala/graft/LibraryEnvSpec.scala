@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * library object is an input no caller can see, and a stray value in
   * any deployment silently changes behaviour. The mains directly under
   * `graft/` (Bench, Verify, the sweeps and probes) are the only env
-  * readers. */
+  * readers, and they reject a malformed value by name. */
 class LibraryEnvSpec extends AnyFunSuite {
   val LibraryPackages =
     Seq("ann", "ops", "operators", "functions", "streaming", "sources", "plans")
@@ -32,5 +32,19 @@ class LibraryEnvSpec extends AnyFunSuite {
       if line.contains("sys.env") || line.contains("System.getenv")
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("library code reads the environment:\n", "\n", ""))
+  }
+
+  test("a main's malformed numeric knob is rejected with a message naming it") {
+    assert(SweepRef.parseKnob("SPARK_GRAFT_SWEEP_K", None, 4096)(_.toInt) == 4096)
+    assert(SweepRef.parseKnob("SPARK_GRAFT_SWEEP_NOISE", Some("0.45"), 0.5f)(_.toFloat) == 0.45f)
+    for ((name, raw, parse) <- Seq[(String, String, String => Any)](
+        ("SPARK_GRAFT_SWEEP_K", "4k", _.toInt),
+        ("SPARK_GRAFT_SWEEP_NOISE", "0,45", _.toFloat),
+        ("SPARK_GRAFT_SWEEP_SPLIT_FACTOR", "", _.toDouble),
+        ("SPARK_GRAFT_SWEEP_LADDER", "5,10,x", SweepRef.ints))) {
+      val e = intercept[IllegalArgumentException](
+        SweepRef.parseKnob(name, Some(raw), null: Any)(parse))
+      assert(e.getMessage.startsWith(s"$name=\"$raw\""), e.getMessage)
+    }
   }
 }

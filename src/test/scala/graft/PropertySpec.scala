@@ -304,24 +304,6 @@ class PropertySpec extends AnyFunSuite {
     assert(combine(lanes(sf60)) === truth(sf60).toDouble)
   }
 
-  test("packed-sidecar binary blobs roundtrip longs and floats exactly") {
-    import graft.ann.IVFIndex.{bytesToFloats, bytesToLongs, floatsToBytes, longsToBytes}
-    val longs = Gen.containerOf[Array, Long](Gen.chooseNum(Long.MinValue, Long.MaxValue))
-    forAll(longs) { a =>
-      assert(java.util.Arrays.equals(bytesToLongs(longsToBytes(a)), a))
-    }
-    // floats: bit-exact through the blob, including NaN payloads and ±0
-    val rawBits = Gen.containerOf[Array, Int](Gen.chooseNum(Int.MinValue, Int.MaxValue))
-    forAll(rawBits) { bits =>
-      val a = bits.map(java.lang.Float.intBitsToFloat)
-      val b = bytesToFloats(floatsToBytes(a))
-      assert(a.length == b.length &&
-        a.indices.forall(i =>
-          java.lang.Float.floatToRawIntBits(a(i)) ==
-            java.lang.Float.floatToRawIntBits(b(i))))
-    }
-  }
-
   // --- NSW router reachability (the in-degree guard is not enough) -
   test("NSW router: every centroid reachable from the entry after the pruned build") {
     // small m/ef stresses the prune; the in-degree guard alone can

@@ -515,14 +515,92 @@ class SourcesSpec extends AnyFunSuite {
     val m = operators.AnnQueries.model(spark, sf)
     val dir = java.nio.file.Files.createTempDirectory("ivf_idx").toString
     m.save(dir)
+    assert(!new java.io.File(s"$dir/packed").exists,
+      "save must persist entries only, no packed runs")
     val loaded = IVFModel.load(spark, dir)
     assert(loaded.params == m.params)
     assert(loaded.index.count() == m.index.count())
     val qs = Tables.embeddings(spark, sf)
       .filter($"vec_id" < 4).select($"vec_id".cast("long"), $"embedding")
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
-    val a = m.search(spark, qs, 10, 12).orderBy("query_id", "rk").collect().toSeq
-    val b = loaded.search(spark, qs, 10, 12).orderBy("query_id", "rk").collect().toSeq
-    assert(a == b)
+    def rows(model: IVFModel) =
+      model.search(spark, qs, 10, 12).orderBy("query_id", "rk").collect().toSeq
+    val a = rows(m)
+    assert(rows(loaded) == a)
+    // the packed runs a loaded model scans are re-packed from its entries
+    loaded.packedIndex(spark)
+    try assert(rows(loaded) == a,
+      "a re-pack from the loaded entries diverged from the source model's scan")
+    finally loaded.freeSearchCaches()
+  }
+
+  test("compact crash windows: each recoverCompact state loads like an uninterrupted compact") {
+    import java.nio.file.{Files, Path}
+    def copyTree(from: Path, to: Path): Unit = {
+      val walk = Files.walk(from)
+      try walk.iterator.asScala.foreach { p =>
+        val t = to.resolve(from.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+      } finally walk.close()
+    }
+    val sf = "/root/testdata/sf0.001"
+    val m = operators.AnnQueries.model(spark, sf)
+    // the pre-compact index: saved entries, tombstones, one committed
+    // streaming-ingest batch
+    val base = Files.createTempDirectory("compact_crash_base")
+    m.save(base.toString)
+    IVFModel.deleteIds(base.toString, m.index.toDF().select($"id").filter($"id" % 3 === 0))
+    val srcDir = Files.createTempDirectory("compact_crash_src")
+    writeVecsFile(srcDir, "f1.parquet", (700000L until 700012L), seed = 11)
+    IVFIndex.appendStream(spark, m, srcDir.toString, base.toString)
+    assert(Files.isDirectory(base.resolve("entries_batches/batch-0")))
+
+    val qs = operators.VectorQueries.queryVectors(spark, sf, 4)
+    def liveIdsAndRows(dir: Path) = {
+      val l = IVFModel.load(spark, dir.toString)
+      (l.index.select("id").as[Long].collect().sorted.toSeq,
+        l.search(spark, qs, 10, 12).orderBy("query_id", "rk").collect().toSeq)
+    }
+    val done = Files.createTempDirectory("compact_crash_done")
+    copyTree(base, done)
+    IVFModel.compact(spark, done.toString)
+    val want = liveIdsAndRows(done)
+    assert(want._1.count(_ >= 700000L) == 12, "the ingest batch must survive compact")
+    assert(!want._1.exists(id => id < 700000L && id % 3 == 0), "a tombstone leaked")
+
+    // each state is the pre-compact index with its files moved the way
+    // a compact that died at that point leaves them
+    val compacted = done.resolve("entries")
+    def crashed(name: String)(arrange: Path => Unit): Path = {
+      val d = Files.createTempDirectory(s"compact_crash_$name")
+      copyTree(base, d)
+      Files.move(d.resolve("entries"), d.resolve("entries_old"))
+      arrange(d)
+      d
+    }
+    // 1. between the two renames: the complete copy is not yet installed
+    val swap = crashed("swap")(d => copyTree(compacted, d.resolve("entries_compacting")))
+    // 2. a partial compacted copy: no _SUCCESS and a data file missing
+    val partial = crashed("partial") { d =>
+      val neu = d.resolve("entries_compacting")
+      copyTree(compacted, neu)
+      Files.delete(neu.resolve("_SUCCESS"))
+      Files.deleteIfExists(neu.resolve("._SUCCESS.crc"))
+      val walk = Files.walk(neu)
+      try Files.delete(walk.iterator.asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get)
+      finally walk.close()
+    }
+    // 3. swap done, cleanup of entries_old and the folded batch pending
+    val cleanup = crashed("cleanup")(d => copyTree(compacted, d.resolve("entries")))
+
+    for ((name, d, folded) <- Seq(("swap", swap, true), ("partial", partial, false),
+        ("cleanup", cleanup, true))) {
+      assert(liveIdsAndRows(d) == want, s"$name: load differs from an uninterrupted compact")
+      assert(Files.exists(d.resolve("entries_batches")) == !folded,
+        s"$name: entries_batches must be gone iff the compacted copy folded it")
+      assert(!Files.exists(d.resolve("entries_old")) &&
+        !Files.exists(d.resolve("entries_compacting")), s"$name: recovery left staging dirs")
+    }
   }
 }
