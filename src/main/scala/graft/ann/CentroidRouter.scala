@@ -169,7 +169,7 @@ object CentroidRouter {
     * runs per query per chunk on the driver, where the old
     * sort-everything form allocated K boxed tuples and paid O(K log K)
     * for typically nprobe ≤ 64 results. Order out is ascending
-    * (dist, id) — identical to the sorted form. */
+    * (dist, id) — the heap's own drain order, no sort. */
   def rankFlat(centroids: Array[Array[Float]], q: Array[Float], nprobe: Int): Array[Int] = {
     val n = math.min(nprobe, centroids.length)
     if (n <= 0) return Array.empty
@@ -179,6 +179,6 @@ object CentroidRouter {
       top.insert(l2sq(q, centroids(i)), i.toLong)
       i += 1
     }
-    top.drain().sortBy(t => (t._1, t._2)).map(_._2.toInt).toArray
+    top.drainSorted()._1.map(_.toInt)
   }
 }

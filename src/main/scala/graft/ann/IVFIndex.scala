@@ -29,12 +29,15 @@ import graft.functions.VectorFunctions.l2sq
   *  - only partitions holding probed clusters are scanned; each task
   *    keeps per-query bounded heaps: 1-bit estimate → error-bound prune
   *    (vs the local kth distance) → extended-code rerank;
-  *  - each partition returns at most queries × k candidates,
-  *    independent of corpus size. Ad-hoc `search`/`searchFiltered`
-  *    merge them on the driver as task results arrive (one job, no
-  *    shuffle — the reference's single result pool); batch `searchAll`
-  *    merges each chunk's candidates through a shuffle so its results
-  *    stay on the executors.
+  *  - each partition returns one row per query it holds candidates
+  *    for: that query's local top-k as a list sorted by (dist, id), at
+  *    most queries × k candidates independent of corpus size. Both
+  *    merges fold those sorted lists linearly (`KnnExact.mergeSorted`,
+  *    the reference's single result pool): ad-hoc
+  *    `search`/`searchFiltered` on the driver as task results arrive
+  *    (one job, no shuffle); batch `searchAll` after grouping each
+  *    chunk's rows by query (a shuffle of ≤ partitions × queries rows),
+  *    so its results stay on the executors.
   */
 object IVFIndex {
   /** Persisted-index layout version; bump when Entry encoding changes
@@ -185,24 +188,24 @@ object IVFIndex {
     }
   }
 
-  /** Pack one partition's entries into per-cluster [[PackedRun]] lists:
-    * clusters in first-seen order, each cluster's entries in stream
-    * order, rolling over to a fresh run when the last one
-    * [[PackedRun.isFull]]. Only clusters where `keep` holds are packed.
-    * The one pack loop behind both [[IVFModel.scan]] sources (the
-    * model-lifetime [[IVFModel.packedIndex]] and the per-call entry
-    * pack), so the two scan identically by construction. */
-  private[graft] def packRuns(entries: Iterator[Entry], dim: Int, exBits: Int)(
-      keep: Int => Boolean)
-      : scala.collection.mutable.LinkedHashMap[
-        Int, scala.collection.mutable.ArrayBuffer[PackedRun]] = {
-    val runs = scala.collection.mutable.LinkedHashMap.empty[
-      Int, scala.collection.mutable.ArrayBuffer[PackedRun]]
+  /** Pack one partition's entries into per-cluster [[PackedRun]] lists,
+    * indexed by cluster id (`nClusters` slots; null where the partition
+    * holds no kept entry): each cluster's entries in stream order,
+    * rolling over to a fresh run when the last one [[PackedRun.isFull]].
+    * Only clusters where `keep` holds are packed. The one pack loop
+    * behind both [[IVFModel.scan]] sources (the model-lifetime
+    * [[IVFModel.packedIndex]] and the per-call entry pack), so the two
+    * scan identically by construction. */
+  private[graft] def packRuns(entries: Iterator[Entry], dim: Int, exBits: Int,
+      nClusters: Int)(keep: Int => Boolean)
+      : Array[scala.collection.mutable.ArrayBuffer[PackedRun]] = {
+    val runs = new Array[scala.collection.mutable.ArrayBuffer[PackedRun]](nClusters)
     entries.foreach { e =>
-      if (keep(e.cluster_id)) {
-        val rs = runs.getOrElseUpdate(e.cluster_id,
-          scala.collection.mutable.ArrayBuffer(
-            new PackedRun(e.sign_bits.length, dim, exBits)))
+      val cid = e.cluster_id
+      if (keep(cid)) {
+        if (runs(cid) == null) runs(cid) = scala.collection.mutable.ArrayBuffer(
+          new PackedRun(e.sign_bits.length, dim, exBits))
+        val rs = runs(cid)
         if (rs.last.isFull) rs += new PackedRun(e.sign_bits.length, dim, exBits)
         rs.last.add(e)
       }
@@ -216,30 +219,47 @@ object IVFIndex {
     * the estimate → prune → rerank trajectory can never diverge
     * between them. Per (query, cluster): ONE residual/LUT prepare,
     * then a sequential stream through the cluster's packed blocks.
-    * `runs` maps cluster id → that cluster's packed blocks in cached
-    * order (the partition's probed clusters only); `accs` are the
-    * search counters ([[searchAccs]]). */
+    * `runs` is indexed by cluster id: that cluster's packed blocks in
+    * cached order, null for a cluster the partition does not scan;
+    * `accs` are the search counters ([[searchAccs]]).
+    *
+    * Returns one (query_id, ids, dists) row per query with at least one
+    * candidate here: its partition-local top-k, ascending under
+    * [[KnnExact.DistIdOrder]] — the sorted lists both top-k merges fold
+    * linearly ([[KnnExact.mergeSorted]]).
+    *
+    * Surviving entries are reranked in speculative PAIRS on the F-byte
+    * path: when entry i passes `lower <= distK`, the scan looks ahead
+    * for the next entry j that passes the same distK and reranks both
+    * in one pass ([[RaBitQ.rerankDistF2]], two accumulators, each
+    * bit-identical to [[RaBitQ.rerankDistF]]). i is inserted first and
+    * j re-checked against the updated distK before it is. distK only
+    * shrinks, so the entries skipped between i and j fail it anyway:
+    * every skip/admit decision, every heap, and the rerank counter
+    * (admissions only) equal the one-at-a-time loop's. The B=9 unpack
+    * path reranks one entry at a time. */
   private[graft] def scanRuns(
       qs: Array[(Long, Array[Float], Array[Int])],
-      runs: scala.collection.Map[
-        Int, scala.collection.mutable.ArrayBuffer[PackedRun]],
+      runs: Array[scala.collection.mutable.ArrayBuffer[PackedRun]],
       rotCents: Array[Array[Float]],
       k: Int,
       queryBits: Int,
       exBits: Int,
       accs: (org.apache.spark.util.LongAccumulator,
         org.apache.spark.util.LongAccumulator,
-        org.apache.spark.util.LongAccumulator)): Iterator[(Long, Long, Double)] = {
+        org.apache.spark.util.LongAccumulator))
+      : Iterator[(Long, Array[Long], Array[Double])] = {
     val heaps = Array.fill(qs.length)(new KnnExact.BoundedTopK(k))
     var nEst = 0L; var nRerank = 0L
     var nEntries = 0L
-    runs.valuesIterator.foreach(_.foreach(nEntries += _.n))
+    runs.foreach(rs => if (rs != null) rs.foreach(nEntries += _.n))
     // partition-owned prepare scratch: one residual + one LUT buffer
     // reused across every (query, cluster) prepare — fresh allocation
     // per prepare measured ~10 GB/chunk of GC load at the reference
     // shape (see RaBitQ.prepareQueryInto)
     var rBuf: Array[Float] = null
     var lutBuf: Array[Int] = null
+    val pair = new Array[Double](2) // rerankDistF2's out slots
     // scan order: per QUERY, its probed clusters in CENTROID-RANK
     // order (qs(qi)._3 is already ranked) — the nearest cluster
     // tightens the query's partition-local distK before the farther
@@ -258,75 +278,95 @@ object IVFIndex {
       var c = 0
       while (c < rankedCls.length) {
         val cid = rankedCls(c)
-        runs.get(cid) match {
-          case Some(rs) =>
-            if (rBuf == null) {
-              val d = rotCents(cid).length
-              rBuf = new Array[Float](d)
-              if (queryBits > 0) lutBuf = new Array[Int](((d + 63) >> 6) << 8)
-            }
-            val qc = RaBitQ.prepareQueryInto(
-              qs(qi)._2, rotCents(cid), queryBits, rBuf, lutBuf)
-            var b = 0
-            while (b < rs.length) {
-              val run = rs(b)
-              val words = run.words
-              val dim = run.dim
-              val useF = run.packExF
-              // run columns hoisted to locals: they are var FIELDS, and
-              // the heap.insert call inside the loop forces the JIT to
-              // re-load each field per entry — the r16 kernel A/B
-              // measured the un-hoisted loop at 0.95x the per-entry
-              // layout at d=1536 and the hoisted one at 1.02-1.14x
-              // (1.43x at d=64); results/kernel_layout_ab_r16.json
-              val sign = run.sign
-              val x2s = run.x2
-              val ips = run.facIp
-              val errs = run.facErr
-              val xns = run.xipnorm
-              val idsA = run.ids
-              val exFA = run.exF
-              val exCodeA = run.exCode
-              val nRun = run.n
-              var i = 0
-              var sb = 0 // sign-word offset of entry i in the packed run
-              var fb = 0 // F-byte offset of entry i
-              while (i < nRun) {
-                val lower =
-                  if (queryBits > 0)
-                    RaBitQ.estimateLowerLutPacked(qc, sign, sb, words,
-                      x2s(i), ips(i), errs(i))
-                  else
-                    RaBitQ.estimateLowerPacked(qc, sign, sb, words,
-                      x2s(i), ips(i), errs(i))
-                if (lower <= distK) {
+        val rs = runs(cid)
+        if (rs != null) {
+          if (rBuf == null) {
+            val d = rotCents(cid).length
+            rBuf = new Array[Float](d)
+            if (queryBits > 0) lutBuf = new Array[Int](((d + 63) >> 6) << 8)
+          }
+          val qc = RaBitQ.prepareQueryInto(
+            qs(qi)._2, rotCents(cid), queryBits, rBuf, lutBuf)
+          var b = 0
+          while (b < rs.length) {
+            val run = rs(b)
+            val words = run.words
+            val dim = run.dim
+            val useF = run.packExF
+            // run columns hoisted to locals: they are var FIELDS, and
+            // the heap.insert call inside the loop forces the JIT to
+            // re-load each field per entry — the r16 kernel A/B
+            // measured the un-hoisted loop at 0.95x the per-entry
+            // layout at d=1536 and the hoisted one at 1.02-1.14x
+            // (1.43x at d=64); results/kernel_layout_ab_r16.json
+            val sign = run.sign
+            val x2s = run.x2
+            val ips = run.facIp
+            val errs = run.facErr
+            val xns = run.xipnorm
+            val idsA = run.ids
+            val exFA = run.exF
+            val exCodeA = run.exCode
+            val nRun = run.n
+            def lowerOf(e: Int): Double =
+              if (queryBits > 0)
+                RaBitQ.estimateLowerLutPacked(qc, sign, e * words, words,
+                  x2s(e), ips(e), errs(e))
+              else
+                RaBitQ.estimateLowerPacked(qc, sign, e * words, words,
+                  x2s(e), ips(e), errs(e))
+            var i = 0
+            while (i < nRun) {
+              if (lowerOf(i) <= distK) {
+                if (useF) {
+                  // speculative partner: the next entry passing this distK
+                  var j = i + 1
+                  var lowerJ = 0.0
+                  var found = false
+                  while (!found && j < nRun) {
+                    lowerJ = lowerOf(j)
+                    if (lowerJ <= distK) found = true else j += 1
+                  }
+                  if (found) {
+                    RaBitQ.rerankDistF2(qc, exFA, i * dim, x2s(i), xns(i),
+                      j * dim, x2s(j), xns(j), exBits, pair)
+                    nRerank += 1
+                    heap.insert(pair(0), idsA(i))
+                    distK = heap.worstOrElse(Double.MaxValue)
+                    if (lowerJ <= distK) {
+                      nRerank += 1
+                      heap.insert(pair(1), idsA(j))
+                      distK = heap.worstOrElse(Double.MaxValue)
+                    }
+                  } else {
+                    nRerank += 1
+                    heap.insert(RaBitQ.rerankDistF(qc, exFA, i * dim,
+                      x2s(i), xns(i), exBits), idsA(i))
+                    distK = heap.worstOrElse(Double.MaxValue)
+                  }
+                  i = j // past the partner, or past the run
+                } else {
                   nRerank += 1
-                  val ex =
-                    if (useF)
-                      RaBitQ.rerankDistF(qc, exFA, fb,
-                        x2s(i), xns(i), exBits)
-                    else
-                      RaBitQ.rerankDistPacked(qc, sign, sb,
-                        exCodeA(i), x2s(i), xns(i), exBits)
-                  heap.insert(ex, idsA(i))
+                  heap.insert(RaBitQ.rerankDistPacked(qc, sign, i * words,
+                    exCodeA(i), x2s(i), xns(i), exBits), idsA(i))
                   distK = heap.worstOrElse(Double.MaxValue)
                 }
-                i += 1
-                sb += words
-                fb += dim
               }
-              nEst += nRun
-              b += 1
+              i += 1
             }
-          case None =>
+            nEst += nRun
+            b += 1
+          }
         }
         c += 1
       }
       qi += 1
     }
     accs._1.add(nEntries); accs._2.add(nEst); accs._3.add(nRerank)
-    heaps.iterator.zipWithIndex.flatMap { case (h, hq) =>
-      h.drain().map { case (d, id) => (qs(hq)._1, id, d) }
+    qs.iterator.zip(heaps.iterator).collect {
+      case ((qid, _, _), h) if h.nonEmpty =>
+        val (ids, dists) = h.drainSorted()
+        (qid, ids, dists)
     }
   }
 
@@ -1468,11 +1508,12 @@ final class IVFModel(
       if (s.packed == null) {
         val pDim = rotator.paddedDim // residual/ex_code length is the PADDED dim
         val pExBits = params.exBits
+        val nClusters = rotatedCentroids.length
         val rdd = index.rdd.mapPartitions({ it =>
-          IVFIndex.packRuns(it, pDim, pExBits)(_ => true).iterator.flatMap {
-            case (cid, rs) =>
-              rs.foreach(_.trim()) // 2x grow overshoot freed pre-persist
-              rs.iterator.map(r => (cid, r))
+          val runs = IVFIndex.packRuns(it, pDim, pExBits, nClusters)(_ => true)
+          runs.indices.iterator.filter(runs(_) != null).flatMap { cid =>
+            runs(cid).foreach(_.trim()) // 2x grow overshoot freed pre-persist
+            runs(cid).iterator.map(r => (cid, r))
           }
         }, preservesPartitioning = true)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1602,9 +1643,10 @@ final class IVFModel(
     * (toLocalIterator — one partition resident, never the full set),
     * each chunk running the normal broadcast scan. Unlike [[search]],
     * each chunk's top-k merge stays DISTRIBUTED
-    * ([[KnnExact.mergeTopK]], one shuffle of the chunk's candidates)
-    * and the returned frame lives on the executors: chunk × k result
-    * rows can run to millions. Chunks run
+    * ([[KnnExact.mergeTopK]]: one shuffle of the scan's
+    * one-row-per-(partition, query) sorted lists, then a linear merge
+    * per query) and the returned frame lives on the executors: chunk ×
+    * k result rows can run to millions. Chunks run
     * through a TWO-DEEP pipeline (see the inline note): per-chunk
     * results (Q_chunk × k rows) are materialized eagerly as each
     * chunk's future completes, so at most two chunks' broadcasts are
@@ -1778,9 +1820,11 @@ final class IVFModel(
     finally bc.destroy()
   }
 
-  /** The probed-cluster scan: per partition, each query's local top-k
-    * as (query_id, neighbor_id, dist) rows — at most partitions ×
-    * queries × k candidates, whatever the corpus size. Lazy: nothing
+  /** The probed-cluster scan: per partition, ONE (query_id, ids, dists)
+    * row per query with a candidate there — its partition-local top-k,
+    * ascending under [[KnnExact.DistIdOrder]] ([[IVFIndex.scanRuns]]).
+    * At most partitions × queries rows of ≤ k candidates each, whatever
+    * the corpus size. Lazy: nothing
     * runs until the caller merges the candidates ([[searchOnDriver]] on
     * the driver, [[searchAll]] through a shuffle) — and the caller
     * destroys the returned per-call query broadcast once that merge is
@@ -1791,7 +1835,7 @@ final class IVFModel(
       idx: Dataset[Entry],
       queries: Array[(Long, Array[Float])],
       k: Int,
-      nprobe: Int): (Dataset[(Long, Long, Double)], Broadcast[_]) = {
+      nprobe: Int): (Dataset[(Long, Array[Long], Array[Double])], Broadcast[_]) = {
     // fail loudly on the driver: nprobe <= 0 would silently return an
     // empty frame (empty probe set -> isin filter drops everything),
     // which reads as "no neighbors" instead of a caller bug
@@ -1871,19 +1915,20 @@ final class IVFModel(
     // filter touches ~0.1% of the index, the pack would touch 100%).
     // A search after any searchAll rides the cache for free.
     val packedNow = { val s = sharedState; s.packed }
-    val candidates: Dataset[(Long, Long, Double)] =
+    val candidates: Dataset[(Long, Array[Long], Array[Double])] =
       if ((idx eq index) && packedNow != null) {
         val rdd = packedNow.mapPartitions { it =>
           val (qs, byCluster) = bc.value
           val rotCents = bcCent.value
-          // group this partition's packed runs by cluster (a cluster
+          // group this partition's packed runs by cluster id (a cluster
           // spans several blocks), probed clusters only
-          val m = new scala.collection.mutable.HashMap[
-            Int, scala.collection.mutable.ArrayBuffer[IVFIndex.PackedRun]]
+          val m = new Array[scala.collection.mutable.ArrayBuffer[IVFIndex.PackedRun]](
+            byCluster.length)
           it.foreach { case (cid, run) =>
-            if (byCluster(cid) != null)
-              m.getOrElseUpdate(cid,
-                scala.collection.mutable.ArrayBuffer.empty) += run
+            if (byCluster(cid) != null) {
+              if (m(cid) == null) m(cid) = scala.collection.mutable.ArrayBuffer.empty
+              m(cid) += run
+            }
           }
           IVFIndex.scanRuns(qs, m, rotCents, scanK, qb, eb, accs)
         }
@@ -1894,7 +1939,7 @@ final class IVFModel(
           .mapPartitions { iter =>
             val (qs, byCluster) = bc.value
             IVFIndex.scanRuns(qs,
-              IVFIndex.packRuns(iter, fDim, eb)(byCluster(_) != null),
+              IVFIndex.packRuns(iter, fDim, eb, byCluster.length)(byCluster(_) != null),
               bcCent.value, scanK, qb, eb, accs)
           }
       }

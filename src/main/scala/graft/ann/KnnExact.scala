@@ -44,10 +44,20 @@ object KnnExact {
       * is full, else `default` (nothing can be pruned yet). */
     def worstOrElse(default: Double): Double =
       if (heap.size >= k) heap.peek()._1 else default
-    def drain(): Seq[(Double, Long)] = {
-      val b = Seq.newBuilder[(Double, Long)]
-      while (!heap.isEmpty) b += heap.poll()
-      b.result()
+    def nonEmpty: Boolean = !heap.isEmpty
+    /** Empty the heap into (ids, dists) ascending under [[DistIdOrder]]:
+      * the heap polls worst first, so it fills from the back. */
+    def drainSorted(): (Array[Long], Array[Double]) = {
+      val n = heap.size
+      val ids = new Array[Long](n)
+      val dists = new Array[Double](n)
+      var i = n - 1
+      while (i >= 0) {
+        val (d, id) = heap.poll()
+        ids(i) = id; dists(i) = d
+        i -= 1
+      }
+      (ids, dists)
     }
   }
 
@@ -56,74 +66,120 @@ object KnnExact {
   private[graft] val DistIdOrder: Ordering[(Double, Long)] =
     Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
 
-  /** Merge per-partition candidate rows (query_id, neighbor_id, dist)
-    * into the global per-query top-k with deterministic (dist, id)
-    * tie-breaking. Shared by exact search and IVF searchAll; the
-    * result stays distributed (one shuffle of the candidates). */
+  /** The first `k` of the union of two candidate lists, each sorted
+    * ascending under [[DistIdOrder]], as one linear merge — equal to
+    * sorting the union and taking `k`. Both top-k merges fold their
+    * per-partition lists through this. */
+  private[graft] def mergeSorted(
+      aIds: Array[Long], aDists: Array[Double],
+      bIds: Array[Long], bDists: Array[Double],
+      k: Int): (Array[Long], Array[Double]) = {
+    val n = math.min(k, aIds.length + bIds.length)
+    val ids = new Array[Long](n)
+    val dists = new Array[Double](n)
+    var i = 0; var j = 0; var o = 0
+    while (o < n) {
+      val takeA = j == bIds.length || (i < aIds.length && {
+        val c = java.lang.Double.compare(aDists(i), bDists(j))
+        c < 0 || (c == 0 && aIds(i) <= bIds(j))
+      })
+      if (takeA) { ids(o) = aIds(i); dists(o) = aDists(i); i += 1 }
+      else { ids(o) = bIds(j); dists(o) = bDists(j); j += 1 }
+      o += 1
+    }
+    (ids, dists)
+  }
+
+  /** Merge per-partition candidate lists — one (query_id, ids, dists)
+    * row per (partition, query), each list sorted under [[DistIdOrder]]
+    * ([[IVFModel.scan]]'s rows) — into the global per-query top-k:
+    * (query_id, neighbor_id, rk), rk 1-based in (dist, id) order. The
+    * rows are grouped by query (a shuffle of at most partitions ×
+    * queries rows) and each group's lists fold through
+    * [[mergeSorted]], so no candidate is shuffled or sorted on its own.
+    * The result stays distributed (IVF searchAll's merge). */
   def mergeTopK(
       spark: SparkSession,
-      partial: Dataset[(Long, Long, Double)],
+      partial: Dataset[(Long, Array[Long], Array[Double])],
       k: Int): DataFrame = {
     import spark.implicits._
     partial.groupByKey(_._1)
       .flatMapGroups { (q, it) =>
-        it.toArray.sortBy(t => (t._3, t._2))(DistIdOrder).take(k).iterator.zipWithIndex
-          .map { case ((_, id, _), i) => (q, id, i + 1) }
+        var ids = Array.emptyLongArray
+        var dists = Array.emptyDoubleArray
+        it.foreach { case (_, i, d) =>
+          val m = mergeSorted(ids, dists, i, d, k); ids = m._1; dists = m._2
+        }
+        ids.iterator.zipWithIndex.map { case (id, r) => (q, id, r + 1) }
       }
       .toDF("query_id", "neighbor_id", "rk")
   }
 
   /** [[mergeTopK]] without the exchange, for candidate sets small
     * enough to hold on the driver (queries × k rows): runs `partial` as
-    * ONE Spark job and folds each partition's rows into a bounded
-    * per-query top-k on the driver as its task result arrives
-    * (`RDD.takeOrdered`'s pattern). The global top-k under
-    * [[DistIdOrder]] is the top-k of the partition top-k's, so the rows,
-    * rk included, equal mergeTopK's whatever order partitions finish
-    * in; driver memory is O(queries × k) plus the partitions in
-    * flight. Eager: the job runs here, and the result is a local
-    * DataFrame with mergeTopK's schema, queries in `queryIds` order,
-    * rk ascending. The job runs as one SQL execution of `partial`'s
-    * plan, so query listeners and the UI see it. */
+    * ONE Spark job and folds each task result's sorted lists into the
+    * per-query top-k on the driver as it arrives, through the same
+    * [[mergeSorted]]. The global top-k under [[DistIdOrder]] is the
+    * top-k of the partition top-k's, so the rows, rk included, equal
+    * mergeTopK's whatever order partitions finish in; driver memory is
+    * O(queries × k) plus the partitions in flight. Eager: the job runs
+    * here, and the result is a local DataFrame with mergeTopK's schema,
+    * queries in `queryIds` order, rk ascending. The job runs as one SQL
+    * execution of `partial`'s plan, so query listeners and the UI see
+    * it. */
   private[graft] def mergeTopKOnDriver(
       spark: SparkSession,
-      partial: Dataset[(Long, Long, Double)],
+      partial: Dataset[(Long, Array[Long], Array[Double])],
       k: Int,
       queryIds: Array[Long]): DataFrame = {
     import spark.implicits._
     require(k > 0, s"top-k bound must be positive, got $k")
-    val best = scala.collection.mutable.HashMap.empty[Long, Array[(Double, Long)]]
+    val best = scala.collection.mutable.HashMap.empty[Long, (Array[Long], Array[Double])]
     if (queryIds.nonEmpty) {
       val qe = partial.queryExecution
       org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("mergeTopKOnDriver")) {
         spark.sparkContext.runJob(qe.toRdd, partitionColumns _,
-          (_: Int, part: (Array[Long], Array[Long], Array[Double])) => {
-            val (qids, ids, dists) = part
-            qids.indices.groupBy(qids(_)).foreach { case (q, is) =>
-              best(q) = (best.getOrElse(q, Array.empty[(Double, Long)]) ++
-                is.map(i => (dists(i), ids(i)))).sorted(DistIdOrder).take(k)
+          (_: Int, part: (Array[Long], Array[Int], Array[Long], Array[Double])) => {
+            val (qids, offsets, ids, dists) = part
+            var r = 0
+            while (r < qids.length) {
+              val (from, until) = (offsets(r), offsets(r + 1))
+              val (bi, bd) = best.getOrElse(qids(r), (Array.emptyLongArray, Array.emptyDoubleArray))
+              best(qids(r)) = mergeSorted(bi, bd,
+                java.util.Arrays.copyOfRange(ids, from, until),
+                java.util.Arrays.copyOfRange(dists, from, until), k)
+              r += 1
             }
           })
       }
     }
     val seen = scala.collection.mutable.HashSet.empty[Long]
     queryIds.iterator.filter(seen.add).flatMap { q =>
-      best.getOrElse(q, Array.empty[(Double, Long)]).iterator.zipWithIndex
-        .map { case ((_, id), i) => (q, id, i + 1) }
+      best.get(q).iterator.flatMap(_._1.iterator.zipWithIndex)
+        .map { case (id, i) => (q, id, i + 1) }
     }.toSeq.toDF("query_id", "neighbor_id", "rk")
   }
 
-  /** One partition of (query_id, neighbor_id, dist) rows as three
-    * primitive columns — the compact task result [[mergeTopKOnDriver]]
-    * ships to the driver. */
+  /** One partition of (query_id, ids, dists) rows as primitive columns
+    * — query ids, row offsets into the concatenated ids and dists — the
+    * compact task result [[mergeTopKOnDriver]] ships to the driver. */
   private def partitionColumns(
       it: Iterator[org.apache.spark.sql.catalyst.InternalRow])
-      : (Array[Long], Array[Long], Array[Double]) = {
+      : (Array[Long], Array[Int], Array[Long], Array[Double]) = {
     val qids = Array.newBuilder[Long]
+    val offsets = Array.newBuilder[Int]
     val ids = Array.newBuilder[Long]
     val dists = Array.newBuilder[Double]
-    it.foreach { r => qids += r.getLong(0); ids += r.getLong(1); dists += r.getDouble(2) }
-    (qids.result(), ids.result(), dists.result())
+    var n = 0
+    offsets += 0
+    it.foreach { r =>
+      qids += r.getLong(0)
+      val i = r.getArray(1).toLongArray()
+      ids ++= i; dists ++= r.getArray(2).toDoubleArray()
+      n += i.length
+      offsets += n
+    }
+    (qids.result(), offsets.result(), ids.result(), dists.result())
   }
 
   /** The shared exact-top-k kernel, keeping the squared distance:
@@ -153,7 +209,8 @@ object KnnExact {
           while (qi < qs.length) { heaps(qi).insert(l2sq(qs(qi)._2, vec), id); qi += 1 }
         }
         heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.drain().map { case (d, id) => (qs(qi)._1, id, d) }
+          val (ids, dists) = h.drainSorted()
+          ids.indices.iterator.map(i => (qs(qi)._1, ids(i), dists(i)))
         }
       }
       .groupByKey(_._1)

@@ -453,6 +453,31 @@ object RaBitQ {
     x2 + q.sqrY - xipnorm * (ipF - 0.5 * half * q.sumRes)
   }
 
+  /** Two [[rerankDistF]] distances in one pass over the residual — the
+    * entries at F-byte offsets `baseA` and `baseB` — written to
+    * `out(0)` and `out(1)`. Each keeps its own accumulator summed in
+    * dim order, so each is bit-identical to its [[rerankDistF]]; the
+    * two independent chains overlap where one chain waits on its own
+    * dependent additions. */
+  def rerankDistF2(q: QueryCluster, f: Array[Byte],
+      baseA: Int, x2A: Float, xipnormA: Float,
+      baseB: Int, x2B: Float, xipnormB: Float,
+      exBits: Int, out: Array[Double]): Unit = {
+    val r = q.residual
+    val half = (1 << (exBits + 1)) - 1
+    var ipA = 0.0
+    var ipB = 0.0
+    var i = 0
+    while (i < r.length) {
+      val ri = r(i).toDouble
+      ipA += ri * (f(baseA + i) & 0xff)
+      ipB += ri * (f(baseB + i) & 0xff)
+      i += 1
+    }
+    out(0) = x2A + q.sqrY - xipnormA * (ipA - 0.5 * half * q.sumRes)
+    out(1) = x2B + q.sqrY - xipnormB * (ipB - 0.5 * half * q.sumRes)
+  }
+
   /** Packed-layout core: sign bits read from `base` in a
     * run-contiguous array (the per-entry API above delegates here). */
   def rerankDistPacked(q: QueryCluster, sign: Array[Long], base: Int,

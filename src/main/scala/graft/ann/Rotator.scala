@@ -36,7 +36,12 @@ final class Rotator private (
     else java.util.Arrays.copyOf(v, paddedDim)
   }
 
-  /** Rotate a (possibly unpadded) vector of the indexed dimension. */
+  /** Rotate a (possibly unpadded) vector of the indexed dimension.
+    * Four output rows per sweep over `x` (paddedDim is a multiple of
+    * 64, so no tail): each row keeps its own accumulator summed in `i`
+    * order, so every output is bit-identical to the one-row loop
+    * `Σ_i P[o][i]·x[i]`; the four independent chains share each load of
+    * `x(i)`. */
   def rotate(v: Array[Float]): Array[Float] = {
     require(v.length == dim || v.length == paddedDim,
       s"vector has ${v.length} dims; this rotator indexes $dim (padded $paddedDim)")
@@ -44,11 +49,21 @@ final class Rotator private (
     val out = new Array[Float](paddedDim)
     var o = 0
     while (o < paddedDim) {
-      val row = matrix(o)
-      var s = 0.0; var i = 0
-      while (i < paddedDim) { s += row(i).toDouble * x(i); i += 1 }
-      out(o) = s.toFloat
-      o += 1
+      val r0 = matrix(o); val r1 = matrix(o + 1)
+      val r2 = matrix(o + 2); val r3 = matrix(o + 3)
+      var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+      var i = 0
+      while (i < paddedDim) {
+        val xi = x(i).toDouble
+        s0 += r0(i).toDouble * xi
+        s1 += r1(i).toDouble * xi
+        s2 += r2(i).toDouble * xi
+        s3 += r3(i).toDouble * xi
+        i += 1
+      }
+      out(o) = s0.toFloat; out(o + 1) = s1.toFloat
+      out(o + 2) = s2.toFloat; out(o + 3) = s3.toFloat
+      o += 4
     }
     out
   }

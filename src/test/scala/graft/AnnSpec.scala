@@ -52,10 +52,11 @@ class AnnSpec extends AnyFunSuite {
     }
   }
 
-  /** The Spark jobs `body` runs (each as its stage names), and the
-    * shuffle bytes (read + written) of their tasks, from a
-    * SparkListener bracketed by two sentinel jobs. */
-  private def jobsAndShuffleBytes(body: => Unit): (Seq[String], Long) = {
+  /** The Spark jobs `body` runs (each as its stage names), the
+    * shuffle bytes (read + written) of their tasks, and the shuffle
+    * records those tasks wrote, from a SparkListener bracketed by two
+    * sentinel jobs. */
+  private def jobsAndShuffleBytes(body: => Unit): (Seq[String], Long, Long) = {
     import org.apache.spark.scheduler._
     val events = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerEvent]()
     val listener = new SparkListener {
@@ -83,12 +84,13 @@ class AnnSpec extends AnyFunSuite {
       .takeWhile { case j: SparkListenerJobStart => desc(j) != end; case _ => true }
     val jobs = window.collect { case j: SparkListenerJobStart if desc(j) != begin => j }
     val stages = jobs.flatMap(_.stageIds).toSet
-    val shuffle = window.collect {
-      case t: SparkListenerTaskEnd if stages(t.stageId) && t.taskMetrics != null =>
-        t.taskMetrics.shuffleReadMetrics.totalBytesRead +
-          t.taskMetrics.shuffleWriteMetrics.bytesWritten
-    }.sum
-    (jobs.map(_.stageInfos.map(_.name).mkString(", ")), shuffle)
+    val tasks = window.collect {
+      case t: SparkListenerTaskEnd if stages(t.stageId) && t.taskMetrics != null => t.taskMetrics
+    }
+    val shuffle = tasks.map(m =>
+      m.shuffleReadMetrics.totalBytesRead + m.shuffleWriteMetrics.bytesWritten).sum
+    (jobs.map(_.stageInfos.map(_.name).mkString(", ")), shuffle,
+      tasks.map(_.shuffleWriteMetrics.recordsWritten).sum)
   }
 
   test("rotator is orthonormal: norms and dots preserved") {
@@ -98,6 +100,27 @@ class AnnSpec extends AnyFunSuite {
     val ra = rot.rotate(a); val rb = rot.rotate(b)
     assert(math.abs(dot(ra, ra) - dot(a, a)) < 1e-3)
     assert(math.abs(dot(ra, rb) - dot(a, b)) < 1e-3)
+  }
+
+  test("rotate's four-row sweep is bit-identical to the one-row loop") {
+    // each output row keeps its own accumulator in i order, so the
+    // interleaved sweep must not move a single bit — at the benchmark
+    // dimension and at one the rotator pads (100 -> 128)
+    for (d <- Seq(384, 100)) {
+      val rot = new Rotator(d, seed = 3)
+      val rnd = new scala.util.Random(d)
+      (0 until 16).foreach { _ =>
+        val v = randVec(rnd, d)
+        val x = rot.pad(v)
+        val want = rot.matrix.map { row =>
+          var s = 0.0; var i = 0
+          while (i < x.length) { s += row(i).toDouble * x(i); i += 1 }
+          s.toFloat
+        }
+        assert(rot.rotate(v).map(java.lang.Float.floatToRawIntBits).toSeq ==
+          want.map(java.lang.Float.floatToRawIntBits).toSeq, s"d=$d")
+      }
+    }
   }
 
   test("rotateAll is bit-identical to serial per-vector rotation") {
@@ -682,16 +705,17 @@ class AnnSpec extends AnyFunSuite {
         sl.foreach(i => r.add(entries(i)))
         rs += r
       }
-      scala.collection.mutable.HashMap(0 -> rs)
+      Array(rs)
     }
     val cent = Array.fill(dim)(rnd.nextGaussian().toFloat)
     val qs = Array.tabulate(3)(q =>
       (q.toLong, Array.fill(dim)(rnd.nextGaussian().toFloat), Array(0)))
     for (queryBits <- Seq(0, 14)) {
-      def scan(runs: scala.collection.mutable.HashMap[
-          Int, scala.collection.mutable.ArrayBuffer[IVFIndex.PackedRun]]) =
+      def scan(runs: Array[scala.collection.mutable.ArrayBuffer[IVFIndex.PackedRun]]) =
         IVFIndex.scanRuns(qs, runs, Array(cent), 5, queryBits, exBits,
-          IVFIndex.searchAccs(spark)).toVector.sorted
+          IVFIndex.searchAccs(spark))
+          .flatMap { case (q, ids, ds) => ids.indices.map(i => (q, ids(i), ds(i))) }
+          .toVector.sorted
       val whole = scan(runsOf(Seq(0 until 10)))
       val rolled = runsOf(Seq(0 until 4, 4 until 8, 8 until 10))
       assert(scan(rolled) == whole, s"rollover changed results (qb=$queryBits)")
@@ -801,7 +825,7 @@ class AnnSpec extends AnyFunSuite {
     for ((model, path) <- Seq(adhoc -> "entry", m -> "packed")) {
       if (path == "packed") model.packedIndex(spark)
       var res: org.apache.spark.sql.DataFrame = null
-      val (jobs, shuffle) = jobsAndShuffleBytes {
+      val (jobs, shuffle, _) = jobsAndShuffleBytes {
         res = model.search(spark, qs, 10, 12)
         assert(res.collect().length == qs.length * 10)
       }
@@ -824,5 +848,156 @@ class AnnSpec extends AnyFunSuite {
       }
       assert(ex.getMessage.contains("overFetch"), ex.getMessage)
     }
+  }
+
+  test("scanRuns equals a sequential estimate -> prune -> rerank, rows and rerank count") {
+    import spark.implicits._
+    import scala.collection.mutable.ArrayBuffer
+    import graft.ann.{CentroidRouter, KnnExact}
+    val rnd = new scala.util.Random(23)
+    val dim = 32
+    val df = (0 until 3000).map(i => (i.toLong, randVec(rnd, dim))).toDF("vec_id", "embedding")
+    val queries = Array.tabulate(24)(q => (q.toLong, randVec(rnd, dim)))
+    /** One query at a time, one entry at a time: estimate, skip when the
+      * lower bound exceeds the current kth distance, else rerank and
+      * insert. Also counts the entries a paired scan speculates on and
+      * then rejects: the first entry after an admitted lead that passes
+      * the lead's distK but fails the distK after the lead's insert. */
+    def reference(qs: Array[(Long, Array[Float], Array[Int])],
+        runs: Array[ArrayBuffer[IVFIndex.PackedRun]], rotCents: Array[Array[Float]],
+        k: Int, queryBits: Int, exBits: Int) = {
+      var reranks = 0L; var rejectedPartners = 0L
+      val rows = qs.toSeq.flatMap { case (qid, qr, cls) =>
+        val heap = new KnnExact.BoundedTopK(k)
+        var distK = Double.MaxValue
+        for (cid <- cls.toSeq if runs(cid) != null; run <- runs(cid)) {
+          val qc = RaBitQ.prepareQuery(qr, rotCents(cid), queryBits)
+          var partnerBar = Double.NaN // the lead's distK while a partner is sought
+          for (i <- 0 until run.n) {
+            val lower =
+              if (queryBits > 0) RaBitQ.estimateLowerLutPacked(qc, run.sign, i * run.words,
+                run.words, run.x2(i), run.facIp(i), run.facErr(i))
+              else RaBitQ.estimateLowerPacked(qc, run.sign, i * run.words,
+                run.words, run.x2(i), run.facIp(i), run.facErr(i))
+            val partner = run.packExF && lower <= partnerBar
+            if (partner) partnerBar = Double.NaN
+            if (lower <= distK) {
+              val before = distK
+              reranks += 1
+              val ex =
+                if (run.packExF) RaBitQ.rerankDistF(qc, run.exF, i * run.dim,
+                  run.x2(i), run.xipnorm(i), exBits)
+                else RaBitQ.rerankDistPacked(qc, run.sign, i * run.words,
+                  run.exCode(i), run.x2(i), run.xipnorm(i), exBits)
+              heap.insert(ex, run.ids(i))
+              distK = heap.worstOrElse(Double.MaxValue)
+              if (run.packExF && !partner) partnerBar = before
+            } else if (partner) rejectedPartners += 1
+          }
+        }
+        if (heap.nonEmpty) { val (ids, ds) = heap.drainSorted(); Seq((qid, ids, ds)) }
+        else Nil
+      }
+      (rows, reranks, rejectedPartners)
+    }
+    def canon(rows: Seq[(Long, Array[Long], Array[Double])]) =
+      rows.map { case (q, ids, ds) =>
+        (q, ids.toSeq, ds.toSeq.map(java.lang.Double.doubleToRawLongBits)) }
+    // B=4 reranks in pairs from the F bytes; B=9 keeps the one-entry unpack path
+    for (bits <- Seq(4, 9)) {
+      val m = IVFIndex.build(spark, df, IVFIndex.Params(k = 8, totalBits = bits))
+      val exBits = m.params.exBits
+      val nc = m.rotatedCentroids.length
+      // two "partitions": the clusters' entries split by id parity
+      val (even, odd) = m.index.collect().sortBy(_.id).partition(_.id % 2 == 0)
+      val parts = Seq(even, odd).map(p =>
+        IVFIndex.packRuns(p.iterator, m.rotator.paddedDim, exBits, nc)(_ => true))
+      val qs = queries.map { case (q, v) =>
+        val qr = m.rotator.rotate(v)
+        (q, qr, CentroidRouter.rankFlat(m.rotatedCentroids, qr, 3))
+      }
+      for (queryBits <- Seq(0, 14); k <- Seq(1, 10, 100); runs <- parts) {
+        val what = s"B=$bits queryBits=$queryBits k=$k"
+        val (want, wantReranks, rejected) =
+          reference(qs, runs, m.rotatedCentroids, k, queryBits, exBits)
+        val accs = IVFIndex.searchAccs(spark)
+        val before = accs._3.value
+        val got = IVFIndex.scanRuns(qs, runs, m.rotatedCentroids, k, queryBits,
+          exBits, accs).toSeq
+        assert(canon(got) == canon(want), s"$what: rows differ from the sequential scan")
+        assert(accs._3.value - before == wantReranks, s"$what: graft.search.reranks")
+        if (bits == 4) assert(rejected > 0, s"$what: no speculated partner was rejected")
+      }
+      m.index.unpersist()
+    }
+  }
+
+  test("searchAll at k=100 returns the pinned raw rows") {
+    // the batch path's raw (query_id, neighbor_id, rk) list at sf0.001,
+    // pinned from the row-per-candidate merge it replaced: the scan's
+    // sorted lists, their linear merge and the paired rerank must not
+    // move a row. Both estimate precisions return the same rows at this
+    // shape (the prune skips no entry either bound would keep).
+    val m = operators.AnnQueries.model(spark, sf)
+    val q = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    val pinned = (49982L, "32b7a0315d3b5080dd81c75edae098d66bd40cf39d32250aefa5c2b717b2db60")
+    for (queryBits <- Seq(0, 14))
+      assert(Golden.hashOf(m.withQueryBits(queryBits).searchAll(spark, q, 100, 4)
+        .orderBy("query_id", "rk"), Set.empty) == pinned,
+        s"searchAll (queryBits $queryBits) drifted from its pinned rows")
+    m.freeSearchCaches()
+  }
+
+  test("searchAll: a one-chunk call shuffles at most partitions × queries records") {
+    // one (query, sorted top-k list) row per partition reaches the
+    // merge — never one row per candidate
+    val m = operators.AnnQueries.model(spark, sf)
+    val q = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    val nQ = q.count()
+    val parts = m.packedIndex(spark).getNumPartitions
+    var rows = 0L
+    val (_, _, records) = jobsAndShuffleBytes {
+      rows = m.searchAll(spark, q, 100, 4).count()
+    }
+    assert(rows > nQ * 10, s"searchAll returned $rows rows")
+    assert(records > 0 && records <= parts * nQ,
+      s"searchAll wrote $records shuffle records, want <= $parts partitions × $nQ queries")
+    m.freeSearchCaches()
+  }
+
+  test("searchAll outputDir crash window: a failed chunk leaves no manifest, reruns are safe") {
+    import spark.implicits._
+    val m = operators.AnnQueries.model(spark, sf)
+    val valid = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+      .as[(Long, Array[Float])].collect().sortBy(_._1)
+    // the second 64-query chunk holds a query of the wrong dimension: its
+    // ranking fails after chunk 0 has been written
+    val bad = (valid.take(70) :+ (-1L -> Array.fill(valid(0)._2.length + 5)(0.5f))) ++
+      valid.drop(70)
+    val root = java.nio.file.Files.createTempDirectory("searchall_crash").toString
+    val dir = s"$root/run"
+    val ex = intercept[Exception] {
+      m.searchAll(spark, bad.toSeq.toDF("vec_id", "embedding"), 10, 4, chunk = 64,
+        outputDir = Some(dir))
+    }
+    assert(ex.getMessage.contains("dims"), ex.getMessage)
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "chunk-0", "_SUCCESS")),
+      "the chunk finished before the failure must be on disk")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_manifest.json")),
+      "a failed run must not write its completion manifest")
+    val again = intercept[IllegalStateException] {
+      m.searchAll(spark, valid.toSeq.toDF("vec_id", "embedding"), 10, 4, chunk = 64,
+        outputDir = Some(dir))
+    }
+    assert(again.getMessage.contains("fresh directory"), again.getMessage)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.as[(Long, Long, Int)].collect().toSeq.sortBy(r => (r._1, r._3))
+    val fresh = s"$root/rerun"
+    val rerun = rows(m.searchAll(spark, valid.toSeq.toDF("vec_id", "embedding"), 10, 4,
+      chunk = 64, outputDir = Some(fresh)))
+    assert(rerun == rows(m.searchAll(spark, valid.toSeq.toDF("vec_id", "embedding"), 10, 4)),
+      "the rerun must equal an uninterrupted run")
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(fresh, "_manifest.json")))
+    m.freeSearchCaches()
   }
 }

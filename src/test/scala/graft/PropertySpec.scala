@@ -218,6 +218,44 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("top-k list merge equals sorted(DistIdOrder).take(k) of the union") {
+    import graft.ann.KnnExact
+    val ord = KnnExact.DistIdOrder
+    // a small distance/id alphabet forces equal distances under
+    // different ids, exact (dist, id) repeats and +0.0 next to -0.0
+    val dist = Gen.frequency(3 -> Gen.oneOf(0.0, -0.0, 1.0, 2.5),
+      1 -> Gen.chooseNum(-3.0, 3.0))
+    val list = Gen.chooseNum(0, 12).flatMap(n =>
+      Gen.listOfN(n, Gen.zip(dist, Gen.chooseNum(0L, 9L))))
+    val gen = for {
+      n <- Gen.chooseNum(0, 5)
+      lists <- Gen.listOfN(n, list)
+      k <- Gen.chooseNum(1, 40)
+    } yield (lists, k)
+    def bits(ds: Seq[Double]) = ds.map(java.lang.Double.doubleToRawLongBits)
+    var (above, below, empty, signedZeros, idTies) = (0, 0, 0, 0, 0)
+    forAll(gen, 500) { case (lists, k) =>
+      val union = lists.flatten
+      val want = union.sorted(ord).take(k)
+      // fold the sorted lists pairwise, as both top-k merges do
+      val (ids, ds) = lists.foldLeft((Array.emptyLongArray, Array.emptyDoubleArray)) {
+        case ((ai, ad), l) =>
+          val s = l.sorted(ord)
+          KnnExact.mergeSorted(ai, ad, s.map(_._2).toArray, s.map(_._1).toArray, k)
+      }
+      assert(ids.toSeq == want.map(_._2), s"ids: k=$k lists=$lists")
+      assert(bits(ds.toSeq) == bits(want.map(_._1)), s"dists: k=$k lists=$lists")
+      if (k > union.length) above += 1 else below += 1
+      if (lists.exists(_.isEmpty)) empty += 1
+      val zeros = bits(union.map(_._1)).toSet
+      if (zeros(bits(Seq(0.0)).head) && zeros(bits(Seq(-0.0)).head)) signedZeros += 1
+      if (union.groupBy(_._1).values.exists(_.map(_._2).distinct.length > 1)) idTies += 1
+    }
+    assert(Seq(above, below, empty, signedZeros, idTies).forall(_ > 10),
+      s"edge cases under-covered: above=$above below=$below empty=$empty " +
+        s"signedZeros=$signedZeros idTies=$idTies")
+  }
+
   test("topk-by-key aggregator: any split merges to the global sorted top-k") {
     val rowGen = Gen.listOf(Gen.zip(Gen.chooseNum(0L, 30L), Gen.chooseNum(-5.0, 0.0)))
     forAll2(rowGen, Gen.chooseNum(0, 1000)) { (rows0, cutRaw) =>
