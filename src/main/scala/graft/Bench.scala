@@ -182,7 +182,7 @@ object Bench {
         val q = node.get("queries")
         if (!sfOk || !cpusOk || !cfgOk || q == null || !q.isObject) Map.empty
         else {
-          val it = q.fields()
+          val it = q.properties().iterator()
           val b = Map.newBuilder[String, Double]
           while (it.hasNext) {
             val e = it.next()

@@ -254,14 +254,10 @@ object SweepRef {
       def searchAt(np: Int) =
         if (highAcc) model.searchHighAcc(spark, base, queries, topk, np)
         else model.search(spark, queries, topk, np)
-      // the ladder measures the PACKED scan (the batch path's layout):
-      // pack explicitly — ad-hoc search() alone never packs (it would
-      // make a one-shot caller pay a full-index pack), and the batch
-      // phase that would otherwise build the cache runs after the
-      // ladder
-      model.packedIndex(spark)
       // one untimed warm search: JIT + codegen compile, not the kernel,
-      // would otherwise dominate the first (smallest-nprobe) row
+      // would otherwise dominate the first (smallest-nprobe) row, and
+      // its scan job packs the model's runs, so every timed row scans
+      // the packed cache
       searchAt(ladder.head).count()
 
       val qids = queries.map(_._1)

@@ -3,6 +3,7 @@ package graft.ann
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -26,16 +27,22 @@ import graft.functions.VectorFunctions.l2sq
   * Search (reference: IVF::search, IVF.hpp:295-324):
   *  - queries are broadcast; centroid ranking happens on the driver
   *    (K centroids ≪ N — the reference's FlatInitializer);
-  *  - only partitions holding probed clusters are scanned; each task
-  *    keeps per-query bounded heaps: 1-bit estimate → error-bound prune
-  *    (vs the local kth distance) → extended-code rerank;
+  *  - every search scans one in-memory layout, the model's packed runs
+  *    (the reference's FastScan blocks): the model's first search packs
+  *    them from the entries inside its own scan job and caches them, and
+  *    every later search reads the cache. Only `searchFiltered` packs
+  *    per call, from its semi-joined entries of the probed clusters;
+  *  - each task scans only probed clusters and keeps per-query bounded
+  *    heaps: 1-bit estimate → error-bound prune (vs the local kth
+  *    distance) → extended-code rerank;
   *  - each partition returns one row per query it holds candidates
   *    for: that query's local top-k as a list sorted by (dist, id), at
   *    most queries × k candidates independent of corpus size. Both
   *    merges fold those sorted lists linearly (`KnnExact.mergeSorted`,
   *    the reference's single result pool): ad-hoc
   *    `search`/`searchFiltered` on the driver as task results arrive
-  *    (one job, no shuffle); batch `searchAll` after grouping each
+  *    (one plain RDD job, no SQL execution, no shuffle); batch
+  *    `searchAll` after grouping each
   *    chunk's rows by query (a shuffle of ≤ partitions × queries rows),
   *    so its results stay on the executors.
   */
@@ -102,18 +109,19 @@ object IVFIndex {
       fac_err: Float,
       xipnorm: Float)
 
-  /** One probed cluster's entries in BLOCK-MAJOR PACKED form — the
+  /** One cluster's entries in BLOCK-MAJOR PACKED form — the
     * scan-side analogue of the reference's `fastscan/pack_codes.hpp`
-    * layout, built per (partition, scan) by [[IVFModel.scan]] or once
-    * per model by [[IVFModel.packedIndex]], and scanned by every
-    * probing query of the call. Sign-bit words of all
+    * layout, packed once per model into [[IVFModel.packedIndex]] by the
+    * model's first search (or per call from [[IVFModel.searchFiltered]]'s
+    * semi-joined entries), and scanned by every probing query of a
+    * call. Sign-bit words of all
     * entries live in ONE contiguous long array (entry i's words at
     * [i·words, (i+1)·words)); the per-entry estimate factors are
     * parallel primitive columns. The packing replaces a per-(query,
     * entry) object-pointer chase on the estimate hot loop with a
     * sequential stream; `exCode` stays a reference column because it
     * is only touched on the rare post-prune rerank. Serializable so the
-    * model-lifetime cache can spill (MEMORY_AND_DISK). Never persisted:
+    * model's packed cache can spill (MEMORY_AND_DISK). Never persisted:
     * the index's only on-disk form is its entries, and runs are always
     * packed from them in memory ([[packRuns]]). */
   private[graft] final class PackedRun(
@@ -172,9 +180,9 @@ object IVFIndex {
       else exCode = java.util.Arrays.copyOf(exCode, cap)
     }
     /** Trim backing arrays to exactly n rows — called once by the
-      * model-lifetime packed cache before persisting (grow() doubles,
-      * so an untrimmed run can hold ~2× its data for the model
-      * lifetime); the per-chunk scratch packer skips it. */
+      * model's packed cache before persisting (grow() doubles, so an
+      * untrimmed run can hold ~2× its data for the model lifetime);
+      * searchFiltered's per-call pack skips it. */
     def trim(): Unit = if (cap > n) {
       cap = math.max(n, 1)
       ids = java.util.Arrays.copyOf(ids, cap)
@@ -188,40 +196,39 @@ object IVFIndex {
     }
   }
 
-  /** Pack one partition's entries into per-cluster [[PackedRun]] lists,
-    * indexed by cluster id (`nClusters` slots; null where the partition
-    * holds no kept entry): each cluster's entries in stream order,
-    * rolling over to a fresh run when the last one [[PackedRun.isFull]].
-    * Only clusters where `keep` holds are packed. The one pack loop
-    * behind both [[IVFModel.scan]] sources (the model-lifetime
-    * [[IVFModel.packedIndex]] and the per-call entry pack), so the two
-    * scan identically by construction. */
+  /** One partition's packed runs, indexed by cluster id: that
+    * cluster's [[PackedRun]]s in stream order, null where the partition
+    * holds none. The one element per partition of every
+    * [[IVFModel.scan]] source. */
+  private[graft] type Runs = Array[scala.collection.mutable.ArrayBuffer[PackedRun]]
+
+  /** Pack one partition's entries into its [[Runs]] (`nClusters`
+    * slots): each cluster's entries in stream order, rolling over to a
+    * fresh run when the last one [[PackedRun.isFull]]. The one pack loop
+    * behind every scan source ([[IVFModel.packedIndex]] and
+    * searchFiltered's per-call pack), so they scan identically by
+    * construction. */
   private[graft] def packRuns(entries: Iterator[Entry], dim: Int, exBits: Int,
-      nClusters: Int)(keep: Int => Boolean)
-      : Array[scala.collection.mutable.ArrayBuffer[PackedRun]] = {
-    val runs = new Array[scala.collection.mutable.ArrayBuffer[PackedRun]](nClusters)
+      nClusters: Int): Runs = {
+    val runs: Runs = new Array(nClusters)
     entries.foreach { e =>
       val cid = e.cluster_id
-      if (keep(cid)) {
-        if (runs(cid) == null) runs(cid) = scala.collection.mutable.ArrayBuffer(
-          new PackedRun(e.sign_bits.length, dim, exBits))
-        val rs = runs(cid)
-        if (rs.last.isFull) rs += new PackedRun(e.sign_bits.length, dim, exBits)
-        rs.last.add(e)
-      }
+      if (runs(cid) == null) runs(cid) = scala.collection.mutable.ArrayBuffer(
+        new PackedRun(e.sign_bits.length, dim, exBits))
+      val rs = runs(cid)
+      if (rs.last.isFull) rs += new PackedRun(e.sign_bits.length, dim, exBits)
+      rs.last.add(e)
     }
     runs
   }
 
-  /** The per-partition QUERY-MAJOR scan over packed runs — one copy
-    * shared by both [[IVFModel.scan]] sources (the model-lifetime packed cache
-    * and the filtered/ad-hoc entry scan, which packs per chunk), so
-    * the estimate → prune → rerank trajectory can never diverge
-    * between them. Per (query, cluster): ONE residual/LUT prepare,
-    * then a sequential stream through the cluster's packed blocks.
-    * `runs` is indexed by cluster id: that cluster's packed blocks in
-    * cached order, null for a cluster the partition does not scan;
-    * `accs` are the search counters ([[searchAccs]]).
+  /** The per-partition QUERY-MAJOR scan over packed runs — the one
+    * kernel behind every [[IVFModel.scan]]. Per (query, cluster): ONE
+    * residual/LUT prepare, then a sequential stream through the
+    * cluster's packed blocks. `runs` is the partition's [[Runs]]; only
+    * the clusters a query of `qs` probes are read, and only their
+    * entries count as buffered. `accs` are the search counters
+    * ([[searchAccs]]).
     *
     * Returns one (query_id, ids, dists) row per query with at least one
     * candidate here: its partition-local top-k, ascending under
@@ -240,7 +247,7 @@ object IVFIndex {
     * path reranks one entry at a time. */
   private[graft] def scanRuns(
       qs: Array[(Long, Array[Float], Array[Int])],
-      runs: Array[scala.collection.mutable.ArrayBuffer[PackedRun]],
+      runs: Runs,
       rotCents: Array[Array[Float]],
       k: Int,
       queryBits: Int,
@@ -252,7 +259,12 @@ object IVFIndex {
     val heaps = Array.fill(qs.length)(new KnnExact.BoundedTopK(k))
     var nEst = 0L; var nRerank = 0L
     var nEntries = 0L
-    runs.foreach(rs => if (rs != null) rs.foreach(nEntries += _.n))
+    val counted = new java.util.BitSet(runs.length)
+    qs.foreach(_._3.foreach { cid =>
+      if (runs(cid) != null && !counted.get(cid)) {
+        counted.set(cid); runs(cid).foreach(nEntries += _.n)
+      }
+    })
     // partition-owned prepare scratch: one residual + one LUT buffer
     // reused across every (query, cluster) prepare — fresh allocation
     // per prepare measured ~10 GB/chunk of GC load at the reference
@@ -1320,9 +1332,15 @@ object IVFModel {
     * from its one on-disk form: `meta`, `centroids`, `rotation` and
     * `entries` plus any committed ingest batches. Tombstoned ids (see
     * [[deleteIds]]) are subtracted with an anti-join. Packed scan runs
-    * are never read from disk: [[IVFModel.packedIndex]] packs them from
-    * the loaded entries. A `packed/` directory left by an older build
-    * is ignored and can be deleted by hand. */
+    * are never read from disk: the model's first search packs them from
+    * the loaded entries ([[IVFModel.packedIndex]]). A `packed/`
+    * directory left by an older build is ignored and can be deleted by
+    * hand.
+    *
+    * The loaded model is a search snapshot: every search sees the index
+    * as of the model's first search, whose packed runs later searches
+    * reuse. Load again after [[deleteIds]], [[IVFIndex.appendStream]]
+    * or [[compact]] to search the changed index. */
   def load(spark: SparkSession, path: String): IVFModel = {
     import spark.implicits._
     val meta = checkVersion(spark, path)
@@ -1419,8 +1437,7 @@ final class IVFModel(
     @volatile var router: CentroidRouter = _
     @volatile var centroidsBc:
       org.apache.spark.broadcast.Broadcast[Array[Array[Float]]] = _
-    @volatile var packed:
-      org.apache.spark.rdd.RDD[(Int, IVFIndex.PackedRun)] = _
+    @volatile var packed: RDD[IVFIndex.Runs] = _
   }
   @transient private var shared = new SharedSearchState
   private def this(params: IVFIndex.Params, rotator: Rotator,
@@ -1436,10 +1453,11 @@ final class IVFModel(
     shared
   }
 
-  /** Release the model-lifetime DRIVER-SIDE search caches: the packed
-    * object cache (a second in-memory copy of the index), the rotated-
-    * centroid broadcast, and the NSW router. The model stays fully
-    * usable — the caches lazily rebuild on the next search — so this
+  /** Release the model-lifetime search caches: the packed runs every
+    * search scans ([[packedIndex]], a second in-memory copy of the
+    * index), the rotated-centroid broadcast, and the NSW router. The
+    * model stays fully usable — the next search rebuilds them, its scan
+    * job re-packing the runs from `index` — so this
     * is for long-lived sessions cycling through many models (the
     * AnnSpec per-B loop, index-lifecycle tooling) where N throwaway
     * models would otherwise pin N packed copies until GC. Does NOT
@@ -1481,47 +1499,49 @@ final class IVFModel(
     s.centroidsBc
   }
 
-  /** The index re-materialized ONCE per model lifetime as BLOCK-MAJOR
-    * PACKED runs (the `fastscan/pack_codes.hpp` role) in the
-    * OBJECT store: one (cluster, block) run per row, sign-bit words
-    * contiguous, per-entry factors as primitive columns. The kernel
-    * roofline probe showed the pure LUT arithmetic at ~0.018 µs/est
-    * against the ~0.39 µs/est the pipeline paid — ~95% of the
-    * estimate phase was the PER-CHUNK rebuild: every searchAll chunk
-    * re-deserialized the whole columnar cache into Entry objects and
-    * re-buffered them (results/kernel_roofline.json). This cache
-    * moves that work to once per model: chunks scan live JVM arrays
-    * with zero deserialization. Partition layout (and within-cluster
-    * entry order) is exactly the Entry cache's, so results are
-    * bit-identical to the entry-scan path (golden-pinned). Costs a
-    * second copy of the index in memory (MEMORY_AND_DISK — blocks
-    * spill serialized under pressure); at 100 TB search reads the
-    * partitioned parquet instead, this cache is the
-    * single-node/hot-working-set path. Shared across withQueryBits
-    * copies like the router. Built only in memory, from the entries
-    * ([[IVFIndex.packRuns]] over every cluster, then `trim()`): the
-    * index persists no packed form. */
-  private[graft] def packedIndex(
-      spark: SparkSession): org.apache.spark.rdd.RDD[(Int, IVFIndex.PackedRun)] = {
+  /** The scan source of [[search]] and [[searchAll]]: the index
+    * re-materialized ONCE per model as BLOCK-MAJOR PACKED runs (the
+    * `fastscan/pack_codes.hpp` role) in the object store — per partition
+    * of `index`, one [[IVFIndex.Runs]] ([[pack]], then `trim()`),
+    * persisted MEMORY_AND_DISK. Defining it runs no job: the model's
+    * first scan job packs each partition as it reads it, whether the
+    * model was built, loaded or constructed by hand, and every later
+    * search scans live JVM arrays with zero
+    * deserialization (the kernel roofline probe measured ~95% of the old
+    * estimate phase in per-call re-deserialization and re-buffering,
+    * results/kernel_roofline.json). Partition layout and within-cluster
+    * entry order are `index`'s. It is a second in-memory copy of a built
+    * model's index next to its columnar cache; at 100 TB search reads the
+    * partitioned parquet instead, and this cache is the
+    * single-node/hot-working-set path. Shared across withQueryBits copies
+    * like the router; never persisted to disk. */
+  private[graft] def packedIndex(spark: SparkSession): RDD[IVFIndex.Runs] = {
     val s = sharedState
     if (s.packed == null) s.synchronized {
-      if (s.packed == null) {
-        val pDim = rotator.paddedDim // residual/ex_code length is the PADDED dim
-        val pExBits = params.exBits
-        val nClusters = rotatedCentroids.length
-        val rdd = index.rdd.mapPartitions({ it =>
-          val runs = IVFIndex.packRuns(it, pDim, pExBits, nClusters)(_ => true)
-          runs.indices.iterator.filter(runs(_) != null).flatMap { cid =>
-            runs(cid).foreach(_.trim()) // 2x grow overshoot freed pre-persist
-            runs(cid).iterator.map(r => (cid, r))
-          }
-        }, preservesPartitioning = true)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        rdd.foreachPartition(_ => ()) // materialize once, outside chunk timing
-        s.packed = rdd
-      }
+      if (s.packed == null)
+        s.packed = pack(index).map { runs =>
+          runs.foreach(rs => if (rs != null) rs.foreach(_.trim())) // 2x grow overshoot
+          runs
+        }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     s.packed
+  }
+
+  /** [[searchFiltered]]'s scan source: `entries` restricted to the
+    * `probed` clusters (a `cluster_id isin` filter, which prunes whole
+    * partition directories on a loaded index) and packed per call, one
+    * [[IVFIndex.Runs]] per partition. */
+  private[graft] def probedRuns(entries: Dataset[Entry])(probed: Array[Int]): RDD[IVFIndex.Runs] =
+    pack(entries.filter(col("cluster_id").isin(probed.toIndexedSeq: _*)))
+
+  /** `entries` packed into one [[IVFIndex.Runs]] per partition
+    * ([[IVFIndex.packRuns]]); lazy, like the RDD it maps. */
+  private def pack(entries: Dataset[Entry]): RDD[IVFIndex.Runs] = {
+    val pDim = rotator.paddedDim // residual/ex_code length is the PADDED dim
+    val pExBits = params.exBits
+    val nClusters = numClusters
+    entries.rdd.mapPartitions(it =>
+      Iterator.single(IVFIndex.packRuns(it, pDim, pExBits, nClusters)))
   }
 
   /** Same model, same (cached) index, same shared router/broadcast,
@@ -1594,19 +1614,21 @@ final class IVFModel(
   }
 
   /** Approximate top-k: (query_id, neighbor_id, rk), rk 1-based in
-    * (distance, id) order. EAGER: the call runs ONE Spark job (the
-    * probed-cluster scan, no exchange) and merges each partition's
-    * per-query top-k on the driver as its task result arrives
-    * ([[KnnExact.mergeTopKOnDriver]]); the returned DataFrame is local
-    * (a `LocalTableScan`), so collecting or joining it runs no scan
-    * again. The rows are those [[searchAll]]'s distributed merge returns
-    * for the same queries. Holds queries × k result rows on the driver;
-    * past ~100k queries use [[searchAll]]. */
+    * (distance, id) order. EAGER: the call runs ONE plain RDD job — no
+    * SQL execution, no exchange — over the model's packed runs
+    * ([[packedIndex]]; the model's first search packs them inside that
+    * same job) and merges each partition's per-query top-k on the driver
+    * as its task result arrives ([[KnnExact.mergeTopKOnDriver]]). The
+    * returned DataFrame is local (a `LocalTableScan`), so collecting or
+    * joining it runs no scan again. The rows are those [[searchAll]]'s
+    * distributed merge returns for the same queries. Holds queries × k
+    * result rows on the driver; past ~100k queries use [[searchAll]]. */
   def search(
       spark: SparkSession,
       queries: Array[(Long, Array[Float])],
       k: Int,
-      nprobe: Int): DataFrame = searchOnDriver(spark, index, queries, k, nprobe)
+      nprobe: Int): DataFrame =
+    searchOnDriver(spark, _ => packedIndex(spark), queries, k, nprobe)
 
   /** Attribute-filtered search: only ids present in `allowedIds`
     * (single column of longs) are eligible results. The filter is a
@@ -1615,20 +1637,22 @@ final class IVFModel(
     * (post-filtering the top-k would return fewer). No broadcast hint:
     * the planner broadcasts small allowed sets and shuffles large ones
     * — a selective-but-large metadata predicate (billions of ids at
-    * 100 TB) must not be forced through the driver. Eager and merged
-    * on the driver like [[search]]: the scan is one job, plus whatever
-    * jobs the semi-join's own planning needs (a broadcast of the
-    * allowed set, or its shuffle). */
+    * 100 TB) must not be forced through the driver. The one search
+    * that packs per call: the semi-joined entries of the probed
+    * clusters only ([[probedRuns]]), never the model's packed runs.
+    * Eager and merged on the driver like [[search]]: the scan is one
+    * plain RDD job, plus whatever jobs the semi-join's own planning
+    * needs (a broadcast of the allowed set, or its shuffle). */
   def searchFiltered(
       spark: SparkSession,
       queries: Array[(Long, Array[Float])],
       k: Int,
       nprobe: Int,
       allowedIds: DataFrame): DataFrame =
-    searchOnDriver(spark, allowedOnly(allowedIds), queries, k, nprobe)
+    searchOnDriver(spark, probedRuns(allowedOnly(allowedIds)), queries, k, nprobe)
 
-  /** The index semi-joined to `allowedIds` — [[searchFiltered]]'s scan
-    * source. */
+  /** The index semi-joined to `allowedIds` — the entries
+    * [[searchFiltered]] packs. */
   private[graft] def allowedOnly(allowedIds: DataFrame): Dataset[Entry] = {
     val spark = index.sparkSession
     import spark.implicits._
@@ -1641,7 +1665,9 @@ final class IVFModel(
     * to ~100k queries; past that, THIS is the path: queries arrive as a
     * DataFrame and stream through the driver `chunk` rows at a time
     * (toLocalIterator — one partition resident, never the full set),
-    * each chunk running the normal broadcast scan. Unlike [[search]],
+    * each chunk running the normal broadcast scan of the model's packed
+    * runs ([[packedIndex]], filled by the first chunk's scan job if no
+    * search has filled it yet). Unlike [[search]],
     * each chunk's top-k merge stays DISTRIBUTED
     * ([[KnnExact.mergeTopK]]: one shuffle of the scan's
     * one-row-per-(partition, query) sorted lists, then a linear merge
@@ -1716,11 +1742,6 @@ final class IVFModel(
     // wall at d=1536/K=4096). At most 2 chunks are in flight, so live
     // query state stays O(2 · chunk · dim) and results still append in
     // submission order (FIFO await). ---
-    // Build the model-lifetime packed scan cache BEFORE the chunk
-    // pipeline (idempotent; shared across withQueryBits copies): batch
-    // search is where the one-time pack amortizes. Ad-hoc search()
-    // never packs — it rides this cache only if some searchAll built it.
-    packedIndex(spark)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     val pool = scala.concurrent.ExecutionContext.fromExecutorService(
@@ -1740,8 +1761,8 @@ final class IVFModel(
     def runChunk(chunkQ: Array[(Long, Array[Float])], idx: Int): DataFrame = {
       spark.sparkContext.setJobGroup(jobGroup,
         s"searchAll chunk $idx", interruptOnCancel = true)
-      val (candidates, bc) = scan(spark, index, chunkQ, k, nprobe)
-      val res = KnnExact.mergeTopK(spark, candidates, k)
+      val (candidates, bc) = scan(spark, _ => packedIndex(spark), chunkQ, k, nprobe)
+      val res = KnnExact.mergeTopK(spark, spark.createDataset(candidates), k)
       val out = outputDir match {
         case Some(dir) =>
           val path = s"$dir/chunk-$idx"
@@ -1806,16 +1827,16 @@ final class IVFModel(
     else parts.reduce(_.unionByName(_))
   }
 
-  /** [[search]] / [[searchFiltered]]: [[scan]] `idx`, merge on the
+  /** [[search]] / [[searchFiltered]]: [[scan]] `runs`, merge on the
     * driver, then destroy the call's query broadcast — the scan job has
     * finished, and the local result no longer needs it. */
   private def searchOnDriver(
       spark: SparkSession,
-      idx: Dataset[Entry],
+      runs: Array[Int] => RDD[IVFIndex.Runs],
       queries: Array[(Long, Array[Float])],
       k: Int,
       nprobe: Int): DataFrame = {
-    val (candidates, bc) = scan(spark, idx, queries, k, nprobe)
+    val (candidates, bc) = scan(spark, runs, queries, k, nprobe)
     try KnnExact.mergeTopKOnDriver(spark, candidates, k, queries.map(_._1))
     finally bc.destroy()
   }
@@ -1824,26 +1845,26 @@ final class IVFModel(
     * row per query with a candidate there — its partition-local top-k,
     * ascending under [[KnnExact.DistIdOrder]] ([[IVFIndex.scanRuns]]).
     * At most partitions × queries rows of ≤ k candidates each, whatever
-    * the corpus size. Lazy: nothing
-    * runs until the caller merges the candidates ([[searchOnDriver]] on
-    * the driver, [[searchAll]] through a shuffle) — and the caller
-    * destroys the returned per-call query broadcast once that merge is
-    * materialized, so a long searchAll pipeline never leaves its
-    * O(chunk·dim) broadcasts to driver GC. */
+    * the corpus size. `runs` maps the call's probed cluster ids to its
+    * one kind of source: an RDD of one
+    * [[IVFIndex.Runs]] per partition — [[packedIndex]] for [[search]]
+    * and [[searchAll]], [[probedRuns]] for [[searchFiltered]]. Lazy:
+    * nothing runs until the caller merges the candidates
+    * ([[searchOnDriver]] on the driver, [[searchAll]] through a
+    * shuffle) — and the caller destroys the returned per-call query
+    * broadcast once that merge is materialized, so a long searchAll
+    * pipeline never leaves its O(chunk·dim) broadcasts to driver GC. */
   private[graft] def scan(
       spark: SparkSession,
-      idx: Dataset[Entry],
+      runs: Array[Int] => RDD[IVFIndex.Runs],
       queries: Array[(Long, Array[Float])],
       k: Int,
-      nprobe: Int): (Dataset[(Long, Array[Long], Array[Double])], Broadcast[_]) = {
+      nprobe: Int): (RDD[(Long, Array[Long], Array[Double])], Broadcast[_]) = {
     // fail loudly on the driver: nprobe <= 0 would silently return an
-    // empty frame (empty probe set -> isin filter drops everything),
-    // which reads as "no neighbors" instead of a caller bug
+    // empty frame (empty probe set -> nothing scanned), which reads as
+    // "no neighbors" instead of a caller bug
     require(k > 0, s"search k must be positive, got $k")
     require(nprobe > 0, s"nprobe must be positive, got $nprobe")
-    import spark.implicits._
-    val exBits = params.exBits
-    val queryBits = params.queryBits
     // --- driver-side centroid ranking: flat scan for small K (the
     // reference's FlatInitializer), two-level routed ranking above
     // the threshold (its HNSWInitializer role, IVF.hpp:155-160).
@@ -1868,81 +1889,21 @@ final class IVFModel(
         else CentroidRouter.rankFlat(rotatedCentroids, qr, nprobe)
       probes(i) = (qid, qr, ranked)
     }
-    // cluster → indices of the queries probing it, as a dense array
-    // (cluster ids live in [0, K)) so the per-entry hot loop is
-    // allocation- and boxing-free
-    val probeArr = new Array[Array[Int]](rotatedCentroids.length)
-    probes.zipWithIndex
-      .flatMap { case ((_, _, cls), qi) => cls.map(c => (c, qi)) }
-      .groupBy(_._1)
-      .foreach { case (c, xs) => probeArr(c) = xs.map(_._2).toArray }
-    val probedClusters = probeArr.indices.filter(probeArr(_) != null)
     // centroids ride the model-lifetime broadcast; only the per-call
-    // query state (probes + routing table) ships per chunk
+    // query state (rotated queries + their ranked probes) ships per call
     val bcCent = centroidsBroadcast(spark)
-    val bc = spark.sparkContext.broadcast((probes, probeArr))
-
-    // --- scan only probed clusters; estimate → prune → rerank → local
-    // top-k. The scan is QUERY-MAJOR over BLOCK-MAJOR PACKED runs (see
-    // IVFIndex.scanRuns for the order rationale; the packing replaces
-    // a per-(query, entry) object-pointer chase with a sequential
-    // stream through primitive arrays). Two sources for the runs:
-    //
-    //  - the model-lifetime packed object cache, when a searchAll has
-    //    built it (built once up front of the batch pipeline, scanned
-    //    by every chunk with ZERO per-chunk deserialization — the
-    //    kernel roofline probe measured ~95% of the old estimate-phase
-    //    cost in the per-chunk columnar-cache re-deserialize +
-    //    re-buffer, results/kernel_roofline.json);
-    //  - otherwise (ad-hoc search() on an unpacked model,
-    //    searchFiltered's semi-joined subset): packed per chunk from
-    //    the probed-cluster-filtered entry stream, exactly the r10
-    //    buffering with a packed container — a one-shot low-nprobe
-    //    search touches ~0.1% of the index here and must not pay a
-    //    full-index pack.
-    //
-    // Both sources pack through IVFIndex.packRuns and feed the ONE
-    // scanRuns kernel, so results are identical by construction (and
-    // golden-pinned). ---
+    val bc = spark.sparkContext.broadcast(probes)
+    // --- estimate → prune → rerank → local top-k over each partition's
+    // packed runs, QUERY-MAJOR (see IVFIndex.scanRuns for the order
+    // rationale; the packing replaces a per-(query, entry) object-pointer
+    // chase with a sequential stream through primitive arrays) ---
     val accs = IVFIndex.searchAccs(spark)
-    val scanK = k
-    val qb = queryBits
-    val eb = exBits
-    val fDim = rotator.paddedDim // residual/ex_code length is the PADDED dim
-    // Packed cache only when it ALREADY exists (searchAll builds it
-    // up front; an ad-hoc one-shot search must not pay a full-index
-    // pack — at nprobe=5/K=4096 the entry path's probed-cluster
-    // filter touches ~0.1% of the index, the pack would touch 100%).
-    // A search after any searchAll rides the cache for free.
-    val packedNow = { val s = sharedState; s.packed }
-    val candidates: Dataset[(Long, Array[Long], Array[Double])] =
-      if ((idx eq index) && packedNow != null) {
-        val rdd = packedNow.mapPartitions { it =>
-          val (qs, byCluster) = bc.value
-          val rotCents = bcCent.value
-          // group this partition's packed runs by cluster id (a cluster
-          // spans several blocks), probed clusters only
-          val m = new Array[scala.collection.mutable.ArrayBuffer[IVFIndex.PackedRun]](
-            byCluster.length)
-          it.foreach { case (cid, run) =>
-            if (byCluster(cid) != null) {
-              if (m(cid) == null) m(cid) = scala.collection.mutable.ArrayBuffer.empty
-              m(cid) += run
-            }
-          }
-          IVFIndex.scanRuns(qs, m, rotCents, scanK, qb, eb, accs)
-        }
-        spark.createDataset(rdd)
-      } else {
-        idx
-          .filter(col("cluster_id").isin(probedClusters.map(_.asInstanceOf[AnyRef]): _*))
-          .mapPartitions { iter =>
-            val (qs, byCluster) = bc.value
-            IVFIndex.scanRuns(qs,
-              IVFIndex.packRuns(iter, fDim, eb, byCluster.length)(byCluster(_) != null),
-              bcCent.value, scanK, qb, eb, accs)
-          }
-      }
+    val qb = params.queryBits
+    val eb = params.exBits
+    val candidates = runs(probes.flatMap(_._3).distinct).mapPartitions { it =>
+      val rotCents = bcCent.value
+      it.flatMap(IVFIndex.scanRuns(bc.value, _, rotCents, k, qb, eb, accs))
+    }
     (candidates, bc)
   }
 

@@ -1,5 +1,6 @@
 package graft.ann
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -117,69 +118,35 @@ object KnnExact {
 
   /** [[mergeTopK]] without the exchange, for candidate sets small
     * enough to hold on the driver (queries × k rows): runs `partial` as
-    * ONE Spark job and folds each task result's sorted lists into the
-    * per-query top-k on the driver as it arrives, through the same
-    * [[mergeSorted]]. The global top-k under [[DistIdOrder]] is the
-    * top-k of the partition top-k's, so the rows, rk included, equal
-    * mergeTopK's whatever order partitions finish in; driver memory is
-    * O(queries × k) plus the partitions in flight. Eager: the job runs
-    * here, and the result is a local DataFrame with mergeTopK's schema,
-    * queries in `queryIds` order, rk ascending. The job runs as one SQL
-    * execution of `partial`'s plan, so query listeners and the UI see
-    * it. */
+    * ONE plain RDD job (`runJob`, no SQL execution) and folds each task
+    * result's sorted lists into the per-query top-k on the driver as it
+    * arrives, through the same [[mergeSorted]]. The global top-k under
+    * [[DistIdOrder]] is the top-k of the partition top-k's, so the rows,
+    * rk included, equal mergeTopK's whatever order partitions finish in;
+    * driver memory is O(queries × k) plus the partitions in flight.
+    * Eager: the job runs here, and the result is a local DataFrame with
+    * mergeTopK's schema, queries in `queryIds` order, rk ascending. */
   private[graft] def mergeTopKOnDriver(
       spark: SparkSession,
-      partial: Dataset[(Long, Array[Long], Array[Double])],
+      partial: RDD[(Long, Array[Long], Array[Double])],
       k: Int,
       queryIds: Array[Long]): DataFrame = {
     import spark.implicits._
     require(k > 0, s"top-k bound must be positive, got $k")
     val best = scala.collection.mutable.HashMap.empty[Long, (Array[Long], Array[Double])]
-    if (queryIds.nonEmpty) {
-      val qe = partial.queryExecution
-      org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("mergeTopKOnDriver")) {
-        spark.sparkContext.runJob(qe.toRdd, partitionColumns _,
-          (_: Int, part: (Array[Long], Array[Int], Array[Long], Array[Double])) => {
-            val (qids, offsets, ids, dists) = part
-            var r = 0
-            while (r < qids.length) {
-              val (from, until) = (offsets(r), offsets(r + 1))
-              val (bi, bd) = best.getOrElse(qids(r), (Array.emptyLongArray, Array.emptyDoubleArray))
-              best(qids(r)) = mergeSorted(bi, bd,
-                java.util.Arrays.copyOfRange(ids, from, until),
-                java.util.Arrays.copyOfRange(dists, from, until), k)
-              r += 1
-            }
+    if (queryIds.nonEmpty)
+      spark.sparkContext.runJob(partial,
+        (it: Iterator[(Long, Array[Long], Array[Double])]) => it.toArray,
+        (_: Int, rows: Array[(Long, Array[Long], Array[Double])]) =>
+          rows.foreach { case (q, ids, dists) =>
+            val (bi, bd) = best.getOrElse(q, (Array.emptyLongArray, Array.emptyDoubleArray))
+            best(q) = mergeSorted(bi, bd, ids, dists, k)
           })
-      }
-    }
     val seen = scala.collection.mutable.HashSet.empty[Long]
     queryIds.iterator.filter(seen.add).flatMap { q =>
       best.get(q).iterator.flatMap(_._1.iterator.zipWithIndex)
         .map { case (id, i) => (q, id, i + 1) }
     }.toSeq.toDF("query_id", "neighbor_id", "rk")
-  }
-
-  /** One partition of (query_id, ids, dists) rows as primitive columns
-    * — query ids, row offsets into the concatenated ids and dists — the
-    * compact task result [[mergeTopKOnDriver]] ships to the driver. */
-  private def partitionColumns(
-      it: Iterator[org.apache.spark.sql.catalyst.InternalRow])
-      : (Array[Long], Array[Int], Array[Long], Array[Double]) = {
-    val qids = Array.newBuilder[Long]
-    val offsets = Array.newBuilder[Int]
-    val ids = Array.newBuilder[Long]
-    val dists = Array.newBuilder[Double]
-    var n = 0
-    offsets += 0
-    it.foreach { r =>
-      qids += r.getLong(0)
-      val i = r.getArray(1).toLongArray()
-      ids ++= i; dists ++= r.getArray(2).toDoubleArray()
-      n += i.length
-      offsets += n
-    }
-    (qids.result(), offsets.result(), ids.result(), dists.result())
   }
 
   /** The shared exact-top-k kernel, keeping the squared distance:

@@ -526,12 +526,34 @@ class SourcesSpec extends AnyFunSuite {
     def rows(model: IVFModel) =
       model.search(spark, qs, 10, 12).orderBy("query_id", "rk").collect().toSeq
     val a = rows(m)
-    assert(rows(loaded) == a)
-    // the packed runs a loaded model scans are re-packed from its entries
-    loaded.packedIndex(spark)
+    // a loaded model scans runs packed from its loaded entries
     try assert(rows(loaded) == a,
-      "a re-pack from the loaded entries diverged from the source model's scan")
+      "the packed scan of a loaded model diverged from the source model's scan")
     finally loaded.freeSearchCaches()
+  }
+
+  test("a loaded model searches the index as of its first search; a reload sees the change") {
+    val sf = "/root/testdata/sf0.001"
+    val m = operators.AnnQueries.model(spark, sf)
+    val dir = java.nio.file.Files.createTempDirectory("ivf_snapshot").toString
+    m.save(dir)
+    val qs = operators.VectorQueries.queryVectors(spark, sf, 4)
+    def rows(model: IVFModel) =
+      model.search(spark, qs, 10, 12).orderBy("query_id", "rk").collect().toSeq
+    val loaded = IVFModel.load(spark, dir)
+    val first = rows(loaded)
+    val gone = first.map(_.getLong(1)).distinct.take(8)
+    IVFModel.deleteIds(dir, gone.toDF("id"))
+    try {
+      assert(rows(loaded) == first, "a search after deleteIds left the first search's snapshot")
+      IVFModel.compact(spark, dir)
+      assert(rows(loaded) == first, "a search after compact left the first search's snapshot")
+    } finally loaded.freeSearchCaches()
+    val reloaded = IVFModel.load(spark, dir)
+    val again = rows(reloaded)
+    reloaded.freeSearchCaches()
+    assert(again.length == first.length, "a reload must still fill every query's top-k")
+    assert(!again.exists(r => gone.contains(r.getLong(1))), "a reload returned a deleted id")
   }
 
   test("compact crash windows: each recoverCompact state loads like an uninterrupted compact") {
