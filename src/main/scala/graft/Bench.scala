@@ -110,14 +110,13 @@ object Bench {
   }
 
   /** The non-default config knobs that legitimately move timings
-    * (state store, shuffle partitions, AQE flags — the measured d12
+    * (state store, shuffle partitions — the measured d12
     * curve moves 2.6→7.2 s across SPARK_GRAFT_SHUFFLE alone), joined
     * into one comparable tag; empty for a default-config run. Stamped
     * into every snapshot and gated by [[readSnapshotQueries]] — the
     * cpus rule, extended to every knob that belongs in it. */
   private[graft] def envConfigTag: String =
-    Seq("SPARK_GRAFT_SHUFFLE", "SPARK_GRAFT_STATE_STORE",
-        "SPARK_GRAFT_CACHED_AQE", "SPARK_GRAFT_PARALLELISM_FIRST")
+    Seq("SPARK_GRAFT_SHUFFLE", "SPARK_GRAFT_STATE_STORE")
       .flatMap(k => sys.env.get(k).map(v => s"$k=$v")).mkString(",")
 
   /** Parse a Linux /proc/loadavg line ("l1 l5 l15 running/total pid")
@@ -203,8 +202,10 @@ object Bench {
     // to record
     val host = hostStampJson
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
+    def intKnob(name: String, dflt: Int): Int =
+      Sessions.parseKnob(name, sys.env.get(name), dflt)(_.toInt)
+    val cpus = intKnob("SPARK_GRAFT_CPUS", 4)
+    val runs = intKnob("SPARK_GRAFT_BENCH_RUNS", 3).max(1)
     // optional subset (e.g. the sf1 spot-check runs only e1/e3/c17/d1).
     // Validated BEFORE the SparkSession + warmup pass: a typo or an
     // empty value must fail in milliseconds, not after the warmup, and
@@ -235,7 +236,7 @@ object Bench {
           s"SPARK_GRAFT_SHUFFLE must be a positive int, got '$s'"))
         require(v > 0, s"SPARK_GRAFT_SHUFFLE must be positive, got $v")
         v.toString
-      case None => cpus
+      case None => cpus.toString
     }
     val stateStore = sys.env.get("SPARK_GRAFT_STATE_STORE").map(_.toLowerCase) match {
       case Some("rocksdb") => Map("spark.sql.streaming.stateStore.providerClass" ->
@@ -246,7 +247,7 @@ object Bench {
       case Some(other) => sys.error(
         s"SPARK_GRAFT_STATE_STORE='$other' unrecognized (want rocksdb|hdfs)")
     }
-    val spark = Sessions.local(cpus.toInt, Some(shufflePartitions.toInt), Map(
+    val spark = Sessions.local(cpus, Some(shufflePartitions.toInt), Map(
       "spark.sql.adaptive.enabled" -> "true",
       // let AQE size-coalesce CACHED plan output too (off by Spark
       // default): the staged operators (c19/c27/c32/c42) persist small
@@ -255,15 +256,11 @@ object Bench {
       // c42 at 32 threads: 3.7 -> 2.3 s with results bit-identical (the
       // repo's order-free integer-sum discipline means partitioning can
       // never change a value, only the task count)
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" ->
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "true"),
-      // A/B knob: false = AQE coalesces post-shuffle partitions to the
-      // advisory size instead of keeping one per core — at bench scale
-      // the model-table stages of the staged operators (c42/c27/c19)
-      // are kilobytes across 32 tasks, pure scheduling overhead
-      // (results/c42_parallelism_ab.json)
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst" ->
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true")) ++ stateStore)
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+      // keep one post-shuffle partition per core (Spark's default):
+      // coalescing to the advisory size instead ran c42/c27 slower in
+      // the bench session (results/c42_parallelism_ab.json)
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "true") ++ stateStore)
 
     // warmup: open every table once (footer reads, codec init, JIT).
     // Only the tables the dir holds: a replica slice (e.g. the
@@ -297,7 +294,7 @@ object Bench {
       "d12_stream_join", "d13_stream_dropdup", "d14_stream_bloom",
       "d15_stream_cms", "d16_stream_sample")
     val streamShuffle = sys.env.get("SPARK_GRAFT_SHUFFLE")
-      .fold(math.min(8, cpus.toInt).toString)(_ => shufflePartitions)
+      .fold(math.min(8, cpus).toString)(_ => shufflePartitions)
 
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       spark.conf.set("spark.sql.shuffle.partitions",
@@ -363,7 +360,7 @@ object Bench {
     // the snapshot carries the verdict itself. Read BEFORE overwrite.
     val driftJson = {
       val ref = readSnapshotQueries("results/bench_last.json",
-        java.nio.file.Paths.get(sfDir).getFileName.toString, cpus.toInt,
+        java.nio.file.Paths.get(sfDir).getFileName.toString, cpus,
         envConfigTag)
       drift(ref, results.map { case (k, v, _) => k -> v }.toMap) match {
         case Some((worst, key, verdict, med)) =>
@@ -380,7 +377,7 @@ object Bench {
       }
     }
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"cpus":${cpus.toInt},"env_config":"${esc(envConfigTag)}","queries":$qs,"query_runs":$qruns$vsBaseline$driftJson$host,"sf":"${esc(sfDir)}"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"cpus":$cpus,"env_config":"${esc(envConfigTag)}","queries":$qs,"query_runs":$qruns$vsBaseline$driftJson$host,"sf":"${esc(sfDir)}"}"""
     println(line)
     // Driver-contract repair (round-16 verdict item 1): the full line
     // above is ~8 KB and the driver's log capture keeps only a ~2 KB
@@ -391,7 +388,7 @@ object Bench {
     // per-query record stays in the line above and durably in
     // results/bench_last.json; nothing is removed or renamed.
     val summary =
-      s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"cpus":${cpus.toInt},"env_config":"${esc(envConfigTag)}","n_queries":${results.size},"n_failed":${results.count(_._2 < 0)}$vsBaseline$driftJson$host,"full_record":"results/bench_last.json","sf":"${esc(sfDir)}"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"cpus":$cpus,"env_config":"${esc(envConfigTag)}","n_queries":${results.size},"n_failed":${results.count(_._2 < 0)}$vsBaseline$driftJson$host,"full_record":"results/bench_last.json","sf":"${esc(sfDir)}"}"""
     println(summary)
     // the same line, durably: the round-8 committed BENCH artifact
     // truncated mid-list in log capture, losing the total and the a*/b*

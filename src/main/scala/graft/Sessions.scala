@@ -23,4 +23,20 @@ object Sessions {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** A main's `SPARK_GRAFT_*` knob: `raw` parsed, or `dflt` when unset.
+    * A malformed value (the parser throws an IllegalArgumentException,
+    * NumberFormatException included) is rejected with a message naming
+    * the variable. Mains read their knobs before building the session,
+    * so a typo fails in milliseconds. */
+  private[graft] def parseKnob[T](name: String, raw: Option[String], dflt: T)(
+      parse: String => T): T =
+    raw.fold(dflt) { v =>
+      try parse(v)
+      catch {
+        case e: IllegalArgumentException =>
+          throw new IllegalArgumentException(
+            s"$name=\"$v\" is malformed: ${e.getMessage}", e)
+      }
+    }
 }

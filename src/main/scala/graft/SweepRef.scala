@@ -38,34 +38,32 @@ import graft.ann.{IVFIndex, KnnExact, SweepEval}
   * a seeded mixture of `topics` Gaussian centers, L2-normalized like
   * real text embeddings. K=4096 engages the routed centroid ranking
   * (IVFModel.RoutedRankingThreshold) — the same regime the reference's
-  * HNSW-initialized config runs in.
+  * HNSW-initialized config runs in. The index is built by graft's one
+  * IVF recipe (IVFIndex.Params): exact nearest-centroid assignment plus
+  * the fat-cell split, which ships only on its self-probe's "artifact"
+  * verdict; the meta's `split_probe` key records that probe.
   *
   * Usage: runMain graft.SweepRef [outCsv]   (defaults below; sized by
-  * SPARK_GRAFT_SWEEP_{VECS,DIM,K,NQ,TOPK,TRAIN} for smoke runs.)
+  * SPARK_GRAFT_SWEEP_{VECS,DIM,K,NQ,TOPK,TRAIN} for smoke runs;
+  * SPARK_GRAFT_SWEEP_MODE=highacc|plain picks the searcher.)
   */
 object SweepRef {
   private def env(name: String, dflt: Int): Int = envAs(name, dflt)(_.toInt)
 
   private def envAs[T](name: String, dflt: T)(parse: String => T): T =
-    parseKnob(name, sys.env.get(name), dflt)(parse)
+    Sessions.parseKnob(name, sys.env.get(name), dflt)(parse)
 
   /** A comma-separated Int list knob ("5,20,100"). */
   private[graft] def ints(s: String): Seq[Int] =
     s.split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq
 
-  /** `raw` parsed, or `dflt` when unset. A malformed value is rejected
-    * with a message naming the variable, not a bare
-    * NumberFormatException. */
-  private[graft] def parseKnob[T](name: String, raw: Option[String], dflt: T)(
-      parse: String => T): T =
-    raw.fold(dflt) { v =>
-      try parse(v)
-      catch {
-        case e: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"$name=\"$v\" is malformed: ${e.getMessage}", e)
-      }
-    }
+  /** The SPARK_GRAFT_SWEEP_MODE knob: true for "highacc", false for
+    * "plain"; any other value (a typo included) is rejected. */
+  private[graft] def highAccMode(s: String): Boolean = s match {
+    case "highacc" => true
+    case "plain" => false
+    case _ => throw new IllegalArgumentException("want highacc|plain")
+  }
 
   /** The seeded Gaussian-mixture embedding generator. */
   private def synthDf(
@@ -159,7 +157,7 @@ object SweepRef {
     // candidates re-rank by EXACT distance (HASearcher.hpp). That is
     // exactly IVFModel.searchHighAcc. "plain" sweeps the pure
     // quantized path instead.
-    val highAcc = sys.env.getOrElse("SPARK_GRAFT_SWEEP_MODE", "highacc") == "highacc"
+    val highAcc = envAs("SPARK_GRAFT_SWEEP_MODE", true)(highAccMode)
     val cpus = env("SPARK_GRAFT_CPUS", 32)
     val spark = Sessions.local(cpus, conf = Map(
       "spark.app.name" -> "graft-sweep-ref",
@@ -198,7 +196,8 @@ object SweepRef {
         synth(spark.range(nq).as[java.lang.Long], seedBase = 0x2545F4914F6CDD1DL)
           .as[(Long, Array[Float])].collect().sortBy(_._1)
 
-      // --- index build (B=4, K engages the routed centroid ranking).
+      // --- index build (B=4, K engages the routed centroid ranking;
+      // graft's one build recipe, see the header).
       // k-means|| at ONE init round (default 2): the serial driver-side
       // k-means++ finish over the collected candidates dominated the
       // round-8 build (build_s 1897 at K=4096/d=1536), and rounds
@@ -208,22 +207,10 @@ object SweepRef {
       // estimate volume per query — the cheap init costs more at
       // search time than it saves at build time. ---
       val initSteps = env("SPARK_GRAFT_SWEEP_INIT_STEPS", 1)
-      val routedAssign =
-        sys.env.get("SPARK_GRAFT_SWEEP_ROUTED_ASSIGN").contains("1")
-      // balanced-IVF fat-cell split (0 = off): cap cells at this factor
-      // × the mean size — the round-9 profile's catch-all cells (~100×
-      // mean) drove 54M estimates per 2048-query chunk
-      val splitFactor = envAs("SPARK_GRAFT_SWEEP_SPLIT_FACTOR", 0.0)(_.toDouble)
-      // split policy: "auto" (product default — self-probe decides when
-      // factor is 0) or "off" (byte-identical flat build, for curve
-      // comparisons against pre-r11 sweeps). factor > 0 still forces.
-      val splitPolicy = sys.env.getOrElse("SPARK_GRAFT_SWEEP_SPLIT_POLICY", "auto")
       val t1 = System.nanoTime()
       val model = IVFIndex.build(spark, base,
         IVFIndex.Params(k = kClusters, totalBits = 4, maxTrainRows = trainRows.toLong,
-          kmeansInitSteps = initSteps,
-          routedAssign = routedAssign, maxClusterFactor = splitFactor,
-          splitPolicy = splitPolicy))
+          kmeansInitSteps = initSteps))
       val splitProbe = IVFIndex.lastSplitProbe
       model.index.count() // materialize the cached index outside timing
       val tBuild = (System.nanoTime() - t1) / 1e9
@@ -391,7 +378,7 @@ object SweepRef {
           } else "null"
         }
         val meta =
-          s"""{"commit":"$commit","dim":$dim,"n_vecs":$nVecs,"k":$kClusters,"nq":$nq,"topk":$topk,"mode":"${if (highAcc) "highacc" else "plain"}","batch_nq":$batchNq,"batch_query_bits":14,"build_s":$buildS,"gt_s":$gtS,"topics":$topics,"noise":$noise,"blend":$blend,"init_mode":"k-means||","init_steps":$initSteps,"routed_assign":$routedAssign,"split_factor":$splitFactor,"split_policy":"$splitPolicy","split_probe":$probeJson,"kernel_roofline":$rooflineJson,"k_final":$kFinal,"calibration_target":"openai1536_exhaf4 row 1 recall@5=0.653; two-knob series (r10): noise alone (0.35:0.807R,0.40:0.884F,0.45:0.892F,0.50:0.354-0.452R; R=rising,F=catch-all-collapsed) and split-factor on the rising corpora (0.50+f4:0.152@5, 0.45+f16:0.197@5 - f16 split the 0.45 regime's single 84%-of-corpus cell). recall@5 on this mixture family is either catch-all-inflated or well below 0.653; the published run keeps the hard-side rising curve (series in SURVEY 6)"}""" + "\n"
+          s"""{"commit":"$commit","dim":$dim,"n_vecs":$nVecs,"k":$kClusters,"nq":$nq,"topk":$topk,"mode":"${if (highAcc) "highacc" else "plain"}","batch_nq":$batchNq,"batch_query_bits":14,"build_s":$buildS,"gt_s":$gtS,"topics":$topics,"noise":$noise,"blend":$blend,"init_mode":"k-means||","init_steps":$initSteps,"split_probe":$probeJson,"kernel_roofline":$rooflineJson,"k_final":$kFinal,"calibration_target":"openai1536_exhaf4 row 1 recall@5=0.653; two-knob series (r10): noise alone (0.35:0.807R,0.40:0.884F,0.45:0.892F,0.50:0.354-0.452R; R=rising,F=catch-all-collapsed) and split-factor on the rising corpora (0.50+f4:0.152@5, 0.45+f16:0.197@5 - f16 split the 0.45 regime's single 84%-of-corpus cell). recall@5 on this mixture family is either catch-all-inflated or well below 0.653; the published run keeps the hard-side rising curve (series in SURVEY 6)"}""" + "\n"
         Files.write(Paths.get(out + ".meta.json"), meta.getBytes(StandardCharsets.UTF_8))
       }
       // write the ladder-only CSV + its meta sibling now: a failure in

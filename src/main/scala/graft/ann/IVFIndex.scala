@@ -382,6 +382,12 @@ object IVFIndex {
     }
   }
 
+  /** Build and search parameters. The build has one recipe: the
+    * reference's `IVF{K},Flat` (python/ivf.py:26-35) — k-means on a
+    * bounded sample, then every vector assigned to its exact nearest
+    * centroid — with the fat-cell split between the two, which sizes
+    * cells at [[AutoSplitFactor]] and ships only when its build-time
+    * self-probe says the fat cells are clustering artifacts. */
   final case class Params(
       k: Int = 16,
       totalBits: Int = 4, // B; exBits = B-1. Reference supports B ∈ {3,4,5,7,8,9}
@@ -401,70 +407,17 @@ object IVFIndex {
       // d=1536 that finish dominates the whole build, so large-K
       // builds cut rounds first (recall delta measured in the sweep
       // meta before committing a config).
-      kmeansInitSteps: Int = 2,
-      // Routed (NSW graph) cluster ASSIGNMENT during quantize — the
-      // reference's own behavior above its HNSW threshold
-      // (IVF.hpp:155-160): at K=4096/d=1536 the flat
-      // nearest-of-K-centroids scan is ~6.3 Mflop per vector and
-      // dominates the quantize pass. Approximate (beam ef=64), so a
-      // boundary vector can land in a near-but-not-nearest cell —
-      // search correctness is unaffected (cells are just probe
-      // targets; recall delta measured on the sweep before enabling
-      // there). Only engages when K ≥ RoutedRankingThreshold AND this
-      // flag is set; the exact flat path is byte-identical otherwise.
-      routedAssign: Boolean = false,
-      // Post-training fat-cluster split: k-means on
-      // real corpora grows catch-all cells near the data mean that
-      // most queries rank into their probe set — the round-9 chunk
-      // profile measured cells ~100× the mean size driving 54M
-      // estimates per 2048-query chunk (the nprobe=20 QPS knee).
-      // When > 0, clusters whose TRAINING-SAMPLE share exceeds this
-      // factor × the mean cell size are recursively re-clustered
-      // (local seeded k-means on the cell's sampled members) and the
-      // fat centroid is replaced by its children before the single
-      // quantize pass — the balanced-IVF recipe. K grows by the split
-      // count; search semantics are unchanged (cells are probe
-      // targets). A value > 0 FORCES the split at that factor (the
-      // r10 sweep contract); 0 defers to splitPolicy below.
-      maxClusterFactor: Double = 0.0,
-      // Split policy when maxClusterFactor is 0 (the r10 sweep
-      // measured that the split's value depends on whether fat cells
-      // are clustering ARTIFACTS — planted-blob recall holds — or
-      // genuine mass — noise-ball recall trades ~1:1 with
-      // work-per-probe):
-      //   "auto" (default): size cells at [[AutoSplitFactor]]; when
-      //     fat cells exist, build the candidate split set and run a
-      //     build-time self-probe (sample queries, candidate-
-      //     generation recall split-vs-flat at equal nprobe) — the
-      //     split ships only when the probe says artifact.
-      //   "off": never size, never split — byte-identical to the
-      //     r9 maxClusterFactor=0 path.
-      // maxClusterFactor > 0 forces the split regardless (unless
-      // policy is "off"), preserving every r10 caller.
-      splitPolicy: String = "auto") {
+      kmeansInitSteps: Int = 2) {
     require(Set(3, 4, 5, 7, 8, 9).contains(totalBits), s"unsupported totalBits $totalBits")
     require(queryBits == 0 || (queryBits >= 4 && queryBits <= 16),
       s"queryBits must be 0 (exact) or in [4,16], got $queryBits")
-    require(maxClusterFactor == 0.0 || maxClusterFactor >= 1.0,
-      s"maxClusterFactor must be 0 (off) or >= 1, got $maxClusterFactor")
-    require(Set("auto", "off").contains(splitPolicy),
-      s"splitPolicy must be auto|off, got $splitPolicy")
     def exBits: Int = totalBits - 1
-    /** Whether the build runs the cell-sizing pass at all. */
-    // "off" disables the sizing pass entirely (byte-identical r9 build,
-    // even with a factor set); force-vs-probe under "auto" is carried
-    // by maxClusterFactor INSIDE the engaged pass (effectiveSplitFactor
-    // + the "forced" probe verdict), not here
-    private[graft] def splitEngaged: Boolean = splitPolicy == "auto"
-    /** The sizing cap factor the engaged pass uses. */
-    private[graft] def effectiveSplitFactor: Double =
-      if (maxClusterFactor > 0) maxClusterFactor else IVFIndex.AutoSplitFactor
   }
 
-  /** Cap factor the "auto" split policy sizes cells against: 8× the
+  /** Cap factor the fat-cell split sizes cells against: 8× the
     * mean cell size. Round-9 measured genuine catch-all artifacts at
     * ~100–175× mean; 8× is far above balanced-k-means jitter (≤3×
-    * observed on every corpus swept) so the auto probe only triggers
+    * observed on every corpus swept) so the split only triggers
     * on real skew. */
   val AutoSplitFactor: Double = 8.0
 
@@ -473,14 +426,16 @@ object IVFIndex {
     * train time is the dominant one-time build cost. */
   private val KMeansMaxIter = 12
 
-  /** Outcome of the auto-split build-time self-probe (sweep meta
-    * records it; [[lastSplitProbe]] holds the most recent build's). */
+  /** Outcome of the split's build-time self-probe (sweep meta
+    * records it; [[lastSplitProbe]] holds the most recent build's,
+    * None when no cell was fat). `verdict` is "artifact" (the split
+    * ships) or "mass" (the flat centroids ship). */
   final case class SplitProbe(
       flatRecall: Double,
       splitRecall: Double,
       nprobe: Int,
       nQueries: Int,
-      verdict: String, // "artifact" (split ships) | "mass" (flat ships) | "forced"
+      verdict: String,
       kFlat: Int,
       kSplit: Int)
   // ThreadLocal, not a plain var: two builds interleaving on different
@@ -617,14 +572,21 @@ object IVFIndex {
     }.toArray
   }
 
-  /** Post-training balanced-IVF split (see Params.maxClusterFactor):
-    * size every trained cell on the (bounded) training sample, then
-    * replace each cell whose share exceeds cap = factor × mean with
-    * locally re-clustered children. Two narrow passes over the sample
-    * (count, then member-subsample — the collect is bounded to
-    * ~32·children + 64 rows per fat cell) plus driver-local k-means;
-    * the corpus itself is never touched — the single quantize pass
-    * then assigns against the enriched centroid set. */
+  /** Post-training balanced-IVF split. k-means on real corpora grows
+    * catch-all cells near the data mean that most queries rank into
+    * their probe set (the round-9 chunk profile measured cells ~100×
+    * the mean size driving 54M estimates per 2048-query chunk). Size
+    * every trained cell on the (bounded) training sample, then build
+    * the candidate set that replaces each cell whose share exceeds
+    * cap = [[AutoSplitFactor]] × mean with locally re-clustered
+    * children. Two narrow passes over the sample (count, then
+    * member-subsample — the collect is bounded to ~32·children + 64
+    * rows per fat cell) plus driver-local k-means; the corpus itself is
+    * never touched. The candidate set ships only when [[selfProbe]]
+    * says the fat cells are clustering artifacts (recall holds at
+    * equal nprobe), not genuine neighbor mass (the r10 sweep measured
+    * recall trading ~1:1 with work-per-probe there); the single
+    * quantize pass then assigns against the centroids returned. */
   private[graft] def splitFatClusters(
       spark: SparkSession,
       sampled: org.apache.spark.rdd.RDD[Array[Float]],
@@ -649,7 +611,7 @@ object IVFIndex {
     }
     val total = counts.sum.toDouble
     val mean = total / k0
-    val cap = math.max(params.effectiveSplitFactor * mean, 2.0)
+    val cap = math.max(AutoSplitFactor * mean, 2.0)
     val fat = counts.indices.filter(counts(_) > cap)
     if (fat.isEmpty) { lastSplitProbe = None; return centroids }
     val keepFrac = new Array[Double](k0)
@@ -698,26 +660,15 @@ object IVFIndex {
         f"after splitting (worst est ${worstResidual}%.0f vs cap $cap%.1f) — " +
         f"width/depth bounds hit; raise the member subsample or lower the factor")
     val enriched = out.toArray
-
-    if (params.maxClusterFactor > 0) {
-      // forced mode: the r10 contract — callers measuring the split
-      // (sweeps, fixtures) get it unconditionally
-      lastSplitProbe = Some(SplitProbe(-1, -1, 0, 0, "forced", k0, enriched.length))
-      enriched
-    } else {
-      // auto mode: ship the split only if the build-time self-probe
-      // says the fat cells are clustering artifacts (recall holds at
-      // equal probe count), not genuine neighbor mass
-      val probe = selfProbe(spark, sampled, centroids, enriched, params)
-      lastSplitProbe = Some(probe)
-      println(f"[split-probe] flat=${probe.flatRecall}%.3f split=${probe.splitRecall}%.3f " +
-        f"@nprobe=${probe.nprobe}%d (${probe.nQueries}%d sample queries) -> " +
-        f"${probe.verdict}%s (K=${if (probe.verdict == "artifact") enriched.length else k0}%d)")
-      if (probe.verdict == "artifact") enriched else centroids
-    }
+    val probe = selfProbe(spark, sampled, centroids, enriched, params)
+    lastSplitProbe = Some(probe)
+    println(f"[split-probe] flat=${probe.flatRecall}%.3f split=${probe.splitRecall}%.3f " +
+      f"@nprobe=${probe.nprobe}%d (${probe.nQueries}%d sample queries) -> " +
+      f"${probe.verdict}%s (K=${if (probe.verdict == "artifact") enriched.length else k0}%d)")
+    if (probe.verdict == "artifact") enriched else centroids
   }
 
-  /** Auto-split self-probe: does replacing the fat centroids with
+  /** The split's self-probe: does replacing the fat centroids with
     * their children preserve CANDIDATE-GENERATION recall at equal
     * probe count? Draws `nq` queries from the training sample, finds
     * each query's exact top-k within the sample in ONE distributed
@@ -744,7 +695,7 @@ object IVFIndex {
     // TOTAL — distance then lexicographic vector content — so the kept
     // multiset is a pure function of the input set: RDD.reduce merges
     // in task-COMPLETION order, and a distance-only heap would break
-    // equal-distance boundary ties by arrival, making the auto-split
+    // equal-distance boundary ties by arrival, making the split
     // verdict (and hence the built index's K) run-dependent. Every
     // other heap in the package tie-breaks by (dist, id); the probe's
     // sampled vectors carry no id, so content is the stable key.
@@ -806,8 +757,8 @@ object IVFIndex {
     SplitProbe(fr, sr, nprobe, queries.length, verdict, flat.length, split.length)
   }
 
-  /** Train centroids + assign + quantize. `df` must have (idCol: long,
-    * vecCol: array<float>). */
+  /** Train centroids (k-means, then the fat-cell split) + assign +
+    * quantize. `df` must have (idCol: long, vecCol: array<float>). */
   def build(
       spark: SparkSession,
       df: DataFrame,
@@ -845,14 +796,9 @@ object IVFIndex {
       }
       buf.iterator
     }
-    // The split path re-traverses the sample twice after training
-    // (cell sizing + member subsample; auto adds the self-probe pass)
-    // — persist it for those passes
-    lastSplitProbe = None
-    val doSplit = params.splitEngaged
-    val sampledP =
-      if (doSplit) sampled.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sampled
+    // The split re-traverses the sample after training (cell sizing,
+    // member subsample, self-probe) — persist it for those passes
+    val sampledP = sampled.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // MLlib's default k-means|| init. SURVEY §6 records the two
     // cheaper inits measured against it at the reference shape:
     // random (recall@5 0.81 → 0.24) and a one-round D² oversample
@@ -867,10 +813,8 @@ object IVFIndex {
       .setFeaturesCol("features")
       .fit(train).clusterCenters.map(_.toArray.map(_.toFloat))
     val centroids =
-      if (doSplit)
-        try splitFatClusters(spark, sampledP, trained, params)
-        finally sampledP.unpersist(blocking = false)
-      else trained
+      try splitFatClusters(spark, sampledP, trained, params)
+      finally sampledP.unpersist(blocking = false)
 
     buildWithCentroids(spark, data, centroids, dim, params)
   }
@@ -884,25 +828,13 @@ object IVFIndex {
     import spark.implicits._
     val rotator = new Rotator(dim, params.seed)
     val rotatedCentroids = rotator.rotateAll(centroids)
-    // routed assignment (opt-in, large K only): build + FORCE the NSW
-    // graph on the driver so the broadcast ships the computed lazy
-    // value, not a rebuild-per-executor recipe
-    val assignRouter: CentroidRouter =
-      if (params.routedAssign &&
-          centroids.length >= IVFModel.RoutedRankingThreshold) {
-        val r = new CentroidRouter(rotatedCentroids)
-        r.rank(rotatedCentroids(0), 1)
-        r
-      } else null
-    val bc = spark.sparkContext.broadcast(
-      (rotator, centroids, rotatedCentroids, assignRouter))
+    val bc = spark.sparkContext.broadcast((rotator, centroids, rotatedCentroids))
     val exBits = params.exBits
 
     // --- assign + rotate + quantize in one narrow pass (IVF::construct) ---
     val entries: Dataset[Entry] = data.as[(Long, Array[Float])].mapPartitions { iter =>
-      val (rot, cents, rotCents, router) = bc.value
-      iter.map { case (id, vec) =>
-        quantizeRow(rot, cents, rotCents, exBits, dim, id, vec, router) }
+      val (rot, cents, rotCents) = bc.value
+      iter.map { case (id, vec) => quantizeRow(rot, cents, rotCents, exBits, dim, id, vec) }
     }
     // cluster the index by (cluster_id, block) for scan locality with
     // balanced task size: blocks spread a hot cluster across the
@@ -953,7 +885,9 @@ object IVFIndex {
   }
 
   /** The per-vector assign + rotate + quantize kernel, shared by the
-    * batch build and the streaming ingest path. */
+    * batch build and the streaming ingest path: the vector's exact
+    * nearest centroid (in raw space), then RaBitQ on its rotated
+    * residual against that centroid. */
   private[graft] def quantizeRow(
       rot: Rotator,
       cents: Array[Array[Float]],
@@ -961,21 +895,14 @@ object IVFIndex {
       exBits: Int,
       dim: Int,
       id: Long,
-      vec: Array[Float],
-      assignRouter: CentroidRouter = null): Entry = {
+      vec: Array[Float]): Entry = {
     require(vec.length == dim,
       s"vector $id has ${vec.length} dims; index dimension is $dim")
     val rot_x = rot.rotate(vec)
-    // routed assignment runs in ROTATED space (orthogonal rotation
-    // preserves L2, and rot_x is needed for the residual anyway) so
-    // the same NSW graph the search path uses serves assignment; the
-    // exact flat path stays in raw space, byte-identical to before
-    val best =
-      if (assignRouter != null) assignRouter.rank(rot_x, 1)(0)
-      // the flat arm IS nearestCentroid's flat arm (one strict-< scan
-      // in raw space) — one kernel, so assignment can never drift from
-      // the split-sizing/self-probe passes that use it
-      else IVFIndex.nearestCentroid(vec, cents, null)
+    // nearestCentroid's flat arm (one strict-< scan in raw space) — one
+    // kernel, so assignment can never drift from the self-probe pass
+    // that uses it
+    val best = IVFIndex.nearestCentroid(vec, cents, null)
     val cRot = rotCents(best)
     val residual = new Array[Float](rot.paddedDim)
     var i = 0
@@ -1877,7 +1804,7 @@ final class IVFModel(
       // object but leaves its lazy neighbor graph unbuilt, so the
       // multi-second build would run under the lazy-val monitor on one
       // ForkJoin thread while every other ranking thread blocks (the
-      // buildWithCentroids/splitFatClusters idiom)
+      // splitFatClusters idiom)
       router.rank(rotatedCentroids(0), 1)
     val probes = new Array[(Long, Array[Float], Array[Int])](queries.length)
     java.util.stream.IntStream.range(0, queries.length).parallel().forEach { i =>

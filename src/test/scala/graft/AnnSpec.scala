@@ -439,94 +439,19 @@ class AnnSpec extends AnyFunSuite {
     queries.foreach { case (qid, _) => assert(approx.contains((qid, qid))) }
   }
 
-  test("fat-cluster split: catch-all cell splits, recall holds, off-paths unchanged") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{count => cnt, max => fmax}
-    val dim = 16
-    // planted catch-all: 90% of vectors in one tight blob (the k-means
-    // shape the split targets), the rest across 15 spread blobs
-    val data = (0 until 2000).map { i =>
-      val rnd = new scala.util.Random(i * 1000003L)
-      val c = if (i % 10 != 0) 0 else 1 + (i / 10) % 15
-      val v = Array.tabulate(dim)(d =>
-        (math.sin(c * 37.0 + d) * 4.0).toFloat + rnd.nextGaussian().toFloat * 0.2f)
-      (i.toLong, v)
-    }
-    val df = data.toDF("vec_id", "embedding")
-    val base = IVFIndex.Params(k = 8, totalBits = 8)
-    val mA = IVFIndex.build(spark, df, base)
-    val mB = IVFIndex.build(spark, df, base.copy(maxClusterFactor = 3.0))
-    assert(mB.centroids.length > mA.centroids.length,
-      s"fat cell must split: K ${mA.centroids.length} -> ${mB.centroids.length}")
-    def maxCell(m: graft.ann.IVFModel): Long =
-      m.index.groupBy("cluster_id").agg(cnt(org.apache.spark.sql.functions.lit(1)).as("n"))
-        .agg(fmax("n")).head().getLong(0)
-    val (cellA, cellB) = (maxCell(mA), maxCell(mB))
-    // the sample IS the full data here (2000 < maxTrainRows), so the
-    // post-split max cell must land under cap = factor × mean ± the
-    // drift from final assignment running against the enriched set
-    val cap = 3.0 * 2000 / mA.centroids.length
-    assert(cellB < cellA && cellB <= (cap * 1.2).toLong,
-      s"split must bring the catch-all under cap≈$cap: $cellA -> $cellB")
-    // recall vs exact GT at full probe (quantization-bound, B=8)
-    val queries = data.take(50).toArray
-    val exact = graft.ann.KnnExact.topK(spark, df, queries, k = 10)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val approx = mB.search(spark, queries, 10, nprobe = mB.centroids.length)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val recall = (approx & exact).size.toDouble / exact.size
-    assert(recall >= 0.9, s"split-index recall@10 = $recall")
-    // the regime the split exists to serve: REALISTIC nprobe (a quarter
-    // of the enriched K), not just nprobe=all. This fixture's fat cell
-    // is ONE tight blob, so some fixed-nprobe recall trade is the
-    // honest geometry (the r10 sweep's finding — flat probes the whole
-    // catch-all in one cell); the bound pins that children stay
-    // probe-RANKED coherently: recall well above the random-scatter
-    // floor (probing 2 of the ~3 children ⇒ ~0.67 if neighbors
-    // scattered randomly) and within a modest band of the unsplit
-    // index. The auto-policy spec below pins the hold-vs-trade
-    // DISTINCTION on sub-blob vs wide-ball fixtures.
-    val npSmall = math.max(2, mB.centroids.length / 4)
-    def recallAt(m: graft.ann.IVFModel, np: Int): Double = {
-      val a = m.search(spark, queries, 10, nprobe = np)
-        .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-      (a & exact).size.toDouble / exact.size
-    }
-    val (rSplitSmall, rFlatSmall) = (recallAt(mB, npSmall), recallAt(mA, npSmall))
-    assert(rSplitSmall >= rFlatSmall - 0.2 && rSplitSmall >= 0.75,
-      s"small-nprobe($npSmall) recall: split=$rSplitSmall flat=$rFlatSmall")
-    // no-fat path: a cap nothing exceeds returns the SAME centroid array
-    val sampled = df.select("vec_id", "embedding").as[(Long, Array[Float])]
-      .rdd.map(_._2)
-    val untouched = IVFIndex.splitFatClusters(
-      spark, sampled, mA.centroids, base.copy(maxClusterFactor = 1000.0))
-    assert(untouched.length == mA.centroids.length &&
-      untouched.zip(mA.centroids).forall { case (a, b) => a sameElements b },
-      "no cell over cap: the centroid set must pass through unchanged")
-    // routedAssign below the K threshold must not engage: entries
-    // byte-identical to the flag-off build given the same centroids
-    def entries(m: graft.ann.IVFModel) = m.index.collect()
-      .map(e => (e.id, e.cluster_id, e.sign_bits.toSeq, e.ex_code.toSeq,
-        e.x2, e.fac_ip, e.sum_xb, e.fac_err, e.xipnorm))
-      .sortBy(_._1).toSeq
-    val dfIv = df.toDF("id", "vec")
-    val mOff = IVFIndex.buildWithCentroids(spark, dfIv, mA.centroids, dim, base)
-    val mOn = IVFIndex.buildWithCentroids(spark, dfIv, mA.centroids, dim,
-      base.copy(routedAssign = true))
-    assert(entries(mOn) == entries(mOff),
-      "routedAssign below RoutedRankingThreshold must leave the flat path byte-identical")
-  }
-
-  test("auto split policy: self-probe ships the split on artifact cells, vetoes it on mass") {
-    // Deterministic by construction: hand-placed flat centroids (no
-    // k-means in the loop), seeded data, seeded member subsample +
-    // probe queries. Both fixtures share the layout "one fat cell at
-    // the origin region + 63 thin far cells" (k0=64 ⇒ auto cap =
-    // 8 × 2760/64 ≈ 345 < the region's 1800 rows ⇒ fat; probe
-    // nprobe = max(2, 64/50) = 2 < the ~8 children the split makes,
-    // so the probe can actually discriminate).
-    import spark.implicits._
+  // Split fixtures, deterministic by construction: hand-placed flat
+  // centroids (no k-means in the loop), seeded data, seeded member
+  // subsample + probe queries. Both fat fixtures share the layout "one
+  // fat cell at the origin region + 63 thin far cells" (k0=64 ⇒ auto
+  // cap = 8 × 2745/64 ≈ 343 < the region's 1800 rows ⇒ fat; probe
+  // nprobe = max(2, 64/50) = 2 < the ~8 children the split makes, so
+  // the probe can actually discriminate).
+  private object SplitFixture {
     val dim = 32
+    val params = IVFIndex.Params(k = 64, totalBits = 4)
+    def farCentroids: Array[Array[Float]] =
+      (1 to 63).map(j => Array.tabulate(dim)(d =>
+        (math.sin(j * 97.0 + d) * 40.0).toFloat)).toArray
     def farBlob(j: Int, n: Int): Seq[Array[Float]] = {
       val c = Array.tabulate(dim)(d => (math.sin(j * 97.0 + d) * 40.0).toFloat)
       (0 until n).map { i =>
@@ -534,9 +459,6 @@ class AnnSpec extends AnyFunSuite {
         c.map(_ + rnd.nextGaussian().toFloat * 0.05f)
       }
     }
-    def farCentroids: Array[Array[Float]] =
-      (1 to 63).map(j => Array.tabulate(dim)(d =>
-        (math.sin(j * 97.0 + d) * 40.0).toFloat)).toArray
     val far: Seq[Array[Float]] = (1 to 63).flatMap(j => farBlob(j, 15))
     // ARTIFACT region: 12 tight sub-blobs (σ=0.05) spread 6 apart —
     // one catch-all cell whose members are genuinely multi-modal, the
@@ -556,13 +478,74 @@ class AnnSpec extends AnyFunSuite {
       val rnd = new scala.util.Random(i * 2654435761L)
       Array.fill(dim)(rnd.nextGaussian().toFloat * 3.0f)
     }
-    val params = IVFIndex.Params(k = 64, totalBits = 4) // splitPolicy = "auto" default
+    /** (flat centroids, `splitFatClusters`' output) for `region ++ far`. */
     def runCase(region: Seq[Array[Float]]): (Array[Array[Float]], Array[Array[Float]]) = {
-      val data = region ++ far
-      val sampled = spark.sparkContext.parallelize(data, 4)
+      val sampled = spark.sparkContext.parallelize(region ++ far, 4)
       val flat = Array.tabulate(dim)(_ => 0.0f) +: farCentroids
       (flat, IVFIndex.splitFatClusters(spark, sampled, flat, params))
     }
+  }
+
+  test("fat-cluster split: catch-all cell splits, recall holds, off-paths unchanged") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{count => cnt, lit, max => fmax}
+    import SplitFixture._
+    val (flatA, outA) = runCase(artifactRegion)
+    assert(IVFIndex.lastSplitProbe.map(_.verdict).contains("artifact"),
+      s"planted sub-blob cell must split: ${IVFIndex.lastSplitProbe}")
+    assert(outA.length > flatA.length,
+      s"fat cell must split: K ${flatA.length} -> ${outA.length}")
+
+    // the shipped split, built: the catch-all lands under the cap and
+    // recall holds. B=8 keeps recall quantization-bound; the bit width
+    // plays no part in the split
+    val dataA = (artifactRegion ++ far).zipWithIndex.map { case (v, i) => (i.toLong, v) }
+    val dfA = dataA.toDF("id", "vec")
+    val b8 = params.copy(totalBits = 8)
+    val mFlat = IVFIndex.buildWithCentroids(spark, dfA, flatA, dim, b8)
+    val mSplit = IVFIndex.buildWithCentroids(spark, dfA, outA, dim, b8)
+    def maxCell(m: graft.ann.IVFModel): Long =
+      m.index.groupBy("cluster_id").agg(cnt(lit(1)).as("n")).agg(fmax("n")).head().getLong(0)
+    val (cellFlat, cellSplit) = (maxCell(mFlat), maxCell(mSplit))
+    // the sample IS the full data here, so the post-split max cell must
+    // land under cap = AutoSplitFactor × mean ± the drift from final
+    // assignment running against the enriched set
+    val cap = IVFIndex.AutoSplitFactor * dataA.length / flatA.length
+    assert(cellSplit < cellFlat && cellSplit <= (cap * 1.2).toLong,
+      s"split must bring the catch-all under cap≈$cap: $cellFlat -> $cellSplit")
+    // queries spread over all 12 sub-blobs of the split cell
+    val queries = dataA.take(artifactRegion.length).filter(_._1 % 36 == 0).toArray
+    val exact = graft.ann.KnnExact.topK(spark, dfA, queries, k = 10,
+      idCol = "id", vecCol = "vec")
+      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
+    def recallAt(m: graft.ann.IVFModel, np: Int): Double = {
+      val a = m.search(spark, queries, 10, nprobe = np)
+        .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
+      (a & exact).size.toDouble / exact.size
+    }
+    val full = recallAt(mSplit, outA.length)
+    assert(full >= 0.9, s"split-index recall@10 at full probe = $full")
+    // the regime the split exists to serve: a realistic nprobe (a
+    // quarter of the enriched K). Children must stay probe-RANKED
+    // coherently: recall well above a random scatter of neighbors over
+    // children and within a modest band of the unsplit index
+    val npSmall = math.max(2, outA.length / 4)
+    val (rSplitSmall, rFlatSmall) = (recallAt(mSplit, npSmall), recallAt(mFlat, npSmall))
+    assert(rSplitSmall >= rFlatSmall - 0.2 && rSplitSmall >= 0.75,
+      s"small-nprobe($npSmall) recall: split=$rSplitSmall flat=$rFlatSmall")
+
+    // no-fat path: on a balanced fixture (the far blobs alone, 15 rows
+    // per cell against a cap of 120) nothing is sized fat, no probe
+    // runs, and the SAME centroid array passes through
+    val farC = farCentroids
+    val untouched = IVFIndex.splitFatClusters(
+      spark, spark.sparkContext.parallelize(far, 4), farC, params)
+    assert(untouched eq farC, "no cell over cap: the centroid set must pass through unchanged")
+    assert(IVFIndex.lastSplitProbe.isEmpty, "no fat cell: no self-probe verdict")
+  }
+
+  test("auto split policy: self-probe ships the split on artifact cells, vetoes it on mass") {
+    import SplitFixture._
     val (flatA, outA) = runCase(artifactRegion)
     val probeA = IVFIndex.lastSplitProbe.get
     assert(probeA.verdict == "artifact", s"planted sub-blob cell must split: $probeA")
@@ -576,22 +559,6 @@ class AnnSpec extends AnyFunSuite {
       outM.zip(flatM).forall { case (a, b) => a sameElements b },
       "mass verdict must ship the flat centroids byte-identical")
     assert(probeM.splitRecall < probeM.flatRecall - 0.02, probeM.toString)
-
-    // forced mode bypasses the probe (the r10 sweep contract)
-    val dataM = massRegion ++ far
-    val forced = IVFIndex.splitFatClusters(spark,
-      spark.sparkContext.parallelize(dataM, 4),
-      Array.tabulate(dim)(_ => 0.0f) +: farCentroids,
-      params.copy(maxClusterFactor = 8.0))
-    assert(IVFIndex.lastSplitProbe.get.verdict == "forced")
-    assert(forced.length > 64, "forced mode must split regardless of the probe")
-
-    // "off" policy never sizes cells: the flag the pre-r11 contract
-    // rides on (maxClusterFactor=0 + off == the r9 byte-identical path)
-    assert(!params.copy(splitPolicy = "off").splitEngaged)
-    assert(params.copy(maxClusterFactor = 3.0).splitEngaged &&
-      params.splitEngaged && !params.copy(splitPolicy = "off",
-        maxClusterFactor = 3.0).splitEngaged)
   }
 
   test("index entries cover all vectors exactly once") {

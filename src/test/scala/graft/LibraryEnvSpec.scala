@@ -35,15 +35,17 @@ class LibraryEnvSpec extends AnyFunSuite {
   }
 
   test("a main's malformed numeric knob is rejected with a message naming it") {
-    assert(SweepRef.parseKnob("SPARK_GRAFT_SWEEP_K", None, 4096)(_.toInt) == 4096)
-    assert(SweepRef.parseKnob("SPARK_GRAFT_SWEEP_NOISE", Some("0.45"), 0.5f)(_.toFloat) == 0.45f)
+    assert(Sessions.parseKnob("SPARK_GRAFT_SWEEP_K", None, 4096)(_.toInt) == 4096)
+    assert(Sessions.parseKnob("SPARK_GRAFT_SWEEP_NOISE", Some("0.45"), 0.5f)(_.toFloat) == 0.45f)
+    assert(!Sessions.parseKnob("SPARK_GRAFT_SWEEP_MODE", Some("plain"), true)(SweepRef.highAccMode))
     for ((name, raw, parse) <- Seq[(String, String, String => Any)](
         ("SPARK_GRAFT_SWEEP_K", "4k", _.toInt),
         ("SPARK_GRAFT_SWEEP_NOISE", "0,45", _.toFloat),
-        ("SPARK_GRAFT_SWEEP_SPLIT_FACTOR", "", _.toDouble),
+        ("SPARK_GRAFT_SWEEP_MODE", "highAcc", SweepRef.highAccMode),
+        ("SPARK_GRAFT_BENCH_RUNS", "", _.toInt),
         ("SPARK_GRAFT_SWEEP_LADDER", "5,10,x", SweepRef.ints))) {
       val e = intercept[IllegalArgumentException](
-        SweepRef.parseKnob(name, Some(raw), null: Any)(parse))
+        Sessions.parseKnob(name, Some(raw), null: Any)(parse))
       assert(e.getMessage.startsWith(s"$name=\"$raw\""), e.getMessage)
     }
   }

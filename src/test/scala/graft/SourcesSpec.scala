@@ -179,7 +179,7 @@ class SourcesSpec extends AnyFunSuite {
       :+ (99L, Array.fill(64)(0f))).toDF("vec_id", "embedding")
     val norms = df.select($"vec_id", vec_norm(vec_normalize($"embedding")).as("n"))
       .as[(Long, Double)].collect().toMap
-    assert(norms.filterKeys(_ != 99L).values.forall(n => math.abs(n - 1.0) < 1e-5),
+    assert(norms.view.filterKeys(_ != 99L).values.forall(n => math.abs(n - 1.0) < 1e-5),
       s"normalized vectors must be unit length: $norms")
     assert(norms(99L) == 0.0, "zero vector must pass through unchanged, not NaN")
     val zero = df.filter($"vec_id" === 99L)
