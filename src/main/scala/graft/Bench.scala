@@ -202,10 +202,8 @@ object Bench {
     // to record
     val host = hostStampJson
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    def intKnob(name: String, dflt: Int): Int =
-      Sessions.parseKnob(name, sys.env.get(name), dflt)(_.toInt)
-    val cpus = intKnob("SPARK_GRAFT_CPUS", 4)
-    val runs = intKnob("SPARK_GRAFT_BENCH_RUNS", 3).max(1)
+    val cpus = Sessions.envKnob("SPARK_GRAFT_CPUS", 4)(Sessions.positiveInt)
+    val runs = Sessions.envKnob("SPARK_GRAFT_BENCH_RUNS", 3)(_.toInt).max(1)
     // optional subset (e.g. the sf1 spot-check runs only e1/e3/c17/d1).
     // Validated BEFORE the SparkSession + warmup pass: a typo or an
     // empty value must fail in milliseconds, not after the warmup, and
@@ -230,14 +228,9 @@ object Bench {
     // stateful streaming suite, where every micro-batch commits one
     // state store PER PARTITION and 32 stores of a few thousand rows
     // each is pure per-commit overhead at bench scale
-    val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE") match {
-      case Some(s) =>
-        val v = s.toIntOption.getOrElse(sys.error(
-          s"SPARK_GRAFT_SHUFFLE must be a positive int, got '$s'"))
-        require(v > 0, s"SPARK_GRAFT_SHUFFLE must be positive, got $v")
-        v.toString
-      case None => cpus.toString
-    }
+    val shuffleKnob = Sessions.envKnob("SPARK_GRAFT_SHUFFLE", Option.empty[Int])(
+      s => Some(Sessions.positiveInt(s)))
+    val shufflePartitions = shuffleKnob.getOrElse(cpus).toString
     val stateStore = sys.env.get("SPARK_GRAFT_STATE_STORE").map(_.toLowerCase) match {
       case Some("rocksdb") => Map("spark.sql.streaming.stateStore.providerClass" ->
         graft.streaming.StateStoreConf.RocksDbProvider)
@@ -293,8 +286,7 @@ object Bench {
       "d9_stream_contam", "d10_stream_asof", "d11_stream_kmv",
       "d12_stream_join", "d13_stream_dropdup", "d14_stream_bloom",
       "d15_stream_cms", "d16_stream_sample")
-    val streamShuffle = sys.env.get("SPARK_GRAFT_SHUFFLE")
-      .fold(math.min(8, cpus).toString)(_ => shufflePartitions)
+    val streamShuffle = shuffleKnob.fold(math.min(8, cpus).toString)(_ => shufflePartitions)
 
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       spark.conf.set("spark.sql.shuffle.partitions",

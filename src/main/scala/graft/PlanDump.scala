@@ -19,8 +19,9 @@ object PlanDump {
     val key = sys.env.getOrElse("SPARK_GRAFT_KEY",
       sys.error("SPARK_GRAFT_KEY is required"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val shuffle = sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt)
+    val cpus = Sessions.envKnob("SPARK_GRAFT_CPUS", 32)(Sessions.positiveInt)
+    val shuffle = Sessions.envKnob("SPARK_GRAFT_SHUFFLE", Option.empty[Int])(
+      s => Some(Sessions.positiveInt(s)))
     require(SparkEntry.queries.contains(key), s"unknown query key '$key'")
     // SPARK_GRAFT_LOCAL_DIR (e.g. /dev/shm/spark-local): shuffle/spill
     // dir override — a virtio disk writing ~330 MB/s makes disk-path

@@ -33,8 +33,9 @@ object PlanExplain {
         ks
       } else SparkEntry.queries.keys.toSeq.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val shuffle = sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt)
+    val cpus = Sessions.envKnob("SPARK_GRAFT_CPUS", 32)(Sessions.positiveInt)
+    val shuffle = Sessions.envKnob("SPARK_GRAFT_SHUFFLE", Option.empty[Int])(
+      s => Some(Sessions.positiveInt(s)))
     val spark = Sessions.local(cpus, shuffle, Map(
       "spark.app.name" -> "graft-plan-explain",
       "spark.sql.adaptive.enabled" -> "true",

@@ -159,10 +159,10 @@ object ScaleProbe {
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_PROBE_DOCS", "100000").toInt
     val nVecs = sys.env.getOrElse("SPARK_GRAFT_PROBE_VECS", "200000").toInt
     val dim = sys.env.getOrElse("SPARK_GRAFT_PROBE_DIM", "64").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.envKnob("SPARK_GRAFT_CPUS", 32)(Sessions.positiveInt)
     // the large-state streaming deployment conf (RocksDB provider +
     // changelog checkpointing) — shared, see [[ScaleProbe.largeStateConf]]
-    val spark = Sessions.local(cpus.toInt,
+    val spark = Sessions.local(cpus,
       conf = Map("spark.sql.adaptive.enabled" -> "true") ++ ScaleProbe.largeStateConf)
     import spark.implicits._
 
@@ -478,13 +478,13 @@ object D12Probe {
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val nEvents = sys.env.getOrElse("SPARK_GRAFT_PROBE_EVENTS", "2000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.envKnob("SPARK_GRAFT_CPUS", 32)(Sessions.positiveInt)
     // SPARK_GRAFT_SHUFFLE: state-partition A/B at probe scale (the
     // Bench stateful-class knob, here against REAL state volume)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+    val shuffle = Sessions.envKnob("SPARK_GRAFT_SHUFFLE", cpus)(Sessions.positiveInt)
     // the large-state streaming deployment conf (RocksDB provider +
     // changelog checkpointing) — shared, see [[ScaleProbe.largeStateConf]]
-    val spark = Sessions.local(cpus.toInt, Some(shuffle.toInt),
+    val spark = Sessions.local(cpus, Some(shuffle),
       Map("spark.sql.adaptive.enabled" -> "true") ++ ScaleProbe.largeStateConf)
     try {
       val events = ScaleProbe.synthEvents(spark, nEvents)

@@ -39,4 +39,16 @@ object Sessions {
             s"$name=\"$v\" is malformed: ${e.getMessage}", e)
       }
     }
+
+  /** [[parseKnob]] over the environment variable `name`. */
+  private[graft] def envKnob[T](name: String, dflt: T)(parse: String => T): T =
+    parseKnob(name, sys.env.get(name), dflt)(parse)
+
+  /** The parser of a count knob (`SPARK_GRAFT_CPUS`,
+    * `SPARK_GRAFT_SHUFFLE`): a positive Int. */
+  private[graft] def positiveInt(s: String): Int = {
+    val v = s.toInt
+    require(v > 0, s"must be positive, got $v")
+    v
+  }
 }

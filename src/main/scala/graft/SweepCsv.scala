@@ -18,8 +18,8 @@ object SweepCsv {
       val sf = Paths.get(sfDir).getFileName.toString
       s"results/sweep_$sf.csv"
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Sessions.local(cpus.toInt, conf = Map("spark.app.name" -> "graft-sweep-csv"))
+    val cpus = Sessions.envKnob("SPARK_GRAFT_CPUS", 8)(Sessions.positiveInt)
+    val spark = Sessions.local(cpus, conf = Map("spark.app.name" -> "graft-sweep-csv"))
     try {
       import spark.implicits._
       val rows = operators.AnnQueries.nprobeSweepTimed(spark, sfDir)

@@ -48,10 +48,7 @@ import graft.ann.{IVFIndex, KnnExact, SweepEval}
   * SPARK_GRAFT_SWEEP_MODE=highacc|plain picks the searcher.)
   */
 object SweepRef {
-  private def env(name: String, dflt: Int): Int = envAs(name, dflt)(_.toInt)
-
-  private def envAs[T](name: String, dflt: T)(parse: String => T): T =
-    Sessions.parseKnob(name, sys.env.get(name), dflt)(parse)
+  private def env(name: String, dflt: Int): Int = Sessions.envKnob(name, dflt)(_.toInt)
 
   /** A comma-separated Int list knob ("5,20,100"). */
   private[graft] def ints(s: String): Seq[Int] =
@@ -144,8 +141,8 @@ object SweepRef {
     // rising-curve corpus on the HARD side of the reference's
     // operating point (the r8 corpus was on the easy side at 0.807).
     val topics = env("SPARK_GRAFT_SWEEP_TOPICS", math.max(64, nVecs / 20))
-    val noise = envAs("SPARK_GRAFT_SWEEP_NOISE", 0.50f)(_.toFloat)
-    val blend = envAs("SPARK_GRAFT_SWEEP_BLEND", 0f)(_.toFloat)
+    val noise = Sessions.envKnob("SPARK_GRAFT_SWEEP_NOISE", 0.50f)(_.toFloat)
+    val blend = Sessions.envKnob("SPARK_GRAFT_SWEEP_BLEND", 0f)(_.toFloat)
     // fail smoke-run misconfiguration in milliseconds, not after the
     // expensive synth+build+GT phases
     require(kClusters >= 5, s"K=$kClusters leaves the nprobe ladder empty (min 5)")
@@ -157,8 +154,8 @@ object SweepRef {
     // candidates re-rank by EXACT distance (HASearcher.hpp). That is
     // exactly IVFModel.searchHighAcc. "plain" sweeps the pure
     // quantized path instead.
-    val highAcc = envAs("SPARK_GRAFT_SWEEP_MODE", true)(highAccMode)
-    val cpus = env("SPARK_GRAFT_CPUS", 32)
+    val highAcc = Sessions.envKnob("SPARK_GRAFT_SWEEP_MODE", true)(highAccMode)
+    val cpus = Sessions.envKnob("SPARK_GRAFT_CPUS", 32)(Sessions.positiveInt)
     val spark = Sessions.local(cpus, conf = Map(
       "spark.app.name" -> "graft-sweep-ref",
       // d=1536 float arrays are ~6 KB/row: the default 4096-row
@@ -234,7 +231,7 @@ object SweepRef {
       // the recall stop rule, which the filter + stop below reproduce)
       // SPARK_GRAFT_SWEEP_LADDER overrides the ladder (e.g. "5" for a
       // single-rung corpus-difficulty calibration trial)
-      val ladder = envAs("SPARK_GRAFT_SWEEP_LADDER",
+      val ladder = Sessions.envKnob("SPARK_GRAFT_SWEEP_LADDER",
         Seq(5) ++ (10 until 200 by 10) ++ (200 until 400 by 40) ++
           (400 to 1500 by 100) ++ (2000 to 4000 by 500) ++ Seq(6000, 10000, 15000)
       )(ints).filter(_ <= kClusters)
@@ -399,7 +396,7 @@ object SweepRef {
       // CSV rows); a held-out query stream, like the ladder's
       val batchRungs =
         if (batchNq <= 0) Seq.empty[Int]
-        else envAs("SPARK_GRAFT_SWEEP_BATCH_RUNGS", Seq(5, 20, 100, 500, 2000))(ints)
+        else Sessions.envKnob("SPARK_GRAFT_SWEEP_BATCH_RUNGS", Seq(5, 20, 100, 500, 2000))(ints)
           .filter(np => rows.exists(_._1 == np))
       val batchQdf = synth(spark.range(batchNq.toLong.max(1L)).as[java.lang.Long]
         .repartition(cpus), seedBase = 0x9E3779B97F4A7C15L)

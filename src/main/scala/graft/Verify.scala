@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Sessions.envKnob("SPARK_GRAFT_CPUS", 4)(Sessions.positiveInt)
     // optional subset for local iteration (the driver never sets this);
     // validated BEFORE the session is built, like Bench's
     // SPARK_GRAFT_BENCH_ONLY — a typo'd key must fail in milliseconds,
@@ -22,7 +22,7 @@ object Verify {
       System.err.println(s"[verify] SUBSET MODE: ${ks.size} of " +
         s"${SparkEntry.queries.size} queries; oracle_sql.json covers only the subset")
     }
-    val spark = Sessions.local(cpus.toInt)
+    val spark = Sessions.local(cpus)
     new java.io.File(outDir).mkdirs()
     // enable the model-derived oracle sidecars (see OracleSide): the
     // DuckDB compare that follows this run reads them from the fixed

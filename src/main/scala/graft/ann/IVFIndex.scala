@@ -392,6 +392,11 @@ object IVFIndex {
       k: Int = 16,
       totalBits: Int = 4, // B; exBits = B-1. Reference supports B ∈ {3,4,5,7,8,9}
       seed: Long = 42L,
+      // Training-sample bound. The fat-cell split holds the sample on
+      // the DRIVER: maxTrainRows × dim × 4 bytes of heap (1M rows at
+      // d=1536 is 6 GB). It is fetched one partition at a time
+      // (toLocalIterator), so it never meets spark.driver.maxResultSize
+      // (1 GiB by default), which a single collect of it would exceed.
       maxTrainRows: Long = 1000000L,
       // Search-time knob, NOT index state (never persisted): 0 = exact
       // float query residual on the estimate phase (default; strictly
@@ -447,20 +452,25 @@ object IVFIndex {
   private[graft] def lastSplitProbe_=(v: Option[SplitProbe]): Unit =
     lastSplitProbeTl.set(v)
 
-  /** Nearest centroid under the sizing-pass rule: routed (approximate,
-    * ~free) above the search threshold, exact flat below. */
-  private def nearestCentroid(
-      v: Array[Float], cents: Array[Array[Float]], router: CentroidRouter): Int =
-    if (router != null) router.rank(v, 1)(0)
-    else {
-      var b = 0; var bestD = Double.MaxValue; var c = 0
-      while (c < cents.length) {
-        val d = l2sq(v, cents(c))
-        if (d < bestD) { bestD = d; b = c }
-        c += 1
-      }
-      b
+  /** Exact nearest centroid: one strict-< scan in raw space, the lower
+    * index winning a tie. The build's one assignment kernel — the
+    * split's sizing and self-probe, [[localKMeans]] and [[quantizeRow]]
+    * — so no step can drift from the assignment the index ships. */
+  private def nearestCentroid(v: Array[Float], cents: Array[Array[Float]]): Int = {
+    var b = 0; var bestD = Double.MaxValue; var c = 0
+    while (c < cents.length) {
+      val d = l2sq(v, cents(c))
+      if (d < bestD) { bestD = d; b = c }
+      c += 1
     }
+    b
+  }
+
+  /** `f(i)` for every i in [0, n), across the driver's cores. Each
+    * call must write only its own slot: the result is then independent
+    * of the thread count. */
+  private def parallelFor(n: Int)(f: Int => Unit): Unit =
+    java.util.stream.IntStream.range(0, n).parallel().forEach(i => f(i))
 
   /** Seeded driver-local Lloyd with k-means++ init, over a small point
     * set (a fat cell's subsampled members — at most a few thousand
@@ -503,7 +513,7 @@ object IVFIndex {
     while (it < iters) {
       var i = 0
       while (i < n) {
-        assign(i) = nearestCentroid(pts(i), cents, null)
+        assign(i) = nearestCentroid(pts(i), cents)
         i += 1
       }
       val sums = Array.ofDim[Double](m, dim)
@@ -529,7 +539,7 @@ object IVFIndex {
       it += 1
     }
     var i = 0
-    while (i < n) { assign(i) = nearestCentroid(pts(i), cents, null); i += 1 }
+    while (i < n) { assign(i) = nearestCentroid(pts(i), cents); i += 1 }
     (cents, assign)
   }
 
@@ -576,41 +586,28 @@ object IVFIndex {
     * catch-all cells near the data mean that most queries rank into
     * their probe set (the round-9 chunk profile measured cells ~100×
     * the mean size driving 54M estimates per 2048-query chunk). Size
-    * every trained cell on the (bounded) training sample, then build
-    * the candidate set that replaces each cell whose share exceeds
-    * cap = [[AutoSplitFactor]] × mean with locally re-clustered
-    * children. Two narrow passes over the sample (count, then
-    * member-subsample — the collect is bounded to ~32·children + 64
-    * rows per fat cell) plus driver-local k-means; the corpus itself is
-    * never touched. The candidate set ships only when [[selfProbe]]
-    * says the fat cells are clustering artifacts (recall holds at
-    * equal nprobe), not genuine neighbor mass (the r10 sweep measured
-    * recall trading ~1:1 with work-per-probe there); the single
-    * quantize pass then assigns against the centroids returned. */
+    * every trained cell on the training sample (one exact assignment
+    * across driver cores), then build the candidate set that replaces
+    * each cell whose share exceeds cap = [[AutoSplitFactor]] × mean
+    * with locally re-clustered children: a seeded member subsample of
+    * each fat cell (~32·children + 64 of its rows), re-clustered by
+    * [[localKMeans]]. All of it runs on the driver, over the training
+    * sample the centroids were fitted on. The candidate set
+    * ships only when [[selfProbe]] says the fat cells are clustering
+    * artifacts (recall holds at equal nprobe), not genuine neighbor
+    * mass (the r10 sweep measured recall trading ~1:1 with
+    * work-per-probe there); the single quantize pass then assigns
+    * against the centroids returned. */
   private[graft] def splitFatClusters(
-      spark: SparkSession,
-      sampled: org.apache.spark.rdd.RDD[Array[Float]],
+      sample: Array[Array[Float]],
       centroids: Array[Array[Float]],
       params: Params): Array[Array[Float]] = {
     val k0 = centroids.length
-    val router =
-      if (k0 >= IVFModel.RoutedRankingThreshold) {
-        val r = new CentroidRouter(centroids)
-        r.rank(centroids(0), 1) // force the lazy graph before broadcast
-        r
-      } else null
-    val bcC = spark.sparkContext.broadcast(centroids)
-    val bcR = spark.sparkContext.broadcast(router)
-    val counts: Array[Long] = sampled.mapPartitions { it =>
-      val cents = bcC.value; val rt = bcR.value
-      val cnt = new Array[Long](cents.length)
-      it.foreach { v => cnt(nearestCentroid(v, cents, rt)) += 1L }
-      Iterator.single(cnt)
-    }.reduce { (a, b) =>
-      var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-    }
-    val total = counts.sum.toDouble
-    val mean = total / k0
+    val assign = new Array[Int](sample.length)
+    parallelFor(sample.length) { i => assign(i) = nearestCentroid(sample(i), centroids) }
+    val counts = new Array[Long](k0)
+    assign.foreach(c => counts(c) += 1L)
+    val mean = sample.length.toDouble / k0
     val cap = math.max(AutoSplitFactor * mean, 2.0)
     val fat = counts.indices.filter(counts(_) > cap)
     if (fat.isEmpty) { lastSplitProbe = None; return centroids }
@@ -620,18 +617,14 @@ object IVFIndex {
       val want = math.min(32.0 * m + 64.0, 4096.0)
       keepFrac(c) = math.min(1.0, want / counts(c))
     }
-    val bcFrac = spark.sparkContext.broadcast(keepFrac)
-    val members: Array[(Int, Array[Float])] =
-      sampled.mapPartitionsWithIndex { (pi, it) =>
-        val cents = bcC.value; val rt = bcR.value; val frac = bcFrac.value
-        val rnd = new scala.util.Random(params.seed ^ (pi * 0xA24BAED4963EE407L))
-        it.flatMap { v =>
-          val c = nearestCentroid(v, cents, rt)
-          if (frac(c) > 0 && rnd.nextDouble() < frac(c)) Iterator.single((c, v))
-          else Iterator.empty
-        }
-      }.collect()
-    val byCluster = members.groupBy(_._1)
+    val members = Array.fill(k0)(scala.collection.mutable.ArrayBuffer.empty[Array[Float]])
+    val rnd = new scala.util.Random(params.seed ^ 0xA24BAED4963EE407L)
+    var i = 0
+    while (i < sample.length) {
+      val c = assign(i)
+      if (keepFrac(c) > 0 && rnd.nextDouble() < keepFrac(c)) members(c) += sample(i)
+      i += 1
+    }
     val fatSet = fat.toSet
     val out = scala.collection.mutable.ArrayBuffer.empty[Array[Float]]
     var undersplit = 0
@@ -639,7 +632,7 @@ object IVFIndex {
     counts.indices.foreach { c =>
       if (!fatSet(c)) out += centroids(c)
       else {
-        val pts = byCluster.getOrElse(c, Array.empty[(Int, Array[Float])]).map(_._2)
+        val pts = members(c).toArray
         if (pts.length < 16) out += centroids(c) // degenerate draw: keep as-is
         else splitCell(pts, counts(c).toDouble, cap,
           params.seed ^ (c * 0xC2B2AE3D27D4EB4FL), 0).foreach { case (cent, est) =>
@@ -660,7 +653,7 @@ object IVFIndex {
         f"after splitting (worst est ${worstResidual}%.0f vs cap $cap%.1f) — " +
         f"width/depth bounds hit; raise the member subsample or lower the factor")
     val enriched = out.toArray
-    val probe = selfProbe(spark, sampled, centroids, enriched, params)
+    val probe = selfProbe(sample, centroids, enriched, params)
     lastSplitProbe = Some(probe)
     println(f"[split-probe] flat=${probe.flatRecall}%.3f split=${probe.splitRecall}%.3f " +
       f"@nprobe=${probe.nprobe}%d (${probe.nQueries}%d sample queries) -> " +
@@ -670,69 +663,39 @@ object IVFIndex {
 
   /** The split's self-probe: does replacing the fat centroids with
     * their children preserve CANDIDATE-GENERATION recall at equal
-    * probe count? Draws `nq` queries from the training sample, finds
-    * each query's exact top-k within the sample in ONE distributed
-    * pass (per-partition bounded heaps carrying the neighbor vectors,
-    * merged on the driver), then — driver-side, on ≤ nq·k vectors —
-    * assigns the true neighbors to flat and split cells and measures
-    * the fraction reachable within the query's `nprobe` nearest
-    * centroids under each layout. Verdict "artifact" (split ships)
-    * when split recall ≥ flat recall − 0.02; "mass" otherwise. Cost:
-    * nq·|sample| distances in the distributed pass + nq·k·(K+K')
-    * driver-side — seconds against a multi-minute build. */
+    * probe count? Draws `nq` distinct queries from the training sample
+    * (seeded), finds each query's exact top-k within the sample by
+    * brute force (ties broken by (distance, sample index); queries run
+    * across driver cores), then assigns the true neighbors to flat and
+    * split cells and measures the fraction reachable within the
+    * query's `nprobe` nearest centroids under each layout. Verdict
+    * "artifact" (split ships) when split recall ≥ flat recall − 0.02;
+    * "mass" otherwise. Cost: nq·|sample| distances + nq·k·(K+K') —
+    * seconds against a multi-minute build. */
   private[graft] def selfProbe(
-      spark: SparkSession,
-      sampled: org.apache.spark.rdd.RDD[Array[Float]],
+      sample: Array[Array[Float]],
       flat: Array[Array[Float]],
       split: Array[Array[Float]],
       params: Params,
       nq: Int = 64,
       k: Int = 10): SplitProbe = {
-    val queries = sampled.takeSample(withReplacement = false, nq,
-      params.seed ^ 0x51AB7E93C41D2F68L)
-    val bcQ = spark.sparkContext.broadcast(queries)
-    // per-query bounded max-heaps of (dist, vec). The ordering is
-    // TOTAL — distance then lexicographic vector content — so the kept
-    // multiset is a pure function of the input set: RDD.reduce merges
-    // in task-COMPLETION order, and a distance-only heap would break
-    // equal-distance boundary ties by arrival, making the split
-    // verdict (and hence the built index's K) run-dependent. Every
-    // other heap in the package tie-breaks by (dist, id); the probe's
-    // sampled vectors carry no id, so content is the stable key.
-    type Heap = scala.collection.mutable.PriorityQueue[(Double, Array[Float])]
-    val ord: Ordering[(Double, Array[Float])] =
-      new Ordering[(Double, Array[Float])] {
-        def compare(x: (Double, Array[Float]), y: (Double, Array[Float])): Int = {
-          val c = java.lang.Double.compare(x._1, y._1)
-          if (c != 0) c else java.util.Arrays.compare(x._2, y._2)
-        }
+    val n = sample.length
+    val queries: Array[Int] =
+      if (n <= nq) Array.range(0, n)
+      else {
+        val rnd = new scala.util.Random(params.seed ^ 0x51AB7E93C41D2F68L)
+        val picked = scala.collection.mutable.LinkedHashSet.empty[Int]
+        while (picked.size < nq) picked += rnd.nextInt(n)
+        picked.toArray
       }
-    // n passed explicitly so the map-side closure captures only
-    // (n, k, ord), never the driver's query array (ships via broadcast)
-    def newHeaps(n: Int): Array[Heap] = Array.fill(n)(new Heap()(ord))
-    def push(h: Heap, d: Double, v: Array[Float]): Unit = {
-      if (h.size < k) h.enqueue((d, v))
-      else if (ord.lt((d, v), h.head)) { h.dequeue(); h.enqueue((d, v)) }
+    val truth = new Array[Array[Long]](queries.length)
+    parallelFor(queries.length) { qi =>
+      val q = sample(queries(qi))
+      val top = new KnnExact.BoundedTopK(k)
+      var i = 0
+      while (i < n) { top.insert(l2sq(q, sample(i)), i.toLong); i += 1 }
+      truth(qi) = top.drainSorted()._1
     }
-    val heaps = sampled.mapPartitions { it =>
-      val qs = bcQ.value
-      val hs = newHeaps(qs.length)
-      it.foreach { v =>
-        var qi = 0
-        while (qi < qs.length) { push(hs(qi), l2sq(qs(qi), v), v); qi += 1 }
-      }
-      Iterator.single(hs.map(_.toArray))
-    }.reduce { (a, b) =>
-      var qi = 0
-      val hs = newHeaps(a.length)
-      while (qi < a.length) {
-        a(qi).foreach { case (d, v) => push(hs(qi), d, v) }
-        b(qi).foreach { case (d, v) => push(hs(qi), d, v) }
-        qi += 1
-      }
-      hs.map(_.toArray)
-    }
-    bcQ.destroy()
     val nprobe = math.max(2, math.min(64, flat.length / 50))
     // ONE flat-ranking implementation package-wide (deterministic
     // (dist, id) order) — the probe must rank exactly like the search
@@ -742,12 +705,14 @@ object IVFIndex {
     var flatHit = 0L; var splitHit = 0L; var totalGt = 0L
     var qi = 0
     while (qi < queries.length) {
-      val probedFlat = nearestSet(queries(qi), flat, nprobe).toSet
-      val probedSplit = nearestSet(queries(qi), split, nprobe).toSet
-      heaps(qi).foreach { case (_, v) =>
+      val q = sample(queries(qi))
+      val probedFlat = nearestSet(q, flat, nprobe).toSet
+      val probedSplit = nearestSet(q, split, nprobe).toSet
+      truth(qi).foreach { j =>
+        val v = sample(j.toInt)
         totalGt += 1
-        if (probedFlat(nearestCentroid(v, flat, null))) flatHit += 1
-        if (probedSplit(nearestCentroid(v, split, null))) splitHit += 1
+        if (probedFlat(nearestCentroid(v, flat))) flatHit += 1
+        if (probedSplit(nearestCentroid(v, split))) splitHit += 1
       }
       qi += 1
     }
@@ -796,8 +761,8 @@ object IVFIndex {
       }
       buf.iterator
     }
-    // The split re-traverses the sample after training (cell sizing,
-    // member subsample, self-probe) — persist it for those passes
+    // persisted: k-means reads it once per Lloyd iteration, and the
+    // split reads it once more, fetched to the driver
     val sampledP = sampled.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // MLlib's default k-means|| init. SURVEY §6 records the two
     // cheaper inits measured against it at the reference shape:
@@ -806,15 +771,20 @@ object IVFIndex {
     // from on micro-topic corpora
     val train = sampledP.toDF("vec")
       .withColumn("features", array_to_vector(col("vec")))
-    val trained: Array[Array[Float]] = new KMeans()
-      .setK(params.k).setSeed(params.seed)
-      .setMaxIter(KMeansMaxIter)
-      .setInitSteps(params.kmeansInitSteps)
-      .setFeaturesCol("features")
-      .fit(train).clusterCenters.map(_.toArray.map(_.toFloat))
-    val centroids =
-      try splitFatClusters(spark, sampledP, trained, params)
-      finally sampledP.unpersist(blocking = false)
+    val (trained, sample) = try {
+      val trained = new KMeans()
+        .setK(params.k).setSeed(params.seed)
+        .setMaxIter(KMeansMaxIter)
+        .setInitSteps(params.kmeansInitSteps)
+        .setFeaturesCol("features")
+        .fit(train).clusterCenters.map(_.toArray.map(_.toFloat))
+      // fetched one partition at a time (see Params.maxTrainRows): the
+      // split runs on the driver over this array
+      val rows = scala.collection.mutable.ArrayBuffer.empty[Array[Float]]
+      sampledP.toLocalIterator.foreach(rows += _)
+      (trained, rows.toArray)
+    } finally sampledP.unpersist(blocking = false)
+    val centroids = splitFatClusters(sample, trained, params)
 
     buildWithCentroids(spark, data, centroids, dim, params)
   }
@@ -899,10 +869,9 @@ object IVFIndex {
     require(vec.length == dim,
       s"vector $id has ${vec.length} dims; index dimension is $dim")
     val rot_x = rot.rotate(vec)
-    // nearestCentroid's flat arm (one strict-< scan in raw space) — one
-    // kernel, so assignment can never drift from the self-probe pass
-    // that uses it
-    val best = IVFIndex.nearestCentroid(vec, cents, null)
+    // nearestCentroid (one strict-< scan in raw space) — one kernel,
+    // so assignment can never drift from the split's sizing and probe
+    val best = IVFIndex.nearestCentroid(vec, cents)
     val cRot = rotCents(best)
     val residual = new Array[Float](rot.paddedDim)
     var i = 0
@@ -1803,8 +1772,7 @@ final class IVFModel(
       // an actual rank() call: touching `router` alone constructs the
       // object but leaves its lazy neighbor graph unbuilt, so the
       // multi-second build would run under the lazy-val monitor on one
-      // ForkJoin thread while every other ranking thread blocks (the
-      // splitFatClusters idiom)
+      // ForkJoin thread while every other ranking thread blocks
       router.rank(rotatedCentroids(0), 1)
     val probes = new Array[(Long, Array[Float], Array[Int])](queries.length)
     java.util.stream.IntStream.range(0, queries.length).parallel().forEach { i =>

@@ -480,9 +480,8 @@ class AnnSpec extends AnyFunSuite {
     }
     /** (flat centroids, `splitFatClusters`' output) for `region ++ far`. */
     def runCase(region: Seq[Array[Float]]): (Array[Array[Float]], Array[Array[Float]]) = {
-      val sampled = spark.sparkContext.parallelize(region ++ far, 4)
       val flat = Array.tabulate(dim)(_ => 0.0f) +: farCentroids
-      (flat, IVFIndex.splitFatClusters(spark, sampled, flat, params))
+      (flat, IVFIndex.splitFatClusters((region ++ far).toArray, flat, params))
     }
   }
 
@@ -538,8 +537,7 @@ class AnnSpec extends AnyFunSuite {
     // per cell against a cap of 120) nothing is sized fat, no probe
     // runs, and the SAME centroid array passes through
     val farC = farCentroids
-    val untouched = IVFIndex.splitFatClusters(
-      spark, spark.sparkContext.parallelize(far, 4), farC, params)
+    val untouched = IVFIndex.splitFatClusters(far.toArray, farC, params)
     assert(untouched eq farC, "no cell over cap: the centroid set must pass through unchanged")
     assert(IVFIndex.lastSplitProbe.isEmpty, "no fat cell: no self-probe verdict")
   }

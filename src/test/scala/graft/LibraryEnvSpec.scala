@@ -43,6 +43,7 @@ class LibraryEnvSpec extends AnyFunSuite {
         ("SPARK_GRAFT_SWEEP_NOISE", "0,45", _.toFloat),
         ("SPARK_GRAFT_SWEEP_MODE", "highAcc", SweepRef.highAccMode),
         ("SPARK_GRAFT_BENCH_RUNS", "", _.toInt),
+        ("SPARK_GRAFT_SHUFFLE", "0", Sessions.positiveInt),
         ("SPARK_GRAFT_SWEEP_LADDER", "5,10,x", SweepRef.ints))) {
       val e = intercept[IllegalArgumentException](
         Sessions.parseKnob(name, Some(raw), null: Any)(parse))
