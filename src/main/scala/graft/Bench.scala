@@ -203,7 +203,7 @@ object Bench {
     val host = hostStampJson
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Sessions.envKnob("SPARK_GRAFT_CPUS", 4)(Sessions.positiveInt)
-    val runs = Sessions.envKnob("SPARK_GRAFT_BENCH_RUNS", 3)(_.toInt).max(1)
+    val runs = Sessions.envKnob("SPARK_GRAFT_BENCH_RUNS", 3)(Sessions.positiveInt)
     // optional subset (e.g. the sf1 spot-check runs only e1/e3/c17/d1).
     // Validated BEFORE the SparkSession + warmup pass: a typo or an
     // empty value must fail in milliseconds, not after the warmup, and

@@ -156,9 +156,9 @@ object ScaleProbe {
     // f"%.3f" under a comma-decimal default locale would emit invalid
     // JSON (the D12Probe rule — applies to every JSON-emitting main)
     java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val nDocs = sys.env.getOrElse("SPARK_GRAFT_PROBE_DOCS", "100000").toInt
-    val nVecs = sys.env.getOrElse("SPARK_GRAFT_PROBE_VECS", "200000").toInt
-    val dim = sys.env.getOrElse("SPARK_GRAFT_PROBE_DIM", "64").toInt
+    val nDocs = Sessions.envKnob("SPARK_GRAFT_PROBE_DOCS", 100000)(Sessions.positiveInt)
+    val nVecs = Sessions.envKnob("SPARK_GRAFT_PROBE_VECS", 200000)(Sessions.positiveInt)
+    val dim = Sessions.envKnob("SPARK_GRAFT_PROBE_DIM", 64)(Sessions.positiveInt)
     val cpus = Sessions.envKnob("SPARK_GRAFT_CPUS", 32)(Sessions.positiveInt)
     // the large-state streaming deployment conf (RocksDB provider +
     // changelog checkpointing) — shared, see [[ScaleProbe.largeStateConf]]
@@ -393,10 +393,8 @@ object ScaleProbe {
     val vecsOnDisk = spark.read.parquet(vecsDir.toString)
 
     val (model, tBuild) = time {
-      val m = graft.ann.IVFIndex.build(spark, vecsOnDisk,
+      graft.ann.IVFIndex.build(spark, vecsOnDisk,
         graft.ann.IVFIndex.Params(k = 256, totalBits = 4))
-      m.index.count() // materialize the cached index
-      m
     }
     val queries = vecsOnDisk.filter(col("vec_id") < 100)
       .as[(Long, Array[Float])].collect().sortBy(_._1)
@@ -477,7 +475,7 @@ object ScaleProbe {
 object D12Probe {
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val nEvents = sys.env.getOrElse("SPARK_GRAFT_PROBE_EVENTS", "2000000").toLong
+    val nEvents = Sessions.envKnob("SPARK_GRAFT_PROBE_EVENTS", 2000000L)(Sessions.positiveLong)
     val cpus = Sessions.envKnob("SPARK_GRAFT_CPUS", 32)(Sessions.positiveInt)
     // SPARK_GRAFT_SHUFFLE: state-partition A/B at probe scale (the
     // Bench stateful-class knob, here against REAL state volume)

@@ -44,11 +44,14 @@ object Sessions {
   private[graft] def envKnob[T](name: String, dflt: T)(parse: String => T): T =
     parseKnob(name, sys.env.get(name), dflt)(parse)
 
-  /** The parser of a count knob (`SPARK_GRAFT_CPUS`,
-    * `SPARK_GRAFT_SHUFFLE`): a positive Int. */
-  private[graft] def positiveInt(s: String): Int = {
-    val v = s.toInt
-    require(v > 0, s"must be positive, got $v")
+  /** The parsers of a count knob (`SPARK_GRAFT_CPUS`, a sweep's or
+    * probe's sizes): a positive Int or Long, or a non-negative Int for
+    * a count whose 0 turns its step off. */
+  private[graft] def positiveInt(s: String): Int = atLeast(1, s.toInt).toInt
+  private[graft] def positiveLong(s: String): Long = atLeast(1, s.toLong)
+  private[graft] def nonNegativeInt(s: String): Int = atLeast(0, s.toInt).toInt
+  private def atLeast(min: Long, v: Long): Long = {
+    require(v >= min, s"must be ${if (min > 0) "positive" else "non-negative"}, got $v")
     v
   }
 }

@@ -48,7 +48,8 @@ import graft.ann.{IVFIndex, KnnExact, SweepEval}
   * SPARK_GRAFT_SWEEP_MODE=highacc|plain picks the searcher.)
   */
 object SweepRef {
-  private def env(name: String, dflt: Int): Int = Sessions.envKnob(name, dflt)(_.toInt)
+  private def env(name: String, dflt: Int): Int =
+    Sessions.envKnob(name, dflt)(Sessions.positiveInt)
 
   /** A comma-separated Int list knob ("5,20,100"). */
   private[graft] def ints(s: String): Seq[Int] =
@@ -209,7 +210,6 @@ object SweepRef {
         IVFIndex.Params(k = kClusters, totalBits = 4, maxTrainRows = trainRows.toLong,
           kmeansInitSteps = initSteps))
       val splitProbe = IVFIndex.lastSplitProbe
-      model.index.count() // materialize the cached index outside timing
       val tBuild = (System.nanoTime() - t1) / 1e9
       val kFinal = model.centroids.length
       println(f"index built (K=$kClusters%d -> $kFinal%d cells, B=4) in $tBuild%.1f s")
@@ -239,9 +239,7 @@ object SweepRef {
         if (highAcc) model.searchHighAcc(spark, base, queries, topk, np)
         else model.search(spark, queries, topk, np)
       // one untimed warm search: JIT + codegen compile, not the kernel,
-      // would otherwise dominate the first (smallest-nprobe) row, and
-      // its scan job packs the model's runs, so every timed row scans
-      // the packed cache
+      // would otherwise dominate the first (smallest-nprobe) row
       searchAt(ladder.head).count()
 
       val qids = queries.map(_._1)
@@ -316,7 +314,8 @@ object SweepRef {
             .map(_._1),
           (qid, rk) => gtDist.get((qid, rk)))
       }.toMap
-      val batchNq = env("SPARK_GRAFT_SWEEP_BATCHNQ", 10000)
+      // 0 = no batch column
+      val batchNq = Sessions.envKnob("SPARK_GRAFT_SWEEP_BATCHNQ", 10000)(Sessions.nonNegativeInt)
       def writeCsv(batchQps: Map[Int, Double]): Unit = {
         val csvRows = rows.map { case (np, wall, _, recall) =>
           val qps = nq / wall

@@ -19,19 +19,20 @@ import graft.functions.VectorFunctions.l2sq
   *  - one narrow pass assigns each vector to its nearest centroid
   *    (broadcast centroids), rotates the residual and quantizes it —
   *    no shuffle except the final repartition by cluster for locality;
-  *  - the index is a columnar Dataset (parquet-persistable, partitioned
-  *    by cluster), replacing the reference's single binary blob
-  *    (IVF.hpp:219-252). Column pruning means the estimate phase never
-  *    reads `ex_code` bytes.
+  *  - the build packs its (cluster, block) layout straight into packed
+  *    runs (the reference's FastScan blocks), the model's one in-memory
+  *    form; its `index` Dataset is an uncached view of them. On disk the
+  *    index is columnar parquet partitioned by cluster, replacing the
+  *    reference's single binary blob (IVF.hpp:219-252).
   *
   * Search (reference: IVF::search, IVF.hpp:295-324):
   *  - queries are broadcast; centroid ranking happens on the driver
   *    (K centroids ≪ N — the reference's FlatInitializer);
-  *  - every search scans one in-memory layout, the model's packed runs
-  *    (the reference's FastScan blocks): the model's first search packs
-  *    them from the entries inside its own scan job and caches them, and
-  *    every later search reads the cache. Only `searchFiltered` packs
-  *    per call, from its semi-joined entries of the probed clusters;
+  *  - every search scans one in-memory layout, the model's packed runs:
+  *    a built model holds them from its build, and a loaded or
+  *    hand-made model's first search packs them from its `index` inside
+  *    its own scan job and caches them. Only `searchFiltered` packs per
+  *    call, from its semi-joined entries of the probed clusters;
   *  - each task scans only probed clusters and keeps per-query bounded
   *    heaps: 1-bit estimate → error-bound prune (vs the local kth
   *    distance) → extended-code rerank;
@@ -73,9 +74,9 @@ object IVFIndex {
     searchAccsV._2
   }
 
-  /** Placement granularity of the cached index: entries are assigned
-    * to `ceil(clusterSize / this)` blocks per cluster and the cache
-    * partitions on (cluster_id, block), so the unit the partitioner
+  /** Placement granularity of a built index: entries are assigned
+    * to `ceil(clusterSize / this)` blocks per cluster and the packed
+    * runs partition on (cluster_id, block), so the unit the partitioner
     * places is never more than this many rows. k-means on real corpora
     * grows catch-all clusters near the data mean that most queries
     * rank into their probe set; with plain hash-on-cluster placement
@@ -111,19 +112,19 @@ object IVFIndex {
 
   /** One cluster's entries in BLOCK-MAJOR PACKED form — the
     * scan-side analogue of the reference's `fastscan/pack_codes.hpp`
-    * layout, packed once per model into [[IVFModel.packedIndex]] by the
-    * model's first search (or per call from [[IVFModel.searchFiltered]]'s
-    * semi-joined entries), and scanned by every probing query of a
-    * call. Sign-bit words of all
+    * layout and a model's one in-memory form ([[IVFModel.runs]]),
+    * packed once per model (or per call from
+    * [[IVFModel.searchFiltered]]'s semi-joined entries) and scanned by
+    * every probing query of a call. Sign-bit words of all
     * entries live in ONE contiguous long array (entry i's words at
     * [i·words, (i+1)·words)); the per-entry estimate factors are
     * parallel primitive columns. The packing replaces a per-(query,
     * entry) object-pointer chase on the estimate hot loop with a
     * sequential stream; `exCode` stays a reference column because it
     * is only touched on the rare post-prune rerank. Serializable so the
-    * model's packed cache can spill (MEMORY_AND_DISK). Never persisted:
-    * the index's only on-disk form is its entries, and runs are always
-    * packed from them in memory ([[packRuns]]). */
+    * model's runs can spill (MEMORY_AND_DISK). Never persisted: the
+    * index's only on-disk form is its entries, packed in memory by
+    * [[packRuns]] and recovered by [[unpackRuns]]. */
   private[graft] final class PackedRun(
       val words: Int, val dim: Int, val exBits: Int) extends Serializable {
     /** exBits ≤ 7 ⇒ F_d = bit·2^exBits + code fits a byte: pre-unpack
@@ -179,9 +180,9 @@ object IVFIndex {
       if (packExF) exF = java.util.Arrays.copyOf(exF, cap * dim)
       else exCode = java.util.Arrays.copyOf(exCode, cap)
     }
-    /** Trim backing arrays to exactly n rows — called once by the
-      * model's packed cache before persisting (grow() doubles, so an
-      * untrimmed run can hold ~2× its data for the model lifetime);
+    /** Trim backing arrays to exactly n rows — called once on a
+      * model's runs before persisting (grow() doubles, so an untrimmed
+      * run can hold ~2× its data for the model lifetime);
       * searchFiltered's per-call pack skips it. */
     def trim(): Unit = if (cap > n) {
       cap = math.max(n, 1)
@@ -205,7 +206,7 @@ object IVFIndex {
   /** Pack one partition's entries into its [[Runs]] (`nClusters`
     * slots): each cluster's entries in stream order, rolling over to a
     * fresh run when the last one [[PackedRun.isFull]]. The one pack loop
-    * behind every scan source ([[IVFModel.packedIndex]] and
+    * behind every scan source (a model's [[IVFModel.runs]] and
     * searchFiltered's per-call pack), so they scan identically by
     * construction. */
   private[graft] def packRuns(entries: Iterator[Entry], dim: Int, exBits: Int,
@@ -221,6 +222,23 @@ object IVFIndex {
     }
     runs
   }
+
+  /** The inverse of [[packRuns]]: one partition's entries, clusters
+    * ascending and each cluster's runs in order (a built layout's
+    * (cluster_id, id) order), every field bit for bit: `sum_xb` is the
+    * sign words' popcount and `ex_code` each F byte's low exBits
+    * re-packed, as [[RaBitQ.quantize]] derives them. */
+  private[graft] def unpackRuns(runs: Runs): Iterator[Entry] =
+    runs.iterator.zipWithIndex.filter(_._1 != null).flatMap { case (rs, cid) =>
+      rs.iterator.flatMap(run => Iterator.tabulate(run.n) { i =>
+        val (w, d, mask) = (run.words, run.dim, (1 << run.exBits) - 1)
+        val sign = java.util.Arrays.copyOfRange(run.sign, i * w, (i + 1) * w)
+        val exCode = if (!run.packExF) run.exCode(i)
+          else RaBitQ.packBits(Array.tabulate(d)(j => run.exF(i * d + j) & mask), run.exBits)
+        Entry(run.ids(i), cid, sign, exCode, run.x2(i), run.facIp(i),
+          sign.map(java.lang.Long.bitCount).sum.toFloat, run.facErr(i), run.xipnorm(i))
+      })
+    }
 
   /** The per-partition QUERY-MAJOR scan over packed runs — the one
     * kernel behind every [[IVFModel.scan]]. Per (query, cluster): ONE
@@ -817,27 +835,30 @@ object IVFIndex {
     // reinstate the one-task scan.
     // The layout is pinned fully deterministic: an EXPLICIT partition
     // count (AQE coalesces a bare repartition(col) and its decision
-    // can differ between the cached materialization and a post-uncache
-    // re-plan) and sortWithinPartitions for the row order (shuffle
-    // fetch order is randomized) — every search is bit-reproducible,
-    // and each cluster's rows stay contiguous WITHIN a partition for
-    // the per-cluster query-preparation cache (a split cluster just
-    // re-prepares once per partition that holds one of its blocks).
+    // could differ between the build and a later re-plan) and
+    // sortWithinPartitions for the row order (shuffle fetch order is
+    // randomized) — every search is bit-reproducible, and the
+    // (cluster_id, id) row order is the order unpackRuns returns, so a
+    // built model's `index` view reads the layout's rows in order.
     // The quantize pass is persisted (disk-backed) so the per-cluster
     // count and the final layout don't each recompute it; the handle
-    // is dropped once the index cache is materialized.
+    // is dropped once the packed runs are materialized (they recompute
+    // from the layout's shuffle output).
     val quantized = entries.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val index = cachedBlockLayout(spark, quantized)
-      index.queryExecution.toRdd.foreach(_ => ()) // materialize before unpersist
-      new IVFModel(params, rotator, centroids, rotatedCentroids, index)
+      val runs = IVFModel.packCached(blockLayout(spark, quantized),
+        rotator.paddedDim, exBits, centroids.length)
+      runs.foreach(_ => ()) // materialize before unpersist
+      val index = spark.createDataset(runs.mapPartitions(_.flatMap(unpackRuns)))
+      new IVFModel(params, rotator, centroids, rotatedCentroids, index, runs,
+        new IVFModel.SharedSearchState)
     } finally quantized.unpersist(blocking = false)
   }
 
-  /** The deterministic cached (cluster_id, hashed-block) layout —
-    * ONE copy of the layout rule (see the comment above). */
-  private def cachedBlockLayout(
+  /** The deterministic (cluster_id, hashed-block) layout — ONE copy of
+    * the layout rule (see the comment above). */
+  private def blockLayout(
       spark: SparkSession, entries: Dataset[Entry]): Dataset[Entry] = {
     import spark.implicits._
     val n = spark.sessionState.conf.numShufflePartitions
@@ -851,7 +872,7 @@ object IVFIndex {
       .sortWithinPartitions("cluster_id", "id")
       .select("id", "cluster_id", "sign_bits", "ex_code", "x2",
         "fac_ip", "sum_xb", "fac_err", "xipnorm")
-      .as[Entry].cache()
+      .as[Entry]
   }
 
   /** The per-vector assign + rotate + quantize kernel, shared by the
@@ -1048,6 +1069,35 @@ object IVFModel {
     * ours kicks in earlier because the router is cheap to build). */
   val RoutedRankingThreshold = 4096
 
+  /** Search-time driver state (NSW router, centroid broadcast),
+    * SHARED across [[IVFModel.withQueryBits]] copies — both depend only
+    * on the rotated centroids, and rebuilding the router per copy cost
+    * a measured 14 s at K=4096/d=1536 (the first profile's chunk-0/1
+    * stall: the batch model's first two pipelined chunks serialized
+    * behind a redundant graph build). */
+  private[ann] final class SharedSearchState {
+    @volatile var router: CentroidRouter = _
+    @volatile var centroidsBc:
+      org.apache.spark.broadcast.Broadcast[Array[Array[Float]]] = _
+  }
+
+  /** `entries` packed into one [[IVFIndex.Runs]] per partition
+    * ([[IVFIndex.packRuns]]; `dim` is the padded dim, the residual and
+    * ex_code length); lazy, like the RDD it maps. */
+  private[ann] def pack(entries: Dataset[IVFIndex.Entry], dim: Int, exBits: Int,
+      nClusters: Int): RDD[IVFIndex.Runs] =
+    entries.rdd.mapPartitions(it =>
+      Iterator.single(IVFIndex.packRuns(it, dim, exBits, nClusters)))
+
+  /** A model's runs: [[pack]], each run trimmed (grow() overshoots up
+    * to 2×), persisted MEMORY_AND_DISK, filled by the first action over
+    * them (adaptive execution runs an `entries` plan's exchanges here). */
+  private[ann] def packCached(entries: Dataset[IVFIndex.Entry], dim: Int, exBits: Int,
+      nClusters: Int): RDD[IVFIndex.Runs] =
+    pack(entries, dim, exBits, nClusters)
+      .map { runs => runs.foreach(rs => if (rs != null) rs.foreach(_.trim())); runs }
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
   /** Tombstone-delete: the ids stop appearing in every subsequent
     * load/search. Deletes are an appended id list — no index rewrite
     * on the hot path; [[compact]] folds them in physically. */
@@ -1228,10 +1278,10 @@ object IVFModel {
     * from its one on-disk form: `meta`, `centroids`, `rotation` and
     * `entries` plus any committed ingest batches. Tombstoned ids (see
     * [[deleteIds]]) are subtracted with an anti-join. Packed scan runs
-    * are never read from disk: the model's first search packs them from
-    * the loaded entries ([[IVFModel.packedIndex]]). A `packed/`
-    * directory left by an older build is ignored and can be deleted by
-    * hand.
+    * are never read from disk: the loaded model's `index` is that
+    * uncached read, and its first search packs the runs from it
+    * ([[IVFModel.runs]]). A `packed/` directory left by an older build
+    * is ignored and can be deleted by hand.
     *
     * The loaded model is a search snapshot: every search sees the index
     * as of the model's first search, whose packed runs later searches
@@ -1308,13 +1358,31 @@ object IVFModel {
   }
 }
 
-final class IVFModel(
+/** A searchable IVF index. Its one in-memory form is `runs`, one
+  * [[IVFIndex.Runs]] per partition, which every search scans as live
+  * JVM arrays (per-call deserialization was ~95% of the estimate phase,
+  * results/kernel_roofline.json). A built model's runs come from its
+  * build and its `index` is an uncached view that unpacks them
+  * ([[IVFIndex.unpackRuns]]); a loaded or hand-made model keeps the
+  * `index` it was given and packs its runs from it on first use. */
+final class IVFModel private[graft] (
     val params: IVFIndex.Params,
     val rotator: Rotator,
     val centroids: Array[Array[Float]],
     val rotatedCentroids: Array[Array[Float]],
-    val index: Dataset[IVFIndex.Entry]) extends Serializable {
+    val index: Dataset[IVFIndex.Entry],
+    @transient private[graft] val runs: RDD[IVFIndex.Runs],
+    @transient private val shared: IVFModel.SharedSearchState) extends Serializable {
   import IVFIndex.Entry
+
+  /** A model over `index`: its runs are `index` packed per partition in
+    * `index`'s order ([[IVFModel.packCached]]), filled by the first search. */
+  def this(params: IVFIndex.Params, rotator: Rotator,
+      centroids: Array[Array[Float]], rotatedCentroids: Array[Array[Float]],
+      index: Dataset[IVFIndex.Entry]) =
+    this(params, rotator, centroids, rotatedCentroids, index,
+      IVFModel.packCached(index, rotator.paddedDim, params.exBits, centroids.length),
+      new IVFModel.SharedSearchState)
 
   /** The ACTUAL cell count — ≥ params.k when the fat-cluster split
     * enriched the centroid set (params.k stays the REQUESTED K, which
@@ -1323,62 +1391,34 @@ final class IVFModel(
     * under-probes and loses recall with no error. */
   def numClusters: Int = centroids.length
 
-  /** Search-time driver state (NSW router, centroid broadcast),
-    * SHARED across [[withQueryBits]] copies — both depend only on the
-    * rotated centroids, and rebuilding the router per copy cost a
-    * measured 14 s at K=4096/d=1536 (the first profile's chunk-0/1
-    * stall: the batch model's first two pipelined chunks serialized
-    * behind a redundant graph build). */
-  private final class SharedSearchState {
-    @volatile var router: CentroidRouter = _
-    @volatile var centroidsBc:
-      org.apache.spark.broadcast.Broadcast[Array[Array[Float]]] = _
-    @volatile var packed: RDD[IVFIndex.Runs] = _
-  }
-  @transient private var shared = new SharedSearchState
-  private def this(params: IVFIndex.Params, rotator: Rotator,
-      centroids: Array[Array[Float]], rotatedCentroids: Array[Array[Float]],
-      index: Dataset[IVFIndex.Entry], sharedState: AnyRef) = {
-    this(params, rotator, centroids, rotatedCentroids, index)
-    this.shared = sharedState.asInstanceOf[SharedSearchState]
-  }
-  // a deserialized copy (the model is Serializable) re-creates its own
-  // driver state on first use
-  private def sharedState: SharedSearchState = synchronized {
-    if (shared == null) shared = new SharedSearchState
-    shared
-  }
-
-  /** Release the model-lifetime search caches: the packed runs every
-    * search scans ([[packedIndex]], a second in-memory copy of the
-    * index), the rotated-centroid broadcast, and the NSW router. The
-    * model stays fully usable — the next search rebuilds them, its scan
-    * job re-packing the runs from `index` — so this
-    * is for long-lived sessions cycling through many models (the
-    * AnnSpec per-B loop, index-lifecycle tooling) where N throwaway
-    * models would otherwise pin N packed copies until GC. Does NOT
-    * touch the columnar `index` cache itself (that is the caller's —
-    * `index.unpersist()` — because callers may share it across derived
-    * models). */
+  /** Release the model-lifetime search caches: the blocks of the
+    * packed runs ([[runs]], shared with every [[withQueryBits]] copy
+    * and read by a built model's `index` view), the rotated-centroid
+    * broadcast, and the NSW router. The model stays fully usable: the
+    * next search rebuilds them, its scan job re-caching the runs (a
+    * built model recomputes them from its build's shuffle output, any
+    * other re-packs them from `index`). For long-lived sessions cycling
+    * through many models, where N throwaway models would otherwise pin
+    * N packed copies until GC. */
   def freeSearchCaches(): Unit = {
-    val s = sharedState
-    s.synchronized {
-      if (s.packed != null) { s.packed.unpersist(blocking = false); s.packed = null }
+    shared.synchronized {
+      runs.unpersist(blocking = true) // so no async removal races the re-cache
+      runs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // unpersist, not destroy: an in-flight search holding the old
       // handle can still re-fetch; the next search builds a fresh one
-      if (s.centroidsBc != null) { s.centroidsBc.unpersist(false); s.centroidsBc = null }
-      s.router = null
+      if (shared.centroidsBc != null) shared.centroidsBc.unpersist(false)
+      shared.centroidsBc = null
+      shared.router = null
     }
   }
 
   /** Centroid router over the rotated centroids (built on first
     * search, shared across queryBits copies). */
   def router: CentroidRouter = {
-    val s = sharedState
-    if (s.router == null) s.synchronized {
-      if (s.router == null) s.router = new CentroidRouter(rotatedCentroids)
+    if (shared.router == null) shared.synchronized {
+      if (shared.router == null) shared.router = new CentroidRouter(rotatedCentroids)
     }
-    s.router
+    shared.router
   }
 
   /** One broadcast of the rotated centroids per model lifetime, shared
@@ -1387,40 +1427,11 @@ final class IVFModel(
     * across a searchAll run's chunks; re-broadcasting it with every
     * 2048-query chunk was pure per-chunk fixed cost. */
   private[graft] def centroidsBroadcast(spark: SparkSession) = {
-    val s = sharedState
-    if (s.centroidsBc == null) s.synchronized {
-      if (s.centroidsBc == null)
-        s.centroidsBc = spark.sparkContext.broadcast(rotatedCentroids)
+    if (shared.centroidsBc == null) shared.synchronized {
+      if (shared.centroidsBc == null)
+        shared.centroidsBc = spark.sparkContext.broadcast(rotatedCentroids)
     }
-    s.centroidsBc
-  }
-
-  /** The scan source of [[search]] and [[searchAll]]: the index
-    * re-materialized ONCE per model as BLOCK-MAJOR PACKED runs (the
-    * `fastscan/pack_codes.hpp` role) in the object store — per partition
-    * of `index`, one [[IVFIndex.Runs]] ([[pack]], then `trim()`),
-    * persisted MEMORY_AND_DISK. Defining it runs no job: the model's
-    * first scan job packs each partition as it reads it, whether the
-    * model was built, loaded or constructed by hand, and every later
-    * search scans live JVM arrays with zero
-    * deserialization (the kernel roofline probe measured ~95% of the old
-    * estimate phase in per-call re-deserialization and re-buffering,
-    * results/kernel_roofline.json). Partition layout and within-cluster
-    * entry order are `index`'s. It is a second in-memory copy of a built
-    * model's index next to its columnar cache; at 100 TB search reads the
-    * partitioned parquet instead, and this cache is the
-    * single-node/hot-working-set path. Shared across withQueryBits copies
-    * like the router; never persisted to disk. */
-  private[graft] def packedIndex(spark: SparkSession): RDD[IVFIndex.Runs] = {
-    val s = sharedState
-    if (s.packed == null) s.synchronized {
-      if (s.packed == null)
-        s.packed = pack(index).map { runs =>
-          runs.foreach(rs => if (rs != null) rs.foreach(_.trim())) // 2x grow overshoot
-          runs
-        }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-    s.packed
+    shared.centroidsBc
   }
 
   /** [[searchFiltered]]'s scan source: `entries` restricted to the
@@ -1428,32 +1439,22 @@ final class IVFModel(
     * partition directories on a loaded index) and packed per call, one
     * [[IVFIndex.Runs]] per partition. */
   private[graft] def probedRuns(entries: Dataset[Entry])(probed: Array[Int]): RDD[IVFIndex.Runs] =
-    pack(entries.filter(col("cluster_id").isin(probed.toIndexedSeq: _*)))
+    IVFModel.pack(entries.filter(col("cluster_id").isin(probed.toIndexedSeq: _*)),
+      rotator.paddedDim, params.exBits, numClusters)
 
-  /** `entries` packed into one [[IVFIndex.Runs]] per partition
-    * ([[IVFIndex.packRuns]]); lazy, like the RDD it maps. */
-  private def pack(entries: Dataset[Entry]): RDD[IVFIndex.Runs] = {
-    val pDim = rotator.paddedDim // residual/ex_code length is the PADDED dim
-    val pExBits = params.exBits
-    val nClusters = numClusters
-    entries.rdd.mapPartitions(it =>
-      Iterator.single(IVFIndex.packRuns(it, pDim, pExBits, nClusters)))
-  }
-
-  /** Same model, same (cached) index, same shared router/broadcast,
+  /** Same model, same runs and index, same shared router/broadcast,
     * different query-side estimate precision (Params.queryBits) — the
     * knob costs nothing to flip. */
   def withQueryBits(bits: Int): IVFModel =
     new IVFModel(params.copy(queryBits = bits), rotator, centroids,
-      rotatedCentroids, index, sharedState)
+      rotatedCentroids, index, runs, shared)
 
   /** Persist the index columnar, partitioned by cluster (the Spark
-    * analogue of IVF::save, IVF.hpp:219-252). Partitioning by
-    * cluster_id means a search with nprobe probes reads only those
-    * directories (real partition pruning at 100 TB). `entries`,
+    * analogue of IVF::save, IVF.hpp:219-252), so a read filtered to
+    * some clusters opens only those directories. `entries` (`index`),
     * `centroids`, `rotation` and `meta` ([[saveMeta]]) are the index's
     * only persisted form: no packed scan runs are written, and a
-    * loaded model packs them from its entries ([[packedIndex]]).
+    * loaded model packs them from its entries ([[runs]]).
     *
     * save is a FULL REPLACE of whatever index lived at `path`: besides
     * overwriting entries, it clears tombstones, streaming-ingest batch
@@ -1512,11 +1513,12 @@ final class IVFModel(
   /** Approximate top-k: (query_id, neighbor_id, rk), rk 1-based in
     * (distance, id) order. EAGER: the call runs ONE plain RDD job — no
     * SQL execution, no exchange — over the model's packed runs
-    * ([[packedIndex]]; the model's first search packs them inside that
-    * same job) and merges each partition's per-query top-k on the driver
-    * as its task result arrives ([[KnnExact.mergeTopKOnDriver]]). The
-    * returned DataFrame is local (a `LocalTableScan`), so collecting or
-    * joining it runs no scan again. The rows are those [[searchAll]]'s
+    * ([[runs]]; a loaded or hand-made model's first search packs them
+    * inside that same job) and merges each partition's per-query top-k
+    * on the driver as its task result arrives
+    * ([[KnnExact.mergeTopKOnDriver]]). The returned DataFrame is local
+    * (a `LocalTableScan`), so collecting or joining it runs no scan
+    * again. The rows are those [[searchAll]]'s
     * distributed merge returns for the same queries. Holds queries × k
     * result rows on the driver; past ~100k queries use [[searchAll]]. */
   def search(
@@ -1524,7 +1526,7 @@ final class IVFModel(
       queries: Array[(Long, Array[Float])],
       k: Int,
       nprobe: Int): DataFrame =
-    searchOnDriver(spark, _ => packedIndex(spark), queries, k, nprobe)
+    searchOnDriver(spark, _ => runs, queries, k, nprobe)
 
   /** Attribute-filtered search: only ids present in `allowedIds`
     * (single column of longs) are eligible results. The filter is a
@@ -1535,7 +1537,8 @@ final class IVFModel(
     * — a selective-but-large metadata predicate (billions of ids at
     * 100 TB) must not be forced through the driver. The one search
     * that packs per call: the semi-joined entries of the probed
-    * clusters only ([[probedRuns]]), never the model's packed runs.
+    * clusters only ([[probedRuns]]), read from `index` (on a built
+    * model, the view that unpacks its runs), never the cached runs.
     * Eager and merged on the driver like [[search]]: the scan is one
     * plain RDD job, plus whatever jobs the semi-join's own planning
     * needs (a broadcast of the allowed set, or its shuffle). */
@@ -1562,8 +1565,8 @@ final class IVFModel(
     * DataFrame and stream through the driver `chunk` rows at a time
     * (toLocalIterator — one partition resident, never the full set),
     * each chunk running the normal broadcast scan of the model's packed
-    * runs ([[packedIndex]], filled by the first chunk's scan job if no
-    * search has filled it yet). Unlike [[search]],
+    * runs ([[runs]], filled by the first chunk's scan job if nothing
+    * has filled them yet). Unlike [[search]],
     * each chunk's top-k merge stays DISTRIBUTED
     * ([[KnnExact.mergeTopK]]: one shuffle of the scan's
     * one-row-per-(partition, query) sorted lists, then a linear merge
@@ -1657,7 +1660,7 @@ final class IVFModel(
     def runChunk(chunkQ: Array[(Long, Array[Float])], idx: Int): DataFrame = {
       spark.sparkContext.setJobGroup(jobGroup,
         s"searchAll chunk $idx", interruptOnCancel = true)
-      val (candidates, bc) = scan(spark, _ => packedIndex(spark), chunkQ, k, nprobe)
+      val (candidates, bc) = scan(spark, _ => runs, chunkQ, k, nprobe)
       val res = KnnExact.mergeTopK(spark, spark.createDataset(candidates), k)
       val out = outputDir match {
         case Some(dir) =>
@@ -1743,7 +1746,7 @@ final class IVFModel(
     * At most partitions × queries rows of ≤ k candidates each, whatever
     * the corpus size. `runs` maps the call's probed cluster ids to its
     * one kind of source: an RDD of one
-    * [[IVFIndex.Runs]] per partition — [[packedIndex]] for [[search]]
+    * [[IVFIndex.Runs]] per partition — [[runs]] for [[search]]
     * and [[searchAll]], [[probedRuns]] for [[searchFiltered]]. Lazy:
     * nothing runs until the caller merges the candidates
     * ([[searchOnDriver]] on the driver, [[searchAll]] through a

@@ -585,10 +585,6 @@ object AnnQueries {
       .as[(Long, Long)].collect().groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).toSet }
     val gtDist: Map[(Long, Int), Double] = withExactDist(spark, dir, gt)
       .as[(Long, Int, Double)].collect().map { case (q, rk, d) => (q, rk) -> d }.toMap
-    // materialize the lazily-cached index OUTSIDE the timing windows —
-    // otherwise the first (smallest-nprobe) step pays the whole
-    // assign+quantize build and the published latency curve inverts
-    m.index.count()
     // the per-nprobe searches run separately (the reference
     // re-searches per nprobe too); only the tiny result ids come back
     // per step. Walls are measured here but published only through

@@ -261,8 +261,7 @@ class AnnSpec extends AnyFunSuite {
       val m = ann.IVFIndex.build(spark, e, p)
       val approx = m.search(spark, qs, 10, nprobe = p.k)
         .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-      m.index.unpersist() // don't pin 6 throwaway indexes for the suite
-      m.freeSearchCaches() // nor their packed twins / broadcasts
+      m.freeSearchCaches() // don't pin 6 throwaway indexes for the suite
       b -> (approx & exact).size.toDouble / exact.size
     }
     val byWidth = recalls.toMap
@@ -668,14 +667,61 @@ class AnnSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](tight.add(entries(1)))
   }
 
-  test("b7: the packing and the cached packed scan hash-match the committed golden row") {
-    // a search right after freeSearchCaches packs the runs inside its
-    // own scan job; the next search reads the cached runs. Both must
-    // hash-equal the committed b7 golden row — a pack that diverges
-    // from its cache fails HERE, not in a judge run.
-    val sfd = "/root/testdata/sf0.001"
-    val m = graft.operators.AnnQueries.model(spark, sfd)
+  test("unpackRuns returns packRuns' entries bit for bit for every supported width B") {
+    val rnd = new scala.util.Random(29)
+    val dim = 128
+    def fields(e: IVFIndex.Entry) = (e.id, e.cluster_id, e.sign_bits.toSeq, e.ex_code.toSeq,
+      Seq(e.x2, e.fac_ip, e.sum_xb, e.fac_err, e.xipnorm).map(java.lang.Float.floatToRawIntBits))
+    for (bits <- Seq(3, 4, 5, 7, 8, 9)) {
+      val exBits = bits - 1
+      // clusters 0, 2 and 4 of 6 in stream order, ids unsorted within
+      // each; one all-zero residual (no sign bit set)
+      val entries = (0 until 60).map { i =>
+        val res = if (i == 7) new Array[Float](dim) else randVec(rnd, dim)
+        val q = RaBitQ.quantize(res, exBits)
+        IVFIndex.Entry(rnd.nextLong(), i / 20 * 2, q.signBits, q.exCode, q.x2, q.facIp,
+          q.sumXb, q.facErr, q.xipnorm)
+      }
+      val runs = IVFIndex.packRuns(entries.iterator, dim, exBits, 6)
+      assert(IVFIndex.unpackRuns(runs).map(fields).toSeq == entries.map(fields), s"B=$bits")
+      // a cluster rolled over into several runs unpacks them in order
+      val rolled = runs.clone()
+      rolled(2) = scala.collection.mutable.ArrayBuffer(20 until 27, 27 until 40).map { sl =>
+        val r = new IVFIndex.PackedRun(dim / 64, dim, exBits)
+        sl.foreach(i => r.add(entries(i)))
+        r
+      }
+      assert(IVFIndex.unpackRuns(rolled).map(fields).toSeq == entries.map(fields),
+        s"B=$bits, rolled runs")
+    }
+  }
+
+  test("a built and searched model caches one copy of its index: the packed runs") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(31)
+    val df = (0 until 600).map(i => (i.toLong, randVec(rnd, 16))).toDF("vec_id", "embedding")
+    def cached() = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val before = cached()
+    val m = IVFIndex.build(spark, df, IVFIndex.Params(k = 8, totalBits = 4))
+    assert(m.search(spark, Array(0L -> randVec(rnd, 16)), 10, 3).count() == 10)
+    val added = cached() -- before
+    assert(added == Set(m.runs.id), s"cached RDDs added by build + search: $added, " +
+      s"want only the runs ${m.runs.id}")
+    assert(m.index.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
     m.freeSearchCaches()
+    assert(!cached().contains(m.runs.id), "freeSearchCaches kept the runs' blocks")
+  }
+
+  test("b7: the packing and the cached packed scan hash-match the committed golden row") {
+    // a fresh model over the built index packs its runs inside its
+    // first search's scan job; the next search reads the cached runs.
+    // Both must hash-equal the committed b7 golden row — a pack that
+    // diverges from its cache fails HERE, not in a judge run. Only the
+    // fresh model is freed: the shared memo's runs stay cached.
+    val sfd = "/root/testdata/sf0.001"
+    val built = graft.operators.AnnQueries.model(spark, sfd)
+    val m = new graft.ann.IVFModel(built.params, built.rotator, built.centroids,
+      built.rotatedCentroids, built.index)
     val qs = graft.operators.VectorQueries.queryVectors(spark, sfd)
     val np = 3 * m.params.k / 4 // b7's workload (AnnQueries.searchNprobe)
     def result() = m.search(spark, qs, 10, np).orderBy("query_id", "rk")
@@ -717,7 +763,7 @@ class AnnSpec extends AnyFunSuite {
         (d.schema, rows(d))
       } finally bc.destroy()
     }
-    val packed = (_: Array[Int]) => m.packedIndex(spark)
+    val packed = (_: Array[Int]) => m.runs
     def same(got: org.apache.spark.sql.DataFrame,
         want: (org.apache.spark.sql.types.StructType, Seq[(Long, Long, Int)]), what: String) = {
       assert(got.schema == want._1, s"$what: schema ${got.schema} != ${want._1}")
@@ -747,7 +793,6 @@ class AnnSpec extends AnyFunSuite {
       "filtered to nothing")
     assert(none.count() == 0)
     m.freeSearchCaches()
-    m.index.unpersist()
   }
 
   test("search runs ONE Spark job and shuffles nothing; the result is local") {
@@ -878,7 +923,7 @@ class AnnSpec extends AnyFunSuite {
         assert(accs._3.value - before == wantReranks, s"$what: graft.search.reranks")
         if (bits == 4) assert(rejected > 0, s"$what: no speculated partner was rejected")
       }
-      m.index.unpersist()
+      m.freeSearchCaches()
     }
   }
 
@@ -895,7 +940,6 @@ class AnnSpec extends AnyFunSuite {
       assert(Golden.hashOf(m.withQueryBits(queryBits).searchAll(spark, q, 100, 4)
         .orderBy("query_id", "rk"), Set.empty) == pinned,
         s"searchAll (queryBits $queryBits) drifted from its pinned rows")
-    m.freeSearchCaches()
   }
 
   test("searchAll: a one-chunk call shuffles at most partitions × queries records") {
@@ -904,7 +948,7 @@ class AnnSpec extends AnyFunSuite {
     val m = operators.AnnQueries.model(spark, sf)
     val q = Tables.embeddings(spark, sf).select("vec_id", "embedding")
     val nQ = q.count()
-    val parts = m.packedIndex(spark).getNumPartitions
+    val parts = m.runs.getNumPartitions
     var rows = 0L
     val (_, _, records) = jobsAndShuffleBytes {
       rows = m.searchAll(spark, q, 100, 4).count()
@@ -912,7 +956,6 @@ class AnnSpec extends AnyFunSuite {
     assert(rows > nQ * 10, s"searchAll returned $rows rows")
     assert(records > 0 && records <= parts * nQ,
       s"searchAll wrote $records shuffle records, want <= $parts partitions × $nQ queries")
-    m.freeSearchCaches()
   }
 
   test("searchAll outputDir crash window: a failed chunk leaves no manifest, reruns are safe") {
@@ -948,6 +991,5 @@ class AnnSpec extends AnyFunSuite {
     assert(rerun == rows(m.searchAll(spark, valid.toSeq.toDF("vec_id", "embedding"), 10, 4)),
       "the rerun must equal an uninterrupted run")
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(fresh, "_manifest.json")))
-    m.freeSearchCaches()
   }
 }

@@ -38,12 +38,23 @@ class LibraryEnvSpec extends AnyFunSuite {
     assert(Sessions.parseKnob("SPARK_GRAFT_SWEEP_K", None, 4096)(_.toInt) == 4096)
     assert(Sessions.parseKnob("SPARK_GRAFT_SWEEP_NOISE", Some("0.45"), 0.5f)(_.toFloat) == 0.45f)
     assert(!Sessions.parseKnob("SPARK_GRAFT_SWEEP_MODE", Some("plain"), true)(SweepRef.highAccMode))
+    assert(Sessions.parseKnob("SPARK_GRAFT_SWEEP_BATCHNQ", Some("0"), 10000)(
+      Sessions.nonNegativeInt) == 0)
+    assert(Sessions.parseKnob("SPARK_GRAFT_PROBE_EVENTS", Some("3000000000"), 2000000L)(
+      Sessions.positiveLong) == 3000000000L)
     for ((name, raw, parse) <- Seq[(String, String, String => Any)](
         ("SPARK_GRAFT_SWEEP_K", "4k", _.toInt),
         ("SPARK_GRAFT_SWEEP_NOISE", "0,45", _.toFloat),
         ("SPARK_GRAFT_SWEEP_MODE", "highAcc", SweepRef.highAccMode),
         ("SPARK_GRAFT_BENCH_RUNS", "", _.toInt),
         ("SPARK_GRAFT_SHUFFLE", "0", Sessions.positiveInt),
+        ("SPARK_GRAFT_BENCH_RUNS", "0", Sessions.positiveInt),
+        ("SPARK_GRAFT_BENCH_RUNS", "-3", Sessions.positiveInt),
+        ("SPARK_GRAFT_SWEEP_VECS", "-1000", Sessions.positiveInt),
+        ("SPARK_GRAFT_PROBE_DIM", "64.0", Sessions.positiveInt),
+        ("SPARK_GRAFT_PROBE_EVENTS", "0", Sessions.positiveLong),
+        ("SPARK_GRAFT_PROBE_EVENTS", "2e6", Sessions.positiveLong),
+        ("SPARK_GRAFT_SWEEP_BATCHNQ", "-1", Sessions.nonNegativeInt),
         ("SPARK_GRAFT_SWEEP_LADDER", "5,10,x", SweepRef.ints))) {
       val e = intercept[IllegalArgumentException](
         Sessions.parseKnob(name, Some(raw), null: Any)(parse))
