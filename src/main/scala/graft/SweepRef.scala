@@ -389,8 +389,9 @@ object SweepRef {
       // loop, see SURVEY §6); these rows measure the engine's actual
       // batch THROUGHPUT at NQ≥10k, where the fixed cost amortizes.
       // searchAll is the documented large-query-set path (plain
-      // quantized search, chunked through the driver); the wall covers
-      // every chunk's full pipeline including materialization.
+      // quantized search, one lazy plan that prepares the queries in
+      // batchQdf's `cpus` partitions); the wall covers the whole plan,
+      // which count() runs.
       // only rungs the truncated ladder actually kept (they carry the
       // CSV rows); a held-out query stream, like the ladder's
       val batchRungs =
@@ -411,8 +412,7 @@ object SweepRef {
       val batchQps: Map[Int, Double] = batchRungs.flatMap { np =>
         val qdf = batchQdf
         val w0 = System.nanoTime()
-        val n = batchModel.searchAll(spark, qdf, topk, np,
-          chunk = env("SPARK_GRAFT_SWEEP_BATCH_CHUNK", 4096)).count()
+        val n = batchModel.searchAll(spark, qdf, topk, np).count()
         val wall = (System.nanoTime() - w0) / 1e9
         if (n != batchNq.toLong * topk) {
           // short count (e.g. a skewed corpus whose nprobe-probe set

@@ -166,9 +166,9 @@ final class CentroidRouter(
 object CentroidRouter {
   /** Exact flat ranking over an arbitrary centroid array — bounded
     * top-nprobe selection (KnnExact's heap), not a full K-sort: this
-    * runs per query per chunk on the driver, where the old
-    * sort-everything form allocated K boxed tuples and paid O(K log K)
-    * for typically nprobe ≤ 64 results. Order out is ascending
+    * runs once per query, on the driver or in a query partition, where
+    * the old sort-everything form allocated K boxed tuples and paid
+    * O(K log K) for typically nprobe ≤ 64 results. Order out is ascending
     * (dist, id) — the heap's own drain order, no sort. */
   def rankFlat(centroids: Array[Array[Float]], q: Array[Float], nprobe: Int): Array[Int] = {
     val n = math.min(nprobe, centroids.length)

@@ -26,8 +26,10 @@ import graft.functions.VectorFunctions.l2sq
   *    reference's single binary blob (IVF.hpp:219-252).
   *
   * Search (reference: IVF::search, IVF.hpp:295-324):
-  *  - queries are broadcast; centroid ranking happens on the driver
-  *    (K centroids ≪ N — the reference's FlatInitializer);
+  *  - one prepare (`IVFModel.prepare`) rotates a query and ranks the
+  *    centroids (K ≪ N — the reference's FlatInitializer) from one
+  *    model-lifetime broadcast: on the driver for ad-hoc search, in the
+  *    query frame's own partitions for batch `searchAll`;
   *  - every search scans one in-memory layout, the model's packed runs:
   *    a built model holds them from its build, and a loaded or
   *    hand-made model's first search packs them from its `index` inside
@@ -43,9 +45,9 @@ import graft.functions.VectorFunctions.l2sq
   *    the reference's single result pool): ad-hoc
   *    `search`/`searchFiltered` on the driver as task results arrive
   *    (one plain RDD job, no SQL execution, no shuffle); batch
-  *    `searchAll` after grouping each
-  *    chunk's rows by query (a shuffle of ≤ partitions × queries rows),
-  *    so its results stay on the executors.
+  *    `searchAll` after grouping the rows by query (a shuffle of
+  *    ≤ partitions × queries rows), in one lazy plan that sends each
+  *    query only to the partitions holding a cluster it probes.
   */
 object IVFIndex {
   /** Persisted-index layout version; bump when Entry encoding changes
@@ -58,7 +60,7 @@ object IVFIndex {
     * lifetime, so a session restart in the same JVM (the test-suite
     * pattern) gets fresh accumulators instead of silently adding to
     * (or failing on) stale ones. Counters are cumulative across
-    * concurrent chunks; a listener reads per-task deltas. */
+    * concurrent tasks; a listener reads per-task deltas. */
   @transient @volatile private var searchAccsV: (
     org.apache.spark.SparkContext,
     (org.apache.spark.util.LongAccumulator,
@@ -285,7 +287,7 @@ object IVFIndex {
     })
     // partition-owned prepare scratch: one residual + one LUT buffer
     // reused across every (query, cluster) prepare — fresh allocation
-    // per prepare measured ~10 GB/chunk of GC load at the reference
+    // per prepare measured ~10 GB per 2048 queries of GC load at the reference
     // shape (see RaBitQ.prepareQueryInto)
     var rBuf: Array[Float] = null
     var lutBuf: Array[Int] = null
@@ -1069,16 +1071,45 @@ object IVFModel {
     * ours kicks in earlier because the router is cheap to build). */
   val RoutedRankingThreshold = 4096
 
-  /** Search-time driver state (NSW router, centroid broadcast),
-    * SHARED across [[IVFModel.withQueryBits]] copies — both depend only
-    * on the rotated centroids, and rebuilding the router per copy cost
-    * a measured 14 s at K=4096/d=1536 (the first profile's chunk-0/1
-    * stall: the batch model's first two pipelined chunks serialized
-    * behind a redundant graph build). */
+  /** Queries per [[IVFIndex.scanRuns]] call in a [[IVFModel.searchAll]]
+    * task: a runs partition scans its routed queries in slices of this
+    * many, which bounds the live per-query heaps at slice × k. */
+  val ScanSliceQueries = 65536
+
+  /** FNV-1a, one Long id per step: the searchAll manifest's
+    * order-sensitive query fingerprint. */
+  private[ann] val FnvOffset = 0xcbf29ce484222325L
+  private[ann] def fnv(h: Long, id: Long): Long = (h ^ id) * 0x100000001b3L
+
+  /** What [[prepare]] reads: the rotator, the rotated centroids and the
+    * router (null below [[RoutedRankingThreshold]]). */
+  private[ann] type PrepareState = (Rotator, Array[Array[Float]], CentroidRouter)
+
+  /** Search-time state SHARED across [[IVFModel.withQueryBits]] copies,
+    * all of it a function of the centroids and the runs: the NSW router,
+    * the broadcast of the [[PrepareState]], and where each cluster's
+    * runs live. Rebuilding the router per copy cost a measured 14 s at
+    * K=4096/d=1536, a redundant graph build every copy's first search
+    * waited for. */
   private[ann] final class SharedSearchState {
     @volatile var router: CentroidRouter = _
-    @volatile var centroidsBc:
-      org.apache.spark.broadcast.Broadcast[Array[Array[Float]]] = _
+    @volatile var prepareBc: Broadcast[PrepareState] = _
+    @volatile var clusterParts: Array[Array[Int]] = _
+  }
+
+  /** One query made ready to scan: (id, rotated vector, its `nprobe`
+    * nearest clusters, nearest first) — ranked flat (the reference's
+    * FlatInitializer) or, when `router` is non-null, routed (its
+    * HNSWInitializer role, IVF.hpp:155-160). The one query prepare of
+    * every search: on the driver for search/searchFiltered, in the query
+    * frame's partitions for searchAll. */
+  private[ann] def prepare(rotator: Rotator, rotatedCentroids: Array[Array[Float]],
+      router: CentroidRouter, nprobe: Int)(
+      q: (Long, Array[Float])): (Long, Array[Float], Array[Int]) = {
+    val qr = rotator.rotate(q._2)
+    (q._1, qr,
+      if (router == null) CentroidRouter.rankFlat(rotatedCentroids, qr, nprobe)
+      else router.rank(qr, nprobe))
   }
 
   /** `entries` packed into one [[IVFIndex.Runs]] per partition
@@ -1393,22 +1424,23 @@ final class IVFModel private[graft] (
 
   /** Release the model-lifetime search caches: the blocks of the
     * packed runs ([[runs]], shared with every [[withQueryBits]] copy
-    * and read by a built model's `index` view), the rotated-centroid
-    * broadcast, and the NSW router. The model stays fully usable: the
-    * next search rebuilds them, its scan job re-caching the runs (a
-    * built model recomputes them from its build's shuffle output, any
-    * other re-packs them from `index`). For long-lived sessions cycling
-    * through many models, where N throwaway models would otherwise pin
-    * N packed copies until GC. */
+    * and read by a built model's `index` view), the prepare broadcast,
+    * the NSW router and the cluster → partitions map. The model stays
+    * fully usable: the next search rebuilds them, its scan job
+    * re-caching the runs (a built model recomputes them from its build's
+    * shuffle output, any other re-packs them from `index`). For
+    * long-lived sessions cycling through many models, where N throwaway
+    * models would otherwise pin N packed copies until GC. */
   def freeSearchCaches(): Unit = {
     shared.synchronized {
       runs.unpersist(blocking = true) // so no async removal races the re-cache
       runs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // unpersist, not destroy: an in-flight search holding the old
-      // handle can still re-fetch; the next search builds a fresh one
-      if (shared.centroidsBc != null) shared.centroidsBc.unpersist(false)
-      shared.centroidsBc = null
+      // unpersist, not destroy: an in-flight search or a searchAll frame
+      // not yet run still holds the old handle and can re-fetch it
+      if (shared.prepareBc != null) shared.prepareBc.unpersist(false)
+      shared.prepareBc = null
       shared.router = null
+      shared.clusterParts = null
     }
   }
 
@@ -1421,17 +1453,45 @@ final class IVFModel private[graft] (
     shared.router
   }
 
-  /** One broadcast of the rotated centroids per model lifetime, shared
-    * by every search call and every queryBits copy. The centroid table
-    * (K × dim floats — 25 MB at the reference shape) is invariant
-    * across a searchAll run's chunks; re-broadcasting it with every
-    * 2048-query chunk was pure per-chunk fixed cost. */
-  private[graft] def centroidsBroadcast(spark: SparkSession) = {
-    if (shared.centroidsBc == null) shared.synchronized {
-      if (shared.centroidsBc == null)
-        shared.centroidsBc = spark.sparkContext.broadcast(rotatedCentroids)
+  /** One broadcast of the [[IVFModel.PrepareState]] per model
+    * lifetime, shared by every search call and every queryBits copy:
+    * the rotator, the rotated centroids (K × dim floats — 25 MB at the
+    * reference shape) and, from [[IVFModel.RoutedRankingThreshold]]
+    * clusters on, the router with its graph already built, so no task
+    * and no driver thread builds it again. */
+  private[graft] def prepareBroadcast(spark: SparkSession): Broadcast[IVFModel.PrepareState] = {
+    if (shared.prepareBc == null) shared.synchronized {
+      if (shared.prepareBc == null) {
+        val routed =
+          if (numClusters < IVFModel.RoutedRankingThreshold) null
+          else {
+            // an actual rank() builds the lazy neighbor graph; touching
+            // `router` alone constructs the object but not the graph
+            router.rank(rotatedCentroids(0), 1)
+            router
+          }
+        shared.prepareBc = spark.sparkContext.broadcast((rotator, rotatedCentroids, routed))
+      }
     }
-    shared.centroidsBc
+    shared.prepareBc
+  }
+
+  /** For each cluster, the [[runs]] partitions holding one of its runs,
+    * ascending: one job over the runs, once per model (shared by
+    * [[withQueryBits]] copies, dropped by [[freeSearchCaches]]).
+    * [[searchAll]] sends each query only to the partitions it lists for
+    * the query's probed clusters. */
+  private def clusterPartitions(): Array[Array[Int]] = {
+    if (shared.clusterParts == null) shared.synchronized {
+      if (shared.clusterParts == null) {
+        val held = runs.mapPartitionsWithIndex((pi, it) =>
+          it.flatMap(rs => rs.indices.iterator.filter(rs(_) != null).map(c => (c, pi))))
+          .collect().groupBy(_._1)
+        shared.clusterParts = Array.tabulate(numClusters)(c =>
+          held.get(c).fold(Array.emptyIntArray)(_.map(_._2).sorted))
+      }
+    }
+    shared.clusterParts
   }
 
   /** [[searchFiltered]]'s scan source: `entries` restricted to the
@@ -1442,7 +1502,7 @@ final class IVFModel private[graft] (
     IVFModel.pack(entries.filter(col("cluster_id").isin(probed.toIndexedSeq: _*)),
       rotator.paddedDim, params.exBits, numClusters)
 
-  /** Same model, same runs and index, same shared router/broadcast,
+  /** Same model, same runs and index, same shared search state,
     * different query-side estimate precision (Params.queryBits) — the
     * knob costs nothing to flip. */
   def withQueryBits(bits: Int): IVFModel =
@@ -1516,11 +1576,13 @@ final class IVFModel private[graft] (
     * ([[runs]]; a loaded or hand-made model's first search packs them
     * inside that same job) and merges each partition's per-query top-k
     * on the driver as its task result arrives
-    * ([[KnnExact.mergeTopKOnDriver]]). The returned DataFrame is local
-    * (a `LocalTableScan`), so collecting or joining it runs no scan
-    * again. The rows are those [[searchAll]]'s
+    * ([[KnnExact.mergeTopKOnDriver]]). The queries are rotated and
+    * ranked on the driver and ride one per-call broadcast. The returned
+    * DataFrame is local (a `LocalTableScan`), so collecting or joining
+    * it runs no scan again. The rows are those [[searchAll]]'s
     * distributed merge returns for the same queries. Holds queries × k
-    * result rows on the driver; past ~100k queries use [[searchAll]]. */
+    * result rows on the driver; past ~100k queries use [[searchAll]],
+    * which prepares the queries on the executors. */
   def search(
       spark: SparkSession,
       queries: Array[(Long, Array[Float])],
@@ -1559,171 +1621,115 @@ final class IVFModel private[graft] (
     index.join(allowed, Seq("id"), "left_semi").as[Entry]
   }
 
-  /** [[search]] over an arbitrarily large query set. `search` holds the
-    * whole query batch on the driver and broadcasts it, which is fine
-    * to ~100k queries; past that, THIS is the path: queries arrive as a
-    * DataFrame and stream through the driver `chunk` rows at a time
-    * (toLocalIterator — one partition resident, never the full set),
-    * each chunk running the normal broadcast scan of the model's packed
-    * runs ([[runs]], filled by the first chunk's scan job if nothing
-    * has filled them yet). Unlike [[search]],
-    * each chunk's top-k merge stays DISTRIBUTED
-    * ([[KnnExact.mergeTopK]]: one shuffle of the scan's
-    * one-row-per-(partition, query) sorted lists, then a linear merge
-    * per query) and the returned frame lives on the executors: chunk ×
-    * k result rows can run to millions. Chunks run
-    * through a TWO-DEEP pipeline (see the inline note): per-chunk
-    * results (Q_chunk × k rows) are materialized eagerly as each
-    * chunk's future completes, so at most two chunks' broadcasts are
-    * live at once — query state is bounded at O(2 · chunk · dim) on
-    * driver and executors alike, and chunk N+1's driver-side ranking
-    * overlaps chunk N's executor job instead of serializing behind
-    * it. Results are identical to one unchunked call: per-query
-    * results are independent and the estimate/prune trajectory is
-    * per-query (AnnSpec pins the equality).
+  /** [[search]] over an arbitrarily large query set, as one lazy Spark
+    * plan with no per-query work on the driver. `search` prepares the
+    * whole query batch on the driver and broadcasts it, which is fine to
+    * ~100k queries; past that, THIS is the path:
+    *  - prepare: each partition of `queries` rotates its own queries and
+    *    ranks their probed clusters ([[IVFModel.prepare]], over the
+    *    model-lifetime [[prepareBroadcast]]). It runs in the query
+    *    frame's own partitions, so give the frame as many partitions as
+    *    the cores that should share that work;
+    *  - route: each prepared query is shuffled only to the partitions of
+    *    the model's packed runs ([[runs]]) that hold one of its probed
+    *    clusters (a map computed once per model);
+    *  - scan: each runs partition scans its routed queries
+    *    ([[IVFIndex.scanRuns]]) in slices of
+    *    [[IVFModel.ScanSliceQueries]] queries, which bounds its heaps;
+    *  - merge: unlike [[search]], the top-k merge stays DISTRIBUTED
+    *    ([[KnnExact.mergeTopK]]: one shuffle of the scan's
+    *    one-row-per-(partition, query) sorted lists, then a linear merge
+    *    per query), so queries × k result rows can run to millions.
+    * The rows equal [[search]]'s for the same queries: per-query results
+    * are independent of which queries share a partition or a slice.
     *
-    * Default materialization is `localCheckpoint` — node-local blocks
-    * with truncated lineage. On a cluster, losing an executor that
-    * holds early chunks fails the whole run at the final union; for a
-    * many-hour search over millions of queries pass `outputDir`: each
-    * chunk is then written to durable storage (`outputDir/chunk-N`,
-    * idempotently overwritten) as it completes and the returned frame
-    * is the read-back union of exactly this call's chunk dirs —
-    * executor churn can at worst fail the chunk in flight, never a
-    * finished one. A USED outputDir (chunk dirs or a `_manifest.json`
-    * from any earlier run, completed or aborted) is refused loudly:
-    * chunk dirs are addressed by position, so writing a second run
-    * into the same dir could silently mix two query sets' results.
-    * On completion a `_manifest.json` (chunk count, query count,
-    * k/nprobe, an order-sensitive fingerprint of the query ids) is
-    * written as the run's durable provenance — its presence marks a
-    * finished run, its absence under existing chunk dirs an aborted
-    * one. */
+    * Without `outputDir` the returned frame is that lazy plan: nothing
+    * runs until an action, each action runs the whole plan, and no block
+    * is cached for it. With `outputDir`, the plan is written once to
+    * `outputDir/rows` and the returned frame reads those files back; then
+    * a `_manifest.json` (query count, k, nprobe, and an order-sensitive
+    * fingerprint of the query ids: FNV-1a over each query partition's
+    * ids, folded over the partitions in order) marks the run finished.
+    * The fingerprint reads the query frame's id column once more. A
+    * USED outputDir (`rows/` or `_manifest.json` from any earlier run,
+    * completed or aborted) is refused loudly, so two query sets' results
+    * are never mixed. */
   def searchAll(
       spark: SparkSession,
       queries: DataFrame,
       k: Int,
       nprobe: Int,
-      chunk: Int = 65536,
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       outputDir: Option[String] = None): DataFrame = {
-    import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    require(chunk > 0, s"chunk must be positive, got $chunk")
-    val outFs = outputDir.map { dir =>
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(p)) {
-        val used = fs.listStatus(p).exists { st =>
-          val n = st.getPath.getName
-          n.startsWith("chunk-") || n == "_manifest.json"
-        }
-        if (used) throw new IllegalStateException(
+    def plan = batchPlan(spark, queries, k, nprobe, idCol, vecCol)
+    outputDir.fold(plan) { dir =>
+      import org.apache.hadoop.fs.Path
+      val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+      if (Seq("rows", "_manifest.json").exists(n => fs.exists(new Path(dir, n))))
+        throw new IllegalStateException(
           s"searchAll outputDir $dir already holds another run's output " +
-            "(chunk-*/ or _manifest.json present). Chunk dirs are addressed by " +
-            "position, so a second run into the same dir could silently mix two " +
+            "(rows/ or _manifest.json present); a second run into it could mix two " +
             "query sets' results — point each run at a fresh directory.")
-      }
-      fs
-    }
-    var nQueries = 0L
-    var qFingerprint = 0xcbf29ce484222325L // FNV-1a over qids, order-sensitive
-    val it = queries
-      .select(col(idCol).cast(LongType).as("qid"), col(vecCol).as("qvec"))
-      .as[(Long, Array[Float])]
-      .toLocalIterator().asScala
-    // --- two-deep chunk pipeline: each chunk's (rank + submit +
-    // materialize) runs on a pool thread, so chunk N's executor job
-    // overlaps chunk N+1's driver-side query read, rotation, and
-    // centroid ranking — the per-chunk driver math was pure dead time
-    // on the executors before (measured as a large share of the chunk
-    // wall at d=1536/K=4096). At most 2 chunks are in flight, so live
-    // query state stays O(2 · chunk · dim) and results still append in
-    // submission order (FIFO await). ---
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val pool = scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(2, r => {
-        val t = new Thread(r, "graft-searchAll-chunk"); t.setDaemon(true); t
-      }))
-    val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val inFlight = scala.collection.mutable.Queue.empty[Future[DataFrame]]
-    var chunkCount = 0
-    val buf = new scala.collection.mutable.ArrayBuffer[(Long, Array[Float])](
-      math.min(chunk, 1 << 16))
-    // chunk jobs are tagged with a per-call job group so the failure
-    // path below can cancel an in-flight chunk's Spark job — a bare
-    // pool.shutdown() lets the daemon thread keep running (and, with
-    // outputDir, keep writing) after the caller has seen the exception
-    val jobGroup = s"graft-searchAll-${java.util.UUID.randomUUID()}"
-    def runChunk(chunkQ: Array[(Long, Array[Float])], idx: Int): DataFrame = {
-      spark.sparkContext.setJobGroup(jobGroup,
-        s"searchAll chunk $idx", interruptOnCancel = true)
-      val (candidates, bc) = scan(spark, _ => runs, chunkQ, k, nprobe)
-      val res = KnnExact.mergeTopK(spark, spark.createDataset(candidates), k)
-      val out = outputDir match {
-        case Some(dir) =>
-          val path = s"$dir/chunk-$idx"
-          res.write.mode("overwrite").parquet(path)
-          spark.read.parquet(path)
-        case None => res.localCheckpoint(true)
-      }
-      // the chunk's query broadcast is dead once the result is
-      // materialized above — destroy it NOW so executor blocks free
-      // deterministically (not when driver GC happens to collect the
-      // handle), enforcing the documented O(2·chunk·dim) bound
-      bc.destroy()
-      out
-    }
-    def flush(): Unit = if (buf.nonEmpty) {
-      val chunkQ = buf.toArray
-      buf.clear()
-      val idx = chunkCount
-      chunkCount += 1
-      while (inFlight.length >= 2)
-        parts += Await.result(inFlight.dequeue(), Duration.Inf)
-      inFlight += Future(runChunk(chunkQ, idx))(pool)
-    }
-    try {
-      it.foreach { q =>
-        nQueries += 1
-        var h = qFingerprint ^ q._1
-        h *= 0x100000001b3L
-        qFingerprint = h
-        buf += q
-        if (buf.length == chunk) flush()
-      }
-      flush()
-      while (inFlight.nonEmpty)
-        parts += Await.result(inFlight.dequeue(), Duration.Inf)
-    } catch {
-      case e: Throwable =>
-        // stop the background work with the run: interrupt the pool
-        // threads AND cancel their in-flight Spark jobs (shutdown()
-        // alone cancels nothing — a daemon thread would keep running
-        // its chunk, and with outputDir keep writing a chunk dir,
-        // after the caller has seen this exception)
-        pool.shutdownNow()
-        try spark.sparkContext.cancelJobGroup(jobGroup)
-        catch { case _: Throwable => () }
-        throw e
-    } finally pool.shutdown()
-    // completion manifest: durable provenance for the chunk dirs. An
-    // empty query set writes no chunks and therefore no manifest — the
-    // dir stays unused, so a corrected re-run into it is still allowed.
-    outFs.filter(_ => parts.nonEmpty).foreach { fs =>
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(s"${outputDir.get}/_manifest.json"), true)
+      val result = plan // checks k and nprobe before the dir is marked used
+      // rows/ is made before the write, so a run that fails inside it
+      // still leaves the dir marked used
+      fs.mkdirs(new Path(dir, "rows"))
+      result.write.mode("append").parquet(s"$dir/rows")
+      val perPart = queries.select(col(idCol).cast(LongType)).rdd
+        .mapPartitions { it =>
+          var (n, h) = (0L, IVFModel.FnvOffset)
+          it.foreach { r => n += 1; h = IVFModel.fnv(h, r.getLong(0)) }
+          Iterator.single((n, h))
+        }.collect()
+      val fingerprint = perPart.foldLeft(IVFModel.FnvOffset)((h, p) => IVFModel.fnv(h, p._2))
+      val out = fs.create(new Path(dir, "_manifest.json"), true)
       try out.write(
-        (s"""{"chunks":${parts.length},"queries":$nQueries,"k":$k,""" +
-          s""""nprobe":$nprobe,"query_fingerprint":"${java.lang.Long.toHexString(qFingerprint)}"}""" + "\n")
+        (s"""{"queries":${perPart.map(_._1).sum},"k":$k,"nprobe":$nprobe,""" +
+          s""""query_fingerprint":"${java.lang.Long.toHexString(fingerprint)}"}""" + "\n")
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
+      spark.read.parquet(s"$dir/rows")
     }
-    if (parts.isEmpty)
-      spark.emptyDataset[(Long, Long, Int)].toDF("query_id", "neighbor_id", "rk")
-    else parts.reduce(_.unionByName(_))
+  }
+
+  /** [[searchAll]]'s lazy plan: prepare, route, scan in slices of
+    * `slice` queries, merge. */
+  private[graft] def batchPlan(
+      spark: SparkSession,
+      queries: DataFrame,
+      k: Int,
+      nprobe: Int,
+      idCol: String,
+      vecCol: String,
+      slice: Int = IVFModel.ScanSliceQueries): DataFrame = {
+    import spark.implicits._
+    require(k > 0, s"search k must be positive, got $k")
+    require(nprobe > 0, s"nprobe must be positive, got $nprobe")
+    require(slice > 0, s"slice must be positive, got $slice")
+    // locals only: the closures below must not capture the model
+    val bc = prepareBroadcast(spark)
+    val where = clusterPartitions()
+    val accs = IVFIndex.searchAccs(spark)
+    val (qb, eb) = (params.queryBits, params.exBits)
+    val routed = queries
+      .select(col(idCol).cast(LongType), col(vecCol))
+      .as[(Long, Array[Float])].rdd
+      .mapPartitions { it =>
+        val (rot, cents, router) = bc.value
+        it.flatMap { q =>
+          val p = IVFModel.prepare(rot, cents, router, nprobe)(q)
+          p._3.flatMap(where(_)).distinct.iterator.map(_ -> p)
+        }
+      }
+      .setName("searchAll.route")
+      .partitionBy(new org.apache.spark.HashPartitioner(runs.getNumPartitions))
+    val candidates = runs.zipPartitions(routed) { (rs, qs) =>
+      val rotCents = bc.value._2
+      rs.flatMap(r => qs.map(_._2).grouped(slice).flatMap(s =>
+        IVFIndex.scanRuns(s.toArray, r, rotCents, k, qb, eb, accs)))
+    }
+    KnnExact.mergeTopK(spark, spark.createDataset(candidates), k)
   }
 
   /** [[search]] / [[searchFiltered]]: [[scan]] `runs`, merge on the
@@ -1740,19 +1746,18 @@ final class IVFModel private[graft] (
     finally bc.destroy()
   }
 
-  /** The probed-cluster scan: per partition, ONE (query_id, ids, dists)
-    * row per query with a candidate there — its partition-local top-k,
-    * ascending under [[KnnExact.DistIdOrder]] ([[IVFIndex.scanRuns]]).
-    * At most partitions × queries rows of ≤ k candidates each, whatever
-    * the corpus size. `runs` maps the call's probed cluster ids to its
-    * one kind of source: an RDD of one
-    * [[IVFIndex.Runs]] per partition — [[runs]] for [[search]]
-    * and [[searchAll]], [[probedRuns]] for [[searchFiltered]]. Lazy:
-    * nothing runs until the caller merges the candidates
-    * ([[searchOnDriver]] on the driver, [[searchAll]] through a
-    * shuffle) — and the caller destroys the returned per-call query
-    * broadcast once that merge is materialized, so a long searchAll
-    * pipeline never leaves its O(chunk·dim) broadcasts to driver GC. */
+  /** The probed-cluster scan of [[search]] and [[searchFiltered]]: the
+    * queries are prepared on the driver ([[IVFModel.prepare]], across
+    * all driver cores) and ride a per-call broadcast; per partition, ONE
+    * (query_id, ids, dists) row per query with a candidate there — its
+    * partition-local top-k, ascending under [[KnnExact.DistIdOrder]]
+    * ([[IVFIndex.scanRuns]]). At most partitions × queries rows of ≤ k
+    * candidates each, whatever the corpus size. `runs` maps the call's
+    * probed cluster ids to its one kind of source: an RDD of one
+    * [[IVFIndex.Runs]] per partition — [[runs]] for [[search]],
+    * [[probedRuns]] for [[searchFiltered]]. Lazy: nothing runs until the
+    * caller merges the candidates ([[searchOnDriver]]), and the caller
+    * destroys the returned query broadcast once it has. */
   private[graft] def scan(
       spark: SparkSession,
       runs: Array[Int] => RDD[IVFIndex.Runs],
@@ -1764,32 +1769,14 @@ final class IVFModel private[graft] (
     // "no neighbors" instead of a caller bug
     require(k > 0, s"search k must be positive, got $k")
     require(nprobe > 0, s"nprobe must be positive, got $nprobe")
-    // --- driver-side centroid ranking: flat scan for small K (the
-    // reference's FlatInitializer), two-level routed ranking above
-    // the threshold (its HNSWInitializer role, IVF.hpp:155-160).
-    // Rotation is O(dim²) per query and ranking O(K·dim) flat — at the
-    // reference shape (d=1536, K=4096) a 2048-query chunk costs ~10 Gflop
-    // of pure driver math, so both run across all driver cores. ---
-    if (rotatedCentroids.length >= IVFModel.RoutedRankingThreshold)
-      // force the lazy NSW build once, OUTSIDE the parallel loop — via
-      // an actual rank() call: touching `router` alone constructs the
-      // object but leaves its lazy neighbor graph unbuilt, so the
-      // multi-second build would run under the lazy-val monitor on one
-      // ForkJoin thread while every other ranking thread blocks
-      router.rank(rotatedCentroids(0), 1)
+    val sbc = prepareBroadcast(spark)
+    val (rot, cents, router) = sbc.value
+    // rotation is O(dim²) per query and ranking O(K·dim) flat: across
+    // all driver cores
     val probes = new Array[(Long, Array[Float], Array[Int])](queries.length)
     java.util.stream.IntStream.range(0, queries.length).parallel().forEach { i =>
-      val (qid, v) = queries(i)
-      val qr = rotator.rotate(v)
-      val ranked =
-        if (rotatedCentroids.length >= IVFModel.RoutedRankingThreshold)
-          router.rank(qr, nprobe)
-        else CentroidRouter.rankFlat(rotatedCentroids, qr, nprobe)
-      probes(i) = (qid, qr, ranked)
+      probes(i) = IVFModel.prepare(rot, cents, router, nprobe)(queries(i))
     }
-    // centroids ride the model-lifetime broadcast; only the per-call
-    // query state (rotated queries + their ranked probes) ships per call
-    val bcCent = centroidsBroadcast(spark)
     val bc = spark.sparkContext.broadcast(probes)
     // --- estimate → prune → rerank → local top-k over each partition's
     // packed runs, QUERY-MAJOR (see IVFIndex.scanRuns for the order
@@ -1799,7 +1786,7 @@ final class IVFModel private[graft] (
     val qb = params.queryBits
     val eb = params.exBits
     val candidates = runs(probes.flatMap(_._3).distinct).mapPartitions { it =>
-      val rotCents = bcCent.value
+      val rotCents = sbc.value._2
       it.flatMap(IVFIndex.scanRuns(bc.value, _, rotCents, k, qb, eb, accs))
     }
     (candidates, bc)

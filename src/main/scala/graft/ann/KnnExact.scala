@@ -13,7 +13,7 @@ import graft.functions.VectorFunctions.l2sq
   * Scale design: the query set is small by definition (it's a query
   * workload, not the corpus), so it is broadcast; each base partition
   * computes a *local* bounded heap per query (map-side top-k), and only
-  * `numPartitions × nQueries × k` candidate rows are shuffled — never
+  * `numPartitions × nQueries` sorted top-k lists are shuffled — never
   * O(N·Q). This is the distributed analogue of the reference's
   * ResultPool (inc/index/Pool.hpp) and survives a 1000-executor /
   * 100 TB corpus because the shuffle is independent of corpus size.
@@ -102,6 +102,14 @@ object KnnExact {
   def mergeTopK(
       spark: SparkSession,
       partial: Dataset[(Long, Array[Long], Array[Double])],
+      k: Int): DataFrame =
+    mergeLists(spark, partial, k).select("query_id", "neighbor_id", "rk")
+
+  /** [[mergeTopK]] keeping each neighbor's distance: (query_id,
+    * neighbor_id, rk, d2). */
+  private def mergeLists(
+      spark: SparkSession,
+      partial: Dataset[(Long, Array[Long], Array[Double])],
       k: Int): DataFrame = {
     import spark.implicits._
     partial.groupByKey(_._1)
@@ -111,9 +119,9 @@ object KnnExact {
         it.foreach { case (_, i, d) =>
           val m = mergeSorted(ids, dists, i, d, k); ids = m._1; dists = m._2
         }
-        ids.iterator.zipWithIndex.map { case (id, r) => (q, id, r + 1) }
+        ids.indices.iterator.map(r => (q, ids(r), r + 1, dists(r)))
       }
-      .toDF("query_id", "neighbor_id", "rk")
+      .toDF("query_id", "neighbor_id", "rk", "d2")
   }
 
   /** [[mergeTopK]] without the exchange, for candidate sets small
@@ -152,8 +160,10 @@ object KnnExact {
   /** The shared exact-top-k kernel, keeping the squared distance:
     * (query_id, neighbor_id, rk, d2). [[topK]] is this minus `d2`; the
     * sweep harness (graft.SweepRef) uses the distances as the ratio
-    * denominator (reference get_ratio, tools.hpp:16-46). Shuffle is
-    * only numPartitions × nQueries × k candidate rows. */
+    * denominator (reference get_ratio, tools.hpp:16-46). Each base
+    * partition emits one sorted top-k list per query, merged like
+    * [[mergeTopK]]'s: the shuffle is at most numPartitions × nQueries
+    * rows. */
   def topKDist(
       spark: SparkSession,
       base: DataFrame,
@@ -168,24 +178,19 @@ object KnnExact {
     import spark.implicits._
     val qb = spark.sparkContext.broadcast(queries)
     val ds = base.select(col(idCol).cast(LongType), col(vecCol)).as[(Long, Array[Float])]
-    ds.mapPartitions { iter =>
-        val qs = qb.value
-        val heaps = Array.fill(qs.length)(new BoundedTopK(k))
-        iter.foreach { case (id, vec) =>
-          var qi = 0
-          while (qi < qs.length) { heaps(qi).insert(l2sq(qs(qi)._2, vec), id); qi += 1 }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
+    mergeLists(spark, ds.mapPartitions { iter =>
+      val qs = qb.value
+      val heaps = Array.fill(qs.length)(new BoundedTopK(k))
+      iter.foreach { case (id, vec) =>
+        var qi = 0
+        while (qi < qs.length) { heaps(qi).insert(l2sq(qs(qi)._2, vec), id); qi += 1 }
+      }
+      qs.iterator.zip(heaps.iterator).collect {
+        case ((q, _), h) if h.nonEmpty =>
           val (ids, dists) = h.drainSorted()
-          ids.indices.iterator.map(i => (qs(qi)._1, ids(i), dists(i)))
-        }
+          (q, ids, dists)
       }
-      .groupByKey(_._1)
-      .flatMapGroups { (q, it) =>
-        it.toArray.sortBy(t => (t._3, t._2)).take(k).iterator.zipWithIndex
-          .map { case ((_, id, d), i) => (q, id, i + 1, d) }
-      }
-      .toDF("query_id", "neighbor_id", "rk", "d2")
+    }, k)
   }
 
   /** Exact re-rank of a small per-query candidate list (the second

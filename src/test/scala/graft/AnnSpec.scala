@@ -25,10 +25,10 @@ class AnnSpec extends AnyFunSuite {
   }
 
   /** The Spark jobs `body` runs (each as its stage names), the
-    * shuffle bytes (read + written) of their tasks, and the shuffle
-    * records those tasks wrote, from a SparkListener bracketed by two
-    * sentinel jobs. */
-  private def jobsAndShuffleBytes(body: => Unit): (Seq[String], Long, Long) = {
+    * shuffle bytes (read + written) of their tasks, and per stage the
+    * names of its RDDs and the shuffle records its tasks wrote, from a
+    * SparkListener bracketed by two sentinel jobs. */
+  private def jobsAndShuffleBytes(body: => Unit): (Seq[String], Long, Seq[(Set[String], Long)]) = {
     import org.apache.spark.scheduler._
     val events = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerEvent]()
     val listener = new SparkListener {
@@ -55,14 +55,17 @@ class AnnSpec extends AnyFunSuite {
       .dropWhile { case j: SparkListenerJobStart => desc(j) != begin; case _ => true }
       .takeWhile { case j: SparkListenerJobStart => desc(j) != end; case _ => true }
     val jobs = window.collect { case j: SparkListenerJobStart if desc(j) != begin => j }
-    val stages = jobs.flatMap(_.stageIds).toSet
+    val stages = jobs.flatMap(_.stageInfos).map(st => st.stageId -> st).toMap
     val tasks = window.collect {
-      case t: SparkListenerTaskEnd if stages(t.stageId) && t.taskMetrics != null => t.taskMetrics
+      case t: SparkListenerTaskEnd if stages.contains(t.stageId) && t.taskMetrics != null => t
     }
-    val shuffle = tasks.map(m =>
-      m.shuffleReadMetrics.totalBytesRead + m.shuffleWriteMetrics.bytesWritten).sum
-    (jobs.map(_.stageInfos.map(_.name).mkString(", ")), shuffle,
-      tasks.map(_.shuffleWriteMetrics.recordsWritten).sum)
+    val shuffle = tasks.map(t => t.taskMetrics.shuffleReadMetrics.totalBytesRead +
+      t.taskMetrics.shuffleWriteMetrics.bytesWritten).sum
+    val records = tasks.groupBy(_.stageId).toSeq.map { case (id, ts) =>
+      (stages(id).rddInfos.map(_.name).toSet,
+        ts.map(_.taskMetrics.shuffleWriteMetrics.recordsWritten).sum)
+    }
+    (jobs.map(_.stageInfos.map(_.name).mkString(", ")), shuffle, records)
   }
 
   test("rotator is orthonormal: norms and dots preserved") {
@@ -180,58 +183,97 @@ class AnnSpec extends AnyFunSuite {
     assert(recall >= 0.9, s"recall@10 = $recall")
   }
 
-  test("searchAll: chunked query-set search equals the one-shot broadcast") {
+  test("searchAll equals search, sliced or durable, and refuses a used outputDir") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val m = operators.AnnQueries.model(spark, sf)
-    // the whole embeddings table as the query set — 500 queries, far
-    // past the chunk bound below, so the union spans many chunks
+    // the whole embeddings table as the query set — 500 queries
     val queriesDF = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding"))
     val qArr = queriesDF.as[(Long, Array[Float])].collect().sortBy(_._1)
-    val oneShot = m.search(spark, qArr, 10, 12)
-      .as[(Long, Long, Int)].collect().sortBy(r => (r._1, r._3))
-    val chunked = m.searchAll(spark, queriesDF, 10, 12, chunk = 64)
-      .as[(Long, Long, Int)].collect().sortBy(r => (r._1, r._3))
-    assert(chunked.length == qArr.length * 10)
-    assert(chunked.toSeq == oneShot.toSeq,
-      "chunked search must be result-identical to the single broadcast")
-    // chunk larger than the set: one flush, same answer
-    val single = m.searchAll(spark, queriesDF, 10, 12, chunk = 100000)
-      .as[(Long, Long, Int)].collect().sortBy(r => (r._1, r._3))
-    assert(single.toSeq == oneShot.toSeq)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.as[(Long, Long, Int)].collect().sortBy(r => (r._1, r._3)).toSeq
+    val oneShot = rows(m.search(spark, qArr, 10, 12))
+    val batch = rows(m.searchAll(spark, queriesDF, 10, 12))
+    assert(batch.length == qArr.length * 10)
+    assert(batch == oneShot, "searchAll must be result-identical to search")
+    // slices of 64 queries: each runs partition scans its routed queries
+    // in many slices, same answer
+    assert(rows(m.batchPlan(spark, queriesDF, 10, 12, "vec_id", "embedding", slice = 64)) == oneShot,
+      "a sliced scan must be result-identical to search")
     // empty query set: empty result with the search schema
     val empty = m.searchAll(spark, queriesDF.filter(col("vec_id") < 0), 10, 12)
     assert(empty.columns.toSeq == Seq("query_id", "neighbor_id", "rk"))
     assert(empty.count() == 0)
-    // durable-chunk mode: same answer, chunks on disk, completion
-    // manifest written
+    // durable mode: same answer, rows on disk, completion manifest
     val outDir = java.nio.file.Files.createTempDirectory("searchall_durable").toString + "/run1"
-    val durable = m.searchAll(spark, queriesDF, 10, 12, chunk = 64,
-        outputDir = Some(outDir))
-      .as[(Long, Long, Int)].collect().sortBy(r => (r._1, r._3))
-    assert(durable.toSeq == oneShot.toSeq,
-      "durable-chunk mode must be result-identical to the single broadcast")
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(outDir, "chunk-7", "_SUCCESS")),
-      "each chunk must be durably written as it completes")
+    val durable = rows(m.searchAll(spark, queriesDF, 10, 12, outputDir = Some(outDir)))
+    assert(durable == oneShot, "durable mode must be result-identical to search")
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(outDir, "rows", "_SUCCESS")),
+      "the rows must be durably written")
     val manifest = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(outDir, "_manifest.json")), "UTF-8")
-    assert(manifest.contains("\"chunks\":8") && manifest.contains("\"queries\":500"),
-      s"manifest must record the run's shape: $manifest")
-    // a USED dir is refused loudly — chunk dirs are positional, so a
-    // second run into the same dir could silently mix query sets
+    assert(manifest.contains("\"queries\":500"), s"manifest must record the run's shape: $manifest")
+    // a USED dir is refused loudly: a second run into it could mix
+    // two query sets' results
     val ex = intercept[IllegalStateException] {
-      m.searchAll(spark, queriesDF, 10, 12, chunk = 64, outputDir = Some(outDir))
+      m.searchAll(spark, queriesDF, 10, 12, outputDir = Some(outDir))
     }
     assert(ex.getMessage.contains("fresh directory"), ex.getMessage)
-    // ...including a dir holding only an aborted run's chunks (no manifest)
+    // ...including a dir holding only an aborted run's rows (no manifest)
     val abortedDir = java.nio.file.Files.createTempDirectory("searchall_aborted").toString
     spark.range(1).selectExpr("CAST(id AS BIGINT) AS query_id",
         "CAST(99999 AS BIGINT) AS neighbor_id", "CAST(1 AS INT) AS rk")
-      .write.parquet(s"$abortedDir/chunk-30")
+      .write.parquet(s"$abortedDir/rows")
     intercept[IllegalStateException] {
-      m.searchAll(spark, queriesDF, 10, 12, chunk = 64, outputDir = Some(abortedDir))
+      m.searchAll(spark, queriesDF, 10, 12, outputDir = Some(abortedDir))
     }
+  }
+
+  test("searchAll equals search on 1- and 7-partition query frames") {
+    import spark.implicits._
+    val m = operators.AnnQueries.model(spark, sf)
+    val q = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    val qArr = q.as[(Long, Array[Float])].collect()
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.as[(Long, Long, Int)].collect().sortBy(r => (r._1, r._3)).toSeq
+    val want = rows(m.search(spark, qArr, 10, 3))
+    for (n <- Seq(1, 7))
+      assert(rows(m.searchAll(spark, q.repartition(n), 10, 3)) == want,
+        s"searchAll over $n query partitions differs from search")
+  }
+
+  test("searchAll equals search on a loaded overlay model (append, delete, load)") {
+    // an appended batch and a tombstone make the loaded model's runs a
+    // union and an anti-join of several layouts: its clusters spread
+    // over partitions unlike a built model's, which the routing map
+    // must follow
+    import spark.implicits._
+    val rnd = new scala.util.Random(53)
+    val dim = 16
+    val base = (0 until 800).map(i => (i.toLong, randVec(rnd, dim)))
+    val m = IVFIndex.build(spark, base.toDF("vec_id", "embedding"),
+      IVFIndex.Params(k = 8, totalBits = 4))
+    val root = java.nio.file.Files.createTempDirectory("searchall_overlay").toString
+    val (path, landing) = (s"$root/index", s"$root/landing")
+    m.save(path)
+    val added = (0 until 12).map(i => (5000L + i, randVec(rnd, dim)))
+    added.toDF("vec_id", "embedding").write.parquet(landing)
+    IVFIndex.appendStream(spark, m, landing, path)
+    graft.ann.IVFModel.deleteIds(path, (0L until 40L).toDF("id"))
+    val loaded = graft.ann.IVFModel.load(spark, path)
+    val qs = (base.take(4) ++ added.take(4) ++
+      (0 until 16).map(i => (900L + i, randVec(rnd, dim)))).toArray
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.as[(Long, Long, Int)].collect().sortBy(r => (r._1, r._3)).toSeq
+    val want = rows(loaded.search(spark, qs, 10, 3))
+    assert(added.take(4).forall { case (id, _) => want.contains((id, id, 1)) },
+      "an appended vector is not its own nearest neighbor")
+    assert(!want.exists(_._2 < 40L), "a deleted id was returned")
+    assert(rows(loaded.searchAll(spark, qs.toSeq.toDF("vec_id", "embedding").repartition(3),
+      10, 3)) == want, "searchAll differs from search on the loaded overlay model")
+    loaded.freeSearchCaches()
+    m.freeSearchCaches()
   }
 
   test("8-bit config: end-to-end build + search reaches near-exact recall") {
@@ -942,44 +984,79 @@ class AnnSpec extends AnyFunSuite {
         s"searchAll (queryBits $queryBits) drifted from its pinned rows")
   }
 
-  test("searchAll: a one-chunk call shuffles at most partitions × queries records") {
+  test("searchAll shuffles ≤ partitions × queries to merge, probed partitions to route") {
     // one (query, sorted top-k list) row per partition reaches the
-    // merge — never one row per candidate
+    // merge — never one row per candidate; and a query is routed only
+    // to the runs partitions that hold one of its probed clusters
+    import spark.implicits._
     val m = operators.AnnQueries.model(spark, sf)
     val q = Tables.embeddings(spark, sf).select("vec_id", "embedding")
-    val nQ = q.count()
+    val qArr = q.as[(Long, Array[Float])].collect()
+    val nQ = qArr.length.toLong
     val parts = m.runs.getNumPartitions
+    val held = m.runs.mapPartitionsWithIndex((pi, it) =>
+      it.flatMap(rs => rs.indices.filter(rs(_) != null).map(c => (c, pi)))).collect()
+    val routes = qArr.map { case (_, v) =>
+      graft.ann.CentroidRouter.rankFlat(m.rotatedCentroids, m.rotator.rotate(v), 4)
+        .flatMap(c => held.filter(_._1 == c).map(_._2)).distinct.length.toLong
+    }.sum
+    assert(routes < parts * nQ, s"every query probes every partition: the bound $routes is vacuous")
     var rows = 0L
     val (_, _, records) = jobsAndShuffleBytes {
       rows = m.searchAll(spark, q, 100, 4).count()
     }
     assert(rows > nQ * 10, s"searchAll returned $rows rows")
-    assert(records > 0 && records <= parts * nQ,
-      s"searchAll wrote $records shuffle records, want <= $parts partitions × $nQ queries")
+    val (route, merge) = records.partition(_._1("searchAll.route"))
+    val (routed, merged) = (route.map(_._2).sum, merge.map(_._2).sum)
+    assert(route.length == 1, s"want one routing stage, got $records")
+    assert(routed == routes,
+      s"searchAll routed $routed query records, want the $routes probed partitions of $nQ queries")
+    assert(merged > 0 && merged <= parts * nQ,
+      s"searchAll's merge wrote $merged shuffle records, want <= $parts partitions × $nQ queries")
   }
 
-  test("searchAll outputDir crash window: a failed chunk leaves no manifest, reruns are safe") {
+  test("searchAll leaves no cached block behind after a collect") {
+    val m = operators.AnnQueries.model(spark, sf)
+    val q = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    m.search(spark, operators.VectorQueries.queryVectors(spark, sf, 2), 10, 4) // warm the runs
+    def cached() = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val before = cached()
+    assert(m.searchAll(spark, q, 100, 4).collect().nonEmpty)
+    assert(cached() == before, s"searchAll left cached RDDs: ${cached() -- before}")
+  }
+
+  test("searchAll runs as many Spark jobs for a 1- as for an 8-partition query frame") {
+    // the queries are prepared in their own partitions: no job per
+    // query partition streams them through the driver
+    val m = operators.AnnQueries.model(spark, sf)
+    val q = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    m.searchAll(spark, q, 10, 4).collect() // warm-up: the runs and the routing map
+    val jobs = Seq(1, 8).map { n =>
+      val (js, _, _) = jobsAndShuffleBytes { m.searchAll(spark, q.repartition(n), 10, 4).collect() }
+      js.length
+    }
+    assert(jobs(0) == jobs(1), s"1 and 8 query partitions ran ${jobs(0)} and ${jobs(1)} jobs")
+  }
+
+  test("searchAll outputDir crash window: a failed run leaves no manifest, reruns are safe") {
     import spark.implicits._
     val m = operators.AnnQueries.model(spark, sf)
     val valid = Tables.embeddings(spark, sf).select("vec_id", "embedding")
       .as[(Long, Array[Float])].collect().sortBy(_._1)
-    // the second 64-query chunk holds a query of the wrong dimension: its
-    // ranking fails after chunk 0 has been written
+    // one query of the wrong dimension: its prepare fails inside the write
     val bad = (valid.take(70) :+ (-1L -> Array.fill(valid(0)._2.length + 5)(0.5f))) ++
       valid.drop(70)
     val root = java.nio.file.Files.createTempDirectory("searchall_crash").toString
     val dir = s"$root/run"
     val ex = intercept[Exception] {
-      m.searchAll(spark, bad.toSeq.toDF("vec_id", "embedding"), 10, 4, chunk = 64,
+      m.searchAll(spark, bad.toSeq.toDF("vec_id", "embedding"), 10, 4,
         outputDir = Some(dir))
     }
     assert(ex.getMessage.contains("dims"), ex.getMessage)
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "chunk-0", "_SUCCESS")),
-      "the chunk finished before the failure must be on disk")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_manifest.json")),
       "a failed run must not write its completion manifest")
     val again = intercept[IllegalStateException] {
-      m.searchAll(spark, valid.toSeq.toDF("vec_id", "embedding"), 10, 4, chunk = 64,
+      m.searchAll(spark, valid.toSeq.toDF("vec_id", "embedding"), 10, 4,
         outputDir = Some(dir))
     }
     assert(again.getMessage.contains("fresh directory"), again.getMessage)
@@ -987,7 +1064,7 @@ class AnnSpec extends AnyFunSuite {
       d.as[(Long, Long, Int)].collect().toSeq.sortBy(r => (r._1, r._3))
     val fresh = s"$root/rerun"
     val rerun = rows(m.searchAll(spark, valid.toSeq.toDF("vec_id", "embedding"), 10, 4,
-      chunk = 64, outputDir = Some(fresh)))
+      outputDir = Some(fresh)))
     assert(rerun == rows(m.searchAll(spark, valid.toSeq.toDF("vec_id", "embedding"), 10, 4)),
       "the rerun must equal an uninterrupted run")
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(fresh, "_manifest.json")))

@@ -29,7 +29,8 @@ and a verdict:
 The JSON report (every run's seed, order, exit code, result and the
 summary) is written under .bench_build/ of the current directory, which
 is git-ignored; so are the records perfbench leaves in each checkout's
-own .bench_build/.
+own .bench_build/. `--out x.json` and `--out .bench_build/x.json` both
+name .bench_build/x.json; a name that leaves .bench_build/ is rejected.
 """
 import argparse
 import json
@@ -156,8 +157,11 @@ def main():
     if args.workload not in [w["name"] for w in spec["workloads"]]:
         ap.error(f"unknown workload {args.workload}")
     name = args.out or f"ab_{args.workload}_{time.strftime('%Y%m%dT%H%M%S')}.json"
-    out = os.path.join(OUT_DIR, name)
-    if os.path.isabs(name) or os.path.relpath(out, OUT_DIR).startswith(".."):
+    rel = os.path.normpath(name)
+    if rel.startswith(OUT_DIR + os.sep):
+        rel = rel[len(OUT_DIR) + 1:]
+    out = os.path.join(OUT_DIR, rel)
+    if os.path.isabs(name) or rel.startswith("..") or rel == OUT_DIR:
         ap.error(f"--out must name a file under {OUT_DIR}/, got {name}")
 
     runs = []
