@@ -3,7 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ann.{IVFIndex, KnnExact, SweepEval}
@@ -36,12 +35,13 @@ import graft.ann.{IVFIndex, KnnExact, SweepEval}
   * The corpus is synthetic (zero-egress sandbox: the OpenAI-embedding
   * download of python/download_dataset.py is not reproducible here):
   * a seeded mixture of `topics` Gaussian centers, L2-normalized like
-  * real text embeddings. K=4096 engages the routed centroid ranking
-  * (IVFModel.RoutedRankingThreshold) — the same regime the reference's
-  * HNSW-initialized config runs in. The index is built by graft's one
-  * IVF recipe (IVFIndex.Params): exact nearest-centroid assignment plus
-  * the fat-cell split, which ships only on its self-probe's "artifact"
-  * verdict; the meta's `split_probe` key records that probe.
+  * real text embeddings. Centroids are ranked by the exact flat scan
+  * at every K (CentroidRouter.rankFlat), so K=4096 probes the same
+  * clusters the reference's flat initializer would. The index is built
+  * by graft's one IVF recipe (IVFIndex.Params): exact nearest-centroid
+  * assignment plus the fat-cell split, which ships only on its
+  * self-probe's "artifact" verdict; the meta's `split_probe` key
+  * records that probe.
   *
   * Usage: runMain graft.SweepRef [outCsv]   (defaults below; sized by
   * SPARK_GRAFT_SWEEP_{VECS,DIM,K,NQ,TOPK,TRAIN} for smoke runs;
@@ -194,8 +194,8 @@ object SweepRef {
         synth(spark.range(nq).as[java.lang.Long], seedBase = 0x2545F4914F6CDD1DL)
           .as[(Long, Array[Float])].collect().sortBy(_._1)
 
-      // --- index build (B=4, K engages the routed centroid ranking;
-      // graft's one build recipe, see the header).
+      // --- index build (B=4; graft's one build recipe, see the
+      // header).
       // k-means|| at ONE init round (default 2): the serial driver-side
       // k-means++ finish over the collected candidates dominated the
       // round-8 build (build_s 1897 at K=4096/d=1536), and rounds

@@ -26,10 +26,12 @@ import graft.functions.VectorFunctions.l2sq
   *    reference's single binary blob (IVF.hpp:219-252).
   *
   * Search (reference: IVF::search, IVF.hpp:295-324):
-  *  - one prepare (`IVFModel.prepare`) rotates a query and ranks the
-  *    centroids (K ≪ N — the reference's FlatInitializer) from one
-  *    model-lifetime broadcast: on the driver for ad-hoc search, in the
-  *    query frame's own partitions for batch `searchAll`;
+  *  - one prepare (`IVFModel.prepare`) rotates a query and ranks all K
+  *    centroids with the exact flat scan (the reference's
+  *    FlatInitializer, at every K): on the driver from the model's own
+  *    rotator and rotated centroids for ad-hoc search, in the query
+  *    frame's own partitions from one model-lifetime broadcast of them
+  *    for batch `searchAll`;
   *  - every search scans one in-memory layout, the model's packed runs:
   *    a built model holds them from its build, and a loaded or
   *    hand-made model's first search packs them from its `index` inside
@@ -89,9 +91,9 @@ object IVFIndex {
     * S-row cluster is ~S/numShufflePartitions (plus hash variance),
     * NOT capped at this constant, which only bounds the placement
     * unit. Results are layout-independent up to the estimate bound:
-    * the prune skips a candidate only when its estimateLower exceeds
-    * the partition-local kth distance, and estimateLower is a true
-    * lower bound with high probability (the spec-pinned ~>0.95 fac_err
+    * the prune skips a candidate only when its estimated lower bound
+    * exceeds the partition-local kth distance, and that estimate is a
+    * true lower bound with high probability (the spec-pinned ~>0.95 fac_err
     * guarantee), not certainty — on a bound violation the skip
     * decision can depend on which rows share the partition. All
     * tie-breaks are (dist, id); goldens pin the results unchanged at
@@ -720,14 +722,12 @@ object IVFIndex {
     // ONE flat-ranking implementation package-wide (deterministic
     // (dist, id) order) — the probe must rank exactly like the search
     // path it predicts
-    def nearestSet(v: Array[Float], cents: Array[Array[Float]], n: Int): Array[Int] =
-      CentroidRouter.rankFlat(cents, v, n)
     var flatHit = 0L; var splitHit = 0L; var totalGt = 0L
     var qi = 0
     while (qi < queries.length) {
       val q = sample(queries(qi))
-      val probedFlat = nearestSet(q, flat, nprobe).toSet
-      val probedSplit = nearestSet(q, split, nprobe).toSet
+      val probedFlat = CentroidRouter.rankFlat(flat, q, nprobe).toSet
+      val probedSplit = CentroidRouter.rankFlat(split, q, nprobe).toSet
       truth(qi).foreach { j =>
         val v = sample(j.toInt)
         totalGt += 1
@@ -1066,11 +1066,6 @@ object IVFIndex {
 }
 
 object IVFModel {
-  /** K at or above which centroid ranking goes through the two-level
-    * router instead of a flat scan (reference: HNSW at K ≥ 20000;
-    * ours kicks in earlier because the router is cheap to build). */
-  val RoutedRankingThreshold = 4096
-
   /** Queries per [[IVFIndex.scanRuns]] call in a [[IVFModel.searchAll]]
     * task: a runs partition scans its routed queries in slices of this
     * many, which bounds the live per-query heaps at slice × k. */
@@ -1081,35 +1076,27 @@ object IVFModel {
   private[ann] val FnvOffset = 0xcbf29ce484222325L
   private[ann] def fnv(h: Long, id: Long): Long = (h ^ id) * 0x100000001b3L
 
-  /** What [[prepare]] reads: the rotator, the rotated centroids and the
-    * router (null below [[RoutedRankingThreshold]]). */
-  private[ann] type PrepareState = (Rotator, Array[Array[Float]], CentroidRouter)
+  /** What [[prepare]] reads: the rotator and the rotated centroids. */
+  private[ann] type PrepareState = (Rotator, Array[Array[Float]])
 
   /** Search-time state SHARED across [[IVFModel.withQueryBits]] copies,
-    * all of it a function of the centroids and the runs: the NSW router,
-    * the broadcast of the [[PrepareState]], and where each cluster's
-    * runs live. Rebuilding the router per copy cost a measured 14 s at
-    * K=4096/d=1536, a redundant graph build every copy's first search
-    * waited for. */
+    * all of it a function of the centroids and the runs: the broadcast
+    * of the [[PrepareState]] and where each cluster's runs live. */
   private[ann] final class SharedSearchState {
-    @volatile var router: CentroidRouter = _
     @volatile var prepareBc: Broadcast[PrepareState] = _
     @volatile var clusterParts: Array[Array[Int]] = _
   }
 
   /** One query made ready to scan: (id, rotated vector, its `nprobe`
-    * nearest clusters, nearest first) — ranked flat (the reference's
-    * FlatInitializer) or, when `router` is non-null, routed (its
-    * HNSWInitializer role, IVF.hpp:155-160). The one query prepare of
-    * every search: on the driver for search/searchFiltered, in the query
-    * frame's partitions for searchAll. */
-  private[ann] def prepare(rotator: Rotator, rotatedCentroids: Array[Array[Float]],
-      router: CentroidRouter, nprobe: Int)(
-      q: (Long, Array[Float])): (Long, Array[Float], Array[Int]) = {
+    * nearest clusters, nearest first), ranked by the exact flat scan
+    * ([[CentroidRouter.rankFlat]], the reference's FlatInitializer) at
+    * every K. The one query prepare of every search: on the driver for
+    * search/searchFiltered, in the query frame's partitions for
+    * searchAll. */
+  private[graft] def prepare(rotator: Rotator, rotatedCentroids: Array[Array[Float]],
+      nprobe: Int)(q: (Long, Array[Float])): (Long, Array[Float], Array[Int]) = {
     val qr = rotator.rotate(q._2)
-    (q._1, qr,
-      if (router == null) CentroidRouter.rankFlat(rotatedCentroids, qr, nprobe)
-      else router.rank(qr, nprobe))
+    (q._1, qr, CentroidRouter.rankFlat(rotatedCentroids, qr, nprobe))
   }
 
   /** `entries` packed into one [[IVFIndex.Runs]] per partition
@@ -1424,11 +1411,11 @@ final class IVFModel private[graft] (
 
   /** Release the model-lifetime search caches: the blocks of the
     * packed runs ([[runs]], shared with every [[withQueryBits]] copy
-    * and read by a built model's `index` view), the prepare broadcast,
-    * the NSW router and the cluster → partitions map. The model stays
-    * fully usable: the next search rebuilds them, its scan job
-    * re-caching the runs (a built model recomputes them from its build's
-    * shuffle output, any other re-packs them from `index`). For
+    * and read by a built model's `index` view), the prepare broadcast
+    * and the cluster → partitions map. The model stays fully usable:
+    * the next search rebuilds them, its scan job re-caching the runs
+    * (a built model recomputes them from its build's shuffle output,
+    * any other re-packs them from `index`). For
     * long-lived sessions cycling through many models, where N throwaway
     * models would otherwise pin N packed copies until GC. */
   def freeSearchCaches(): Unit = {
@@ -1439,39 +1426,19 @@ final class IVFModel private[graft] (
       // not yet run still holds the old handle and can re-fetch it
       if (shared.prepareBc != null) shared.prepareBc.unpersist(false)
       shared.prepareBc = null
-      shared.router = null
       shared.clusterParts = null
     }
   }
 
-  /** Centroid router over the rotated centroids (built on first
-    * search, shared across queryBits copies). */
-  def router: CentroidRouter = {
-    if (shared.router == null) shared.synchronized {
-      if (shared.router == null) shared.router = new CentroidRouter(rotatedCentroids)
-    }
-    shared.router
-  }
-
   /** One broadcast of the [[IVFModel.PrepareState]] per model
     * lifetime, shared by every search call and every queryBits copy:
-    * the rotator, the rotated centroids (K × dim floats — 25 MB at the
-    * reference shape) and, from [[IVFModel.RoutedRankingThreshold]]
-    * clusters on, the router with its graph already built, so no task
-    * and no driver thread builds it again. */
+    * the rotator and the rotated centroids (K × dim floats — 25 MB at
+    * the reference shape), read by the executors that prepare
+    * [[searchAll]]'s queries and scan the probed clusters. */
   private[graft] def prepareBroadcast(spark: SparkSession): Broadcast[IVFModel.PrepareState] = {
     if (shared.prepareBc == null) shared.synchronized {
-      if (shared.prepareBc == null) {
-        val routed =
-          if (numClusters < IVFModel.RoutedRankingThreshold) null
-          else {
-            // an actual rank() builds the lazy neighbor graph; touching
-            // `router` alone constructs the object but not the graph
-            router.rank(rotatedCentroids(0), 1)
-            router
-          }
-        shared.prepareBc = spark.sparkContext.broadcast((rotator, rotatedCentroids, routed))
-      }
+      if (shared.prepareBc == null)
+        shared.prepareBc = spark.sparkContext.broadcast((rotator, rotatedCentroids))
     }
     shared.prepareBc
   }
@@ -1716,9 +1683,9 @@ final class IVFModel private[graft] (
       .select(col(idCol).cast(LongType), col(vecCol))
       .as[(Long, Array[Float])].rdd
       .mapPartitions { it =>
-        val (rot, cents, router) = bc.value
+        val (rot, cents) = bc.value
         it.flatMap { q =>
-          val p = IVFModel.prepare(rot, cents, router, nprobe)(q)
+          val p = IVFModel.prepare(rot, cents, nprobe)(q)
           p._3.flatMap(where(_)).distinct.iterator.map(_ -> p)
         }
       }
@@ -1763,19 +1730,19 @@ final class IVFModel private[graft] (
       runs: Array[Int] => RDD[IVFIndex.Runs],
       queries: Array[(Long, Array[Float])],
       k: Int,
-      nprobe: Int): (RDD[(Long, Array[Long], Array[Double])], Broadcast[_]) = {
+      nprobe: Int): (RDD[(Long, Array[Long], Array[Double])],
+        Broadcast[Array[(Long, Array[Float], Array[Int])]]) = {
     // fail loudly on the driver: nprobe <= 0 would silently return an
     // empty frame (empty probe set -> nothing scanned), which reads as
     // "no neighbors" instead of a caller bug
     require(k > 0, s"search k must be positive, got $k")
     require(nprobe > 0, s"nprobe must be positive, got $nprobe")
     val sbc = prepareBroadcast(spark)
-    val (rot, cents, router) = sbc.value
     // rotation is O(dim²) per query and ranking O(K·dim) flat: across
     // all driver cores
     val probes = new Array[(Long, Array[Float], Array[Int])](queries.length)
     java.util.stream.IntStream.range(0, queries.length).parallel().forEach { i =>
-      probes(i) = IVFModel.prepare(rot, cents, router, nprobe)(queries(i))
+      probes(i) = IVFModel.prepare(rotator, rotatedCentroids, nprobe)(queries(i))
     }
     val bc = spark.sparkContext.broadcast(probes)
     // --- estimate → prune → rerank → local top-k over each partition's

@@ -319,9 +319,6 @@ object RaBitQ {
     val ip = sumOverSetBits(signBits, q.residual) - 0.5 * q.sumRes
     x2 + q.sqrY - ip * facIp
   }
-  def estimateLower(q: QueryCluster, signBits: Array[Long], x2: Float,
-      facIp: Float, facErr: Float): Double =
-    estimateDist(q, signBits, x2, facIp) - facErr * q.y
 
   /** LUT-accumulated estimate (reference scan_one_block's
     * accumulate_robust over the packed LUTs, Searcher.hpp:176-216):
@@ -402,7 +399,9 @@ object RaBitQ {
       math.abs(facIp) * (0.5 * ql.width) * pop
   }
 
-  /** Packed-layout twin of [[estimateLower]] (float path). */
+  /** Float-path lower bound (est − facErr·y, as in [[estimate]]) over
+    * the packed layout: sign bits read from `base` in a run-contiguous
+    * array. */
   def estimateLowerPacked(q: QueryCluster, sign: Array[Long], base: Int,
       words: Int, x2: Float, facIp: Float, facErr: Float): Double = {
     val ip = sumOverSetBits(sign, base, words, q.residual) - 0.5 * q.sumRes

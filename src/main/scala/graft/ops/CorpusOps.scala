@@ -819,8 +819,6 @@ object CorpusOps {
     * two-level decomposition equals it. */
   def budgetSelect(docs: DataFrame, budget: Long = TokenBudget,
       subRange: Long = SubRange): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     // Scoring kernel, COMPILED and computed ONCE: the round-8 form
     // expressed the score as size(filter(tokens, isin(markers))) —
     // a higher-order lambda that evaluates INTERPRETED per token (the

@@ -276,6 +276,36 @@ class AnnSpec extends AnyFunSuite {
     m.freeSearchCaches()
   }
 
+  test("searchAll equals search when a built model's clusters span runs partitions") {
+    // clusters larger than ClusterBlockRows are blocked across runs
+    // partitions, so the cluster → partitions map must list every
+    // partition holding a block: a query routed to only one of them
+    // loses the neighbors the others hold
+    import spark.implicits._
+    val dim = 8
+    val cents = Array.tabulate(3)(c => Array.tabulate(dim)(d => if (d == c) 20f else 0f))
+    val perCluster = IVFIndex.ClusterBlockRows + 400
+    val rnd = new scala.util.Random(61)
+    val base = cents.indices.flatMap(c => (0 until perCluster).map(i =>
+      ((c * perCluster + i).toLong, cents(c).map(_ + rnd.nextGaussian().toFloat))))
+    val m = IVFIndex.buildWithCentroids(spark, base.toDF("vec_id", "embedding"),
+      cents, dim, IVFIndex.Params(k = cents.length, totalBits = 4))
+    val parts = m.runs.mapPartitionsWithIndex((pi, it) =>
+      it.flatMap(rs => rs.indices.filter(rs(_) != null).map(_ -> pi))).collect()
+      .groupBy(_._1).map { case (c, ps) => c -> ps.map(_._2).distinct.length }
+    assert(parts.values.max >= 2,
+      s"test setup: every cluster sits in one runs partition: $parts")
+    val qs = (0 until 12).map(i => (100000L + i,
+      cents(i % cents.length).map(_ + rnd.nextGaussian().toFloat))).toArray
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.as[(Long, Long, Int)].collect().sortBy(r => (r._1, r._3)).toSeq
+    val want = rows(m.search(spark, qs, 10, 1))
+    assert(want.length == qs.length * 10)
+    assert(rows(m.searchAll(spark, qs.toSeq.toDF("vec_id", "embedding"), 10, 1)) == want,
+      "searchAll differs from search on a model whose clusters span runs partitions")
+    m.freeSearchCaches()
+  }
+
   test("8-bit config: end-to-end build + search reaches near-exact recall") {
     import spark.implicits._
     val e = Tables.embeddings(spark, sf)
@@ -438,30 +468,11 @@ class AnnSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
   }
 
-  test("routed centroid ranking closely matches flat ranking at large K") {
-    val rnd = new scala.util.Random(23)
-    val k = 2048
-    val cents = Array.fill(k)(randVec(rnd, 64))
-    val router = new graft.ann.CentroidRouter(cents)
-    var overlap = 0.0
-    val trials = 20
-    for (_ <- 1 to trials) {
-      val q = randVec(rnd, 64)
-      val flat = router.rankFlat(q, 64).toSet
-      val routed = router.rank(q, 64).toSet
-      overlap += (flat & routed).size.toDouble / 64
-    }
-    assert(overlap / trials >= 0.9, s"routing overlap = ${overlap / trials}")
-    // routed ranking is deterministic
-    val q = randVec(rnd, 64)
-    assert(router.rank(q, 32).toSeq == router.rank(q, 32).toSeq)
-  }
-
-  test("routed branch of IVFModel.search: recall holds at K >= threshold") {
+  test("IVFModel.search at 4096 centroids: recall holds and probes rank flat") {
     import spark.implicits._
     val rnd = new scala.util.Random(31)
     val dim = 16
-    val kCent = graft.ann.IVFModel.RoutedRankingThreshold // 4096 -> routed branch
+    val kCent = 4096
     val cents = Array.fill(kCent)(randVec(rnd, dim))
     val n = 400
     val vecs = (0 until n).map(i => (i.toLong, randVec(rnd, dim)))
@@ -475,9 +486,16 @@ class AnnSpec extends AnyFunSuite {
       idCol = "id", vecCol = "vec")
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = (approx & exact).size.toDouble / exact.size
-    assert(recall >= 0.7, s"routed-branch recall@5 = $recall")
+    assert(recall >= 0.7, s"recall@5 at $kCent centroids = $recall")
     // self-match must always be found (query vectors are in the corpus)
     queries.foreach { case (qid, _) => assert(approx.contains((qid, qid))) }
+    // every query ranks its probes with the exact flat scan, at any K
+    queries.foreach { q =>
+      val probes = graft.ann.IVFModel.prepare(m.rotator, m.rotatedCentroids, 512)(q)._3
+      assert(probes.toSeq == graft.ann.CentroidRouter.rankFlat(
+        m.rotatedCentroids, m.rotator.rotate(q._2), 512).toSeq,
+        s"query ${q._1}: prepare's probe list is not the flat ranking")
+    }
   }
 
   // Split fixtures, deterministic by construction: hand-placed flat
@@ -615,7 +633,7 @@ class AnnSpec extends AnyFunSuite {
     // block, one task again); the hashed key must spread them. Recall
     // is checked through the split cluster: results are layout-
     // independent up to the probabilistic estimate bound (tie-breaks
-    // are (dist, id); a rare estimateLower violation can make a skip
+    // are (dist, id); a rare lower-bound violation can make a skip
     // depend on partition co-residents), and exactly unaffected here.
     import spark.implicits._
     val dim = 16

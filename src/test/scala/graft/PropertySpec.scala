@@ -342,28 +342,6 @@ class PropertySpec extends AnyFunSuite {
     assert(combine(lanes(sf60)) === truth(sf60).toDouble)
   }
 
-  // --- NSW router reachability (the in-degree guard is not enough) -
-  test("NSW router: every centroid reachable from the entry after the pruned build") {
-    // small m/ef stresses the prune; the in-degree guard alone can
-    // strand a mutually-linked pod, which the post-build repair must
-    // re-attach — a stranded node's cluster is silently never probed
-    val rnd = new scala.util.Random(7)
-    for (k <- Seq(50, 300, 1200)) {
-      val cents = Array.fill(k)(Array.fill(8)(rnd.nextFloat() * 2 - 1))
-      val r = new graft.ann.CentroidRouter(cents, m = 4, efConstruction = 8)
-      val adj = r.neighbors
-      val seen = new java.util.BitSet(k)
-      val q = new java.util.ArrayDeque[Integer]()
-      seen.set(0); q.add(0)
-      while (!q.isEmpty) {
-        val c = q.poll()
-        adj(c).foreach(n => if (!seen.get(n)) { seen.set(n); q.add(n) })
-      }
-      assert(seen.cardinality == k,
-        s"k=$k: ${k - seen.cardinality} centroids unreachable from the entry")
-    }
-  }
-
   // --- sqrt-elimination exactness (the optimizer rule's contract) --
   test("sqrt-elimination thresholds are exactly value-preserving at every ulp boundary") {
     // the naive rewrite sqrt(v) < c -> v < fl(c*c) flips boundary rows
