@@ -4,9 +4,10 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.util.LongAccumulator
 
 import graft.functions.VectorFunctions.l2sq
 
@@ -32,50 +33,76 @@ import graft.functions.VectorFunctions.l2sq
   *    rotator and rotated centroids for ad-hoc search, in the query
   *    frame's own partitions from one model-lifetime broadcast of them
   *    for batch `searchAll`;
-  *  - every search scans one in-memory layout, the model's packed runs:
-  *    a built model holds them from its build, and a loaded or
-  *    hand-made model's first search packs them from its `index` inside
-  *    its own scan job and caches them. Only `searchFiltered` packs per
-  *    call, from its semi-joined entries of the probed clusters;
-  *  - each task scans only probed clusters and keeps per-query bounded
-  *    heaps: 1-bit estimate → error-bound prune (vs the local kth
-  *    distance) → extended-code rerank;
-  *  - each partition returns one row per query it holds candidates
-  *    for: that query's local top-k as a list sorted by (dist, id), at
-  *    most queries × k candidates independent of corpus size. Both
-  *    merges fold those sorted lists linearly (`KnnExact.mergeSorted`,
-  *    the reference's single result pool): ad-hoc
-  *    `search`/`searchFiltered` on the driver as task results arrive
-  *    (one plain RDD job, no SQL execution, no shuffle); batch
+  *  - the model's one in-memory layout is its packed runs: a built
+  *    model holds them from its build, and a loaded or hand-made model
+  *    packs them from its `index` on first use and caches them;
+  *  - every scan (`IVFIndex.scanRuns`) reads only probed clusters and
+  *    keeps a bounded heap per query: 1-bit estimate → error-bound prune
+  *    (vs the heap's kth distance) → extended-code rerank;
+  *  - under a byte cap (the session conf `spark.graft.annReplicaMaxBytes`,
+  *    default 256 MB) the model keeps a REPLICA of its runs for its
+  *    lifetime: every cluster's entries in id order, packed once on the
+  *    driver. A query scanning it keeps ONE pool across its probed
+  *    clusters (the reference's result pool, `inc/index/Pool.hpp`), in
+  *    centroid-rank and then id order, so its rows depend only on
+  *    (index, query, params). Ad-hoc `search` scans it on the driver
+  *    (no Spark job once the replica is built); batch `searchAll`
+  *    scans one model-lifetime broadcast of it in the query frame's own
+  *    partitions (one narrow stage, no shuffle, no merge);
+  *  - over the cap, and always for `searchFiltered` (which packs its
+  *    semi-joined entries of the probed clusters per call), each runs
+  *    partition keeps its own pool per query and returns that query's
+  *    local top-k as a list sorted by (dist, id). The merges fold those
+  *    lists linearly (`KnnExact.mergeSorted`): ad-hoc searches on the
+  *    driver as task results arrive (one plain RDD job, no shuffle);
   *    `searchAll` after grouping the rows by query (a shuffle of
   *    ≤ partitions × queries rows), in one lazy plan that sends each
-  *    query only to the partitions holding a cluster it probes.
+  *    query only to the partitions holding a cluster it probes. These
+  *    are the only paths whose rows can depend on the runs' layout
+  *    (`ClusterBlockRows`).
   */
 object IVFIndex {
   /** Persisted-index layout version; bump when Entry encoding changes
     * (v2 = bit-packed ex_code). Load fails fast on mismatch. */
   val FormatVersion = 2L
 
-  /** Cumulative kernel counters (entries buffered / estimates /
-    * reranks), always on: each scan task adds its three totals once.
-    * Registered once per SparkContext — keyed by context, not JVM
-    * lifetime, so a session restart in the same JVM (the test-suite
-    * pattern) gets fresh accumulators instead of silently adding to
-    * (or failing on) stale ones. Counters are cumulative across
-    * concurrent tasks; a listener reads per-task deltas. */
+  /** The always-on search counters: entries buffered, estimates,
+    * reranks, and bound violations (reranked entries whose estimated
+    * lower bound exceeded their reranked distance — the rate the
+    * one-pool prune rests on). Each scan adds its four totals once
+    * ([[SearchAccs.add]]). Registered once per SparkContext — keyed by
+    * context, not JVM lifetime, so a session restart in the same JVM
+    * (the test-suite pattern) gets fresh accumulators instead of
+    * silently adding to (or failing on) stale ones. Counters are
+    * cumulative across concurrent tasks and calls; a listener reads
+    * per-task deltas. */
   @transient @volatile private var searchAccsV: (
-    org.apache.spark.SparkContext,
-    (org.apache.spark.util.LongAccumulator,
-     org.apache.spark.util.LongAccumulator,
-     org.apache.spark.util.LongAccumulator)) = _
-  private[graft] def searchAccs(spark: SparkSession) = synchronized {
+    org.apache.spark.SparkContext, SearchAccs) = _
+  private[graft] def searchAccs(spark: SparkSession): SearchAccs = synchronized {
     val sc = spark.sparkContext
     if (searchAccsV == null || (searchAccsV._1 ne sc))
-      searchAccsV = (sc, (
+      searchAccsV = (sc, new SearchAccs(
         sc.longAccumulator("graft.search.entries"),
         sc.longAccumulator("graft.search.estimates"),
-        sc.longAccumulator("graft.search.reranks")))
+        sc.longAccumulator("graft.search.reranks"),
+        sc.longAccumulator("graft.search.bound_violations")))
     searchAccsV._2
+  }
+
+  /** The four `graft.search.*` accumulators of one context. */
+  private[graft] final class SearchAccs(
+      val entries: LongAccumulator,
+      val estimates: LongAccumulator,
+      val reranks: LongAccumulator,
+      val boundViolations: LongAccumulator) extends Serializable {
+    /** One scan's totals. Synchronized: a task adds to its own copy,
+      * but the replica search adds to the driver's from several
+      * threads at once, and `LongAccumulator.add` is not atomic. */
+    def add(nEntries: Long, nEst: Long, nRerank: Long, nViolations: Long): Unit =
+      synchronized {
+        entries.add(nEntries); estimates.add(nEst)
+        reranks.add(nRerank); boundViolations.add(nViolations)
+      }
   }
 
   /** Placement granularity of a built index: entries are assigned
@@ -90,15 +117,20 @@ object IVFIndex {
     * ~uniformly over ALL partitions — a partition's share of an
     * S-row cluster is ~S/numShufflePartitions (plus hash variance),
     * NOT capped at this constant, which only bounds the placement
-    * unit. Results are layout-independent up to the estimate bound:
-    * the prune skips a candidate only when its estimated lower bound
-    * exceeds the partition-local kth distance, and that estimate is a
-    * true lower bound with high probability (the spec-pinned ~>0.95 fac_err
+    * unit. Under the replica cap ([[IVFModel.ReplicaMaxBytesKey]])
+    * the layout never reaches a result: every search but
+    * `searchFiltered` scans the model's replica, one pool per query in
+    * one canonical order. Over the cap (and in `searchFiltered`) each
+    * runs partition keeps its own pool per query, and results are
+    * layout-independent only up to the estimate bound: the prune skips
+    * a candidate when its estimated lower bound exceeds the
+    * partition-local kth distance, and that estimate is a true lower
+    * bound with high probability (the spec-pinned ~>0.95 fac_err
     * guarantee), not certainty — on a bound violation the skip
     * decision can depend on which rows share the partition. All
-    * tie-breaks are (dist, id); goldens pin the results unchanged at
-    * sf0.001. The on-disk layout needs no analogue: parquet scans
-    * already split fat cluster dirs at `maxPartitionBytes`. */
+    * tie-breaks are (dist, id). The on-disk layout needs no analogue:
+    * parquet scans already split fat cluster dirs at
+    * `maxPartitionBytes`. */
   val ClusterBlockRows: Int = 2048
 
   /** One indexed vector (columnar analogue of SHORT_DATA/LONG_CODE/
@@ -159,6 +191,9 @@ object IVFIndex {
     var xipnorm = new Array[Float](cap)
     var exF: Array[Byte] = if (packExF) new Array[Byte](cap * dim) else null
     var exCode: Array[Array[Byte]] = if (packExF) null else new Array[Array[Byte]](cap)
+    /** Bytes of the n packed rows: what a trimmed run holds. */
+    def bytes: Long = n * (8L * (words + 1) + 16L) +
+      (if (packExF) n.toLong * dim else exCode.iterator.take(n).map(_.length.toLong).sum)
     def add(e: Entry): Unit = {
       require(n < maxRows,
         s"PackedRun overflow: $maxRows rows (dim=$dim) — caller must roll over on isFull")
@@ -244,17 +279,20 @@ object IVFIndex {
       })
     }
 
-  /** The per-partition QUERY-MAJOR scan over packed runs — the one
-    * kernel behind every [[IVFModel.scan]]. Per (query, cluster): ONE
-    * residual/LUT prepare, then a sequential stream through the
-    * cluster's packed blocks. `runs` is the partition's [[Runs]]; only
-    * the clusters a query of `qs` probes are read, and only their
-    * entries count as buffered. `accs` are the search counters
-    * ([[searchAccs]]).
+  /** The QUERY-MAJOR scan over packed runs — the one kernel behind
+    * every search. Per (query, cluster): ONE residual/LUT prepare, then
+    * a sequential stream through the cluster's packed blocks. `runs` is
+    * one [[Runs]]: a runs partition's, or the model's replica
+    * ([[IVFModel.replica]]), which holds every cluster's entries in id
+    * order, so a query scanning it keeps one pool across all its probed
+    * clusters. Only the clusters a query of `qs` probes are read, and
+    * only their entries count as buffered. `accs` are the search
+    * counters ([[searchAccs]]); a reranked entry whose lower bound
+    * exceeds its reranked distance counts as a bound violation.
     *
     * Returns one (query_id, ids, dists) row per query with at least one
-    * candidate here: its partition-local top-k, ascending under
-    * [[KnnExact.DistIdOrder]] — the sorted lists both top-k merges fold
+    * candidate in `runs`: its top-k there, ascending under
+    * [[KnnExact.DistIdOrder]] — the sorted lists the top-k merges fold
     * linearly ([[KnnExact.mergeSorted]]).
     *
     * Surviving entries are reranked in speculative PAIRS on the F-byte
@@ -264,9 +302,9 @@ object IVFIndex {
     * bit-identical to [[RaBitQ.rerankDistF]]). i is inserted first and
     * j re-checked against the updated distK before it is. distK only
     * shrinks, so the entries skipped between i and j fail it anyway:
-    * every skip/admit decision, every heap, and the rerank counter
-    * (admissions only) equal the one-at-a-time loop's. The B=9 unpack
-    * path reranks one entry at a time. */
+    * every skip/admit decision, every heap, and the rerank and
+    * bound-violation counters (admissions only) equal the one-at-a-time
+    * loop's. The B=9 unpack path reranks one entry at a time. */
   private[graft] def scanRuns(
       qs: Array[(Long, Array[Float], Array[Int])],
       runs: Runs,
@@ -274,12 +312,10 @@ object IVFIndex {
       k: Int,
       queryBits: Int,
       exBits: Int,
-      accs: (org.apache.spark.util.LongAccumulator,
-        org.apache.spark.util.LongAccumulator,
-        org.apache.spark.util.LongAccumulator))
+      accs: SearchAccs)
       : Iterator[(Long, Array[Long], Array[Double])] = {
     val heaps = Array.fill(qs.length)(new KnnExact.BoundedTopK(k))
-    var nEst = 0L; var nRerank = 0L
+    var nEst = 0L; var nRerank = 0L; var nViolations = 0L
     var nEntries = 0L
     val counted = new java.util.BitSet(runs.length)
     qs.foreach(_._3.foreach { cid =>
@@ -296,7 +332,7 @@ object IVFIndex {
     val pair = new Array[Double](2) // rerankDistF2's out slots
     // scan order: per QUERY, its probed clusters in CENTROID-RANK
     // order (qs(qi)._3 is already ranked) — the nearest cluster
-    // tightens the query's partition-local distK before the farther
+    // tightens the query's distK before the farther
     // probes are scanned, which is where the prune does its work
     // (cluster-major order left distK at MaxValue through most of a
     // query's candidate volume; measured 61% rerank rate at the
@@ -351,7 +387,8 @@ object IVFIndex {
                   x2s(e), ips(e), errs(e))
             var i = 0
             while (i < nRun) {
-              if (lowerOf(i) <= distK) {
+              val lowerI = lowerOf(i)
+              if (lowerI <= distK) {
                 if (useF) {
                   // speculative partner: the next entry passing this distK
                   var j = i + 1
@@ -365,24 +402,30 @@ object IVFIndex {
                     RaBitQ.rerankDistF2(qc, exFA, i * dim, x2s(i), xns(i),
                       j * dim, x2s(j), xns(j), exBits, pair)
                     nRerank += 1
+                    if (lowerI > pair(0)) nViolations += 1
                     heap.insert(pair(0), idsA(i))
                     distK = heap.worstOrElse(Double.MaxValue)
                     if (lowerJ <= distK) {
                       nRerank += 1
+                      if (lowerJ > pair(1)) nViolations += 1
                       heap.insert(pair(1), idsA(j))
                       distK = heap.worstOrElse(Double.MaxValue)
                     }
                   } else {
+                    val dist = RaBitQ.rerankDistF(qc, exFA, i * dim,
+                      x2s(i), xns(i), exBits)
                     nRerank += 1
-                    heap.insert(RaBitQ.rerankDistF(qc, exFA, i * dim,
-                      x2s(i), xns(i), exBits), idsA(i))
+                    if (lowerI > dist) nViolations += 1
+                    heap.insert(dist, idsA(i))
                     distK = heap.worstOrElse(Double.MaxValue)
                   }
                   i = j // past the partner, or past the run
                 } else {
+                  val dist = RaBitQ.rerankDistPacked(qc, sign, i * words,
+                    exCodeA(i), x2s(i), xns(i), exBits)
                   nRerank += 1
-                  heap.insert(RaBitQ.rerankDistPacked(qc, sign, i * words,
-                    exCodeA(i), x2s(i), xns(i), exBits), idsA(i))
+                  if (lowerI > dist) nViolations += 1
+                  heap.insert(dist, idsA(i))
                   distK = heap.worstOrElse(Double.MaxValue)
                 }
               }
@@ -396,7 +439,7 @@ object IVFIndex {
       }
       qi += 1
     }
-    accs._1.add(nEntries); accs._2.add(nEst); accs._3.add(nRerank)
+    accs.add(nEntries, nEst, nRerank, nViolations)
     qs.iterator.zip(heaps.iterator).collect {
       case ((qid, _, _), h) if h.nonEmpty =>
         val (ids, dists) = h.drainSorted()
@@ -491,7 +534,7 @@ object IVFIndex {
   /** `f(i)` for every i in [0, n), across the driver's cores. Each
     * call must write only its own slot: the result is then independent
     * of the thread count. */
-  private def parallelFor(n: Int)(f: Int => Unit): Unit =
+  private[ann] def parallelFor(n: Int)(f: Int => Unit): Unit =
     java.util.stream.IntStream.range(0, n).parallel().forEach(i => f(i))
 
   /** Seeded driver-local Lloyd with k-means++ init, over a small point
@@ -1067,9 +1110,26 @@ object IVFIndex {
 
 object IVFModel {
   /** Queries per [[IVFIndex.scanRuns]] call in a [[IVFModel.searchAll]]
-    * task: a runs partition scans its routed queries in slices of this
-    * many, which bounds the live per-query heaps at slice × k. */
+    * task: a task scans its queries in slices of this many, which
+    * bounds the live per-query heaps at slice × k. */
   val ScanSliceQueries = 65536
+
+  /** Session conf: the byte cap of a model's replica ([[IVFModel.replica]]),
+    * compared with the packed bytes of its runs. Default 256 MB; `0`
+    * turns the replica off. Read on every search; a malformed or
+    * negative value fails the call, naming this key, before any job
+    * runs. */
+  val ReplicaMaxBytesKey = "spark.graft.annReplicaMaxBytes"
+  private[graft] def replicaMaxBytes(spark: SparkSession): Long =
+    graft.Sessions.confBytes(spark, ReplicaMaxBytesKey, 256L << 20)
+
+  private[ann] def requireKNprobe(k: Int, nprobe: Int): Unit = {
+    // fail loudly on the driver: nprobe <= 0 would silently return an
+    // empty frame (empty probe set -> nothing scanned), which reads as
+    // "no neighbors" instead of a caller bug
+    require(k > 0, s"search k must be positive, got $k")
+    require(nprobe > 0, s"nprobe must be positive, got $nprobe")
+  }
 
   /** FNV-1a, one Long id per step: the searchAll manifest's
     * order-sensitive query fingerprint. */
@@ -1077,14 +1137,23 @@ object IVFModel {
   private[ann] def fnv(h: Long, id: Long): Long = (h ^ id) * 0x100000001b3L
 
   /** What [[prepare]] reads: the rotator and the rotated centroids. */
-  private[ann] type PrepareState = (Rotator, Array[Array[Float]])
+  private[graft] type PrepareState = (Rotator, Array[Array[Float]])
+
+  /** Where each cluster's runs live (for each cluster, the runs
+    * partitions holding one of its runs, ascending) and the packed
+    * bytes of all runs ([[IVFIndex.PackedRun.bytes]]). */
+  private[graft] final case class Layout(clusterParts: Array[Array[Int]], packedBytes: Long)
 
   /** Search-time state SHARED across [[IVFModel.withQueryBits]] copies,
-    * all of it a function of the centroids and the runs: the broadcast
-    * of the [[PrepareState]] and where each cluster's runs live. */
-  private[ann] final class SharedSearchState {
+    * all of it a function of the centroids and the runs, and all of it
+    * dropped by [[IVFModel.freeSearchCaches]]: the broadcast of the
+    * [[PrepareState]], the runs' [[Layout]], and the replica with its
+    * broadcast. */
+  private[graft] final class SharedSearchState {
     @volatile var prepareBc: Broadcast[PrepareState] = _
-    @volatile var clusterParts: Array[Array[Int]] = _
+    @volatile var layout: Layout = _
+    @volatile var replica: IVFIndex.Runs = _
+    @volatile var replicaBc: Broadcast[IVFIndex.Runs] = _
   }
 
   /** One query made ready to scan: (id, rotated vector, its `nprobe`
@@ -1107,14 +1176,20 @@ object IVFModel {
     entries.rdd.mapPartitions(it =>
       Iterator.single(IVFIndex.packRuns(it, dim, exBits, nClusters)))
 
-  /** A model's runs: [[pack]], each run trimmed (grow() overshoots up
-    * to 2×), persisted MEMORY_AND_DISK, filled by the first action over
-    * them (adaptive execution runs an `entries` plan's exchanges here). */
+  /** A model's runs: [[pack]], each run trimmed, persisted
+    * MEMORY_AND_DISK, filled by the first action over them (adaptive
+    * execution runs an `entries` plan's exchanges here). */
   private[ann] def packCached(entries: Dataset[IVFIndex.Entry], dim: Int, exBits: Int,
       nClusters: Int): RDD[IVFIndex.Runs] =
-    pack(entries, dim, exBits, nClusters)
-      .map { runs => runs.foreach(rs => if (rs != null) rs.foreach(_.trim())); runs }
+    pack(entries, dim, exBits, nClusters).map(trimmed)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** `runs` with every run trimmed (grow() overshoots up to 2×): the
+    * form a model keeps for its lifetime. */
+  private[ann] def trimmed(runs: IVFIndex.Runs): IVFIndex.Runs = {
+    runs.foreach(rs => if (rs != null) rs.foreach(_.trim()))
+    runs
+  }
 
   /** Tombstone-delete: the ids stop appearing in every subsequent
     * load/search. Deletes are an appended id list — no index rewrite
@@ -1298,13 +1373,15 @@ object IVFModel {
     * [[deleteIds]]) are subtracted with an anti-join. Packed scan runs
     * are never read from disk: the loaded model's `index` is that
     * uncached read, and its first search packs the runs from it
-    * ([[IVFModel.runs]]). A `packed/` directory left by an older build
-    * is ignored and can be deleted by hand.
+    * ([[IVFModel.runs]]) and, under the replica cap, fetches its
+    * replica from them ([[IVFModel.replica]]). A `packed/` directory
+    * left by an older build is ignored and can be deleted by hand.
     *
     * The loaded model is a search snapshot: every search sees the index
-    * as of the model's first search, whose packed runs later searches
-    * reuse. Load again after [[deleteIds]], [[IVFIndex.appendStream]]
-    * or [[compact]] to search the changed index. */
+    * as of the model's first search, whose packed runs and replica later
+    * searches reuse. Load again after [[deleteIds]],
+    * [[IVFIndex.appendStream]] or [[compact]] to search the changed
+    * index. */
   def load(spark: SparkSession, path: String): IVFModel = {
     import spark.implicits._
     val meta = checkVersion(spark, path)
@@ -1377,12 +1454,14 @@ object IVFModel {
 }
 
 /** A searchable IVF index. Its one in-memory form is `runs`, one
-  * [[IVFIndex.Runs]] per partition, which every search scans as live
-  * JVM arrays (per-call deserialization was ~95% of the estimate phase,
+  * [[IVFIndex.Runs]] per partition, scanned as live JVM arrays
+  * (per-call deserialization was ~95% of the estimate phase,
   * results/kernel_roofline.json). A built model's runs come from its
   * build and its `index` is an uncached view that unpacks them
   * ([[IVFIndex.unpackRuns]]); a loaded or hand-made model keeps the
-  * `index` it was given and packs its runs from it on first use. */
+  * `index` it was given and packs its runs from it on first use. Under
+  * the replica cap the searches scan the model's [[replica]], a driver
+  * copy of the runs in one canonical order, instead. */
 final class IVFModel private[graft] (
     val params: IVFIndex.Params,
     val rotator: Rotator,
@@ -1390,7 +1469,7 @@ final class IVFModel private[graft] (
     val rotatedCentroids: Array[Array[Float]],
     val index: Dataset[IVFIndex.Entry],
     @transient private[graft] val runs: RDD[IVFIndex.Runs],
-    @transient private val shared: IVFModel.SharedSearchState) extends Serializable {
+    @transient private[graft] val shared: IVFModel.SharedSearchState) extends Serializable {
   import IVFIndex.Entry
 
   /** A model over `index`: its runs are `index` packed per partition in
@@ -1409,24 +1488,27 @@ final class IVFModel private[graft] (
     * under-probes and loses recall with no error. */
   def numClusters: Int = centroids.length
 
-  /** Release the model-lifetime search caches: the blocks of the
-    * packed runs ([[runs]], shared with every [[withQueryBits]] copy
-    * and read by a built model's `index` view), the prepare broadcast
-    * and the cluster → partitions map. The model stays fully usable:
-    * the next search rebuilds them, its scan job re-caching the runs
-    * (a built model recomputes them from its build's shuffle output,
-    * any other re-packs them from `index`). For
-    * long-lived sessions cycling through many models, where N throwaway
-    * models would otherwise pin N packed copies until GC. */
+  /** Release the model-lifetime search caches, all shared with every
+    * [[withQueryBits]] copy: the blocks of the packed runs ([[runs]],
+    * read by a built model's `index` view), the prepare broadcast, the
+    * runs' layout (cluster → partitions map and packed bytes), and the
+    * [[replica]] with its broadcast. The model stays fully usable: the
+    * next search rebuilds what it needs, re-caching the runs (a built
+    * model recomputes them from its build's shuffle output, any other
+    * re-packs them from `index`). For long-lived sessions cycling
+    * through many models, where N throwaway models would otherwise pin
+    * N packed copies until GC. */
   def freeSearchCaches(): Unit = {
     shared.synchronized {
       runs.unpersist(blocking = true) // so no async removal races the re-cache
       runs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // unpersist, not destroy: an in-flight search or a searchAll frame
       // not yet run still holds the old handle and can re-fetch it
-      if (shared.prepareBc != null) shared.prepareBc.unpersist(false)
+      Seq(shared.prepareBc, shared.replicaBc).foreach(bc => if (bc != null) bc.unpersist(false))
       shared.prepareBc = null
-      shared.clusterParts = null
+      shared.layout = null
+      shared.replica = null
+      shared.replicaBc = null
     }
   }
 
@@ -1443,23 +1525,62 @@ final class IVFModel private[graft] (
     shared.prepareBc
   }
 
-  /** For each cluster, the [[runs]] partitions holding one of its runs,
-    * ascending: one job over the runs, once per model (shared by
-    * [[withQueryBits]] copies, dropped by [[freeSearchCaches]]).
-    * [[searchAll]] sends each query only to the partitions it lists for
-    * the query's probed clusters. */
-  private def clusterPartitions(): Array[Array[Int]] = {
-    if (shared.clusterParts == null) shared.synchronized {
-      if (shared.clusterParts == null) {
-        val held = runs.mapPartitionsWithIndex((pi, it) =>
-          it.flatMap(rs => rs.indices.iterator.filter(rs(_) != null).map(c => (c, pi))))
-          .collect().groupBy(_._1)
-        shared.clusterParts = Array.tabulate(numClusters)(c =>
-          held.get(c).fold(Array.emptyIntArray)(_.map(_._2).sorted))
+  /** The runs' [[IVFModel.Layout]]: one job over [[runs]], once per
+    * model, that also fills their cache. Its cluster → partitions map
+    * routes the over-cap [[batchPlan]]; its byte count sizes the
+    * [[replica]] before anything is fetched to the driver. */
+  private def layout(): IVFModel.Layout =
+    Option(shared.layout).getOrElse(shared.synchronized {
+      if (shared.layout == null) {
+        val perPart = runs.mapPartitionsWithIndex((pi, it) => it.map { rs =>
+          val held = rs.indices.filter(rs(_) != null)
+          (pi, held.toArray, held.iterator.flatMap(rs(_)).map(_.bytes).sum)
+        }).collect()
+        val where = perPart.flatMap { case (pi, cs, _) => cs.map(_ -> pi) }.groupBy(_._1)
+        shared.layout = IVFModel.Layout(
+          Array.tabulate(numClusters)(c =>
+            where.get(c).fold(Array.emptyIntArray)(_.map(_._2).sorted)),
+          perPart.map(_._3).sum)
       }
-    }
-    shared.clusterParts
+      shared.layout
+    })
+
+  /** The model's REPLICA: every cluster's entries in id order, packed
+    * once on the driver ([[IVFIndex.packRuns]], from the entries of
+    * [[runs]] sorted by (cluster, id), so it is a pure function of the
+    * entries) and kept for the model's lifetime, shared by its
+    * [[withQueryBits]] copies. A query scanning it keeps ONE pool
+    * across all its probed clusters (the reference's result pool,
+    * `inc/index/Pool.hpp`), in centroid-rank and then id order, so its
+    * rows are a pure function of (index entries, query, params),
+    * whatever the runs' layout. None when the conf
+    * [[IVFModel.ReplicaMaxBytesKey]] is 0 (no job runs) or below the
+    * runs' packed bytes ([[layout]]); the search paths then scan
+    * [[runs]] per partition, as before the replica. Like the runs, it
+    * is a snapshot of the index as of its first search. */
+  private[graft] def replica(spark: SparkSession): Option[IVFIndex.Runs] = {
+    val cap = IVFModel.replicaMaxBytes(spark)
+    if (cap == 0 || layout().packedBytes > cap) None
+    else Some(Option(shared.replica).getOrElse(shared.synchronized {
+      if (shared.replica == null) {
+        val entries = runs.mapPartitions(_.flatMap(IVFIndex.unpackRuns)).collect()
+        shared.replica = IVFModel.trimmed(IVFIndex.packRuns(
+          entries.sortBy(e => (e.cluster_id, e.id)).iterator,
+          rotator.paddedDim, params.exBits, numClusters))
+      }
+      shared.replica
+    }))
   }
+
+  /** One broadcast of `replica` per model lifetime, read by every
+    * [[searchAll]] task under the cap. */
+  private def replicaBroadcast(spark: SparkSession,
+      replica: IVFIndex.Runs): Broadcast[IVFIndex.Runs] =
+    Option(shared.replicaBc).getOrElse(shared.synchronized {
+      if (shared.replicaBc == null)
+        shared.replicaBc = spark.sparkContext.broadcast(replica)
+      shared.replicaBc
+    })
 
   /** [[searchFiltered]]'s scan source: `entries` restricted to the
     * `probed` clusters (a `cluster_id isin` filter, which prunes whole
@@ -1538,24 +1659,47 @@ final class IVFModel private[graft] (
   }
 
   /** Approximate top-k: (query_id, neighbor_id, rk), rk 1-based in
-    * (distance, id) order. EAGER: the call runs ONE plain RDD job — no
-    * SQL execution, no exchange — over the model's packed runs
-    * ([[runs]]; a loaded or hand-made model's first search packs them
-    * inside that same job) and merges each partition's per-query top-k
-    * on the driver as its task result arrives
-    * ([[KnnExact.mergeTopKOnDriver]]). The queries are rotated and
-    * ranked on the driver and ride one per-call broadcast. The returned
-    * DataFrame is local (a `LocalTableScan`), so collecting or joining
-    * it runs no scan again. The rows are those [[searchAll]]'s
-    * distributed merge returns for the same queries. Holds queries × k
+    * (distance, id) order. EAGER, and the returned DataFrame is local
+    * (a `LocalTableScan`), so collecting or joining it runs no scan
+    * again. The queries are rotated and ranked on the driver.
+    *
+    * Under the replica cap ([[IVFModel.ReplicaMaxBytesKey]]) the call
+    * scans the model's [[replica]] on the driver, query slices spread
+    * across driver cores, one pool per query: once the replica is
+    * built (two jobs, once per model) it runs no Spark job and makes no
+    * broadcast. Over the cap it runs ONE plain RDD job — no SQL
+    * execution, no exchange — over the model's packed runs ([[runs]];
+    * a loaded or hand-made model's first search packs them inside that
+    * same job), with the queries in one per-call broadcast, and merges
+    * each partition's per-query top-k on the driver as its task result
+    * arrives ([[KnnExact.mergeTopKOnDriver]]); that path keeps a pool
+    * per runs partition, and with [[searchAll]]'s over-cap plan it is
+    * the only search whose rows can depend on the runs' layout
+    * ([[IVFIndex.ClusterBlockRows]]). Either way the rows are those
+    * [[searchAll]] returns for the same queries. Holds queries × k
     * result rows on the driver; past ~100k queries use [[searchAll]],
     * which prepares the queries on the executors. */
   def search(
       spark: SparkSession,
       queries: Array[(Long, Array[Float])],
       k: Int,
-      nprobe: Int): DataFrame =
-    searchOnDriver(spark, _ => runs, queries, k, nprobe)
+      nprobe: Int): DataFrame = {
+    IVFModel.requireKNprobe(k, nprobe)
+    replica(spark).fold(searchOnDriver(spark, _ => runs, queries, k, nprobe)) { r =>
+      val probes = prepareAll(queries, nprobe)
+      val accs = IVFIndex.searchAccs(spark)
+      val n = probes.length
+      val slices = math.min(n, Runtime.getRuntime.availableProcessors)
+      val lists = new Array[Array[(Long, Array[Long], Array[Double])]](slices)
+      IVFIndex.parallelFor(slices) { i =>
+        lists(i) = IVFIndex.scanRuns(probes.slice(i * n / slices, (i + 1) * n / slices),
+          r, rotatedCentroids, k, params.queryBits, params.exBits, accs).toArray
+      }
+      val top = new KnnExact.DriverTopK(k)
+      lists.foreach(top.add)
+      top.frame(spark, queries.map(_._1))
+    }
+  }
 
   /** Attribute-filtered search: only ids present in `allowedIds`
     * (single column of longs) are eligible results. The filter is a
@@ -1568,7 +1712,8 @@ final class IVFModel private[graft] (
     * that packs per call: the semi-joined entries of the probed
     * clusters only ([[probedRuns]]), read from `index` (on a built
     * model, the view that unpacks its runs), never the cached runs.
-    * Eager and merged on the driver like [[search]]: the scan is one
+    * It scans no [[replica]]: eager and merged on the driver like
+    * [[search]] over the replica cap, a pool per partition, the scan one
     * plain RDD job, plus whatever jobs the semi-join's own planning
     * needs (a broadcast of the allowed set, or its shuffle). */
   def searchFiltered(
@@ -1590,25 +1735,20 @@ final class IVFModel private[graft] (
 
   /** [[search]] over an arbitrarily large query set, as one lazy Spark
     * plan with no per-query work on the driver. `search` prepares the
-    * whole query batch on the driver and broadcasts it, which is fine to
-    * ~100k queries; past that, THIS is the path:
-    *  - prepare: each partition of `queries` rotates its own queries and
-    *    ranks their probed clusters ([[IVFModel.prepare]], over the
-    *    model-lifetime [[prepareBroadcast]]). It runs in the query
-    *    frame's own partitions, so give the frame as many partitions as
-    *    the cores that should share that work;
-    *  - route: each prepared query is shuffled only to the partitions of
-    *    the model's packed runs ([[runs]]) that hold one of its probed
-    *    clusters (a map computed once per model);
-    *  - scan: each runs partition scans its routed queries
-    *    ([[IVFIndex.scanRuns]]) in slices of
-    *    [[IVFModel.ScanSliceQueries]] queries, which bounds its heaps;
-    *  - merge: unlike [[search]], the top-k merge stays DISTRIBUTED
-    *    ([[KnnExact.mergeTopK]]: one shuffle of the scan's
-    *    one-row-per-(partition, query) sorted lists, then a linear merge
-    *    per query), so queries × k result rows can run to millions.
-    * The rows equal [[search]]'s for the same queries: per-query results
-    * are independent of which queries share a partition or a slice.
+    * whole query batch on the driver, which is fine to ~100k queries;
+    * past that, THIS is the path. Each partition of `queries` rotates
+    * its own queries and ranks their probed clusters
+    * ([[IVFModel.prepare]], over the model-lifetime
+    * [[prepareBroadcast]]), so give the frame as many partitions as the
+    * cores that should share that work. Then, under the replica cap
+    * ([[IVFModel.ReplicaMaxBytesKey]]), the same task scans its queries
+    * against one model-lifetime broadcast of the [[replica]], one pool
+    * per query, in slices of [[IVFModel.ScanSliceQueries]], and emits
+    * their final rows: one narrow stage, no shuffle, no merge
+    * ([[replicaPlan]]). Over the cap, the queries are routed to the runs
+    * partitions and merged ([[batchPlan]]). The rows equal [[search]]'s
+    * for the same queries: per-query results are independent of which
+    * queries share a partition or a slice.
     *
     * Without `outputDir` the returned frame is that lazy plan: nothing
     * runs until an action, each action runs the whole plan, and no block
@@ -1629,7 +1769,11 @@ final class IVFModel private[graft] (
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       outputDir: Option[String] = None): DataFrame = {
-    def plan = batchPlan(spark, queries, k, nprobe, idCol, vecCol)
+    def plan = {
+      IVFModel.requireKNprobe(k, nprobe)
+      replica(spark).fold(batchPlan(spark, queries, k, nprobe, idCol, vecCol))(
+        replicaPlan(spark, _, queries, k, nprobe, idCol, vecCol))
+    }
     outputDir.fold(plan) { dir =>
       import org.apache.hadoop.fs.Path
       val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
@@ -1660,8 +1804,53 @@ final class IVFModel private[graft] (
     }
   }
 
-  /** [[searchAll]]'s lazy plan: prepare, route, scan in slices of
-    * `slice` queries, merge. */
+  /** [[searchAll]]'s lazy plan under the replica cap: each partition of
+    * `queries` prepares its queries and scans them, `slice` at a time,
+    * against one model-lifetime broadcast of `replica`, emitting final
+    * (query_id, neighbor_id, rk) rows. One narrow stage: no routing
+    * shuffle, no merge, no cluster → partitions map. A query id that
+    * repeats in `queries` gets one top-k per occurrence. */
+  private[graft] def replicaPlan(
+      spark: SparkSession,
+      replica: IVFIndex.Runs,
+      queries: DataFrame,
+      k: Int,
+      nprobe: Int,
+      idCol: String,
+      vecCol: String,
+      slice: Int = IVFModel.ScanSliceQueries): DataFrame = {
+    import spark.implicits._
+    require(slice > 0, s"slice must be positive, got $slice")
+    // locals only: the closure below must not capture the model
+    val bc = prepareBroadcast(spark)
+    val rbc = replicaBroadcast(spark, replica)
+    val accs = IVFIndex.searchAccs(spark)
+    val (qb, eb) = (params.queryBits, params.exBits)
+    val rows = queries
+      .select(col(idCol).cast(LongType), col(vecCol))
+      .as[(Long, Array[Float])].rdd
+      .mapPartitions { it =>
+        val (rot, cents) = bc.value
+        val rep = rbc.value
+        it.grouped(slice).flatMap { s =>
+          IVFIndex.scanRuns(s.map(IVFModel.prepare(rot, cents, nprobe)(_)).toArray,
+            rep, cents, k, qb, eb, accs)
+        }.flatMap { case (q, ids, _) =>
+          ids.iterator.zipWithIndex.map { case (id, i) => Row(q, id, i + 1) }
+        }
+      }
+    spark.createDataFrame(rows, KnnExact.ResultSchema)
+  }
+
+  /** [[searchAll]]'s lazy plan over the cap: prepare, route each query
+    * only to the runs partitions holding one of its probed clusters
+    * (the [[layout]]'s map), scan in slices of `slice` queries, and
+    * merge DISTRIBUTED ([[KnnExact.mergeTopK]]: one shuffle of the
+    * scan's one-row-per-(partition, query) sorted lists, then a linear
+    * merge per query), so queries × k result rows can run to millions.
+    * Each runs partition keeps its own pool per query: with [[search]]'s
+    * over-cap path, the only search whose rows can depend on the runs'
+    * layout ([[IVFIndex.ClusterBlockRows]]). */
   private[graft] def batchPlan(
       spark: SparkSession,
       queries: DataFrame,
@@ -1671,12 +1860,11 @@ final class IVFModel private[graft] (
       vecCol: String,
       slice: Int = IVFModel.ScanSliceQueries): DataFrame = {
     import spark.implicits._
-    require(k > 0, s"search k must be positive, got $k")
-    require(nprobe > 0, s"nprobe must be positive, got $nprobe")
+    IVFModel.requireKNprobe(k, nprobe)
     require(slice > 0, s"slice must be positive, got $slice")
     // locals only: the closures below must not capture the model
     val bc = prepareBroadcast(spark)
-    val where = clusterPartitions()
+    val where = layout().clusterParts
     val accs = IVFIndex.searchAccs(spark)
     val (qb, eb) = (params.queryBits, params.exBits)
     val routed = queries
@@ -1713,9 +1901,22 @@ final class IVFModel private[graft] (
     finally bc.destroy()
   }
 
-  /** The probed-cluster scan of [[search]] and [[searchFiltered]]: the
-    * queries are prepared on the driver ([[IVFModel.prepare]], across
-    * all driver cores) and ride a per-call broadcast; per partition, ONE
+  /** `queries` prepared on the driver ([[IVFModel.prepare]]), across
+    * all driver cores: rotation is O(dim²) per query and ranking
+    * O(K·dim). */
+  private def prepareAll(queries: Array[(Long, Array[Float])],
+      nprobe: Int): Array[(Long, Array[Float], Array[Int])] = {
+    val probes = new Array[(Long, Array[Float], Array[Int])](queries.length)
+    IVFIndex.parallelFor(queries.length) { i =>
+      probes(i) = IVFModel.prepare(rotator, rotatedCentroids, nprobe)(queries(i))
+    }
+    probes
+  }
+
+  /** The per-partition probed-cluster scan of [[searchFiltered]], and of
+    * [[search]] over the replica cap: the queries are prepared on the
+    * driver ([[prepareAll]]) and ride a per-call broadcast; per
+    * partition, ONE
     * (query_id, ids, dists) row per query with a candidate there — its
     * partition-local top-k, ascending under [[KnnExact.DistIdOrder]]
     * ([[IVFIndex.scanRuns]]). At most partitions × queries rows of ≤ k
@@ -1732,18 +1933,9 @@ final class IVFModel private[graft] (
       k: Int,
       nprobe: Int): (RDD[(Long, Array[Long], Array[Double])],
         Broadcast[Array[(Long, Array[Float], Array[Int])]]) = {
-    // fail loudly on the driver: nprobe <= 0 would silently return an
-    // empty frame (empty probe set -> nothing scanned), which reads as
-    // "no neighbors" instead of a caller bug
-    require(k > 0, s"search k must be positive, got $k")
-    require(nprobe > 0, s"nprobe must be positive, got $nprobe")
+    IVFModel.requireKNprobe(k, nprobe)
     val sbc = prepareBroadcast(spark)
-    // rotation is O(dim²) per query and ranking O(K·dim) flat: across
-    // all driver cores
-    val probes = new Array[(Long, Array[Float], Array[Int])](queries.length)
-    java.util.stream.IntStream.range(0, queries.length).parallel().forEach { i =>
-      probes(i) = IVFModel.prepare(rotator, rotatedCentroids, nprobe)(queries(i))
-    }
+    val probes = prepareAll(queries, nprobe)
     val bc = spark.sparkContext.broadcast(probes)
     // --- estimate → prune → rerank → local top-k over each partition's
     // packed runs, QUERY-MAJOR (see IVFIndex.scanRuns for the order

@@ -1,9 +1,9 @@
 package graft.ann
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.functions.VectorFunctions.l2sq
 
@@ -124,37 +124,62 @@ object KnnExact {
       .toDF("query_id", "neighbor_id", "rk", "d2")
   }
 
+  /** The schema of every search result, (query_id, neighbor_id, rk),
+    * all non-nullable: what mergeTopK's tuple encoder derives, built
+    * once so a local result frame needs no per-call reflection. */
+  private[graft] val ResultSchema: StructType = StructType(Seq(
+    StructField("query_id", LongType, nullable = false),
+    StructField("neighbor_id", LongType, nullable = false),
+    StructField("rk", IntegerType, nullable = false)))
+
+  /** A per-query top-k held on the driver: [[add]] folds sorted
+    * candidate lists (one (query_id, ids, dists) row each, sorted under
+    * [[DistIdOrder]]) through [[mergeSorted]], so lists of one query id
+    * merge in any order. */
+  private[graft] final class DriverTopK(k: Int) {
+    require(k > 0, s"top-k bound must be positive, got $k")
+    private val best = scala.collection.mutable.HashMap.empty[Long, (Array[Long], Array[Double])]
+    def add(rows: Array[(Long, Array[Long], Array[Double])]): Unit =
+      rows.foreach { case (q, ids, dists) =>
+        val (bi, bd) = best.getOrElse(q, (Array.emptyLongArray, Array.emptyDoubleArray))
+        best(q) = mergeSorted(bi, bd, ids, dists, k)
+      }
+    /** The local result frame ([[ResultSchema]]): each distinct id of
+      * `queryIds` in first-seen order, rk ascending. */
+    def frame(spark: SparkSession, queryIds: Array[Long]): DataFrame = {
+      val out = new java.util.ArrayList[Row]()
+      val seen = scala.collection.mutable.HashSet.empty[Long]
+      queryIds.foreach { q =>
+        if (seen.add(q)) best.get(q).foreach { case (ids, _) =>
+          var i = 0
+          while (i < ids.length) { out.add(Row(q, ids(i), i + 1)); i += 1 }
+        }
+      }
+      spark.createDataFrame(out, ResultSchema)
+    }
+  }
+
   /** [[mergeTopK]] without the exchange, for candidate sets small
     * enough to hold on the driver (queries × k rows): runs `partial` as
     * ONE plain RDD job (`runJob`, no SQL execution) and folds each task
-    * result's sorted lists into the per-query top-k on the driver as it
-    * arrives, through the same [[mergeSorted]]. The global top-k under
-    * [[DistIdOrder]] is the top-k of the partition top-k's, so the rows,
-    * rk included, equal mergeTopK's whatever order partitions finish in;
-    * driver memory is O(queries × k) plus the partitions in flight.
-    * Eager: the job runs here, and the result is a local DataFrame with
-    * mergeTopK's schema, queries in `queryIds` order, rk ascending. */
+    * result's sorted lists into a [[DriverTopK]] as it arrives. The
+    * global top-k under [[DistIdOrder]] is the top-k of the partition
+    * top-k's, so the rows, rk included, equal mergeTopK's whatever order
+    * partitions finish in; driver memory is O(queries × k) plus the
+    * partitions in flight. Eager: the job runs here, and the result is
+    * a local DataFrame with mergeTopK's schema, queries in `queryIds`
+    * order, rk ascending. */
   private[graft] def mergeTopKOnDriver(
       spark: SparkSession,
       partial: RDD[(Long, Array[Long], Array[Double])],
       k: Int,
       queryIds: Array[Long]): DataFrame = {
-    import spark.implicits._
-    require(k > 0, s"top-k bound must be positive, got $k")
-    val best = scala.collection.mutable.HashMap.empty[Long, (Array[Long], Array[Double])]
+    val top = new DriverTopK(k)
     if (queryIds.nonEmpty)
       spark.sparkContext.runJob(partial,
         (it: Iterator[(Long, Array[Long], Array[Double])]) => it.toArray,
-        (_: Int, rows: Array[(Long, Array[Long], Array[Double])]) =>
-          rows.foreach { case (q, ids, dists) =>
-            val (bi, bd) = best.getOrElse(q, (Array.emptyLongArray, Array.emptyDoubleArray))
-            best(q) = mergeSorted(bi, bd, ids, dists, k)
-          })
-    val seen = scala.collection.mutable.HashSet.empty[Long]
-    queryIds.iterator.filter(seen.add).flatMap { q =>
-      best.get(q).iterator.flatMap(_._1.iterator.zipWithIndex)
-        .map { case (id, i) => (q, id, i + 1) }
-    }.toSeq.toDF("query_id", "neighbor_id", "rk")
+        (_: Int, rows: Array[(Long, Array[Long], Array[Double])]) => top.add(rows))
+    top.frame(spark, queryIds)
   }
 
   /** The shared exact-top-k kernel, keeping the squared distance:

@@ -30,6 +30,14 @@ object AnnQueries {
       IVFIndex.build(spark, Tables.embeddings(spark, dir),
         IVFIndex.Params(totalBits = bits)))
 
+  /** Drop this session's memoized models and search results of `dir`,
+    * so the next query builds its model afresh: a spec's way to build
+    * under another session shape (the build's layout reads
+    * `spark.sql.shuffle.partitions`). The dropped models' caches are
+    * left to GC. */
+  private[graft] def forgetModels(spark: SparkSession, dir: String): Unit =
+    Seq(cache, searchCache).foreach(_.keySet.removeIf(k => k._1 == appId(spark) && k._2 == dir))
+
   // b7's search results and the exact ground truth are inputs to three
   // queries each (b7/b8/b10); keep the small result DataFrames per
   // (dir, bits) so the expensive scans run once per session, like the

@@ -68,6 +68,83 @@ class AnnSpec extends AnyFunSuite {
     (jobs.map(_.stageInfos.map(_.name).mkString(", ")), shuffle, records)
   }
 
+  /** The replica cap's default value (256 MB), set explicitly. */
+  private val DefaultReplicaCap = (256L << 20).toString
+
+  /** `body` with `spark.graft.annReplicaMaxBytes` set to `cap` ("0"
+    * forces the per-partition paths), unset afterwards. */
+  private def withReplicaCap[T](cap: String)(body: => T): T = {
+    spark.conf.set(graft.ann.IVFModel.ReplicaMaxBytesKey, cap)
+    try body finally spark.conf.unset(graft.ann.IVFModel.ReplicaMaxBytesKey)
+  }
+
+  /** A sequential reference of the scan: one query at a time, its
+    * probed clusters in rank order, each cluster's runs and entries in
+    * order, one entry at a time: estimate, skip when the lower bound
+    * exceeds the current kth distance, else rerank and insert. Returns
+    * the rows, the reranks, the bound violations (reranked entries
+    * whose lower bound exceeds their reranked distance), and the
+    * entries a paired scan speculates on and then rejects: the first
+    * entry after an admitted lead that passes the lead's distK but
+    * fails the distK after the lead's insert. */
+  private def sequentialScan(qs: Array[(Long, Array[Float], Array[Int])],
+      runs: IVFIndex.Runs, rotCents: Array[Array[Float]],
+      k: Int, queryBits: Int, exBits: Int)
+      : (Seq[(Long, Array[Long], Array[Double])], Long, Long, Long) = {
+    var reranks = 0L; var violations = 0L; var rejectedPartners = 0L
+    val rows = qs.toSeq.flatMap { case (qid, qr, cls) =>
+      val heap = new graft.ann.KnnExact.BoundedTopK(k)
+      var distK = Double.MaxValue
+      for (cid <- cls.toSeq if runs(cid) != null; run <- runs(cid)) {
+        val qc = RaBitQ.prepareQuery(qr, rotCents(cid), queryBits)
+        var partnerBar = Double.NaN // the lead's distK while a partner is sought
+        for (i <- 0 until run.n) {
+          val lower =
+            if (queryBits > 0) RaBitQ.estimateLowerLutPacked(qc, run.sign, i * run.words,
+              run.words, run.x2(i), run.facIp(i), run.facErr(i))
+            else RaBitQ.estimateLowerPacked(qc, run.sign, i * run.words,
+              run.words, run.x2(i), run.facIp(i), run.facErr(i))
+          val partner = run.packExF && lower <= partnerBar
+          if (partner) partnerBar = Double.NaN
+          if (lower <= distK) {
+            val before = distK
+            reranks += 1
+            val ex =
+              if (run.packExF) RaBitQ.rerankDistF(qc, run.exF, i * run.dim,
+                run.x2(i), run.xipnorm(i), exBits)
+              else RaBitQ.rerankDistPacked(qc, run.sign, i * run.words,
+                run.exCode(i), run.x2(i), run.xipnorm(i), exBits)
+            if (lower > ex) violations += 1
+            heap.insert(ex, run.ids(i))
+            distK = heap.worstOrElse(Double.MaxValue)
+            if (run.packExF && !partner) partnerBar = before
+          } else if (partner) rejectedPartners += 1
+        }
+      }
+      if (heap.nonEmpty) { val (ids, ds) = heap.drainSorted(); Seq((qid, ids, ds)) }
+      else Nil
+    }
+    (rows, reranks, violations, rejectedPartners)
+  }
+
+  /** The one-pool reference of a model's search: its entries packed
+    * into one run set, each cluster's entries in id order, then
+    * [[sequentialScan]] over every query's `nprobe` nearest clusters
+    * (ranked by the exact flat scan) — as (query_id, neighbor_id, rk)
+    * rows sorted by (query_id, rk). */
+  private def onePoolRows(m: graft.ann.IVFModel, qs: Array[(Long, Array[Float])],
+      k: Int, nprobe: Int): Seq[(Long, Long, Int)] = {
+    val runs = IVFIndex.packRuns(m.index.collect().sortBy(e => (e.cluster_id, e.id)).iterator,
+      m.rotator.paddedDim, m.params.exBits, m.numClusters)
+    val prepared = qs.map { case (q, v) =>
+      val qr = m.rotator.rotate(v)
+      (q, qr, graft.ann.CentroidRouter.rankFlat(m.rotatedCentroids, qr, nprobe))
+    }
+    sequentialScan(prepared, runs, m.rotatedCentroids, k, m.params.queryBits, m.params.exBits)
+      ._1.flatMap { case (q, ids, _) => ids.indices.map(i => (q, ids(i), i + 1)) }
+      .sortBy(r => (r._1, r._3))
+  }
+
   test("rotator is orthonormal: norms and dots preserved") {
     val rot = new Rotator(64, seed = 7)
     val rnd = new scala.util.Random(1)
@@ -197,10 +274,16 @@ class AnnSpec extends AnyFunSuite {
     val batch = rows(m.searchAll(spark, queriesDF, 10, 12))
     assert(batch.length == qArr.length * 10)
     assert(batch == oneShot, "searchAll must be result-identical to search")
-    // slices of 64 queries: each runs partition scans its routed queries
-    // in many slices, same answer
-    assert(rows(m.batchPlan(spark, queriesDF, 10, 12, "vec_id", "embedding", slice = 64)) == oneShot,
-      "a sliced scan must be result-identical to search")
+    // slices of 64 queries: each task scans its queries in many
+    // slices, same answer — against the replica, and (with the replica
+    // off) in each runs partition
+    val rep = m.replica(spark).get
+    assert(rows(m.replicaPlan(spark, rep, queriesDF, 10, 12, "vec_id", "embedding",
+      slice = 64)) == oneShot, "a sliced replica scan must be result-identical to search")
+    withReplicaCap("0") {
+      assert(rows(m.batchPlan(spark, queriesDF, 10, 12, "vec_id", "embedding", slice = 64)) ==
+        rows(m.search(spark, qArr, 10, 12)), "a sliced routed scan must be result-identical to search")
+    }
     // empty query set: empty result with the search schema
     val empty = m.searchAll(spark, queriesDF.filter(col("vec_id") < 0), 10, 12)
     assert(empty.columns.toSeq == Seq("query_id", "neighbor_id", "rk"))
@@ -299,10 +382,14 @@ class AnnSpec extends AnyFunSuite {
       cents(i % cents.length).map(_ + rnd.nextGaussian().toFloat))).toArray
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.as[(Long, Long, Int)].collect().sortBy(r => (r._1, r._3)).toSeq
-    val want = rows(m.search(spark, qs, 10, 1))
-    assert(want.length == qs.length * 10)
-    assert(rows(m.searchAll(spark, qs.toSeq.toDF("vec_id", "embedding"), 10, 1)) == want,
-      "searchAll differs from search on a model whose clusters span runs partitions")
+    // under the replica cap (the default) and with the replica off,
+    // whose plan routes by the cluster → partitions map
+    for (cap <- Seq(DefaultReplicaCap, "0")) withReplicaCap(cap) {
+      val want = rows(m.search(spark, qs, 10, 1))
+      assert(want.length == qs.length * 10)
+      assert(rows(m.searchAll(spark, qs.toSeq.toDF("vec_id", "embedding"), 10, 1)) == want,
+        s"searchAll differs from search on a model whose clusters span runs partitions (cap $cap)")
+    }
     m.freeSearchCaches()
   }
 
@@ -764,20 +851,28 @@ class AnnSpec extends AnyFunSuite {
     val before = cached()
     val m = IVFIndex.build(spark, df, IVFIndex.Params(k = 8, totalBits = 4))
     assert(m.search(spark, Array(0L -> randVec(rnd, 16)), 10, 3).count() == 10)
+    assert(m.searchAll(spark, Seq(1L -> randVec(rnd, 16)).toDF("vec_id", "embedding"), 10, 3)
+      .count() == 10)
     val added = cached() -- before
     assert(added == Set(m.runs.id), s"cached RDDs added by build + search: $added, " +
       s"want only the runs ${m.runs.id}")
     assert(m.index.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    assert(m.shared.replica != null && m.shared.replicaBc != null,
+      "search + searchAll under the cap built no replica or no broadcast")
     m.freeSearchCaches()
     assert(!cached().contains(m.runs.id), "freeSearchCaches kept the runs' blocks")
+    assert(m.shared.replica == null && m.shared.replicaBc == null,
+      "freeSearchCaches kept the replica or its broadcast")
   }
 
   test("b7: the packing and the cached packed scan hash-match the committed golden row") {
-    // a fresh model over the built index packs its runs inside its
-    // first search's scan job; the next search reads the cached runs.
-    // Both must hash-equal the committed b7 golden row — a pack that
-    // diverges from its cache fails HERE, not in a judge run. Only the
-    // fresh model is freed: the shared memo's runs stay cached.
+    // a fresh model over the built index packs its runs (with the
+    // replica off, inside its first search's scan job; under the cap,
+    // in the job that sizes its replica); the next search reads the
+    // cached runs or the replica. Both must hash-equal the pinned row —
+    // a pack that diverges from its cache fails HERE, not in a judge
+    // run. Only the fresh model is freed: the shared memo's runs stay
+    // cached.
     val sfd = "/root/testdata/sf0.001"
     val built = graft.operators.AnnQueries.model(spark, sfd)
     val m = new graft.ann.IVFModel(built.params, built.rotator, built.centroids,
@@ -785,19 +880,24 @@ class AnnSpec extends AnyFunSuite {
     val qs = graft.operators.VectorQueries.queryVectors(spark, sfd)
     val np = 3 * m.params.k / 4 // b7's workload (AnnQueries.searchNprobe)
     def result() = m.search(spark, qs, 10, np).orderBy("query_id", "rk")
-    val first = Golden.hashOf(result(), Set.empty)
-    val cached = Golden.hashOf(result(), Set.empty)
-    m.freeSearchCaches()
-    assert(first == cached, "the first (packing) and the cached scan diverged")
     // the raw (query_id, neighbor_id, rk) list at sf0.001, pinned here
     // directly: b7 graduated to the DuckDB hash gate in r13 (its
     // certified surface lives in oracle_sql), so the raw engine
-    // ordering is no longer in the golden snapshot — this literal is
-    // its regression pin (regenerate via Golden.hashOf on the raw
-    // search if the kernel changes intentionally)
-    assert(first == (80L,
-      "c8111588e50b9c032e933e917d24eb75f03c2cf94803c236b74864fdde38e2e9"),
-      "search result drifted from the pinned b7 raw-search row")
+    // ordering is no longer in the golden snapshot — these literals
+    // are its regression pins (regenerate via Golden.hashOf on the raw
+    // search if the kernel changes intentionally). With the replica
+    // off each runs partition keeps its own pool, under the cap one pool
+    // per query (checked against a sequential one-pool reference in the
+    // replica spec): at this shape both return the same rows
+    for (cap <- Seq("0", DefaultReplicaCap)) withReplicaCap(cap) {
+      val first = Golden.hashOf(result(), Set.empty)
+      val cached = Golden.hashOf(result(), Set.empty)
+      m.freeSearchCaches()
+      assert(first == cached, s"the first (packing) and the cached scan diverged (cap $cap)")
+      assert(first == (80L,
+        "c8111588e50b9c032e933e917d24eb75f03c2cf94803c236b74864fdde38e2e9"),
+        s"search result drifted from the pinned b7 raw-search row (cap $cap)")
+    }
   }
 
   test("search/searchFiltered: the driver merge returns the distributed merge's rows") {
@@ -829,10 +929,12 @@ class AnnSpec extends AnyFunSuite {
       assert(got.schema == want._1, s"$what: schema ${got.schema} != ${want._1}")
       assert(rows(got) == want._2, s"$what: rows differ from the distributed merge")
     }
-    val top10 = m.search(spark, qs, 10, 3)
+    // search merges on the driver with the replica off; under the cap
+    // it scans the replica (see the one-pool spec)
+    val top10 = withReplicaCap("0")(m.search(spark, qs, 10, 3))
     same(top10, distributed(packed, qs, 10, 3), "search k=10")
-    assert(rows(top10) ==
-      rows(m.searchAll(spark, qs.toSeq.toDF("vec_id", "embedding"), 10, 3)),
+    assert(rows(top10) == withReplicaCap("0")(
+      rows(m.searchAll(spark, qs.toSeq.toDF("vec_id", "embedding"), 10, 3))),
       "searchAll differs")
     // the fixture must exercise the tie: a query's duplicate pair sits
     // at adjacent ranks, the smaller id first
@@ -841,10 +943,10 @@ class AnnSpec extends AnyFunSuite {
       r.indexOf(q) >= 0 && r.indexOf(q + 1000L) == r.indexOf(q) + 1
     }, "no query ranked a duplicate pair")
     // k beyond the probed cells' size: every candidate, fewer than k
-    val wide = m.search(spark, qs, 500, 1)
+    val wide = withReplicaCap("0")(m.search(spark, qs, 500, 1))
     same(wide, distributed(packed, qs, 500, 1), "search k=500")
     assert(rows(wide).groupBy(_._1).values.forall(_.length < 500))
-    same(m.search(spark, Array.empty, 10, 3),
+    same(withReplicaCap("0")(m.search(spark, Array.empty, 10, 3)),
       distributed(packed, Array.empty, 10, 3), "empty query set")
     same(m.searchFiltered(spark, qs, 10, 3, evenIds),
       distributed(m.probedRuns(m.allowedOnly(evenIds)), qs, 10, 3), "filtered")
@@ -856,41 +958,44 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("search runs ONE Spark job and shuffles nothing; the result is local") {
-    val m = operators.AnnQueries.model(spark, sf)
-    val qs = operators.VectorQueries.queryVectors(spark, sf, 5)
-    // a fresh model over the same index: its packed runs are not filled
-    // yet, so its first search packs them inside that one job
-    val adhoc = new graft.ann.IVFModel(m.params, m.rotator, m.centroids,
-      m.rotatedCentroids, m.index)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_one_job").toString
-    m.save(dir) // no tombstones: the loaded index is a plain parquet read
-    val loaded = graft.ann.IVFModel.load(spark, dir)
-    for ((model, what) <- Seq(adhoc -> "first search", adhoc -> "second search",
-        loaded -> "loaded model")) {
-      var res: org.apache.spark.sql.DataFrame = null
-      val (jobs, shuffle, _) = jobsAndShuffleBytes {
-        res = model.search(spark, qs, 10, 12)
-        assert(res.collect().length == qs.length * 10)
+    // the per-partition path: with the replica off
+    withReplicaCap("0") {
+      val m = operators.AnnQueries.model(spark, sf)
+      val qs = operators.VectorQueries.queryVectors(spark, sf, 5)
+      // a fresh model over the same index: its packed runs are not filled
+      // yet, so its first search packs them inside that one job
+      val adhoc = new graft.ann.IVFModel(m.params, m.rotator, m.centroids,
+        m.rotatedCentroids, m.index)
+      val dir = java.nio.file.Files.createTempDirectory("ivf_one_job").toString
+      m.save(dir) // no tombstones: the loaded index is a plain parquet read
+      val loaded = graft.ann.IVFModel.load(spark, dir)
+      for ((model, what) <- Seq(adhoc -> "first search", adhoc -> "second search",
+          loaded -> "loaded model")) {
+        var res: org.apache.spark.sql.DataFrame = null
+        val (jobs, shuffle, _) = jobsAndShuffleBytes {
+          res = model.search(spark, qs, 10, 12)
+          assert(res.collect().length == qs.length * 10)
+        }
+        assert(jobs.length == 1,
+          s"$what: search + collect ran ${jobs.length} Spark jobs, want 1: ${jobs.mkString("; ")}")
+        assert(shuffle == 0L, s"$what: search moved $shuffle shuffle bytes, want 0")
+        val plan = res.queryExecution.executedPlan.toString
+        assert(plan.contains("LocalTableScan"), s"$what: result is not local:\n$plan")
       }
-      assert(jobs.length == 1,
-        s"$what: search + collect ran ${jobs.length} Spark jobs, want 1: ${jobs.mkString("; ")}")
-      assert(shuffle == 0L, s"$what: search moved $shuffle shuffle bytes, want 0")
-      val plan = res.queryExecution.executedPlan.toString
-      assert(plan.contains("LocalTableScan"), s"$what: result is not local:\n$plan")
+      // the scan reads whole packed partitions, but graft.search.entries
+      // counts only the entries of the clusters the call probes
+      val entries = graft.ann.IVFIndex.searchAccs(spark).entries
+      val one = qs.take(1)
+      val probed = graft.ann.CentroidRouter.rankFlat(m.rotatedCentroids,
+        m.rotator.rotate(one(0)._2), 2)
+      val before = entries.value
+      adhoc.search(spark, one, 10, 2)
+      assert(entries.value - before == m.index
+        .filter(org.apache.spark.sql.functions.col("cluster_id").isin(probed.toIndexedSeq: _*))
+        .count(), "graft.search.entries counted clusters the call did not probe")
+      adhoc.freeSearchCaches()
+      loaded.freeSearchCaches()
     }
-    // the scan reads whole packed partitions, but graft.search.entries
-    // counts only the entries of the clusters the call probes
-    val entries = graft.ann.IVFIndex.searchAccs(spark)._1
-    val one = qs.take(1)
-    val probed = graft.ann.CentroidRouter.rankFlat(m.rotatedCentroids,
-      m.rotator.rotate(one(0)._2), 2)
-    val before = entries.value
-    adhoc.search(spark, one, 10, 2)
-    assert(entries.value - before == m.index
-      .filter(org.apache.spark.sql.functions.col("cluster_id").isin(probed.toIndexedSeq: _*))
-      .count(), "graft.search.entries counted clusters the call did not probe")
-    adhoc.freeSearchCaches()
-    loaded.freeSearchCaches()
   }
 
   test("searchHighAcc rejects overFetch < 1 and an overflowing k * overFetch") {
@@ -907,58 +1012,16 @@ class AnnSpec extends AnyFunSuite {
 
   test("scanRuns equals a sequential estimate -> prune -> rerank, rows and rerank count") {
     import spark.implicits._
-    import scala.collection.mutable.ArrayBuffer
-    import graft.ann.{CentroidRouter, KnnExact}
+    import graft.ann.CentroidRouter
     val rnd = new scala.util.Random(23)
     val dim = 32
     val df = (0 until 3000).map(i => (i.toLong, randVec(rnd, dim))).toDF("vec_id", "embedding")
     val queries = Array.tabulate(24)(q => (q.toLong, randVec(rnd, dim)))
-    /** One query at a time, one entry at a time: estimate, skip when the
-      * lower bound exceeds the current kth distance, else rerank and
-      * insert. Also counts the entries a paired scan speculates on and
-      * then rejects: the first entry after an admitted lead that passes
-      * the lead's distK but fails the distK after the lead's insert. */
-    def reference(qs: Array[(Long, Array[Float], Array[Int])],
-        runs: Array[ArrayBuffer[IVFIndex.PackedRun]], rotCents: Array[Array[Float]],
-        k: Int, queryBits: Int, exBits: Int) = {
-      var reranks = 0L; var rejectedPartners = 0L
-      val rows = qs.toSeq.flatMap { case (qid, qr, cls) =>
-        val heap = new KnnExact.BoundedTopK(k)
-        var distK = Double.MaxValue
-        for (cid <- cls.toSeq if runs(cid) != null; run <- runs(cid)) {
-          val qc = RaBitQ.prepareQuery(qr, rotCents(cid), queryBits)
-          var partnerBar = Double.NaN // the lead's distK while a partner is sought
-          for (i <- 0 until run.n) {
-            val lower =
-              if (queryBits > 0) RaBitQ.estimateLowerLutPacked(qc, run.sign, i * run.words,
-                run.words, run.x2(i), run.facIp(i), run.facErr(i))
-              else RaBitQ.estimateLowerPacked(qc, run.sign, i * run.words,
-                run.words, run.x2(i), run.facIp(i), run.facErr(i))
-            val partner = run.packExF && lower <= partnerBar
-            if (partner) partnerBar = Double.NaN
-            if (lower <= distK) {
-              val before = distK
-              reranks += 1
-              val ex =
-                if (run.packExF) RaBitQ.rerankDistF(qc, run.exF, i * run.dim,
-                  run.x2(i), run.xipnorm(i), exBits)
-                else RaBitQ.rerankDistPacked(qc, run.sign, i * run.words,
-                  run.exCode(i), run.x2(i), run.xipnorm(i), exBits)
-              heap.insert(ex, run.ids(i))
-              distK = heap.worstOrElse(Double.MaxValue)
-              if (run.packExF && !partner) partnerBar = before
-            } else if (partner) rejectedPartners += 1
-          }
-        }
-        if (heap.nonEmpty) { val (ids, ds) = heap.drainSorted(); Seq((qid, ids, ds)) }
-        else Nil
-      }
-      (rows, reranks, rejectedPartners)
-    }
     def canon(rows: Seq[(Long, Array[Long], Array[Double])]) =
       rows.map { case (q, ids, ds) =>
         (q, ids.toSeq, ds.toSeq.map(java.lang.Double.doubleToRawLongBits)) }
     // B=4 reranks in pairs from the F bytes; B=9 keeps the one-entry unpack path
+    var violations = 0L
     for (bits <- Seq(4, 9)) {
       val m = IVFIndex.build(spark, df, IVFIndex.Params(k = 8, totalBits = bits))
       val exBits = m.params.exBits
@@ -973,39 +1036,147 @@ class AnnSpec extends AnyFunSuite {
       }
       for (queryBits <- Seq(0, 14); k <- Seq(1, 10, 100); runs <- parts) {
         val what = s"B=$bits queryBits=$queryBits k=$k"
-        val (want, wantReranks, rejected) =
-          reference(qs, runs, m.rotatedCentroids, k, queryBits, exBits)
+        val (want, wantReranks, wantViolations, rejected) =
+          sequentialScan(qs, runs, m.rotatedCentroids, k, queryBits, exBits)
         val accs = IVFIndex.searchAccs(spark)
-        val before = accs._3.value
+        val (reranks0, violations0) = (accs.reranks.value, accs.boundViolations.value)
         val got = IVFIndex.scanRuns(qs, runs, m.rotatedCentroids, k, queryBits,
           exBits, accs).toSeq
         assert(canon(got) == canon(want), s"$what: rows differ from the sequential scan")
-        assert(accs._3.value - before == wantReranks, s"$what: graft.search.reranks")
+        assert(accs.reranks.value - reranks0 == wantReranks, s"$what: graft.search.reranks")
+        assert(accs.boundViolations.value - violations0 == wantViolations,
+          s"$what: graft.search.bound_violations")
+        violations += wantViolations
         if (bits == 4) assert(rejected > 0, s"$what: no speculated partner was rejected")
       }
       m.freeSearchCaches()
     }
+    assert(violations > 0, "no rerank violated its bound: the violation count is untested")
   }
 
   test("searchAll at k=100 returns the pinned raw rows") {
-    // the batch path's raw (query_id, neighbor_id, rk) list at sf0.001,
-    // pinned from the row-per-candidate merge it replaced: the scan's
-    // sorted lists, their linear merge and the paired rerank must not
-    // move a row. Both estimate precisions return the same rows at this
-    // shape (the prune skips no entry either bound would keep).
+    // the batch path's raw (query_id, neighbor_id, rk) list at sf0.001.
+    // With the replica off it is pinned from the row-per-candidate merge
+    // it replaced: the scan's sorted lists, their linear merge and the
+    // paired rerank must not move a row. Under the cap, one pool per
+    // query (checked against a sequential one-pool reference in the
+    // replica spec). Both estimate precisions return the same rows at
+    // this shape (the prune skips no entry either bound would keep).
     val m = operators.AnnQueries.model(spark, sf)
     val q = Tables.embeddings(spark, sf).select("vec_id", "embedding")
-    val pinned = (49982L, "32b7a0315d3b5080dd81c75edae098d66bd40cf39d32250aefa5c2b717b2db60")
-    for (queryBits <- Seq(0, 14))
-      assert(Golden.hashOf(m.withQueryBits(queryBits).searchAll(spark, q, 100, 4)
-        .orderBy("query_id", "rk"), Set.empty) == pinned,
-        s"searchAll (queryBits $queryBits) drifted from its pinned rows")
+    for ((cap, pinned) <- Seq(
+        "0" -> (49982L, "32b7a0315d3b5080dd81c75edae098d66bd40cf39d32250aefa5c2b717b2db60"),
+        DefaultReplicaCap ->
+          (49982L, "aebe01f46c54ce6eb1218ce22fd879c75a27db2f12fee8d48dba102b9570070a"));
+        queryBits <- Seq(0, 14)) {
+      assert(withReplicaCap(cap)(Golden.hashOf(m.withQueryBits(queryBits)
+        .searchAll(spark, q, 100, 4).orderBy("query_id", "rk"), Set.empty)) == pinned,
+        s"searchAll (queryBits $queryBits, cap $cap) drifted from its pinned rows")
+    }
+  }
+
+  test("under the replica cap, search and searchAll equal a sequential one-pool reference") {
+    import spark.implicits._
+    val m = operators.AnnQueries.model(spark, sf)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.as[(Long, Long, Int)].collect().toSeq.sortBy(r => (r._1, r._3))
+    // b7's ad-hoc workload
+    val qs = operators.VectorQueries.queryVectors(spark, sf)
+    val np = 3 * m.params.k / 4
+    val got = m.search(spark, qs, 10, np)
+    assert(got.schema == graft.ann.KnnExact.ResultSchema)
+    assert(rows(got) == onePoolRows(m, qs, 10, np), "search differs from the one-pool reference")
+    // the pinned batch workload, at both estimate precisions
+    val q = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    val qArr = q.as[(Long, Array[Float])].collect()
+    for (queryBits <- Seq(0, 14)) {
+      val mq = m.withQueryBits(queryBits)
+      assert(rows(mq.searchAll(spark, q, 100, 4)) == onePoolRows(mq, qArr, 100, 4),
+        s"searchAll (queryBits $queryBits) differs from the one-pool reference")
+    }
+  }
+
+  test("under the replica cap, rows are identical at two runs-partition counts") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(67)
+    val dim = 32
+    val base = (0 until 3000).map(i => (i.toLong, randVec(rnd, dim)))
+    val df = base.toDF("vec_id", "embedding")
+    val cents = base.take(8).map(_._2).toArray
+    val qs = Array.tabulate(40)(q => (10000L + q, randVec(rnd, dim)))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.as[(Long, Long, Int)].collect().toSeq.sortBy(r => (r._1, r._3))
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    val models = try Seq(2, 7).map { n =>
+      spark.conf.set(key, n.toString)
+      IVFIndex.buildWithCentroids(spark, df, cents, dim, IVFIndex.Params(k = 8, totalBits = 4))
+    } finally spark.conf.set(key, prev)
+    assert(models.map(_.runs.getNumPartitions) == Seq(2, 7))
+    val want = onePoolRows(models(0), qs, 100, 3)
+    for (m <- models) {
+      val what = s"${m.runs.getNumPartitions} runs partitions"
+      assert(rows(m.search(spark, qs, 100, 3)) == want, s"search, $what")
+      assert(rows(m.searchAll(spark, qs.toSeq.toDF("vec_id", "embedding").repartition(3),
+        100, 3)) == want, s"searchAll, $what")
+      m.freeSearchCaches()
+    }
+  }
+
+  test("under the replica cap, a warm search runs no Spark job and searchAll no shuffle") {
+    val m = operators.AnnQueries.model(spark, sf)
+    val qs = operators.VectorQueries.queryVectors(spark, sf, 5)
+    // a fresh model over the same index: its first search builds the replica
+    val adhoc = new graft.ann.IVFModel(m.params, m.rotator, m.centroids,
+      m.rotatedCentroids, m.index)
+    assert(adhoc.search(spark, qs, 10, 12).collect().length == qs.length * 10)
+    var res: org.apache.spark.sql.DataFrame = null
+    val (jobs, _, _) = jobsAndShuffleBytes {
+      res = adhoc.search(spark, qs, 10, 12)
+      assert(res.collect().length == qs.length * 10)
+    }
+    assert(jobs.isEmpty, s"a warm search + collect ran ${jobs.length} Spark jobs: ${jobs.mkString("; ")}")
+    val plan = res.queryExecution.executedPlan.toString
+    assert(plan.contains("LocalTableScan"), s"result is not local:\n$plan")
+    // the counters still add their totals from the driver
+    val accs = graft.ann.IVFIndex.searchAccs(spark)
+    val (est, rer) = (accs.estimates.value, accs.reranks.value)
+    adhoc.search(spark, qs, 10, 12)
+    assert(accs.estimates.value > est && accs.reranks.value > rer,
+      "the replica search added nothing to graft.search.*")
+    adhoc.freeSearchCaches()
+    val q = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    m.searchAll(spark, q, 100, 4).collect() // warm-up: the replica and its broadcast
+    val (batchJobs, shuffle, _) = jobsAndShuffleBytes { m.searchAll(spark, q, 100, 4).collect() }
+    assert(batchJobs.nonEmpty)
+    assert(shuffle == 0L, s"searchAll + collect moved $shuffle shuffle bytes, want 0")
+  }
+
+  test("spark.graft.annReplicaMaxBytes: a malformed or negative value fails by name, before any job") {
+    import spark.implicits._
+    val key = graft.ann.IVFModel.ReplicaMaxBytesKey
+    val m = operators.AnnQueries.model(spark, sf)
+    val qs = operators.VectorQueries.queryVectors(spark, sf, 2)
+    val q = qs.toSeq.toDF("vec_id", "embedding")
+    for (bad <- Seq("abc", "-1")) {
+      val (jobs, _, _) = jobsAndShuffleBytes {
+        withReplicaCap(bad) {
+          for (call <- Seq[() => Any](() => m.search(spark, qs, 10, 4),
+              () => m.searchAll(spark, q, 10, 4))) {
+            val e = intercept[IllegalArgumentException](call())
+            assert(e.getMessage.contains(key) && e.getMessage.contains(bad), e.getMessage)
+          }
+        }
+      }
+      assert(jobs.isEmpty, s"$key=$bad ran ${jobs.length} jobs before failing")
+    }
   }
 
   test("searchAll shuffles ≤ partitions × queries to merge, probed partitions to route") {
-    // one (query, sorted top-k list) row per partition reaches the
-    // merge — never one row per candidate; and a query is routed only
-    // to the runs partitions that hold one of its probed clusters
+    // the per-partition plan, with the replica off: one (query, sorted
+    // top-k list) row per partition reaches the merge — never one row
+    // per candidate; and a query is routed only to the runs partitions
+    // that hold one of its probed clusters
     import spark.implicits._
     val m = operators.AnnQueries.model(spark, sf)
     val q = Tables.embeddings(spark, sf).select("vec_id", "embedding")
@@ -1020,9 +1191,9 @@ class AnnSpec extends AnyFunSuite {
     }.sum
     assert(routes < parts * nQ, s"every query probes every partition: the bound $routes is vacuous")
     var rows = 0L
-    val (_, _, records) = jobsAndShuffleBytes {
+    val (_, _, records) = withReplicaCap("0")(jobsAndShuffleBytes {
       rows = m.searchAll(spark, q, 100, 4).count()
-    }
+    })
     assert(rows > nQ * 10, s"searchAll returned $rows rows")
     val (route, merge) = records.partition(_._1("searchAll.route"))
     val (routed, merged) = (route.map(_._2).sum, merge.map(_._2).sum)
@@ -1086,5 +1257,22 @@ class AnnSpec extends AnyFunSuite {
     assert(rerun == rows(m.searchAll(spark, valid.toSeq.toDF("vec_id", "embedding"), 10, 4)),
       "the rerun must equal an uninterrupted run")
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(fresh, "_manifest.json")))
+  }
+
+  test("b11_nprobe_sweep hashes the same at 1 and 4 shuffle partitions") {
+    // the runs' layout follows spark.sql.shuffle.partitions; b11's
+    // searches scan the replica, so its rows must not follow it. A fresh
+    // model memo per setting builds each model under its own layout
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    val hashes = try Seq("1", "4").map { n =>
+      spark.conf.set(key, n)
+      operators.AnnQueries.forgetModels(spark, sf)
+      Golden.hashOf(operators.AnnQueries.nprobeSweep(spark, sf), Set.empty)
+    } finally {
+      spark.conf.set(key, prev)
+      operators.AnnQueries.forgetModels(spark, sf)
+    }
+    assert(hashes(0) == hashes(1), s"b11 at 1 and 4 shuffle partitions: $hashes")
   }
 }
