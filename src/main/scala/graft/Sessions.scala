@@ -40,16 +40,6 @@ object Sessions {
       }
     }
 
-  /** A `spark.graft.*` byte-cap session conf, read on every call:
-    * `dflt` when unset. A malformed or negative value fails the call
-    * with a message naming `key`, instead of silently falling back to
-    * the default. */
-  private[graft] def confBytes(spark: SparkSession, key: String, dflt: Long): Long =
-    spark.conf.getOption(key).fold(dflt) { s =>
-      s.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
-        s"$key must be a non-negative byte count, got '$s'"))
-    }
-
   /** [[parseKnob]] over the environment variable `name`. */
   private[graft] def envKnob[T](name: String, dflt: T)(parse: String => T): T =
     parseKnob(name, sys.env.get(name), dflt)(parse)

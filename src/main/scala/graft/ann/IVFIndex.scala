@@ -39,10 +39,10 @@ import graft.functions.VectorFunctions.l2sq
   *  - every scan (`IVFIndex.scanRuns`) reads only probed clusters and
   *    keeps a bounded heap per query: 1-bit estimate → error-bound prune
   *    (vs the heap's kth distance) → extended-code rerank;
-  *  - under a byte cap (the session conf `spark.graft.annReplicaMaxBytes`,
-  *    default 256 MB) the model keeps a REPLICA of its runs for its
-  *    lifetime: every cluster's entries in id order, packed once on the
-  *    driver. A query scanning it keeps ONE pool across its probed
+  *  - while its runs' packed bytes fit a share of the driver heap
+  *    (`IVFModel.replicaMaxBytes`) the model keeps a REPLICA of its runs
+  *    for its lifetime: every cluster's entries in id order, packed once
+  *    on the driver. A query scanning it keeps ONE pool across its probed
   *    clusters (the reference's result pool, `inc/index/Pool.hpp`), in
   *    centroid-rank and then id order, so its rows depend only on
   *    (index, query, params). Ad-hoc `search` scans it on the driver
@@ -117,8 +117,8 @@ object IVFIndex {
     * ~uniformly over ALL partitions — a partition's share of an
     * S-row cluster is ~S/numShufflePartitions (plus hash variance),
     * NOT capped at this constant, which only bounds the placement
-    * unit. Under the replica cap ([[IVFModel.ReplicaMaxBytesKey]])
-    * the layout never reaches a result: every search but
+    * unit. Under the replica cap ([[IVFModel.replicaMaxBytes]]) the
+    * layout never reaches a result: every search but
     * `searchFiltered` scans the model's replica, one pool per query in
     * one canonical order. Over the cap (and in `searchFiltered`) each
     * runs partition keeps its own pool per query, and results are
@@ -1114,14 +1114,23 @@ object IVFModel {
     * bounds the live per-query heaps at slice × k. */
   val ScanSliceQueries = 65536
 
-  /** Session conf: the byte cap of a model's replica ([[IVFModel.replica]]),
-    * compared with the packed bytes of its runs. Default 256 MB; `0`
-    * turns the replica off. Read on every search; a malformed or
-    * negative value fails the call, naming this key, before any job
-    * runs. */
-  val ReplicaMaxBytesKey = "spark.graft.annReplicaMaxBytes"
-  private[graft] def replicaMaxBytes(spark: SparkSession): Long =
-    graft.Sessions.confBytes(spark, ReplicaMaxBytesKey, 256L << 20)
+  /** The replica cap: a model keeps a replica ([[IVFModel.replica]])
+    * only while its runs' packed bytes are at most this, 1/16 of the
+    * driver's max heap (256 MB at `-Xmx4g`). The cap bounds memory, not
+    * speed. Measured at d=384, B=4, K=32, nprobe 8, local[4], `-Xmx4g`,
+    * with 239 MB of packed runs:
+    *  - building the replica raised the live heap by ~2.4× its packed
+    *    bytes, with 2.3 GB of heap in use before the collection that
+    *    freed the garbage;
+    *  - a model searched by both `search` and `searchAll` then held
+    *    ~2.4× for its life (the replica and its broadcast's serialized
+    *    pieces), beside its cached runs: at the cap, about a fifth
+    *    of the heap;
+    *  - the driver scan beat the per-partition paths at every size
+    *    measured (3.7 to 239 MB): 1-query `search` 53 vs 63 ms, 5-query
+    *    `search` 95 vs 141 ms, 2048-query `searchAll` 12.1 vs 14.0 s at
+    *    239 MB. */
+  private[graft] def replicaMaxBytes: Long = Runtime.getRuntime.maxMemory / 16
 
   private[ann] def requireKNprobe(k: Int, nprobe: Int): Unit = {
     // fail loudly on the driver: nprobe <= 0 would silently return an
@@ -1497,14 +1506,22 @@ final class IVFModel private[graft] (
     * model recomputes them from its build's shuffle output, any other
     * re-packs them from `index`). For long-lived sessions cycling
     * through many models, where N throwaway models would otherwise pin
-    * N packed copies until GC. */
+    * N packed copies until GC.
+    *
+    * The replica's broadcast is DESTROYED: a [[searchAll]] frame built
+    * under the replica cap before this call fails if run after it, so
+    * build the frame again. */
   def freeSearchCaches(): Unit = {
     shared.synchronized {
       runs.unpersist(blocking = true) // so no async removal races the re-cache
       runs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // unpersist, not destroy: an in-flight search or a searchAll frame
-      // not yet run still holds the old handle and can re-fetch it
-      Seq(shared.prepareBc, shared.replicaBc).foreach(bc => if (bc != null) bc.unpersist(false))
+      // the prepare broadcast is unpersisted, not destroyed: an
+      // over-cap searchAll frame not yet run still holds the old handle
+      // and can re-fetch it. The replica's is destroyed: unpersist keeps
+      // the driver's copy, and in local mode the driver's block manager
+      // is the only one, so it would free nothing
+      if (shared.prepareBc != null) shared.prepareBc.unpersist(false)
+      if (shared.replicaBc != null) shared.replicaBc.destroy()
       shared.prepareBc = null
       shared.layout = null
       shared.replica = null
@@ -1529,7 +1546,7 @@ final class IVFModel private[graft] (
     * model, that also fills their cache. Its cluster → partitions map
     * routes the over-cap [[batchPlan]]; its byte count sizes the
     * [[replica]] before anything is fetched to the driver. */
-  private def layout(): IVFModel.Layout =
+  private[graft] def layout(): IVFModel.Layout =
     Option(shared.layout).getOrElse(shared.synchronized {
       if (shared.layout == null) {
         val perPart = runs.mapPartitionsWithIndex((pi, it) => it.map { rs =>
@@ -1553,14 +1570,12 @@ final class IVFModel private[graft] (
     * across all its probed clusters (the reference's result pool,
     * `inc/index/Pool.hpp`), in centroid-rank and then id order, so its
     * rows are a pure function of (index entries, query, params),
-    * whatever the runs' layout. None when the conf
-    * [[IVFModel.ReplicaMaxBytesKey]] is 0 (no job runs) or below the
-    * runs' packed bytes ([[layout]]); the search paths then scan
-    * [[runs]] per partition, as before the replica. Like the runs, it
-    * is a snapshot of the index as of its first search. */
-  private[graft] def replica(spark: SparkSession): Option[IVFIndex.Runs] = {
-    val cap = IVFModel.replicaMaxBytes(spark)
-    if (cap == 0 || layout().packedBytes > cap) None
+    * whatever the runs' layout. None when the runs' packed bytes
+    * ([[layout]]) exceed [[IVFModel.replicaMaxBytes]]; the search paths
+    * then scan [[runs]] per partition. Like the runs, it is a snapshot
+    * of the index as of its first search. */
+  private[graft] def replica(): Option[IVFIndex.Runs] =
+    if (layout().packedBytes > IVFModel.replicaMaxBytes) None
     else Some(Option(shared.replica).getOrElse(shared.synchronized {
       if (shared.replica == null) {
         val entries = runs.mapPartitions(_.flatMap(IVFIndex.unpackRuns)).collect()
@@ -1570,7 +1585,6 @@ final class IVFModel private[graft] (
       }
       shared.replica
     }))
-  }
 
   /** One broadcast of `replica` per model lifetime, read by every
     * [[searchAll]] task under the cap. */
@@ -1663,20 +1677,25 @@ final class IVFModel private[graft] (
     * (a `LocalTableScan`), so collecting or joining it runs no scan
     * again. The queries are rotated and ranked on the driver.
     *
-    * Under the replica cap ([[IVFModel.ReplicaMaxBytesKey]]) the call
-    * scans the model's [[replica]] on the driver, query slices spread
-    * across driver cores, one pool per query: once the replica is
-    * built (two jobs, once per model) it runs no Spark job and makes no
-    * broadcast. Over the cap it runs ONE plain RDD job — no SQL
-    * execution, no exchange — over the model's packed runs ([[runs]];
-    * a loaded or hand-made model's first search packs them inside that
-    * same job), with the queries in one per-call broadcast, and merges
-    * each partition's per-query top-k on the driver as its task result
-    * arrives ([[KnnExact.mergeTopKOnDriver]]); that path keeps a pool
-    * per runs partition, and with [[searchAll]]'s over-cap plan it is
-    * the only search whose rows can depend on the runs' layout
-    * ([[IVFIndex.ClusterBlockRows]]). Either way the rows are those
-    * [[searchAll]] returns for the same queries. Holds queries × k
+    * A model's first search runs one job over its [[runs]], the
+    * [[layout]], whose packed byte count picks the path for the model's
+    * life. Under the replica cap ([[IVFModel.replicaMaxBytes]]) the
+    * call scans the model's [[replica]] on the driver, query slices
+    * spread across driver cores, one pool per query: the first call
+    * also fetches the replica (one more job), and every later call runs
+    * no Spark job and makes no broadcast. Over the cap each call runs
+    * ONE plain RDD job ([[searchOnDriver]]: no SQL execution, no
+    * exchange) over the packed runs, with the queries in one per-call
+    * broadcast, and merges each partition's per-query top-k on the
+    * driver as its task result arrives ([[KnnExact.mergeTopKOnDriver]]),
+    * so a fresh model's first call runs two jobs, the layout and the
+    * scan. That path keeps a pool per runs partition, and with
+    * [[searchAll]]'s over-cap plan it is the only search whose rows can
+    * depend on the runs' layout ([[IVFIndex.ClusterBlockRows]]). Either
+    * way the rows are those [[searchAll]] returns for the same queries.
+    * Query ids must be distinct: a repeated id gets one list of k rows
+    * merged from its occurrences' pools, where a neighbor that two
+    * occurrences find shows up twice. Holds queries × k
     * result rows on the driver; past ~100k queries use [[searchAll]],
     * which prepares the queries on the executors. */
   def search(
@@ -1685,7 +1704,7 @@ final class IVFModel private[graft] (
       k: Int,
       nprobe: Int): DataFrame = {
     IVFModel.requireKNprobe(k, nprobe)
-    replica(spark).fold(searchOnDriver(spark, _ => runs, queries, k, nprobe)) { r =>
+    replica().fold(searchOnDriver(spark, _ => runs, queries, k, nprobe)) { r =>
       val probes = prepareAll(queries, nprobe)
       val accs = IVFIndex.searchAccs(spark)
       val n = probes.length
@@ -1741,14 +1760,20 @@ final class IVFModel private[graft] (
     * ([[IVFModel.prepare]], over the model-lifetime
     * [[prepareBroadcast]]), so give the frame as many partitions as the
     * cores that should share that work. Then, under the replica cap
-    * ([[IVFModel.ReplicaMaxBytesKey]]), the same task scans its queries
+    * ([[IVFModel.replicaMaxBytes]]), the same task scans its queries
     * against one model-lifetime broadcast of the [[replica]], one pool
     * per query, in slices of [[IVFModel.ScanSliceQueries]], and emits
     * their final rows: one narrow stage, no shuffle, no merge
     * ([[replicaPlan]]). Over the cap, the queries are routed to the runs
-    * partitions and merged ([[batchPlan]]). The rows equal [[search]]'s
-    * for the same queries: per-query results are independent of which
-    * queries share a partition or a slice.
+    * partitions and merged ([[batchPlan]]). The first call on a model
+    * runs the [[layout]] job (and, under the cap, the replica fetch)
+    * while the plan is built. The rows equal [[search]]'s for the same
+    * queries: per-query results are independent of which queries share
+    * a partition or a slice.
+    *
+    * Query ids must be distinct. A repeated id gets one top-k per
+    * occurrence under the cap, and over it one merged list of k rows,
+    * as in [[search]].
     *
     * Without `outputDir` the returned frame is that lazy plan: nothing
     * runs until an action, each action runs the whole plan, and no block
@@ -1771,7 +1796,7 @@ final class IVFModel private[graft] (
       outputDir: Option[String] = None): DataFrame = {
     def plan = {
       IVFModel.requireKNprobe(k, nprobe)
-      replica(spark).fold(batchPlan(spark, queries, k, nprobe, idCol, vecCol))(
+      replica().fold(batchPlan(spark, queries, k, nprobe, idCol, vecCol))(
         replicaPlan(spark, _, queries, k, nprobe, idCol, vecCol))
     }
     outputDir.fold(plan) { dir =>
@@ -1808,8 +1833,9 @@ final class IVFModel private[graft] (
     * `queries` prepares its queries and scans them, `slice` at a time,
     * against one model-lifetime broadcast of `replica`, emitting final
     * (query_id, neighbor_id, rk) rows. One narrow stage: no routing
-    * shuffle, no merge, no cluster → partitions map. A query id that
-    * repeats in `queries` gets one top-k per occurrence. */
+    * shuffle, no merge, no cluster → partitions map. Each query's rows
+    * come from its own pool, so a query id that repeats in `queries`
+    * gets one top-k per occurrence. */
   private[graft] def replicaPlan(
       spark: SparkSession,
       replica: IVFIndex.Runs,
@@ -1887,10 +1913,11 @@ final class IVFModel private[graft] (
     KnnExact.mergeTopK(spark, spark.createDataset(candidates), k)
   }
 
-  /** [[search]] / [[searchFiltered]]: [[scan]] `runs`, merge on the
-    * driver, then destroy the call's query broadcast — the scan job has
-    * finished, and the local result no longer needs it. */
-  private def searchOnDriver(
+  /** [[search]] over the replica cap (with `runs` = `_ => runs`) and
+    * [[searchFiltered]]: [[scan]] `runs`, merge on the driver, then
+    * destroy the call's query broadcast — the scan job has finished,
+    * and the local result no longer needs it. One Spark job. */
+  private[graft] def searchOnDriver(
       spark: SparkSession,
       runs: Array[Int] => RDD[IVFIndex.Runs],
       queries: Array[(Long, Array[Float])],

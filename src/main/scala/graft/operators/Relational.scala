@@ -57,7 +57,10 @@ object Relational {
     * fails the query instead of silently falling back to the default. */
   val DimBroadcastMaxBytesKey = "spark.graft.dimBroadcastMaxBytes"
   private def dimBcastMaxBytes(spark: SparkSession): Long =
-    graft.Sessions.confBytes(spark, DimBroadcastMaxBytesKey, 256L << 20)
+    spark.conf.getOption(DimBroadcastMaxBytesKey).fold(256L << 20) { s =>
+      s.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+        s"$DimBroadcastMaxBytesKey must be a non-negative byte count, got '$s'"))
+    }
   private def gatedBroadcast(
       spark: SparkSession, dir: String, table: String, dim: DataFrame): DataFrame =
     if (tableBytes(spark, dir, table) <= dimBcastMaxBytes(spark)) broadcast(dim)

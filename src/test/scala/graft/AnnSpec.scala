@@ -68,15 +68,18 @@ class AnnSpec extends AnyFunSuite {
     (jobs.map(_.stageInfos.map(_.name).mkString(", ")), shuffle, records)
   }
 
-  /** The replica cap's default value (256 MB), set explicitly. */
-  private val DefaultReplicaCap = (256L << 20).toString
+  /** The ad-hoc path `search` takes when a model's runs exceed the
+    * replica cap: one scan job over the runs, a pool per runs partition,
+    * merged on the driver. The spec indexes all fit under the cap. */
+  private def overCapSearch(m: graft.ann.IVFModel, qs: Array[(Long, Array[Float])],
+      k: Int, nprobe: Int): org.apache.spark.sql.DataFrame =
+    m.searchOnDriver(spark, _ => m.runs, qs, k, nprobe)
 
-  /** `body` with `spark.graft.annReplicaMaxBytes` set to `cap` ("0"
-    * forces the per-partition paths), unset afterwards. */
-  private def withReplicaCap[T](cap: String)(body: => T): T = {
-    spark.conf.set(graft.ann.IVFModel.ReplicaMaxBytesKey, cap)
-    try body finally spark.conf.unset(graft.ann.IVFModel.ReplicaMaxBytesKey)
-  }
+  /** The lazy plan `searchAll` builds over the replica cap: route,
+    * scan per runs partition, distributed merge. */
+  private def overCapSearchAll(m: graft.ann.IVFModel, q: org.apache.spark.sql.DataFrame,
+      k: Int, nprobe: Int): org.apache.spark.sql.DataFrame =
+    m.batchPlan(spark, q, k, nprobe, "vec_id", "embedding")
 
   /** A sequential reference of the scan: one query at a time, its
     * probed clusters in rank order, each cluster's runs and entries in
@@ -275,15 +278,13 @@ class AnnSpec extends AnyFunSuite {
     assert(batch.length == qArr.length * 10)
     assert(batch == oneShot, "searchAll must be result-identical to search")
     // slices of 64 queries: each task scans its queries in many
-    // slices, same answer — against the replica, and (with the replica
-    // off) in each runs partition
-    val rep = m.replica(spark).get
+    // slices, same answer — against the replica, and (on the over-cap
+    // path) in each runs partition
+    val rep = m.replica().get
     assert(rows(m.replicaPlan(spark, rep, queriesDF, 10, 12, "vec_id", "embedding",
       slice = 64)) == oneShot, "a sliced replica scan must be result-identical to search")
-    withReplicaCap("0") {
-      assert(rows(m.batchPlan(spark, queriesDF, 10, 12, "vec_id", "embedding", slice = 64)) ==
-        rows(m.search(spark, qArr, 10, 12)), "a sliced routed scan must be result-identical to search")
-    }
+    assert(rows(m.batchPlan(spark, queriesDF, 10, 12, "vec_id", "embedding", slice = 64)) ==
+      rows(overCapSearch(m, qArr, 10, 12)), "a sliced routed scan must be result-identical to search")
     // empty query set: empty result with the search schema
     val empty = m.searchAll(spark, queriesDF.filter(col("vec_id") < 0), 10, 12)
     assert(empty.columns.toSeq == Seq("query_id", "neighbor_id", "rk"))
@@ -382,13 +383,16 @@ class AnnSpec extends AnyFunSuite {
       cents(i % cents.length).map(_ + rnd.nextGaussian().toFloat))).toArray
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.as[(Long, Long, Int)].collect().sortBy(r => (r._1, r._3)).toSeq
-    // under the replica cap (the default) and with the replica off,
-    // whose plan routes by the cluster → partitions map
-    for (cap <- Seq(DefaultReplicaCap, "0")) withReplicaCap(cap) {
-      val want = rows(m.search(spark, qs, 10, 1))
+    // under the replica cap, and over it, where the plan routes by the
+    // cluster → partitions map
+    val qDF = qs.toSeq.toDF("vec_id", "embedding")
+    for ((path, search, searchAll) <- Seq(
+        ("replica", m.search(spark, qs, 10, 1), m.searchAll(spark, qDF, 10, 1)),
+        ("over the cap", overCapSearch(m, qs, 10, 1), overCapSearchAll(m, qDF, 10, 1)))) {
+      val want = rows(search)
       assert(want.length == qs.length * 10)
-      assert(rows(m.searchAll(spark, qs.toSeq.toDF("vec_id", "embedding"), 10, 1)) == want,
-        s"searchAll differs from search on a model whose clusters span runs partitions (cap $cap)")
+      assert(rows(searchAll) == want,
+        s"searchAll differs from search on a model whose clusters span runs partitions ($path)")
     }
     m.freeSearchCaches()
   }
@@ -847,7 +851,10 @@ class AnnSpec extends AnyFunSuite {
     import spark.implicits._
     val rnd = new scala.util.Random(31)
     val df = (0 until 600).map(i => (i.toLong, randVec(rnd, 16))).toDF("vec_id", "embedding")
-    def cached() = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    def cached() = {
+      org.apache.spark.GraftBlocks.settle(spark.sparkContext)
+      spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    }
     val before = cached()
     val m = IVFIndex.build(spark, df, IVFIndex.Params(k = 8, totalBits = 4))
     assert(m.search(spark, Array(0L -> randVec(rnd, 16)), 10, 3).count() == 10)
@@ -859,16 +866,25 @@ class AnnSpec extends AnyFunSuite {
     assert(m.index.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
     assert(m.shared.replica != null && m.shared.replicaBc != null,
       "search + searchAll under the cap built no replica or no broadcast")
+    // a broadcast is not an RDD: read its blocks from the block manager
+    val replicaBc = m.shared.replicaBc.id
+    assert(org.apache.spark.GraftBlocks.broadcastBlocks(replicaBc).nonEmpty,
+      "test setup: the replica's broadcast holds no block")
     m.freeSearchCaches()
     assert(!cached().contains(m.runs.id), "freeSearchCaches kept the runs' blocks")
     assert(m.shared.replica == null && m.shared.replicaBc == null,
       "freeSearchCaches kept the replica or its broadcast")
+    // Broadcast.destroy removes the blocks asynchronously
+    val deadline = System.nanoTime + 10L * 1000 * 1000 * 1000
+    def left = org.apache.spark.GraftBlocks.broadcastBlocks(replicaBc)
+    while (left.nonEmpty && System.nanoTime < deadline) Thread.sleep(50)
+    assert(left.isEmpty, s"freeSearchCaches left the replica broadcast's blocks: $left")
   }
 
   test("b7: the packing and the cached packed scan hash-match the committed golden row") {
-    // a fresh model over the built index packs its runs (with the
-    // replica off, inside its first search's scan job; under the cap,
-    // in the job that sizes its replica); the next search reads the
+    // a fresh model over the built index packs its runs (on the
+    // over-cap path, inside its first scan job; under the cap, in the
+    // job that sizes its replica); the next search reads the
     // cached runs or the replica. Both must hash-equal the pinned row —
     // a pack that diverges from its cache fails HERE, not in a judge
     // run. Only the fresh model is freed: the shared memo's runs stay
@@ -879,24 +895,26 @@ class AnnSpec extends AnyFunSuite {
       built.rotatedCentroids, built.index)
     val qs = graft.operators.VectorQueries.queryVectors(spark, sfd)
     val np = 3 * m.params.k / 4 // b7's workload (AnnQueries.searchNprobe)
-    def result() = m.search(spark, qs, 10, np).orderBy("query_id", "rk")
     // the raw (query_id, neighbor_id, rk) list at sf0.001, pinned here
     // directly: b7 graduated to the DuckDB hash gate in r13 (its
     // certified surface lives in oracle_sql), so the raw engine
     // ordering is no longer in the golden snapshot — these literals
     // are its regression pins (regenerate via Golden.hashOf on the raw
-    // search if the kernel changes intentionally). With the replica
-    // off each runs partition keeps its own pool, under the cap one pool
-    // per query (checked against a sequential one-pool reference in the
+    // search if the kernel changes intentionally). Over the replica cap
+    // each runs partition keeps its own pool, under it one pool per
+    // query (checked against a sequential one-pool reference in the
     // replica spec): at this shape both return the same rows
-    for (cap <- Seq("0", DefaultReplicaCap)) withReplicaCap(cap) {
+    for ((path, search) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "over the cap" -> (() => overCapSearch(m, qs, 10, np)),
+        "replica" -> (() => m.search(spark, qs, 10, np)))) {
+      def result() = search().orderBy("query_id", "rk")
       val first = Golden.hashOf(result(), Set.empty)
       val cached = Golden.hashOf(result(), Set.empty)
       m.freeSearchCaches()
-      assert(first == cached, s"the first (packing) and the cached scan diverged (cap $cap)")
+      assert(first == cached, s"the first (packing) and the cached scan diverged ($path)")
       assert(first == (80L,
         "c8111588e50b9c032e933e917d24eb75f03c2cf94803c236b74864fdde38e2e9"),
-        s"search result drifted from the pinned b7 raw-search row (cap $cap)")
+        s"search result drifted from the pinned b7 raw-search row ($path)")
     }
   }
 
@@ -929,12 +947,12 @@ class AnnSpec extends AnyFunSuite {
       assert(got.schema == want._1, s"$what: schema ${got.schema} != ${want._1}")
       assert(rows(got) == want._2, s"$what: rows differ from the distributed merge")
     }
-    // search merges on the driver with the replica off; under the cap
+    // search merges on the driver over the replica cap; under the cap
     // it scans the replica (see the one-pool spec)
-    val top10 = withReplicaCap("0")(m.search(spark, qs, 10, 3))
+    val top10 = overCapSearch(m, qs, 10, 3)
     same(top10, distributed(packed, qs, 10, 3), "search k=10")
-    assert(rows(top10) == withReplicaCap("0")(
-      rows(m.searchAll(spark, qs.toSeq.toDF("vec_id", "embedding"), 10, 3))),
+    assert(rows(top10) ==
+      rows(overCapSearchAll(m, qs.toSeq.toDF("vec_id", "embedding"), 10, 3)),
       "searchAll differs")
     // the fixture must exercise the tie: a query's duplicate pair sits
     // at adjacent ranks, the smaller id first
@@ -943,10 +961,10 @@ class AnnSpec extends AnyFunSuite {
       r.indexOf(q) >= 0 && r.indexOf(q + 1000L) == r.indexOf(q) + 1
     }, "no query ranked a duplicate pair")
     // k beyond the probed cells' size: every candidate, fewer than k
-    val wide = withReplicaCap("0")(m.search(spark, qs, 500, 1))
+    val wide = overCapSearch(m, qs, 500, 1)
     same(wide, distributed(packed, qs, 500, 1), "search k=500")
     assert(rows(wide).groupBy(_._1).values.forall(_.length < 500))
-    same(withReplicaCap("0")(m.search(spark, Array.empty, 10, 3)),
+    same(overCapSearch(m, Array.empty, 10, 3),
       distributed(packed, Array.empty, 10, 3), "empty query set")
     same(m.searchFiltered(spark, qs, 10, 3, evenIds),
       distributed(m.probedRuns(m.allowedOnly(evenIds)), qs, 10, 3), "filtered")
@@ -958,44 +976,48 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("search runs ONE Spark job and shuffles nothing; the result is local") {
-    // the per-partition path: with the replica off
-    withReplicaCap("0") {
-      val m = operators.AnnQueries.model(spark, sf)
-      val qs = operators.VectorQueries.queryVectors(spark, sf, 5)
-      // a fresh model over the same index: its packed runs are not filled
-      // yet, so its first search packs them inside that one job
-      val adhoc = new graft.ann.IVFModel(m.params, m.rotator, m.centroids,
-        m.rotatedCentroids, m.index)
-      val dir = java.nio.file.Files.createTempDirectory("ivf_one_job").toString
-      m.save(dir) // no tombstones: the loaded index is a plain parquet read
-      val loaded = graft.ann.IVFModel.load(spark, dir)
-      for ((model, what) <- Seq(adhoc -> "first search", adhoc -> "second search",
-          loaded -> "loaded model")) {
-        var res: org.apache.spark.sql.DataFrame = null
-        val (jobs, shuffle, _) = jobsAndShuffleBytes {
-          res = model.search(spark, qs, 10, 12)
-          assert(res.collect().length == qs.length * 10)
-        }
-        assert(jobs.length == 1,
-          s"$what: search + collect ran ${jobs.length} Spark jobs, want 1: ${jobs.mkString("; ")}")
-        assert(shuffle == 0L, s"$what: search moved $shuffle shuffle bytes, want 0")
-        val plan = res.queryExecution.executedPlan.toString
-        assert(plan.contains("LocalTableScan"), s"$what: result is not local:\n$plan")
+    // the over-cap path: one scan job per call. (The public search picks
+    // it after the layout job, so over the cap a fresh model's first
+    // call runs two jobs: pinned below as the layout's one job.)
+    val m = operators.AnnQueries.model(spark, sf)
+    val qs = operators.VectorQueries.queryVectors(spark, sf, 5)
+    // a fresh model over the same index: its packed runs are not filled
+    // yet, so its first search packs them inside that one job
+    val adhoc = new graft.ann.IVFModel(m.params, m.rotator, m.centroids,
+      m.rotatedCentroids, m.index)
+    val dir = java.nio.file.Files.createTempDirectory("ivf_one_job").toString
+    m.save(dir) // no tombstones: the loaded index is a plain parquet read
+    val loaded = graft.ann.IVFModel.load(spark, dir)
+    for ((model, what) <- Seq(adhoc -> "first search", adhoc -> "second search",
+        loaded -> "loaded model")) {
+      var res: org.apache.spark.sql.DataFrame = null
+      val (jobs, shuffle, _) = jobsAndShuffleBytes {
+        res = overCapSearch(model, qs, 10, 12)
+        assert(res.collect().length == qs.length * 10)
       }
-      // the scan reads whole packed partitions, but graft.search.entries
-      // counts only the entries of the clusters the call probes
-      val entries = graft.ann.IVFIndex.searchAccs(spark).entries
-      val one = qs.take(1)
-      val probed = graft.ann.CentroidRouter.rankFlat(m.rotatedCentroids,
-        m.rotator.rotate(one(0)._2), 2)
-      val before = entries.value
-      adhoc.search(spark, one, 10, 2)
-      assert(entries.value - before == m.index
-        .filter(org.apache.spark.sql.functions.col("cluster_id").isin(probed.toIndexedSeq: _*))
-        .count(), "graft.search.entries counted clusters the call did not probe")
-      adhoc.freeSearchCaches()
-      loaded.freeSearchCaches()
+      assert(jobs.length == 1,
+        s"$what: search + collect ran ${jobs.length} Spark jobs, want 1: ${jobs.mkString("; ")}")
+      assert(shuffle == 0L, s"$what: search moved $shuffle shuffle bytes, want 0")
+      val plan = res.queryExecution.executedPlan.toString
+      assert(plan.contains("LocalTableScan"), s"$what: result is not local:\n$plan")
     }
+    val fresh = new graft.ann.IVFModel(m.params, m.rotator, m.centroids,
+      m.rotatedCentroids, m.index)
+    val (layoutJobs, _, _) = jobsAndShuffleBytes(fresh.layout())
+    assert(layoutJobs.length == 1,
+      s"a fresh model's layout ran ${layoutJobs.length} Spark jobs, want 1: ${layoutJobs.mkString("; ")}")
+    // the scan reads whole packed partitions, but graft.search.entries
+    // counts only the entries of the clusters the call probes
+    val entries = graft.ann.IVFIndex.searchAccs(spark).entries
+    val one = qs.take(1)
+    val probed = graft.ann.CentroidRouter.rankFlat(m.rotatedCentroids,
+      m.rotator.rotate(one(0)._2), 2)
+    val before = entries.value
+    overCapSearch(adhoc, one, 10, 2)
+    assert(entries.value - before == m.index
+      .filter(org.apache.spark.sql.functions.col("cluster_id").isin(probed.toIndexedSeq: _*))
+      .count(), "graft.search.entries counted clusters the call did not probe")
+    Seq(adhoc, loaded, fresh).foreach(_.freeSearchCaches())
   }
 
   test("searchHighAcc rejects overFetch < 1 and an overflowing k * overFetch") {
@@ -1056,7 +1078,7 @@ class AnnSpec extends AnyFunSuite {
 
   test("searchAll at k=100 returns the pinned raw rows") {
     // the batch path's raw (query_id, neighbor_id, rk) list at sf0.001.
-    // With the replica off it is pinned from the row-per-candidate merge
+    // Over the replica cap it is pinned from the row-per-candidate merge
     // it replaced: the scan's sorted lists, their linear merge and the
     // paired rerank must not move a row. Under the cap, one pool per
     // query (checked against a sequential one-pool reference in the
@@ -1064,14 +1086,15 @@ class AnnSpec extends AnyFunSuite {
     // this shape (the prune skips no entry either bound would keep).
     val m = operators.AnnQueries.model(spark, sf)
     val q = Tables.embeddings(spark, sf).select("vec_id", "embedding")
-    for ((cap, pinned) <- Seq(
-        "0" -> (49982L, "32b7a0315d3b5080dd81c75edae098d66bd40cf39d32250aefa5c2b717b2db60"),
-        DefaultReplicaCap ->
-          (49982L, "aebe01f46c54ce6eb1218ce22fd879c75a27db2f12fee8d48dba102b9570070a"));
+    for ((path, plan, pinned) <- Seq[(String, graft.ann.IVFModel => org.apache.spark.sql.DataFrame,
+        (Long, String))](
+        ("over the cap", overCapSearchAll(_, q, 100, 4),
+          (49982L, "32b7a0315d3b5080dd81c75edae098d66bd40cf39d32250aefa5c2b717b2db60")),
+        ("replica", _.searchAll(spark, q, 100, 4),
+          (49982L, "aebe01f46c54ce6eb1218ce22fd879c75a27db2f12fee8d48dba102b9570070a")));
         queryBits <- Seq(0, 14)) {
-      assert(withReplicaCap(cap)(Golden.hashOf(m.withQueryBits(queryBits)
-        .searchAll(spark, q, 100, 4).orderBy("query_id", "rk"), Set.empty)) == pinned,
-        s"searchAll (queryBits $queryBits, cap $cap) drifted from its pinned rows")
+      assert(Golden.hashOf(plan(m.withQueryBits(queryBits)).orderBy("query_id", "rk"),
+        Set.empty) == pinned, s"searchAll (queryBits $queryBits, $path) drifted from its pinned rows")
     }
   }
 
@@ -1152,31 +1175,42 @@ class AnnSpec extends AnyFunSuite {
     assert(shuffle == 0L, s"searchAll + collect moved $shuffle shuffle bytes, want 0")
   }
 
-  test("spark.graft.annReplicaMaxBytes: a malformed or negative value fails by name, before any job") {
+  test("a repeated query id: one top-k per occurrence in a replica searchAll, else one merged list") {
+    // query ids must be distinct (search/searchAll scaladoc); this pins
+    // what each path returns when one is not
     import spark.implicits._
-    val key = graft.ann.IVFModel.ReplicaMaxBytesKey
     val m = operators.AnnQueries.model(spark, sf)
-    val qs = operators.VectorQueries.queryVectors(spark, sf, 2)
-    val q = qs.toSeq.toDF("vec_id", "embedding")
-    for (bad <- Seq("abc", "-1")) {
-      val (jobs, _, _) = jobsAndShuffleBytes {
-        withReplicaCap(bad) {
-          for (call <- Seq[() => Any](() => m.search(spark, qs, 10, 4),
-              () => m.searchAll(spark, q, 10, 4))) {
-            val e = intercept[IllegalArgumentException](call())
-            assert(e.getMessage.contains(key) && e.getMessage.contains(bad), e.getMessage)
-          }
-        }
-      }
-      assert(jobs.isEmpty, s"$key=$bad ran ${jobs.length} jobs before failing")
+    val qs = operators.VectorQueries.queryVectors(spark, sf, 3)
+    val twice = qs :+ qs(0)
+    val twiceDF = twice.toSeq.toDF("vec_id", "embedding")
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.as[(Long, Long, Int)].collect().toSeq.sortBy(r => (r._1, r._3, r._2))
+    val key = qs(0)._1
+    /** `once` with `key`'s list as the merge of two equal copies of it:
+      * k rows, each neighbor twice. */
+    def merged(once: Seq[(Long, Long, Int)]) = {
+      val (dup, rest) = once.partition(_._1 == key)
+      assert(dup.length == 10)
+      (rest ++ dup.take(5).flatMap(r => Seq(r._2, r._2)).zipWithIndex.map {
+        case (id, i) => (key, id, i + 1)
+      }).sortBy(r => (r._1, r._3, r._2))
     }
+    for ((path, search) <- Seq[(String, Array[(Long, Array[Float])] => org.apache.spark.sql.DataFrame)](
+        "search (replica)" -> (m.search(spark, _, 10, 4)),
+        "search over the cap" -> (overCapSearch(m, _, 10, 4)),
+        "searchAll over the cap" -> (a => overCapSearchAll(m, a.toSeq.toDF("vec_id", "embedding"), 10, 4))))
+      assert(rows(search(twice)) == merged(rows(search(qs))), s"$path: the occurrences merge")
+    val once = rows(m.searchAll(spark, qs.toSeq.toDF("vec_id", "embedding"), 10, 4))
+    assert(rows(m.searchAll(spark, twiceDF, 10, 4)) ==
+      (once ++ once.filter(_._1 == key)).sortBy(r => (r._1, r._3, r._2)),
+      "searchAll (replica): one top-k per occurrence")
   }
 
   test("searchAll shuffles ≤ partitions × queries to merge, probed partitions to route") {
-    // the per-partition plan, with the replica off: one (query, sorted
-    // top-k list) row per partition reaches the merge — never one row
-    // per candidate; and a query is routed only to the runs partitions
-    // that hold one of its probed clusters
+    // the plan over the replica cap: one (query, sorted top-k list) row
+    // per partition reaches the merge — never one row per candidate;
+    // and a query is routed only to the runs partitions that hold one
+    // of its probed clusters
     import spark.implicits._
     val m = operators.AnnQueries.model(spark, sf)
     val q = Tables.embeddings(spark, sf).select("vec_id", "embedding")
@@ -1191,9 +1225,9 @@ class AnnSpec extends AnyFunSuite {
     }.sum
     assert(routes < parts * nQ, s"every query probes every partition: the bound $routes is vacuous")
     var rows = 0L
-    val (_, _, records) = withReplicaCap("0")(jobsAndShuffleBytes {
-      rows = m.searchAll(spark, q, 100, 4).count()
-    })
+    val (_, _, records) = jobsAndShuffleBytes {
+      rows = overCapSearchAll(m, q, 100, 4).count()
+    }
     assert(rows > nQ * 10, s"searchAll returned $rows rows")
     val (route, merge) = records.partition(_._1("searchAll.route"))
     val (routed, merged) = (route.map(_._2).sum, merge.map(_._2).sum)
@@ -1208,7 +1242,10 @@ class AnnSpec extends AnyFunSuite {
     val m = operators.AnnQueries.model(spark, sf)
     val q = Tables.embeddings(spark, sf).select("vec_id", "embedding")
     m.search(spark, operators.VectorQueries.queryVectors(spark, sf, 2), 10, 4) // warm the runs
-    def cached() = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    def cached() = {
+      org.apache.spark.GraftBlocks.settle(spark.sparkContext)
+      spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    }
     val before = cached()
     assert(m.searchAll(spark, q, 100, 4).collect().nonEmpty)
     assert(cached() == before, s"searchAll left cached RDDs: ${cached() -- before}")
