@@ -403,8 +403,8 @@ object ScaleProbe {
     force(model.search(spark, queries, k = 100, nprobe = 32))
     force(model.withQueryBits(14).search(spark, queries, k = 100, nprobe = 32))
     // float vs queryBits=14 timed BACK-TO-BACK (same JVM/GC state) —
-    // the quantized path swaps per-set-bit float adds for packed
-    // nibble-LUT lookups on the estimate phase
+    // the quantized path swaps per-set-bit float adds for one
+    // byte-indexed LUT lookup per 8 dims on the estimate phase
     val (_, tSearch) = time(force(model.search(spark, queries, k = 100, nprobe = 32)))
     val (_, tSearchQ) = time(force(
       model.withQueryBits(14).search(spark, queries, k = 100, nprobe = 32)))

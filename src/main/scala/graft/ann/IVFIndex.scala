@@ -162,7 +162,8 @@ object IVFIndex {
     * index's only on-disk form is its entries, packed in memory by
     * [[packRuns]] and recovered by [[unpackRuns]]. */
   private[graft] final class PackedRun(
-      val words: Int, val dim: Int, val exBits: Int) extends Serializable {
+      val words: Int, val dim: Int, val exBits: Int, initialRows: Int = 64)
+      extends Serializable {
     /** exBits ≤ 7 ⇒ F_d = bit·2^exBits + code fits a byte: pre-unpack
       * the full code at pack time (`exF`, dim bytes/entry) so rerank
       * streams bytes; exBits = 8 (B=9) keeps the bit-packed ex_code
@@ -182,7 +183,7 @@ object IVFIndex {
     // initial cap clamped to maxRows: when the Int-safety bound drops
     // maxRows under 64 (pathological dim), the backing arrays must
     // never exceed the row bound (cap * dim could otherwise overflow)
-    private var cap = math.min(64, maxRows)
+    private var cap = math.min(math.max(initialRows, 1), maxRows)
     var ids = new Array[Long](cap)
     var sign = new Array[Long](cap * words)
     var x2 = new Array[Float](cap)
@@ -195,9 +196,7 @@ object IVFIndex {
     def bytes: Long = n * (8L * (words + 1) + 16L) +
       (if (packExF) n.toLong * dim else exCode.iterator.take(n).map(_.length.toLong).sum)
     def add(e: Entry): Unit = {
-      require(n < maxRows,
-        s"PackedRun overflow: $maxRows rows (dim=$dim) — caller must roll over on isFull")
-      if (n == cap) grow()
+      nextRow()
       ids(n) = e.id
       System.arraycopy(e.sign_bits, 0, sign, n * words, words)
       x2(n) = e.x2
@@ -207,6 +206,25 @@ object IVFIndex {
       if (packExF) RaBitQ.packF(e.sign_bits, e.ex_code, dim, exBits, exF, n * dim)
       else exCode(n) = e.ex_code
       n += 1
+    }
+    /** Append row `i` of `src` (same words, dim and exBits), every
+      * field copied as stored. */
+    def addRow(src: PackedRun, i: Int): Unit = {
+      nextRow()
+      ids(n) = src.ids(i)
+      System.arraycopy(src.sign, i * words, sign, n * words, words)
+      x2(n) = src.x2(i)
+      facIp(n) = src.facIp(i)
+      facErr(n) = src.facErr(i)
+      xipnorm(n) = src.xipnorm(i)
+      if (packExF) System.arraycopy(src.exF, i * dim, exF, n * dim, dim)
+      else exCode(n) = src.exCode(i)
+      n += 1
+    }
+    private def nextRow(): Unit = {
+      require(n < maxRows,
+        s"PackedRun overflow: $maxRows rows (dim=$dim) — caller must roll over on isFull")
+      if (n == cap) grow()
     }
     private def grow(): Unit = {
       cap = math.min(cap << 1, maxRows)
@@ -353,7 +371,7 @@ object IVFIndex {
           if (rBuf == null) {
             val d = rotCents(cid).length
             rBuf = new Array[Float](d)
-            if (queryBits > 0) lutBuf = new Array[Int](((d + 63) >> 6) << 8)
+            if (queryBits > 0) lutBuf = new Array[Int](RaBitQ.lutLength(d))
           }
           val qc = RaBitQ.prepareQueryInto(
             qs(qi)._2, rotCents(cid), queryBits, rBuf, lutBuf)
@@ -466,10 +484,11 @@ object IVFIndex {
       // Search-time knob, NOT index state (never persisted): 0 = exact
       // float query residual on the estimate phase (default; strictly
       // more accurate than the reference); >0 = scalar-quantize the
-      // residual to this many bits and accumulate via packed nibble
-      // LUTs — the reference's BQUERY=14 FastScan mechanism
-      // (Searcher.hpp:16,122-172), trading a sliver of estimate
-      // accuracy for a cheaper per-entry hot loop.
+      // residual to this many bits and accumulate Σu through one
+      // 256-entry table per 8 dims (RaBitQ.QueryLut) — the reference's
+      // BQUERY=14 FastScan mechanism (Searcher.hpp:16,122-172), whose
+      // tables are 4-bit; trading a sliver of estimate accuracy for a
+      // cheaper per-entry hot loop.
       queryBits: Int = 0,
       // k-means|| init rounds: each round D²-samples ~2k candidates
       // AND the collected candidate set feeds a SERIAL driver-side
@@ -1117,11 +1136,16 @@ object IVFModel {
   /** The replica cap: a model keeps a replica ([[IVFModel.replica]])
     * only while its runs' packed bytes are at most this, 1/16 of the
     * driver's max heap (256 MB at `-Xmx4g`). The cap bounds memory, not
-    * speed. Measured at d=384, B=4, K=32, nprobe 8, local[4], `-Xmx4g`,
-    * with 239 MB of packed runs:
-    *  - building the replica raised the live heap by ~2.4× its packed
-    *    bytes, with 2.3 GB of heap in use before the collection that
-    *    freed the garbage;
+    * speed. Measured at d=384, B=4, K=32, nprobe 8, local[4], `-Xmx4g`:
+    *  - at 59.8 MB of packed runs, building the replica from the
+    *    collected runs took 0.35 s and peaked at 596 MB of heap in use;
+    *    G1's heap after a pause peaked 184 MB (3.1× the packed bytes)
+    *    above the pre-build heap, dead humongous arrays (every column
+    *    over 1 MB) included, and the replica then held 76 MB (1.3×);
+    *  - at 239 MB, the replica's first construction (every entry
+    *    unpacked to an object, sorted and re-packed) raised the live
+    *    heap by ~2.4× its packed bytes, with 2.3 GB of heap in use
+    *    before the collection that freed the garbage;
     *  - a model searched by both `search` and `searchAll` then held
     *    ~2.4× for its life (the replica and its broadcast's serialized
     *    pieces), beside its cached runs: at the cap, about a fifth
@@ -1192,6 +1216,50 @@ object IVFModel {
       nClusters: Int): RDD[IVFIndex.Runs] =
     pack(entries, dim, exBits, nClusters).map(trimmed)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** The replica ([[IVFModel.replica]]) of a model's runs partitions
+    * `parts`, in partition order: per cluster, its rows of every
+    * partition and run copied into fresh exactly-sized runs in id order
+    * (ties in partition, run and row order), rolling over at
+    * [[IVFIndex.PackedRun.maxRows]] — field for field what
+    * [[IVFIndex.packRuns]] makes of the unpacked entries sorted by
+    * (cluster, id), with no entry objects. The rows are copied cluster
+    * by cluster and each cluster's source runs are dropped from `parts`
+    * as they are copied, so the build holds about the collected runs
+    * plus one cluster beyond them. A loaded model's runs need not be in
+    * id order (appended batches, the delete anti-join), so each
+    * cluster's rows are ordered by a sorted permutation. */
+  private[ann] def replicaOf(parts: Array[IVFIndex.Runs], nClusters: Int): IVFIndex.Runs = {
+    val out: IVFIndex.Runs = new Array(nClusters)
+    var c = 0
+    while (c < nClusters) {
+      val src = parts.iterator.flatMap(p => Option(p(c)).iterator.flatten).toArray
+      val total = src.iterator.map(_.n).sum
+      if (total > 0) {
+        val runOf = new Array[Int](total)
+        val rowOf = new Array[Int](total)
+        val ids = new Array[Long](total)
+        var r = 0
+        for (s <- src.indices; i <- 0 until src(s).n) {
+          runOf(r) = s; rowOf(r) = i; ids(r) = src(s).ids(i); r += 1
+        }
+        val order = Array.range(0, total).sortBy(ids(_)) // a stable sort
+        val (words, dim, exBits) = (src(0).words, src(0).dim, src(0).exBits)
+        val rs = scala.collection.mutable.ArrayBuffer.empty[IVFIndex.PackedRun]
+        var k = 0
+        while (k < total) {
+          if (rs.isEmpty || rs.last.isFull)
+            rs += new IVFIndex.PackedRun(words, dim, exBits, total - k)
+          rs.last.addRow(src(runOf(order(k))), rowOf(order(k)))
+          k += 1
+        }
+        out(c) = rs
+      }
+      parts.foreach(_(c) = null)
+      c += 1
+    }
+    out
+  }
 
   /** `runs` with every run trimmed (grow() overshoots up to 2×): the
     * form a model keeps for its lifetime. */
@@ -1563,9 +1631,9 @@ final class IVFModel private[graft] (
     })
 
   /** The model's REPLICA: every cluster's entries in id order, packed
-    * once on the driver ([[IVFIndex.packRuns]], from the entries of
-    * [[runs]] sorted by (cluster, id), so it is a pure function of the
-    * entries) and kept for the model's lifetime, shared by its
+    * once on the driver from the collected [[runs]]
+    * ([[IVFModel.replicaOf]], so it is a pure function of the entries)
+    * and kept for the model's lifetime, shared by its
     * [[withQueryBits]] copies. A query scanning it keeps ONE pool
     * across all its probed clusters (the reference's result pool,
     * `inc/index/Pool.hpp`), in centroid-rank and then id order, so its
@@ -1577,12 +1645,8 @@ final class IVFModel private[graft] (
   private[graft] def replica(): Option[IVFIndex.Runs] =
     if (layout().packedBytes > IVFModel.replicaMaxBytes) None
     else Some(Option(shared.replica).getOrElse(shared.synchronized {
-      if (shared.replica == null) {
-        val entries = runs.mapPartitions(_.flatMap(IVFIndex.unpackRuns)).collect()
-        shared.replica = IVFModel.trimmed(IVFIndex.packRuns(
-          entries.sortBy(e => (e.cluster_id, e.id)).iterator,
-          rotator.paddedDim, params.exBits, numClusters))
-      }
+      if (shared.replica == null)
+        shared.replica = IVFModel.replicaOf(runs.collect(), numClusters)
       shared.replica
     }))
 

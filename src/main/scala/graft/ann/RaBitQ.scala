@@ -1,7 +1,5 @@
 package graft.ann
 
-import scala.collection.mutable
-
 /** RaBitQ + Extended-RaBitQ quantization and distance estimation.
   *
   * Clean-room re-expression of the reference semantics
@@ -141,20 +139,49 @@ object RaBitQ {
     val cur = new Array[Int](d)
     var sqrDen = d * 0.25
     var num = 0.0
-    // min-heap of (next threshold t, dim)
-    val pq = mutable.PriorityQueue.empty[(Double, Int)](Ordering.by[(Double, Int), Double](_._1).reverse)
+    // min-heap of (next threshold t, dim): a primitive binary heap, at
+    // most one pending threshold per dim, 1-based (slot 0 unused). Its
+    // sift comparisons are scala.collection.mutable.PriorityQueue's
+    // under a t-reversed ordering, so equal thresholds pop in the same
+    // order and the selected t is the same double.
+    val heapT = new Array[Double](d + 1)
+    val heapDim = new Array[Int](d + 1)
+    var size = 0
+    def push(t: Double, dim: Int): Unit = {
+      size += 1
+      var k = size
+      while (k > 1 && heapT(k >> 1) > t) {
+        heapT(k) = heapT(k >> 1); heapDim(k) = heapDim(k >> 1)
+        k >>= 1
+      }
+      heapT(k) = t; heapDim(k) = dim
+    }
     var i = 0
     while (i < d) {
       cur(i) = (tStart * absRes(i) + eps).toInt
       sqrDen += cur(i).toDouble * cur(i) + cur(i)
       num += (cur(i) + 0.5) * absRes(i)
-      if (absRes(i) > 0) pq.enqueue(((cur(i) + 1).toDouble / absRes(i), i))
+      if (absRes(i) > 0) push((cur(i) + 1).toDouble / absRes(i), i)
       i += 1
     }
     var maxIp = 0.0
     var bestT = 0.0
-    while (pq.nonEmpty) {
-      val (curT, dim) = pq.dequeue()
+    while (size > 0) {
+      val curT = heapT(1)
+      val dim = heapDim(1)
+      // pop: the last slot moves to the root and sifts down, to the
+      // right child only when the left's t is greater
+      val lastT = heapT(size); val lastDim = heapDim(size)
+      size -= 1
+      var k = 1
+      var sifting = true
+      while (sifting && 2 * k <= size) {
+        var j = 2 * k
+        if (j < size && heapT(j) > heapT(j + 1)) j += 1
+        if (lastT <= heapT(j)) sifting = false
+        else { heapT(k) = heapT(j); heapDim(k) = heapDim(j); k = j }
+      }
+      heapT(k) = lastT; heapDim(k) = lastDim
       cur(dim) += 1
       sqrDen += 2.0 * cur(dim)
       num += absRes(dim)
@@ -162,7 +189,7 @@ object RaBitQ {
       if (curIp > maxIp) { maxIp = curIp; bestT = curT }
       if (cur(dim) < maxLevel) {
         val tNext = (cur(dim) + 1).toDouble / absRes(dim)
-        if (tNext < tEnd) pq.enqueue((tNext, dim))
+        if (tNext < tEnd) push(tNext, dim)
       }
     }
 
@@ -186,10 +213,10 @@ object RaBitQ {
     * S = Σ r_d. With `queryBits = 0` (default) the estimate phase uses
     * r exactly — same estimator, strictly less estimation error than
     * the reference. With `queryBits > 0` it scalar-quantizes r and
-    * pre-packs nibble LUTs (`qlut`), the JVM re-expression of the
-    * reference's BQUERY=14 + pack_LUT FastScan mechanism
-    * (Searcher.hpp:122-172) — the speed-for-accuracy knob on the
-    * per-entry hot loop. */
+    * builds byte-indexed subset-sum tables (`qlut`), the JVM
+    * re-expression of the reference's BQUERY=14 + pack_LUT FastScan
+    * mechanism (Searcher.hpp:122-172) — the speed-for-accuracy knob on
+    * the per-entry hot loop. */
   final case class QueryCluster(
       residual: Array[Float],
       sumRes: Double,
@@ -198,13 +225,24 @@ object RaBitQ {
     val y: Double = math.sqrt(sqrY)
   }
 
-  /** Scalar-quantized query residual, packed for nibble accumulation:
-    * r_d ≈ vl + width·u_d, and `lut(g*16 + mask)` = Σ u over the set
-    * bits of `mask` within dim group g (4 dims per group — the JVM
-    * analogue of the reference's 4-bit LUT rows, Searcher.hpp:130-172).
-    * Groups are padded to full sign-bit words so the accumulation loop
-    * needs no tail handling. */
-  final case class QueryLut(lut: Array[Int], vl: Float, width: Float)
+  /** Scalar-quantized query residual, packed for byte accumulation:
+    * r_d ≈ vl + width·u_d, and `lut(g*256 + b)` = Σ u over the set
+    * bits of byte `b` within dim group g (8 dims per group, one sign
+    * byte). The reference's tables are 4-bit and sit in SIMD shuffle
+    * registers (Searcher.hpp:130-172); the JVM reads them from memory,
+    * where one load per 8 dims beats two per 8. Groups are padded to
+    * full sign-bit words so the accumulation loop needs no tail
+    * handling. [[lutLength]] sizes the table, [[level]] reads u_d. */
+  final case class QueryLut(lut: Array[Int], vl: Float, width: Float) {
+    /** u_d, the quantized level of dim d: the entry of the byte with
+      * only d's bit set. */
+    def level(d: Int): Int = lut(((d >> 3) << 8) + (1 << (d & 7)))
+  }
+
+  /** Ints in a [[QueryLut]] table for a `dim`-wide residual: 256 per 8
+    * dims, dims padded to whole 64-bit sign words (2048 per word; 48 KB
+    * at dim 384). */
+  def lutLength(dim: Int): Int = ((dim + 63) >> 6) << 11
 
   def prepareQuery(
       qRot: Array[Float],
@@ -213,14 +251,15 @@ object RaBitQ {
     prepareQueryInto(qRot, cRot, queryBits, null, null)
 
   /** [[prepareQuery]] with caller-owned scratch: `rBuf` (dim floats)
-    * and `lutBuf` (16·16·ceil(dim/64) ints) are filled in place when
+    * and `lutBuf` ([[lutLength]](dim) ints) are filled in place when
     * non-null. The search hot loop prepares once per (query, cluster,
     * partition) — ~320k calls per 2048-query chunk at the reference
-    * shape, whose fresh 30 KB of arrays each (residual + LUT) put
-    * ~10 GB/chunk of allocation on the GC (measured as the dominant
-    * share of the 17 s chunk wall). Query-major scanning finishes
-    * each prepared query before the next, so one scratch pair per
-    * partition is safe. The returned QueryCluster aliases the
+    * shape (d=1536), where fresh arrays per call (a 6 KB residual and
+    * a 192 KB table) would put ~60 GB per chunk of allocation on the
+    * GC; fresh arrays of 30 KB per call already measured as the
+    * dominant share of a 17 s chunk wall. Query-major scanning
+    * finishes each prepared query before the next, so one scratch pair
+    * per partition is safe. The returned QueryCluster aliases the
     * buffers — callers must not retain it across prepares (the
     * partition loop does not). */
   def prepareQueryInto(
@@ -244,9 +283,11 @@ object RaBitQ {
 
   /** Quantize the residual to `bits`-bit ints (reference
     * data_range16 + scalar_quantize16, space.hpp:608-659) and build
-    * the per-4-dim subset-sum LUTs (reference pack_LUT). Cost is
-    * O(d·4) per (query, cluster), amortized over every entry of the
-    * cluster scan. */
+    * the per-8-dim subset-sum tables: each group's 256 entries are the
+    * outer sum of the 16-entry subset sums of its low and high 4 dims
+    * (the reference's pack_LUT rows). Each u_d is computed once. Cost
+    * is 255 adds per 8 dims per (query, cluster), amortized over every
+    * entry of the cluster scan. */
   private[graft] def buildLut(
       r: Array[Float], bits: Int, lutBuf: Array[Int] = null): QueryLut = {
     val d = r.length
@@ -262,23 +303,26 @@ object RaBitQ {
     while (i < d) { val v = r(i); if (v < vl) vl = v; if (v > vr) vr = v; i += 1 }
     val levels = (1 << bits) - 1
     val width = if (vr > vl) (vr - vl) / levels else 1.0f
-    val words = (d + 63) >> 6
-    val groups = words << 4 // 16 groups of 4 dims per 64-bit word
-    val lut =
-      if (lutBuf != null && lutBuf.length == (groups << 4)) lutBuf
-      else new Array[Int](groups << 4)
-    var g = 0
-    while (g < groups) {
-      val base = g << 2
-      val off = g << 4
-      var m = 1
-      while (m < 16) {
-        val dim = base + Integer.numberOfTrailingZeros(m)
+    val len = lutLength(d)
+    val lut = if (lutBuf != null && lutBuf.length == len) lutBuf else new Array[Int](len)
+    var off = 0
+    while (off < len) {
+      val base = off >> 5 // first dim of the group: 8 dims per 256 entries
+      lut(off) = 0
+      // subset-sum doubling: bit j's entries are those without it plus
+      // u_j. Bits 0-3 make the low dims' 16-entry half-table; bits 4-7
+      // then add the high dims' subset sums to it, the outer sum of the
+      // two half-tables
+      var j = 0
+      while (j < 8) {
+        val dim = base + j
         val u = if (dim < d) math.round((r(dim) - vl) / width) else 0
-        lut(off + m) = lut(off + (m & (m - 1))) + u
-        m += 1
+        val half = 1 << j
+        var b = 0
+        while (b < half) { lut(off + half + b) = lut(off + b) + u; b += 1 }
+        j += 1
       }
-      g += 1
+      off += 256
     }
     QueryLut(lut, vl, width)
   }
@@ -320,19 +364,13 @@ object RaBitQ {
     x2 + q.sqrY - ip * facIp
   }
 
-  /** LUT-accumulated estimate (reference scan_one_block's
-    * accumulate_robust over the packed LUTs, Searcher.hpp:176-216):
-    * Σ_{set bits} r_d ≈ width·Σ u_d + vl·popcount, with Σ u_d read
-    * nibble-by-nibble from the subset-sum tables — 16 adds + 16 table
-    * loads per 64 dims instead of one float add per set bit. Requires
-    * `q.qlut != null` (prepareQuery with queryBits > 0). */
-  /** Shared nibble-accumulation kernel for the LUT estimate and its
+  /** Shared byte-accumulation kernel for the LUT estimate and its
     * lower bound (one copy: a fix applied to the estimate but not the
     * pruning bound — or vice versa — would silently desynchronize
     * them). Returns (sum << 32) | popcount packed in one Long so the
-    * per-candidate hot path stays allocation-free.
-    * Int accumulator: u ≤ 2^16-1 and ≤ 4 dims per lookup, so even
-    * d = 4096 stays far below Int overflow. */
+    * per-candidate hot path stays allocation-free. 8 table loads per
+    * 64-bit sign word, one per byte. The Int accumulator cannot wrap:
+    * [[buildLut]] bounds dim·(2^queryBits−1) by Int.MaxValue. */
   private def lutSumPop(lut: Array[Int], signBits: Array[Long]): Long =
     lutSumPop(lut, signBits, 0, signBits.length)
 
@@ -340,7 +378,7 @@ object RaBitQ {
     * `base` inside a run-contiguous array (the block-major packed
     * layout IVFModel.scan builds per partition — streaming longs instead
     * of chasing one small array object per entry). The per-entry
-    * API above delegates here, so the nibble arithmetic exists once. */
+    * API above delegates here, so the byte arithmetic exists once. */
   private def lutSumPop(
       lut: Array[Int], signBits: Array[Long], base: Int, words: Int): Long = {
     var sum = 0
@@ -349,12 +387,12 @@ object RaBitQ {
     while (w < words) {
       var bits = signBits(base + w)
       pop += java.lang.Long.bitCount(bits)
-      var off = w << 8 // 16 groups × 16 entries per word
+      var off = w << 11 // 8 groups × 256 entries per word
       var n = 0
-      while (n < 16) {
-        sum += lut(off + (bits & 15L).toInt)
-        bits >>>= 4
-        off += 16
+      while (n < 8) {
+        sum += lut(off + (bits & 255L).toInt)
+        bits >>>= 8
+        off += 256
         n += 1
       }
       w += 1
@@ -362,6 +400,12 @@ object RaBitQ {
     (sum.toLong << 32) | pop.toLong
   }
 
+  /** LUT-accumulated estimate (reference scan_one_block's
+    * accumulate_robust over the packed LUTs, Searcher.hpp:176-216):
+    * Σ_{set bits} r_d ≈ width·Σ u_d + vl·popcount, with Σ u_d read
+    * byte-by-byte from the subset-sum tables — 8 adds + 8 table loads
+    * per 64 dims instead of one float add per set bit. Requires
+    * `q.qlut != null` (prepareQuery with queryBits > 0). */
   def estimateDistLut(q: QueryCluster, signBits: Array[Long], x2: Float,
       facIp: Float): Double = {
     val ql = q.qlut

@@ -326,13 +326,14 @@ object AnnQueries {
   }
 
   /** b6b: the QUANTIZED-QUERY estimator — the reference's BQUERY=14
-    * scalar-quantize + 4-bit-LUT accumulation mechanism
-    * (Searcher.hpp:16,122-172 pack_LUT + accumulate_robust), the
+    * scalar-quantize + LUT accumulation mechanism (Searcher.hpp:
+    * 16,122-172 pack_LUT + accumulate_robust; graft's tables are
+    * byte-indexed, the reference's 4-bit), the
     * arithmetic behind b16's search path — surfaced per entry like b6:
     * estimated distance and the quantization-widened lower bound for
     * query 0 against its nearest cluster at queryBits=14.
     * Hash-certified: the per-dim quantized query codes u_d (extracted
-    * from the single-bit LUT rows the kernel actually reads), vl,
+    * from the single-bit LUT entries the kernel actually reads), vl,
     * width, and the query scalars persist as a sidecar next to b6's
     * entry codes, and the oracle recomputes
     * ip = width·⟨u,bits⟩ + vl·popcount − S/2, est = x²+y² − ip·facIp,
@@ -353,10 +354,9 @@ object AnnQueries {
     val dim = m.rotator.paddedDim
     val entries = m.index.filter(col("cluster_id") === nearest)
     if (OracleSide.enabled) {
-      // u_d read back from the LUT's single-bit rows — the exact ints
-      // the scan kernel accumulates, not a re-derivation
-      val u = Array.tabulate(dim)(d =>
-        qc.qlut.lut(((d >> 2) << 4) + (1 << (d & 3))))
+      // u_d read back from the LUT's single-bit entries — the exact
+      // ints the scan kernel accumulates, not a re-derivation
+      val u = Array.tabulate(dim)(qc.qlut.level)
       OracleSide.write(
         Seq((u.toSeq, qc.qlut.vl.toDouble, qc.qlut.width.toDouble,
           qc.sumRes, qc.sqrY, qc.y))

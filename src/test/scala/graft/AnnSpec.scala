@@ -207,6 +207,78 @@ class AnnSpec extends AnyFunSuite {
     }
   }
 
+  /** The threshold scan of [[RaBitQ.fastQuantizeT]] over
+    * `scala.collection.mutable.PriorityQueue`, as the reference
+    * `fast_quantize` reads (Quantizer.hpp:138-219): the spec's
+    * reference for the primitive heap. */
+  private def fastQuantizeTRef(absRes: Array[Double], exBits: Int): (Array[Int], Double, Double) = {
+    val d = absRes.length
+    val maxLevel = (1 << exBits) - 1
+    val maxO = absRes.max
+    if (maxO <= 0.0) return (new Array[Int](d), 1.0, 0.0)
+    val eps = 1e-5
+    val tStart = (maxLevel / 3).toDouble / maxO
+    val tEnd = (maxLevel + 10).toDouble / maxO
+    val cur = Array.tabulate(d)(i => (tStart * absRes(i) + eps).toInt)
+    var sqrDen = d * 0.25
+    var num = 0.0
+    val pq = scala.collection.mutable.PriorityQueue.empty[(Double, Int)](
+      Ordering.by[(Double, Int), Double](_._1).reverse)
+    for (i <- 0 until d) {
+      sqrDen += cur(i).toDouble * cur(i) + cur(i)
+      num += (cur(i) + 0.5) * absRes(i)
+      if (absRes(i) > 0) pq.enqueue(((cur(i) + 1).toDouble / absRes(i), i))
+    }
+    var maxIp = 0.0
+    var bestT = 0.0
+    while (pq.nonEmpty) {
+      val (curT, dim) = pq.dequeue()
+      cur(dim) += 1
+      sqrDen += 2.0 * cur(dim)
+      num += absRes(dim)
+      val curIp = num / math.sqrt(sqrDen)
+      if (curIp > maxIp) { maxIp = curIp; bestT = curT }
+      if (cur(dim) < maxLevel) {
+        val tNext = (cur(dim) + 1).toDouble / absRes(dim)
+        if (tNext < tEnd) pq.enqueue((tNext, dim))
+      }
+    }
+    val code = absRes.map(a => math.min((bestT * a + eps).toInt, maxLevel))
+    var num2 = 0.0
+    for (i <- 0 until d) num2 += (code(i) + 0.5) * absRes(i)
+    val ipnorm = if (java.lang.Double.isFinite(1.0 / num2)) 1.0 / num2 else 1.0
+    (code, ipnorm, bestT)
+  }
+
+  test("fastQuantizeT's primitive heap selects the PriorityQueue scan's code, ipnorm and t") {
+    val rnd = new scala.util.Random(29)
+    def normAbs(v: Array[Float]): Array[Double] = {
+      val n = math.sqrt(v.map(x => x.toDouble * x).sum)
+      v.map(x => math.abs(x / n))
+    }
+    var tied = 0
+    for (exBits <- Seq(2, 3, 4, 6, 7, 8); d <- Seq(64, 384); trial <- 0 until 60) {
+      val abs = normAbs(randVec(rnd, d))
+      // every third vector forces equal thresholds: repeated magnitudes,
+      // and doubled ones ((2c+2)/(2a) = (c+1)/a)
+      if (trial % 3 == 1) for (i <- 0 until d / 4) abs(rnd.nextInt(d)) = abs(i)
+      if (trial % 3 == 2) for (i <- 0 until d / 8) abs(d - 1 - i) = math.min(2 * abs(i), 1.0)
+      if (abs.distinct.length < d) tied += 1
+      val what = s"exBits=$exBits d=$d trial=$trial"
+      val (code, ipnorm, t) = RaBitQ.fastQuantizeT(abs, exBits)
+      val (codeR, ipnormR, tR) = fastQuantizeTRef(abs, exBits)
+      assert(code.sameElements(codeR), s"$what: codes differ")
+      assert(java.lang.Double.doubleToRawLongBits(ipnorm) ==
+        java.lang.Double.doubleToRawLongBits(ipnormR), s"$what: ipnorm $ipnorm vs $ipnormR")
+      assert(java.lang.Double.doubleToRawLongBits(t) ==
+        java.lang.Double.doubleToRawLongBits(tR), s"$what: t $t vs $tR")
+    }
+    assert(tied >= 6 * 2 * 20, s"only $tied vectors carried repeated magnitudes")
+    // an all-zero residual takes the early exit on both
+    val zero = new Array[Double](64)
+    assert(RaBitQ.fastQuantizeT(zero, 3)._3 == fastQuantizeTRef(zero, 3)._3)
+  }
+
   test("rerank distance is far more accurate than 1-bit estimate") {
     val rnd = new scala.util.Random(5)
     val d = 64
@@ -360,6 +432,83 @@ class AnnSpec extends AnyFunSuite {
     m.freeSearchCaches()
   }
 
+  test("the replica equals the re-pack of the id-sorted entries, field for field") {
+    // the reference is the replica's first construction: every entry
+    // unpacked, sorted by (cluster, id), packed and trimmed
+    import spark.implicits._
+    def reference(m: graft.ann.IVFModel): IVFIndex.Runs = {
+      val entries = m.runs.mapPartitions(_.flatMap(IVFIndex.unpackRuns)).collect()
+      val runs = IVFIndex.packRuns(entries.sortBy(e => (e.cluster_id, e.id)).iterator,
+        m.rotator.paddedDim, m.params.exBits, m.numClusters)
+      runs.foreach(rs => if (rs != null) rs.foreach(_.trim()))
+      runs
+    }
+    def assertSame(what: String, got: IVFIndex.Runs, want: IVFIndex.Runs): Unit = {
+      assert(got.length == want.length, what)
+      for (c <- want.indices) {
+        assert((got(c) == null) == (want(c) == null), s"$what: cluster $c held")
+        if (want(c) != null) {
+          assert(got(c).length == want(c).length, s"$what: cluster $c runs")
+          for ((g, w) <- got(c).zip(want(c))) {
+            val at = s"$what: cluster $c"
+            assert((g.words, g.dim, g.exBits, g.n) == (w.words, w.dim, w.exBits, w.n), at)
+            assert(java.util.Arrays.equals(g.ids, w.ids), s"$at: ids")
+            assert(java.util.Arrays.equals(g.sign, w.sign), s"$at: sign")
+            assert(java.util.Arrays.equals(g.x2, w.x2), s"$at: x2")
+            assert(java.util.Arrays.equals(g.facIp, w.facIp), s"$at: facIp")
+            assert(java.util.Arrays.equals(g.facErr, w.facErr), s"$at: facErr")
+            assert(java.util.Arrays.equals(g.xipnorm, w.xipnorm), s"$at: xipnorm")
+            assert(java.util.Arrays.equals(g.exF, w.exF), s"$at: exF")
+            assert((g.exCode == null) == (w.exCode == null), s"$at: exCode")
+            if (w.exCode != null) assert(g.exCode.length == w.exCode.length &&
+              g.exCode.indices.forall(i => java.util.Arrays.equals(g.exCode(i), w.exCode(i))),
+              s"$at: exCode")
+          }
+        }
+      }
+    }
+    val rnd = new scala.util.Random(59)
+    val dim = 16
+    // built: B=4 with two clusters past ClusterBlockRows (their runs span
+    // runs partitions), and B=9 (bit-packed exCode rows)
+    val big = (0 until 6000).map(i => (i.toLong, randVec(rnd, dim))).toDF("vec_id", "embedding")
+    for ((df, params) <- Seq(
+        (big, IVFIndex.Params(k = 2, totalBits = 4)),
+        (big.limit(900), IVFIndex.Params(k = 8, totalBits = 9)))) {
+      val m = IVFIndex.build(spark, df, params)
+      val what = s"built, B=${params.totalBits}"
+      assertSame(what, m.replica().get, reference(m))
+      if (params.k == 2)
+        assert(m.replica().get.exists(rs => rs != null && rs.length == 1 && rs(0).n > 2048),
+          s"$what: no cluster's replica gathers rows of several runs")
+      m.freeSearchCaches()
+    }
+    // loaded: two appended batches of ids interleaved with the base's
+    // (so a cluster's rows leave id order), then a delete
+    val base = (0 until 800).map(i => (2L * i, randVec(rnd, dim)))
+    val m = IVFIndex.build(spark, base.toDF("vec_id", "embedding"),
+      IVFIndex.Params(k = 8, totalBits = 4))
+    val root = java.nio.file.Files.createTempDirectory("replica_overlay").toString
+    val (path, landing) = (s"$root/index", s"$root/landing")
+    m.save(path)
+    for (batch <- 0 until 2) {
+      (0 until 40).map(i => (2L * (40 * batch + i) + 1, randVec(rnd, dim)))
+        .toDF("vec_id", "embedding").write.mode("append").parquet(landing)
+      IVFIndex.appendStream(spark, m, landing, path)
+    }
+    graft.ann.IVFModel.deleteIds(path, Seq(0L, 1L, 2L, 41L, 600L).toDF("id"))
+    val loaded = graft.ann.IVFModel.load(spark, path)
+    val want = reference(loaded)
+    assert(want.iterator.filter(_ != null).flatten.map(_.n).sum == 800 + 80 - 5)
+    val unordered = loaded.runs.collect().exists(_.exists(rs => rs != null &&
+      rs.exists(r => (1 until r.n).exists(i => r.ids(i) < r.ids(i - 1)))))
+    val spread = loaded.runs.collect().map(_.count(_ != null)).sum > want.count(_ != null)
+    assert(unordered || spread, "the loaded runs are already one id-sorted run per cluster")
+    assertSame("loaded", loaded.replica().get, want)
+    loaded.freeSearchCaches()
+    m.freeSearchCaches()
+  }
+
   test("searchAll equals search when a built model's clusters span runs partitions") {
     // clusters larger than ClusterBlockRows are blocked across runs
     // partitions, so the cluster → partitions map must list every
@@ -504,6 +653,49 @@ class AnnSpec extends AnyFunSuite {
       assert(math.abs(estF - estQ) / scale < 1e-3,
         s"LUT estimate diverged: float=$estF lut=$estQ")
     }
+  }
+
+  test("LUT estimate and lower bound sum the quantized levels over set bits, word by word") {
+    // the reference is the levels alone: u_d = round((r_d − vl)/width)
+    // and Σ u_d over the set bits, read from no table
+    val rnd = new scala.util.Random(31)
+    for (d <- Seq(64, 384, 1536); queryBits <- Seq(4, 14, 16)) {
+      val words = d / 64
+      val q = randVec(rnd, d); val c = randVec(rnd, d)
+      val qc = RaBitQ.prepareQuery(q, c, queryBits)
+      val r = qc.residual
+      val (vl, vr) = (r.min, r.max)
+      val width = (vr - vl) / ((1 << queryBits) - 1)
+      val u = r.map(v => math.round((v - vl) / width))
+      assert(qc.qlut.vl == vl && qc.qlut.width == width)
+      assert(qc.qlut.lut.length == RaBitQ.lutLength(d))
+      assert((0 until d).forall(i => qc.qlut.level(i) == u(i)), s"d=$d queryBits=$queryBits: levels")
+      val signs: Seq[Array[Long]] =
+        Seq(Array.fill(words)(0L), Array.fill(words)(-1L)) ++
+          (0 until d by 7).map(i => Array.tabulate(words)(w => if (w == i / 64) 1L << (i % 64) else 0L)) ++
+          Seq.fill(20)(Array.fill(words)(rnd.nextLong()))
+      // every entry packed into one array, read at its offset
+      val packed = signs.flatten.toArray
+      for ((bits, e) <- signs.zipWithIndex) {
+        val set = (0 until d).filter(i => ((bits(i >> 6) >>> (i & 63)) & 1L) == 1L)
+        val sum = set.map(u(_)).sum
+        val pop = set.length
+        val (x2, facIp, facErr) = (rnd.nextFloat() * 4, rnd.nextFloat() - 0.5f, rnd.nextFloat())
+        val ip = width.toDouble * sum + vl.toDouble * pop - 0.5 * qc.sumRes
+        val est = x2 + qc.sqrY - ip * facIp
+        val lower = est - facErr * qc.y - math.abs(facIp) * (0.5 * width) * pop
+        val what = s"d=$d queryBits=$queryBits entry $e"
+        assert(RaBitQ.estimateDistLut(qc, bits, x2, facIp) == est, s"$what: estimate")
+        assert(RaBitQ.estimateLowerLutPacked(qc, packed, e * words, words, x2, facIp,
+          facErr) == lower, s"$what: lower bound")
+      }
+    }
+    // the Int accumulator's bound, checked where every table is built
+    val wide = new Array[Float](32832)
+    wide(0) = 1f
+    val err = intercept[IllegalArgumentException](RaBitQ.prepareQuery(wide, new Array[Float](32832), 16))
+    assert(err.getMessage.contains("overflows the Int LUT accumulator"))
+    assert(RaBitQ.prepareQuery(wide.take(32768), new Array[Float](32768), 16).qlut.level(0) == 65535)
   }
 
   test("query-side scalar quantization: recall within 0.01 of the float path") {
