@@ -49,11 +49,11 @@ import graft.functions.VectorFunctions.l2sq
   *    (no Spark job once the replica is built); batch `searchAll`
   *    scans one model-lifetime broadcast of it in the query frame's own
   *    partitions (one narrow stage, no shuffle, no merge);
-  *  - over the cap, and always for `searchFiltered` (which packs its
-  *    semi-joined entries of the probed clusters per call), each runs
-  *    partition keeps its own pool per query and returns that query's
-  *    local top-k as a list sorted by (dist, id). The merges fold those
-  *    lists linearly (`KnnExact.mergeSorted`): ad-hoc searches on the
+  *    `searchFiltered` is `search` on a call-scoped model of the allowed
+  *    entries of the probed clusters, so it takes the same paths;
+  *  - over the cap each runs partition keeps its own pool per query
+  *    and returns that query's local top-k as a list sorted by
+  *    (dist, id). The merges fold those lists linearly (`KnnExact.mergeSorted`): ad-hoc searches on the
   *    driver as task results arrive (one plain RDD job, no shuffle);
   *    `searchAll` after grouping the rows by query (a shuffle of
   *    ≤ partitions × queries rows), in one lazy plan that sends each
@@ -118,11 +118,11 @@ object IVFIndex {
     * S-row cluster is ~S/numShufflePartitions (plus hash variance),
     * NOT capped at this constant, which only bounds the placement
     * unit. Under the replica cap ([[IVFModel.replicaMaxBytes]]) the
-    * layout never reaches a result: every search but
-    * `searchFiltered` scans the model's replica, one pool per query in
-    * one canonical order. Over the cap (and in `searchFiltered`) each
-    * runs partition keeps its own pool per query, and results are
-    * layout-independent only up to the estimate bound: the prune skips
+    * layout never reaches a result: every search scans a replica (for
+    * `searchFiltered`, its call-scoped model's), one pool per query in
+    * one canonical order. Over the cap each runs partition keeps its
+    * own pool per query, and results are layout-independent only up to
+    * the estimate bound: the prune skips
     * a candidate when its estimated lower bound exceeds the
     * partition-local kth distance, and that estimate is a true lower
     * bound with high probability (the spec-pinned ~>0.95 fac_err
@@ -149,9 +149,9 @@ object IVFIndex {
   /** One cluster's entries in BLOCK-MAJOR PACKED form — the
     * scan-side analogue of the reference's `fastscan/pack_codes.hpp`
     * layout and a model's one in-memory form ([[IVFModel.runs]]),
-    * packed once per model (or per call from
-    * [[IVFModel.searchFiltered]]'s semi-joined entries) and scanned by
-    * every probing query of a call. Sign-bit words of all
+    * packed once per model (a [[IVFModel.searchFiltered]] call's
+    * scoped model packs its allowed entries like any other) and scanned
+    * by every probing query of a call. Sign-bit words of all
     * entries live in ONE contiguous long array (entry i's words at
     * [i·words, (i+1)·words)); the per-entry estimate factors are
     * parallel primitive columns. The packing replaces a per-(query,
@@ -239,8 +239,8 @@ object IVFIndex {
     }
     /** Trim backing arrays to exactly n rows — called once on a
       * model's runs before persisting (grow() doubles, so an untrimmed
-      * run can hold ~2× its data for the model lifetime);
-      * searchFiltered's per-call pack skips it. */
+      * run can hold ~2× its data for the model lifetime), a filtered
+      * call's scoped model included. */
     def trim(): Unit = if (cap > n) {
       cap = math.max(n, 1)
       ids = java.util.Arrays.copyOf(ids, cap)
@@ -256,16 +256,15 @@ object IVFIndex {
 
   /** One partition's packed runs, indexed by cluster id: that
     * cluster's [[PackedRun]]s in stream order, null where the partition
-    * holds none. The one element per partition of every
-    * [[IVFModel.scan]] source. */
+    * holds none. The one element per partition of a model's
+    * [[IVFModel.runs]]; a model's [[IVFModel.replica]] is one too. */
   private[graft] type Runs = Array[scala.collection.mutable.ArrayBuffer[PackedRun]]
 
   /** Pack one partition's entries into its [[Runs]] (`nClusters`
     * slots): each cluster's entries in stream order, rolling over to a
     * fresh run when the last one [[PackedRun.isFull]]. The one pack loop
-    * behind every scan source (a model's [[IVFModel.runs]] and
-    * searchFiltered's per-call pack), so they scan identically by
-    * construction. */
+    * behind every model's [[IVFModel.runs]], a filtered call's scoped
+    * model included. */
   private[graft] def packRuns(entries: Iterator[Entry], dim: Int, exBits: Int,
       nClusters: Int): Runs = {
     val runs: Runs = new Array(nClusters)
@@ -1181,8 +1180,11 @@ object IVFModel {
     * all of it a function of the centroids and the runs, and all of it
     * dropped by [[IVFModel.freeSearchCaches]]: the broadcast of the
     * [[PrepareState]], the runs' [[Layout]], and the replica with its
-    * broadcast. */
-  private[graft] final class SharedSearchState {
+    * broadcast. A call-scoped model ([[IVFModel.searchFiltered]]) has
+    * its parent's rotator and centroids, so its state reads the
+    * parent's prepare broadcast (`prepareOwner`) and makes none. */
+  private[graft] final class SharedSearchState(parent: SharedSearchState = null) {
+    val prepareOwner: SharedSearchState = if (parent == null) this else parent.prepareOwner
     @volatile var prepareBc: Broadcast[PrepareState] = _
     @volatile var layout: Layout = _
     @volatile var replica: IVFIndex.Runs = _
@@ -1201,20 +1203,15 @@ object IVFModel {
     (q._1, qr, CentroidRouter.rankFlat(rotatedCentroids, qr, nprobe))
   }
 
-  /** `entries` packed into one [[IVFIndex.Runs]] per partition
-    * ([[IVFIndex.packRuns]]; `dim` is the padded dim, the residual and
-    * ex_code length); lazy, like the RDD it maps. */
-  private[ann] def pack(entries: Dataset[IVFIndex.Entry], dim: Int, exBits: Int,
-      nClusters: Int): RDD[IVFIndex.Runs] =
-    entries.rdd.mapPartitions(it =>
-      Iterator.single(IVFIndex.packRuns(it, dim, exBits, nClusters)))
-
-  /** A model's runs: [[pack]], each run trimmed, persisted
+  /** A model's runs: `entries` packed into one [[IVFIndex.Runs]] per
+    * partition ([[IVFIndex.packRuns]]; `dim` is the padded dim, the
+    * residual and ex_code length), each run trimmed, persisted
     * MEMORY_AND_DISK, filled by the first action over them (adaptive
     * execution runs an `entries` plan's exchanges here). */
   private[ann] def packCached(entries: Dataset[IVFIndex.Entry], dim: Int, exBits: Int,
       nClusters: Int): RDD[IVFIndex.Runs] =
-    pack(entries, dim, exBits, nClusters).map(trimmed)
+    entries.rdd.mapPartitions(it =>
+      Iterator.single(trimmed(IVFIndex.packRuns(it, dim, exBits, nClusters))))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** The replica ([[IVFModel.replica]]) of a model's runs partitions
@@ -1603,11 +1600,12 @@ final class IVFModel private[graft] (
     * the reference shape), read by the executors that prepare
     * [[searchAll]]'s queries and scan the probed clusters. */
   private[graft] def prepareBroadcast(spark: SparkSession): Broadcast[IVFModel.PrepareState] = {
-    if (shared.prepareBc == null) shared.synchronized {
-      if (shared.prepareBc == null)
-        shared.prepareBc = spark.sparkContext.broadcast((rotator, rotatedCentroids))
+    val s = shared.prepareOwner
+    if (s.prepareBc == null) s.synchronized {
+      if (s.prepareBc == null)
+        s.prepareBc = spark.sparkContext.broadcast((rotator, rotatedCentroids))
     }
-    shared.prepareBc
+    s.prepareBc
   }
 
   /** The runs' [[IVFModel.Layout]]: one job over [[runs]], once per
@@ -1659,14 +1657,6 @@ final class IVFModel private[graft] (
         shared.replicaBc = spark.sparkContext.broadcast(replica)
       shared.replicaBc
     })
-
-  /** [[searchFiltered]]'s scan source: `entries` restricted to the
-    * `probed` clusters (a `cluster_id isin` filter, which prunes whole
-    * partition directories on a loaded index) and packed per call, one
-    * [[IVFIndex.Runs]] per partition. */
-  private[graft] def probedRuns(entries: Dataset[Entry])(probed: Array[Int]): RDD[IVFIndex.Runs] =
-    IVFModel.pack(entries.filter(col("cluster_id").isin(probed.toIndexedSeq: _*)),
-      rotator.paddedDim, params.exBits, numClusters)
 
   /** Same model, same runs and index, same shared search state,
     * different query-side estimate precision (Params.queryBits) — the
@@ -1748,15 +1738,12 @@ final class IVFModel private[graft] (
     * spread across driver cores, one pool per query: the first call
     * also fetches the replica (one more job), and every later call runs
     * no Spark job and makes no broadcast. Over the cap each call runs
-    * ONE plain RDD job ([[searchOnDriver]]: no SQL execution, no
-    * exchange) over the packed runs, with the queries in one per-call
-    * broadcast, and merges each partition's per-query top-k on the
-    * driver as its task result arrives ([[KnnExact.mergeTopKOnDriver]]),
-    * so a fresh model's first call runs two jobs, the layout and the
-    * scan. That path keeps a pool per runs partition, and with
-    * [[searchAll]]'s over-cap plan it is the only search whose rows can
-    * depend on the runs' layout ([[IVFIndex.ClusterBlockRows]]). Either
-    * way the rows are those [[searchAll]] returns for the same queries.
+    * ONE plain RDD job over the packed runs ([[searchOnDriver]]), so a
+    * fresh model's first call runs two jobs, the layout and the scan.
+    * That path keeps a pool per runs partition, and with [[searchAll]]'s
+    * over-cap plan it is the only search whose rows can depend on the
+    * runs' layout ([[IVFIndex.ClusterBlockRows]]). Either way the rows
+    * are those [[searchAll]] returns for the same queries.
     * Query ids must be distinct: a repeated id gets one list of k rows
     * merged from its occurrences' pools, where a neighbor that two
     * occurrences find shows up twice. Holds queries × k
@@ -1768,7 +1755,7 @@ final class IVFModel private[graft] (
       k: Int,
       nprobe: Int): DataFrame = {
     IVFModel.requireKNprobe(k, nprobe)
-    replica().fold(searchOnDriver(spark, _ => runs, queries, k, nprobe)) { r =>
+    replica().fold(searchOnDriver(spark, queries, k, nprobe)) { r =>
       val probes = prepareAll(queries, nprobe)
       val accs = IVFIndex.searchAccs(spark)
       val n = probes.length
@@ -1785,30 +1772,56 @@ final class IVFModel private[graft] (
   }
 
   /** Attribute-filtered search: only ids present in `allowedIds`
-    * (single column of longs) are eligible results. The filter is a
-    * semi-join applied BEFORE estimation, so disallowed entries never
-    * cost an estimate and per-query heaps fill with k eligible results
-    * (post-filtering the top-k would return fewer). No broadcast hint:
-    * the planner broadcasts small allowed sets and shuffles large ones
-    * — a selective-but-large metadata predicate (billions of ids at
-    * 100 TB) must not be forced through the driver. The one search
-    * that packs per call: the semi-joined entries of the probed
-    * clusters only ([[probedRuns]]), read from `index` (on a built
-    * model, the view that unpacks its runs), never the cached runs.
-    * It scans no [[replica]]: eager and merged on the driver like
-    * [[search]] over the replica cap, a pool per partition, the scan one
-    * plain RDD job, plus whatever jobs the semi-join's own planning
-    * needs (a broadcast of the allowed set, or its shuffle). */
+    * (single column of longs) are eligible results. It is [[search]]
+    * run on a call-scoped model ([[withAllowed]]): this model's
+    * rotator, centroids and params over the index semi-joined to
+    * `allowedIds` ([[allowedOnly]]) and restricted to the clusters the
+    * queries probe. So disallowed entries never cost an estimate, and
+    * per-query heaps fill with k eligible results (post-filtering the
+    * top-k would return fewer). No broadcast hint: the planner
+    * broadcasts small allowed sets and shuffles large ones — a
+    * selective-but-large metadata predicate (billions of ids at 100 TB)
+    * must not be forced through the driver.
+    *
+    * The rows are those [[search]] returns on a model of the allowed
+    * entries alone. Under the replica cap (sized on the allowed entries
+    * of the probed clusters) a call runs the scoped model's layout job,
+    * which packs those entries, then its replica fetch, and scans one
+    * pool per query on the driver; over the cap, the layout job and
+    * one scan job. Plus whatever jobs the semi-join's own planning
+    * needs (a broadcast of the allowed set, or its shuffle). The
+    * queries are prepared twice, once to find the probed clusters and
+    * once in the scoped search: O(queries · dim²) on the driver, cheap
+    * at ad-hoc sizes. An empty query set runs no Spark job. */
   def searchFiltered(
       spark: SparkSession,
       queries: Array[(Long, Array[Float])],
       k: Int,
       nprobe: Int,
-      allowedIds: DataFrame): DataFrame =
-    searchOnDriver(spark, probedRuns(allowedOnly(allowedIds)), queries, k, nprobe)
+      allowedIds: DataFrame): DataFrame = {
+    IVFModel.requireKNprobe(k, nprobe)
+    if (queries.isEmpty) new KnnExact.DriverTopK(k).frame(spark, Array.emptyLongArray)
+    else withAllowed(allowedIds, queries, nprobe)(_.search(spark, queries, k, nprobe))
+  }
 
-  /** The index semi-joined to `allowedIds` — the entries
-    * [[searchFiltered]] packs. */
+  /** `body` run on [[searchFiltered]]'s call-scoped model: the entries
+    * of [[allowedOnly]] in the clusters `queries` probe (a `cluster_id
+    * isin` filter, which prunes whole partition directories on a loaded
+    * index), with this model's rotator, centroids, params and prepare
+    * broadcast. The scoped model's runs are unpersisted before this
+    * returns; the prepare broadcast is this model's and stays. */
+  private[graft] def withAllowed[T](allowedIds: DataFrame,
+      queries: Array[(Long, Array[Float])], nprobe: Int)(body: IVFModel => T): T = {
+    val probed = prepareAll(queries, nprobe).flatMap(_._3).distinct
+    val entries = allowedOnly(allowedIds).filter(col("cluster_id").isin(probed.toIndexedSeq: _*))
+    val scoped = new IVFModel(params, rotator, centroids, rotatedCentroids, entries,
+      IVFModel.packCached(entries, rotator.paddedDim, params.exBits, numClusters),
+      new IVFModel.SharedSearchState(shared))
+    try body(scoped) finally scoped.runs.unpersist(blocking = true)
+  }
+
+  /** The index semi-joined to `allowedIds`: [[searchFiltered]]'s
+    * entries before the probed-cluster filter. */
   private[graft] def allowedOnly(allowedIds: DataFrame): Dataset[Entry] = {
     val spark = index.sparkSession
     import spark.implicits._
@@ -1977,19 +1990,42 @@ final class IVFModel private[graft] (
     KnnExact.mergeTopK(spark, spark.createDataset(candidates), k)
   }
 
-  /** [[search]] over the replica cap (with `runs` = `_ => runs`) and
-    * [[searchFiltered]]: [[scan]] `runs`, merge on the driver, then
-    * destroy the call's query broadcast — the scan job has finished,
-    * and the local result no longer needs it. One Spark job. */
+  /** [[search]] over the replica cap: the queries are prepared on the
+    * driver ([[prepareAll]]) and ride one per-call broadcast; ONE plain
+    * RDD job (`runJob`: no SQL execution, no exchange) scans [[runs]],
+    * each partition returning one (query_id, ids, dists) row per query
+    * with a candidate there, its partition-local top-k ascending under
+    * [[KnnExact.DistIdOrder]] ([[IVFIndex.scanRuns]]: estimate → prune
+    * → rerank, query-major over the packed runs). The driver folds each
+    * task result into one [[KnnExact.DriverTopK]] as it arrives; the
+    * global top-k under that order is the top-k of the partition
+    * top-k's, so the rows, rk included, are those of the distributed
+    * merge ([[KnnExact.mergeTopK]]) whatever order partitions finish in.
+    * The query broadcast is destroyed once the job has finished. An
+    * empty query set runs no job. */
   private[graft] def searchOnDriver(
       spark: SparkSession,
-      runs: Array[Int] => RDD[IVFIndex.Runs],
       queries: Array[(Long, Array[Float])],
       k: Int,
       nprobe: Int): DataFrame = {
-    val (candidates, bc) = scan(spark, runs, queries, k, nprobe)
-    try KnnExact.mergeTopKOnDriver(spark, candidates, k, queries.map(_._1))
-    finally bc.destroy()
+    IVFModel.requireKNprobe(k, nprobe)
+    val top = new KnnExact.DriverTopK(k)
+    if (queries.nonEmpty) {
+      // locals only: the closure below must not capture the model
+      val sbc = prepareBroadcast(spark)
+      val bc = spark.sparkContext.broadcast(prepareAll(queries, nprobe))
+      val accs = IVFIndex.searchAccs(spark)
+      val (qb, eb) = (params.queryBits, params.exBits)
+      val candidates = runs.mapPartitions { it =>
+        val rotCents = sbc.value._2
+        it.flatMap(IVFIndex.scanRuns(bc.value, _, rotCents, k, qb, eb, accs))
+      }
+      try spark.sparkContext.runJob(candidates,
+        (it: Iterator[(Long, Array[Long], Array[Double])]) => it.toArray,
+        (_: Int, rows: Array[(Long, Array[Long], Array[Double])]) => top.add(rows))
+      finally bc.destroy()
+    }
+    top.frame(spark, queries.map(_._1))
   }
 
   /** `queries` prepared on the driver ([[IVFModel.prepare]]), across
@@ -2002,44 +2038,6 @@ final class IVFModel private[graft] (
       probes(i) = IVFModel.prepare(rotator, rotatedCentroids, nprobe)(queries(i))
     }
     probes
-  }
-
-  /** The per-partition probed-cluster scan of [[searchFiltered]], and of
-    * [[search]] over the replica cap: the queries are prepared on the
-    * driver ([[prepareAll]]) and ride a per-call broadcast; per
-    * partition, ONE
-    * (query_id, ids, dists) row per query with a candidate there — its
-    * partition-local top-k, ascending under [[KnnExact.DistIdOrder]]
-    * ([[IVFIndex.scanRuns]]). At most partitions × queries rows of ≤ k
-    * candidates each, whatever the corpus size. `runs` maps the call's
-    * probed cluster ids to its one kind of source: an RDD of one
-    * [[IVFIndex.Runs]] per partition — [[runs]] for [[search]],
-    * [[probedRuns]] for [[searchFiltered]]. Lazy: nothing runs until the
-    * caller merges the candidates ([[searchOnDriver]]), and the caller
-    * destroys the returned query broadcast once it has. */
-  private[graft] def scan(
-      spark: SparkSession,
-      runs: Array[Int] => RDD[IVFIndex.Runs],
-      queries: Array[(Long, Array[Float])],
-      k: Int,
-      nprobe: Int): (RDD[(Long, Array[Long], Array[Double])],
-        Broadcast[Array[(Long, Array[Float], Array[Int])]]) = {
-    IVFModel.requireKNprobe(k, nprobe)
-    val sbc = prepareBroadcast(spark)
-    val probes = prepareAll(queries, nprobe)
-    val bc = spark.sparkContext.broadcast(probes)
-    // --- estimate → prune → rerank → local top-k over each partition's
-    // packed runs, QUERY-MAJOR (see IVFIndex.scanRuns for the order
-    // rationale; the packing replaces a per-(query, entry) object-pointer
-    // chase with a sequential stream through primitive arrays) ---
-    val accs = IVFIndex.searchAccs(spark)
-    val qb = params.queryBits
-    val eb = params.exBits
-    val candidates = runs(probes.flatMap(_._3).distinct).mapPartitions { it =>
-      val rotCents = sbc.value._2
-      it.flatMap(IVFIndex.scanRuns(bc.value, _, rotCents, k, qb, eb, accs))
-    }
-    (candidates, bc)
   }
 
   /** High-accuracy search (the Spark analogue of the reference's

@@ -1,6 +1,5 @@
 package graft.ann
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
@@ -93,7 +92,7 @@ object KnnExact {
 
   /** Merge per-partition candidate lists — one (query_id, ids, dists)
     * row per (partition, query), each list sorted under [[DistIdOrder]]
-    * ([[IVFModel.scan]]'s rows) — into the global per-query top-k:
+    * ([[IVFIndex.scanRuns]]' rows) — into the global per-query top-k:
     * (query_id, neighbor_id, rk), rk 1-based in (dist, id) order. The
     * rows are grouped by query (a shuffle of at most partitions ×
     * queries rows) and each group's lists fold through
@@ -157,29 +156,6 @@ object KnnExact {
       }
       spark.createDataFrame(out, ResultSchema)
     }
-  }
-
-  /** [[mergeTopK]] without the exchange, for candidate sets small
-    * enough to hold on the driver (queries × k rows): runs `partial` as
-    * ONE plain RDD job (`runJob`, no SQL execution) and folds each task
-    * result's sorted lists into a [[DriverTopK]] as it arrives. The
-    * global top-k under [[DistIdOrder]] is the top-k of the partition
-    * top-k's, so the rows, rk included, equal mergeTopK's whatever order
-    * partitions finish in; driver memory is O(queries × k) plus the
-    * partitions in flight. Eager: the job runs here, and the result is
-    * a local DataFrame with mergeTopK's schema, queries in `queryIds`
-    * order, rk ascending. */
-  private[graft] def mergeTopKOnDriver(
-      spark: SparkSession,
-      partial: RDD[(Long, Array[Long], Array[Double])],
-      k: Int,
-      queryIds: Array[Long]): DataFrame = {
-    val top = new DriverTopK(k)
-    if (queryIds.nonEmpty)
-      spark.sparkContext.runJob(partial,
-        (it: Iterator[(Long, Array[Long], Array[Double])]) => it.toArray,
-        (_: Int, rows: Array[(Long, Array[Long], Array[Double])]) => top.add(rows))
-    top.frame(spark, queryIds)
   }
 
   /** The shared exact-top-k kernel, keeping the squared distance:

@@ -376,7 +376,7 @@ object RaBitQ {
 
   /** Packed-core form: the entry's `words` sign-bit longs start at
     * `base` inside a run-contiguous array (the block-major packed
-    * layout IVFModel.scan builds per partition — streaming longs instead
+    * layout IVFModel.runs holds per partition — streaming longs instead
     * of chasing one small array object per entry). The per-entry
     * API above delegates here, so the byte arithmetic exists once. */
   private def lutSumPop(

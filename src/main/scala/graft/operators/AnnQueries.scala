@@ -22,29 +22,28 @@ object AnnQueries {
   private def appId(spark: SparkSession): String =
     spark.sparkContext.applicationId
 
+  /** The session shape a memoized model or search result was made
+    * under: the build's layout reads `spark.sql.shuffle.partitions`, so
+    * a live session that changes it gets a model built under the new
+    * setting instead of the old one's. */
+  private def shape(spark: SparkSession): Int =
+    spark.sessionState.conf.numShufflePartitions
+
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), IVFModel]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Int), IVFModel]()
 
   def model(spark: SparkSession, dir: String, bits: Int = 4): IVFModel =
-    cache.computeIfAbsent((appId(spark), dir, bits), _ =>
+    cache.computeIfAbsent((appId(spark), dir, bits, shape(spark)), _ =>
       IVFIndex.build(spark, Tables.embeddings(spark, dir),
         IVFIndex.Params(totalBits = bits)))
 
-  /** Drop this session's memoized models and search results of `dir`,
-    * so the next query builds its model afresh: a spec's way to build
-    * under another session shape (the build's layout reads
-    * `spark.sql.shuffle.partitions`). The dropped models' caches are
-    * left to GC. */
-  private[graft] def forgetModels(spark: SparkSession, dir: String): Unit =
-    Seq(cache, searchCache).foreach(_.keySet.removeIf(k => k._1 == appId(spark) && k._2 == dir))
-
   // b7's search results and the exact ground truth are inputs to three
   // queries each (b7/b8/b10); keep the small result DataFrames per
-  // (dir, bits) so the expensive scans run once per session, like the
-  // model. search() is eager and returns a local frame, so its entry
+  // (dir, bits, shape) so the expensive scans run once per session, like
+  // the model. search() is eager and returns a local frame, so its entry
   // needs no cache(); the ground truth is lazy and is cached.
   private val searchCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Int), DataFrame]()
   private val gtCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
 
@@ -56,7 +55,7 @@ object AnnQueries {
     math.max(1, 3 * m.numClusters / 4)
 
   private def searchResults(spark: SparkSession, dir: String, bits: Int = 4): DataFrame =
-    searchCache.computeIfAbsent((appId(spark), dir, bits), _ => {
+    searchCache.computeIfAbsent((appId(spark), dir, bits, shape(spark)), _ => {
       val m = model(spark, dir, bits)
       m.search(spark, queryVectors(spark, dir), SearchK, searchNprobe(m))
     })

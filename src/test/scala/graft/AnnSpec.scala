@@ -73,7 +73,7 @@ class AnnSpec extends AnyFunSuite {
     * merged on the driver. The spec indexes all fit under the cap. */
   private def overCapSearch(m: graft.ann.IVFModel, qs: Array[(Long, Array[Float])],
       k: Int, nprobe: Int): org.apache.spark.sql.DataFrame =
-    m.searchOnDriver(spark, _ => m.runs, qs, k, nprobe)
+    m.searchOnDriver(spark, qs, k, nprobe)
 
   /** The lazy plan `searchAll` builds over the replica cap: route,
     * scan per runs partition, distributed merge. */
@@ -731,9 +731,9 @@ class AnnSpec extends AnyFunSuite {
     // semi-join, the path a billions-of-ids allowed set takes at scale.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      // searchFiltered packs the semi-joined entries it reads through
-      // allowedOnly's plan (its search job is a plain RDD job, not a SQL
-      // execution), so read that plan here
+      // searchFiltered's call-scoped model packs the semi-joined entries
+      // it reads through allowedOnly's plan (its jobs are plain RDD jobs,
+      // not SQL executions), so read that plan here
       val plan = m.allowedOnly(allowed).queryExecution.executedPlan.toString
       // scope the check to the semi-join's own plan lines: the cached
       // index's BUILD plan (which legitimately broadcasts the tiny
@@ -1125,46 +1125,84 @@ class AnnSpec extends AnyFunSuite {
     val noIds = df.filter($"vec_id" < 0).select($"vec_id")
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.as[(Long, Long, Int)].collect().toSeq.sortBy(r => (r._1, r._3))
-    def distributed(runs: Array[Int] => org.apache.spark.rdd.RDD[IVFIndex.Runs],
-        q: Array[(Long, Array[Float])], k: Int, np: Int) = {
-      val (cands, bc) = m.scan(spark, runs, q, k, np)
-      try {
-        val d = graft.ann.KnnExact.mergeTopK(spark, spark.createDataset(cands), k)
-        (d.schema, rows(d))
-      } finally bc.destroy()
+    /** `model`'s over-cap ad-hoc rows, checked against its distributed
+      * merge (the over-cap `searchAll` plan) for the same queries. */
+    def same(model: graft.ann.IVFModel, q: Array[(Long, Array[Float])], k: Int, np: Int,
+        what: String): Seq[(Long, Long, Int)] = {
+      val got = overCapSearch(model, q, k, np)
+      val want = overCapSearchAll(model, q.toSeq.toDF("vec_id", "embedding"), k, np)
+      assert(got.schema == want.schema, s"$what: schema ${got.schema} != ${want.schema}")
+      assert(rows(got) == rows(want), s"$what: rows differ from the distributed merge")
+      rows(got)
     }
-    val packed = (_: Array[Int]) => m.runs
-    def same(got: org.apache.spark.sql.DataFrame,
-        want: (org.apache.spark.sql.types.StructType, Seq[(Long, Long, Int)]), what: String) = {
-      assert(got.schema == want._1, s"$what: schema ${got.schema} != ${want._1}")
-      assert(rows(got) == want._2, s"$what: rows differ from the distributed merge")
+    /** The fixture exercises the tie: a query's duplicate pair sits at
+      * adjacent ranks, the smaller id first. */
+    def rankedPair(r: Seq[(Long, Long, Int)]) = base.take(6).exists { case (q, _) =>
+      val ids = r.filter(_._1 == q).map(_._2)
+      ids.indexOf(q) >= 0 && ids.indexOf(q + 1000L) == ids.indexOf(q) + 1
     }
     // search merges on the driver over the replica cap; under the cap
     // it scans the replica (see the one-pool spec)
-    val top10 = overCapSearch(m, qs, 10, 3)
-    same(top10, distributed(packed, qs, 10, 3), "search k=10")
-    assert(rows(top10) ==
-      rows(overCapSearchAll(m, qs.toSeq.toDF("vec_id", "embedding"), 10, 3)),
-      "searchAll differs")
-    // the fixture must exercise the tie: a query's duplicate pair sits
-    // at adjacent ranks, the smaller id first
-    assert(base.take(6).exists { case (q, _) =>
-      val r = rows(top10).filter(_._1 == q).map(_._2)
-      r.indexOf(q) >= 0 && r.indexOf(q + 1000L) == r.indexOf(q) + 1
-    }, "no query ranked a duplicate pair")
+    assert(rankedPair(same(m, qs, 10, 3, "search k=10")), "no query ranked a duplicate pair")
     // k beyond the probed cells' size: every candidate, fewer than k
-    val wide = overCapSearch(m, qs, 500, 1)
-    same(wide, distributed(packed, qs, 500, 1), "search k=500")
-    assert(rows(wide).groupBy(_._1).values.forall(_.length < 500))
-    same(overCapSearch(m, Array.empty, 10, 3),
-      distributed(packed, Array.empty, 10, 3), "empty query set")
-    same(m.searchFiltered(spark, qs, 10, 3, evenIds),
-      distributed(m.probedRuns(m.allowedOnly(evenIds)), qs, 10, 3), "filtered")
-    val none = m.searchFiltered(spark, qs, 10, 3, noIds)
-    same(none, distributed(m.probedRuns(m.allowedOnly(noIds)), qs, 10, 3),
-      "filtered to nothing")
-    assert(none.count() == 0)
+    assert(same(m, qs, 500, 1, "search k=500").groupBy(_._1).values.forall(_.length < 500))
+    assert(same(m, Array.empty, 10, 3, "empty query set").isEmpty)
+    // searchFiltered's call-scoped model over the cap: the even ids keep
+    // the duplicate pairs of the even queries
+    val filtered = m.withAllowed(evenIds, qs, 3)(same(_, qs, 10, 3, "filtered"))
+    assert(filtered.nonEmpty && filtered.forall(_._2 % 2 == 0), "filtered: a disallowed id")
+    assert(rankedPair(filtered), "filtered: no query ranked a duplicate pair")
+    assert(m.withAllowed(evenIds, qs, 1)(same(_, qs, 500, 1, "filtered k=500"))
+      .groupBy(_._1).values.forall(_.length < 500))
+    assert(m.withAllowed(noIds, qs, 3)(same(_, qs, 10, 3, "filtered to nothing")).isEmpty)
+    assert(m.searchFiltered(spark, qs, 10, 3, noIds).count() == 0, "filtered to nothing")
+    // an empty query set returns the empty local frame and runs no job
+    var empty: org.apache.spark.sql.DataFrame = null
+    val (jobs, _, _) = jobsAndShuffleBytes {
+      empty = m.searchFiltered(spark, Array.empty, 10, 3, evenIds)
+    }
+    assert(jobs.isEmpty, s"an empty filtered query set ran ${jobs.length} Spark jobs: ${jobs.mkString("; ")}")
+    assert(empty.schema == graft.ann.KnnExact.ResultSchema && empty.collect().isEmpty)
     m.freeSearchCaches()
+  }
+
+  test("a filtered call leaves no cached RDD and no broadcast behind") {
+    // under the cap the call-scoped model's runs are its only cache;
+    // over it the scan adds one query broadcast, destroyed on return,
+    // and reads the parent's prepare broadcast: no second copy of the
+    // centroids. The scheduler's task binaries (byte arrays) stay until
+    // the context cleaner collects them, like every job's. The allowed
+    // set is built in memory and the semi-join is shuffled: a parquet
+    // scan's Hadoop-conf broadcast and the planner's broadcast of a
+    // small allowed set live with the semi-join's plan, not the call
+    import org.apache.spark.GraftBlocks
+    val m = operators.AnnQueries.model(spark, sf)
+    val qs = operators.VectorQueries.queryVectors(spark, sf, 5)
+    val allowed = spark.range(0, 1L << 20, 2).toDF("vec_id")
+    m.search(spark, qs, 10, 12) // warm the runs and the replica
+    val prepare = m.prepareBroadcast(spark) // what the over-cap scan reads
+    val sc = spark.sparkContext
+    def blocks() = {
+      GraftBlocks.settle(sc)
+      (sc.getRDDStorageInfo.map(_.id).toSet, GraftBlocks.broadcastIds())
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try for ((path, call) <- Seq[(String, () => Array[org.apache.spark.sql.Row])](
+        "under the cap" -> (() => m.searchFiltered(spark, qs, 10, 12, allowed).collect()),
+        "over the cap" -> (() => m.withAllowed(allowed, qs, 12) { s =>
+          assert(s.prepareBroadcast(spark) eq prepare, "the scoped model made its own prepare broadcast")
+          overCapSearch(s, qs, 10, 12).collect()
+        }))) {
+      val before = blocks()
+      assert(call().length == qs.length * 10, s"$path: heaps must fill to k")
+      val after = blocks()
+      assert(after._1 == before._1, s"$path: cached RDDs left behind: ${after._1 -- before._1}")
+      val left = (after._2 -- before._2).toSeq.flatMap(id => GraftBlocks.broadcastValue(id).map(id -> _))
+        .filterNot(_._2.isInstanceOf[Array[Byte]])
+      assert(left.isEmpty, s"$path: broadcasts left behind: ${left.map(l => l._1 -> l._2.getClass)}")
+    } finally spark.conf.set(key, prev)
   }
 
   test("search runs ONE Spark job and shuffles nothing; the result is local") {
@@ -1329,11 +1367,20 @@ class AnnSpec extends AnyFunSuite {
     } finally spark.conf.set(key, prev)
     assert(models.map(_.runs.getNumPartitions) == Seq(2, 7))
     val want = onePoolRows(models(0), qs, 100, 3)
+    // quantization is per entry: a model of the even rows alone over the
+    // same centroids holds exactly the entries searchFiltered allows
+    val even = df.filter($"vec_id" % 2 === 0)
+    val evenModel = IVFIndex.buildWithCentroids(spark, even, cents, dim,
+      IVFIndex.Params(k = 8, totalBits = 4))
+    val wantEven = onePoolRows(evenModel, qs, 100, 3)
+    evenModel.freeSearchCaches()
     for (m <- models) {
       val what = s"${m.runs.getNumPartitions} runs partitions"
       assert(rows(m.search(spark, qs, 100, 3)) == want, s"search, $what")
       assert(rows(m.searchAll(spark, qs.toSeq.toDF("vec_id", "embedding").repartition(3),
         100, 3)) == want, s"searchAll, $what")
+      assert(rows(m.searchFiltered(spark, qs, 100, 3, even.select("vec_id"))) == wantEven,
+        s"searchFiltered, $what")
       m.freeSearchCaches()
     }
   }
@@ -1490,18 +1537,15 @@ class AnnSpec extends AnyFunSuite {
 
   test("b11_nprobe_sweep hashes the same at 1 and 4 shuffle partitions") {
     // the runs' layout follows spark.sql.shuffle.partitions; b11's
-    // searches scan the replica, so its rows must not follow it. A fresh
-    // model memo per setting builds each model under its own layout
+    // searches scan the replica, so its rows must not follow it. The
+    // model memo is keyed by the setting, so each setting builds its
+    // model under its own layout
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     val hashes = try Seq("1", "4").map { n =>
       spark.conf.set(key, n)
-      operators.AnnQueries.forgetModels(spark, sf)
       Golden.hashOf(operators.AnnQueries.nprobeSweep(spark, sf), Set.empty)
-    } finally {
-      spark.conf.set(key, prev)
-      operators.AnnQueries.forgetModels(spark, sf)
-    }
+    } finally spark.conf.set(key, prev)
     assert(hashes(0) == hashes(1), s"b11 at 1 and 4 shuffle partitions: $hashes")
   }
 }

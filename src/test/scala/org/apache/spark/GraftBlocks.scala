@@ -17,4 +17,16 @@ object GraftBlocks {
       case BroadcastBlockId(b, _) => b == id
       case _ => false
     }
+
+  /** The ids of every broadcast the driver's block manager holds a
+    * block of. */
+  def broadcastIds(): Set[Long] =
+    SparkEnv.get.blockManager.getMatchingBlockIds(_.isBroadcast)
+      .collect { case BroadcastBlockId(b, _) => b }.toSet
+
+  /** The value broadcast `id` holds in the driver's block manager, if
+    * its value block is there. Reading the block to its end releases
+    * the read lock `getLocalValues` takes. */
+  def broadcastValue(id: Long): Option[Any] =
+    SparkEnv.get.blockManager.getLocalValues(BroadcastBlockId(id)).flatMap(_.data.toList.headOption)
 }
