@@ -53,7 +53,8 @@ import graft.functions.VectorFunctions.l2sq
   *    entries of the probed clusters, so it takes the same paths;
   *  - over the cap each runs partition keeps its own pool per query
   *    and returns that query's local top-k as a list sorted by
-  *    (dist, id). The merges fold those lists linearly (`KnnExact.mergeSorted`): ad-hoc searches on the
+  *    (dist, id). The merges fold those lists linearly
+  *    (`KnnExact.mergeSorted`): ad-hoc searches on the
   *    driver as task results arrive (one plain RDD job, no shuffle);
   *    `searchAll` after grouping the rows by query (a shuffle of
   *    ≤ partitions × queries rows), in one lazy plan that sends each
@@ -122,8 +123,7 @@ object IVFIndex {
     * `searchFiltered`, its call-scoped model's), one pool per query in
     * one canonical order. Over the cap each runs partition keeps its
     * own pool per query, and results are layout-independent only up to
-    * the estimate bound: the prune skips
-    * a candidate when its estimated lower bound exceeds the
+    * the estimate bound: the prune skips a candidate when its estimated lower bound exceeds the
     * partition-local kth distance, and that estimate is a true lower
     * bound with high probability (the spec-pinned ~>0.95 fac_err
     * guarantee), not certainty — on a bound violation the skip
@@ -1611,27 +1611,39 @@ final class IVFModel private[graft] (
   /** The runs' [[IVFModel.Layout]]: one job over [[runs]], once per
     * model, that also fills their cache. Its cluster → partitions map
     * routes the over-cap [[batchPlan]]; its byte count sizes the
-    * [[replica]] before anything is fetched to the driver. */
+    * [[replica]]. A partition whose runs fit its even share of
+    * [[IVFModel.replicaMaxBytes]] ships them in the same job, so the
+    * driver receives at most the cap: when every partition shipped and
+    * the total fits, the replica is built from them and needs no fetch
+    * of its own; otherwise they are dropped (over the cap), or the
+    * replica fetches all runs again (a partition over its share). */
   private[graft] def layout(): IVFModel.Layout =
     Option(shared.layout).getOrElse(shared.synchronized {
       if (shared.layout == null) {
+        val cap = IVFModel.replicaMaxBytes
+        val share = cap / math.max(1, runs.getNumPartitions)
         val perPart = runs.mapPartitionsWithIndex((pi, it) => it.map { rs =>
           val held = rs.indices.filter(rs(_) != null)
-          (pi, held.toArray, held.iterator.flatMap(rs(_)).map(_.bytes).sum)
+          val bytes = held.iterator.flatMap(rs(_)).map(_.bytes).sum
+          (pi, held.toArray, bytes, if (bytes <= share) rs else null)
         }).collect()
-        val where = perPart.flatMap { case (pi, cs, _) => cs.map(_ -> pi) }.groupBy(_._1)
+        val where = perPart.flatMap { case (pi, cs, _, _) => cs.map(_ -> pi) }.groupBy(_._1)
+        val packedBytes = perPart.map(_._3).sum
+        if (packedBytes <= cap && perPart.forall(_._4 != null))
+          shared.replica = IVFModel.replicaOf(perPart.map(_._4), numClusters)
         shared.layout = IVFModel.Layout(
           Array.tabulate(numClusters)(c =>
             where.get(c).fold(Array.emptyIntArray)(_.map(_._2).sorted)),
-          perPart.map(_._3).sum)
+          packedBytes)
       }
       shared.layout
     })
 
   /** The model's REPLICA: every cluster's entries in id order, packed
     * once on the driver from the collected [[runs]]
-    * ([[IVFModel.replicaOf]], so it is a pure function of the entries)
-    * and kept for the model's lifetime, shared by its
+    * ([[IVFModel.replicaOf]], so it is a pure function of the entries;
+    * the [[layout]] job usually ships them, else one more job fetches
+    * them) and kept for the model's lifetime, shared by its
     * [[withQueryBits]] copies. A query scanning it keeps ONE pool
     * across all its probed clusters (the reference's result pool,
     * `inc/index/Pool.hpp`), in centroid-rank and then id order, so its
@@ -1735,15 +1747,17 @@ final class IVFModel private[graft] (
     * [[layout]], whose packed byte count picks the path for the model's
     * life. Under the replica cap ([[IVFModel.replicaMaxBytes]]) the
     * call scans the model's [[replica]] on the driver, query slices
-    * spread across driver cores, one pool per query: the first call
-    * also fetches the replica (one more job), and every later call runs
-    * no Spark job and makes no broadcast. Over the cap each call runs
-    * ONE plain RDD job over the packed runs ([[searchOnDriver]]), so a
-    * fresh model's first call runs two jobs, the layout and the scan.
-    * That path keeps a pool per runs partition, and with [[searchAll]]'s
-    * over-cap plan it is the only search whose rows can depend on the
-    * runs' layout ([[IVFIndex.ClusterBlockRows]]). Either way the rows
-    * are those [[searchAll]] returns for the same queries.
+    * spread across driver cores, one pool per query: the layout job
+    * also ships the runs the replica is built from (unless a runs
+    * partition exceeds its share of the cap: then one more job fetches
+    * them), and every later call runs no Spark job and makes no
+    * broadcast. Over the cap each call runs ONE plain RDD job over the
+    * packed runs ([[searchOnDriver]]), so a fresh model's first call
+    * runs two jobs, the layout and the scan. That path keeps a pool per
+    * runs partition, and with [[searchAll]]'s over-cap plan it is the
+    * only search whose rows can depend on the runs' layout
+    * ([[IVFIndex.ClusterBlockRows]]). Either way the rows are those
+    * [[searchAll]] returns for the same queries.
     * Query ids must be distinct: a repeated id gets one list of k rows
     * merged from its occurrences' pools, where a neighbor that two
     * occurrences find shows up twice. Holds queries × k
@@ -1786,9 +1800,9 @@ final class IVFModel private[graft] (
     * The rows are those [[search]] returns on a model of the allowed
     * entries alone. Under the replica cap (sized on the allowed entries
     * of the probed clusters) a call runs the scoped model's layout job,
-    * which packs those entries, then its replica fetch, and scans one
-    * pool per query on the driver; over the cap, the layout job and
-    * one scan job. Plus whatever jobs the semi-join's own planning
+    * which packs those entries and ships them to the driver, and scans
+    * one pool per query there; over the cap, the layout job and one
+    * scan job. Plus whatever jobs the semi-join's own planning
     * needs (a broadcast of the allowed set, or its shuffle). The
     * queries are prepared twice, once to find the probed clusters and
     * once in the scoped search: O(queries · dim²) on the driver, cheap
@@ -1843,10 +1857,10 @@ final class IVFModel private[graft] (
     * their final rows: one narrow stage, no shuffle, no merge
     * ([[replicaPlan]]). Over the cap, the queries are routed to the runs
     * partitions and merged ([[batchPlan]]). The first call on a model
-    * runs the [[layout]] job (and, under the cap, the replica fetch)
-    * while the plan is built. The rows equal [[search]]'s for the same
-    * queries: per-query results are independent of which queries share
-    * a partition or a slice.
+    * runs the [[layout]] job, which under the cap also ships the
+    * replica's runs, while the plan is built. The rows equal
+    * [[search]]'s for the same queries: per-query results are
+    * independent of which queries share a partition or a slice.
     *
     * Query ids must be distinct. A repeated id gets one top-k per
     * occurrence under the cap, and over it one merged list of k rows,

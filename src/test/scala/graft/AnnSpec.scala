@@ -1388,10 +1388,15 @@ class AnnSpec extends AnyFunSuite {
   test("under the replica cap, a warm search runs no Spark job and searchAll no shuffle") {
     val m = operators.AnnQueries.model(spark, sf)
     val qs = operators.VectorQueries.queryVectors(spark, sf, 5)
-    // a fresh model over the same index: its first search builds the replica
+    // a fresh model over the same index: its first search builds the
+    // replica from the runs its layout job ships, in that one job
     val adhoc = new graft.ann.IVFModel(m.params, m.rotator, m.centroids,
       m.rotatedCentroids, m.index)
-    assert(adhoc.search(spark, qs, 10, 12).collect().length == qs.length * 10)
+    val (firstJobs, _, _) = jobsAndShuffleBytes {
+      assert(adhoc.search(spark, qs, 10, 12).collect().length == qs.length * 10)
+    }
+    assert(firstJobs.length == 1,
+      s"a fresh model's first search ran ${firstJobs.length} Spark jobs, want 1: ${firstJobs.mkString("; ")}")
     var res: org.apache.spark.sql.DataFrame = null
     val (jobs, _, _) = jobsAndShuffleBytes {
       res = adhoc.search(spark, qs, 10, 12)
@@ -1406,7 +1411,15 @@ class AnnSpec extends AnyFunSuite {
     adhoc.search(spark, qs, 10, 12)
     assert(accs.estimates.value > est && accs.reranks.value > rer,
       "the replica search added nothing to graft.search.*")
-    adhoc.freeSearchCaches()
+    // when a runs partition is over its share of the cap the layout job
+    // ships nothing and the replica fetches the runs itself: same replica
+    val refetch = new graft.ann.IVFModel(m.params, m.rotator, m.centroids,
+      m.rotatedCentroids, m.index)
+    refetch.layout()
+    refetch.shared.replica = null
+    assert(refetch.search(spark, qs, 10, 12).collect().toSeq == res.collect().toSeq,
+      "the replica fetched after the layout job differs from the shipped one")
+    Seq(adhoc, refetch).foreach(_.freeSearchCaches())
     val q = Tables.embeddings(spark, sf).select("vec_id", "embedding")
     m.searchAll(spark, q, 100, 4).collect() // warm-up: the replica and its broadcast
     val (batchJobs, shuffle, _) = jobsAndShuffleBytes { m.searchAll(spark, q, 100, 4).collect() }
