@@ -23,8 +23,8 @@ import graft.functions.VectorFunctions.l2sq
   *  - the build packs its (cluster, block) layout straight into packed
   *    runs (the reference's FastScan blocks), the model's one in-memory
   *    form; its `index` Dataset is an uncached view of them. On disk the
-  *    index is columnar parquet partitioned by cluster, replacing the
-  *    reference's single binary blob (IVF.hpp:219-252).
+  *    entries are parquet partitioned by cluster, beside `model.bin`, the
+  *    header of the reference's single binary blob (IVF.hpp:219-252).
   *
   * Search (reference: IVF::search, IVF.hpp:295-324):
   *  - one prepare (`IVFModel.prepare`) rotates a query and ranks all K
@@ -63,9 +63,10 @@ import graft.functions.VectorFunctions.l2sq
   *    (`ClusterBlockRows`).
   */
 object IVFIndex {
-  /** Persisted-index layout version; bump when Entry encoding changes
-    * (v2 = bit-packed ex_code). Load fails fast on mismatch. */
-  val FormatVersion = 2L
+  /** Persisted-index layout version, in `model.bin`; bump when it or
+    * the Entry encoding changes (v2 = bit-packed ex_code, v3 =
+    * `model.bin`). Load and compact fail fast on a mismatch. */
+  val FormatVersion = 3
 
   /** The always-on search counters: entries buffered, estimates,
     * reranks, and bound violations (reranked entries whose estimated
@@ -971,7 +972,8 @@ object IVFIndex {
     * cluster-partitioned files on the next load). Centroids stay
     * fixed, as in every production IVF ingest path; retrain + rebuild
     * when drift warrants it. Blocks until all currently-available
-    * input is processed (AvailableNow).
+    * input is processed (AvailableNow). A load also needs the
+    * `model.bin` that [[IVFModel.saveMeta]] writes, before or after.
     *
     * The sink is a foreachBatch plain-parquet write, NOT the
     * FileStreamSink: the stream sink's `_spark_metadata` log would
@@ -1392,15 +1394,16 @@ object IVFModel {
   }
 
   /** The persisted entries with tombstones subtracted (broadcast
-    * anti-join) — shared by [[load]] and [[compact]]. An entries
-    * directory with no data files (an index compacted down to empty)
-    * reads as an empty frame with the static Entry schema, keeping
+    * anti-join) — shared by [[load]] and [[compact]], read with the
+    * schema the format fixes. An entries directory with no data files
+    * (an index compacted down to empty) reads as an empty frame, keeping
     * the on-disk layout uniformly partitioned. */
   private def entriesMinusDeletes(spark: SparkSession, path: String): DataFrame = {
     import org.apache.hadoop.fs.Path
     recoverCompact(spark, path)
     val entriesPath = new Path(s"$path/entries")
     val fs = entriesPath.getFileSystem(spark.sessionState.newHadoopConf())
+    val schema = org.apache.spark.sql.Encoders.product[IVFIndex.Entry].schema
     // main entries + committed streaming-ingest batches (each its own
     // parquet root, all cluster_id-partitioned). Read per root and
     // union: a single multi-path read would need a shared basePath,
@@ -1408,48 +1411,74 @@ object IVFModel {
     val roots = (entriesPath +: committedBatchDirs(fs, path))
       .filter(hasDataFiles(fs, _))
     if (roots.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.Encoders.product[IVFIndex.Entry].schema)
-    val raw = roots.map { r =>
-      spark.read.parquet(r.toString)
-        .select("id", "cluster_id", "sign_bits", "ex_code", "x2", "fac_ip",
-          "sum_xb", "fac_err", "xipnorm")
-    }.reduce(_.unionByName(_))
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    val raw = roots.map(r => spark.read.schema(schema).parquet(r.toString))
+      .reduce(_.unionByName(_))
     val deletesPath = new Path(s"$path/deletes")
     if (fs.exists(deletesPath))
       // no broadcast hint: a forced broadcast of an unbounded tombstone
       // set (e.g. a retention pass deleting half the corpus) would OOM
       // the driver on every load; the planner broadcasts small sets on
       // its own and falls back to a shuffled anti-join for large ones
-      raw.join(spark.read.parquet(deletesPath.toString), Seq("id"), "left_anti")
+      raw.join(spark.read.schema("id BIGINT").parquet(deletesPath.toString), Seq("id"),
+        "left_anti")
     else raw
   }
 
-  /** Fail fast on an incompatible persisted layout — shared by [[load]]
-    * and [[compact]]. Returns the metadata row so callers don't read
-    * the meta file twice. */
-  private def checkVersion(spark: SparkSession, path: String): org.apache.spark.sql.Row = {
-    val meta = spark.read.json(s"$path/meta").head()
-    val version =
-      if (meta.schema.fieldNames.contains("format_version"))
-        meta.getAs[Long]("format_version")
-      else 0L
-    require(version == IVFIndex.FormatVersion,
-      s"index at $path has format_version=$version; this build reads " +
-        s"${IVFIndex.FormatVersion} (ex_code layout changed) — rebuild the index")
-    meta
+  /** `model.bin` ([[IVFModel.saveMeta]]), its name until the rename,
+    * its magic ("GRAF") and its header's bytes. */
+  private val ModelFile = "model.bin"
+  private val ModelFileInProgress = "_model.bin.inprogress"
+  private val ModelMagic = 0x47524146
+  private val ModelHeaderBytes = 32
+
+  /** The params, rotator and raw centroids in `path`'s `model.bin`.
+    * Fails naming the file when it is missing (an index saved by an
+    * older build), its magic or [[IVFIndex.FormatVersion]] differ, or
+    * its length is not the one its header gives. */
+  private def readModel(spark: SparkSession,
+      path: String): (IVFIndex.Params, Rotator, Array[Array[Float]]) = {
+    import org.apache.hadoop.fs.Path
+    val p = new Path(s"$path/$ModelFile")
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    require(fs.exists(p), s"no $ModelFile under $path: an index saved before format " +
+      s"version ${IVFIndex.FormatVersion} keeps its metadata elsewhere — rebuild the index")
+    val len = fs.getFileStatus(p).getLen
+    require(len >= ModelHeaderBytes, s"$p is truncated: $len bytes, shorter than its header")
+    val in = new java.io.DataInputStream(new java.io.BufferedInputStream(fs.open(p), 1 << 16))
+    try {
+      require(in.readInt() == ModelMagic, s"$p is not a graft model file")
+      val version = in.readInt()
+      require(version == IVFIndex.FormatVersion, s"$p has format version $version; this " +
+        s"build reads ${IVFIndex.FormatVersion} — rebuild the index")
+      val (k, totalBits, seed, dim, n) =
+        (in.readInt(), in.readInt(), in.readLong(), in.readInt(), in.readInt())
+      val padded = Rotator.roundUp(dim, 64)
+      val want = ModelHeaderBytes + 4L * (n.toLong * dim + padded.toLong * padded)
+      require(dim > 0 && n > 0 && len == want,
+        s"$p holds $len bytes; its header (dim $dim, $n centroids) says $want")
+      def rows(count: Int, width: Int) = Array.fill(count) {
+        val (buf, row) = (new Array[Byte](4 * width), new Array[Float](width))
+        in.readFully(buf)
+        java.nio.ByteBuffer.wrap(buf).asFloatBuffer().get(row)
+        row
+      }
+      val centroids = rows(n, dim)
+      (IVFIndex.Params(k = k, totalBits = totalBits, seed = seed),
+        Rotator.fromMatrix(dim, seed, rows(padded, padded)), centroids)
+    } finally in.close()
   }
 
   /** Load a persisted index (analogue of IVF::load, IVF.hpp:254-293)
-    * from its one on-disk form: `meta`, `centroids`, `rotation` and
+    * from its one on-disk form: `model.bin`, read on the driver, and
     * `entries` plus any committed ingest batches. Tombstoned ids (see
     * [[deleteIds]]) are subtracted with an anti-join. Packed scan runs
     * are never read from disk: the loaded model's `index` is that
     * uncached read, and its first search packs the runs from it
     * ([[IVFModel.runs]]) and, under the replica cap, fetches its
-    * replica from them ([[IVFModel.replica]]). A `packed/` directory
-    * left by an older build is ignored and can be deleted by hand.
+    * replica from them ([[IVFModel.replica]]). Directories left by
+    * older builds (`packed/`, `centroids/`, `rotation/`, `meta/`) are
+    * ignored and can be deleted by hand.
     *
     * The loaded model is a search snapshot: every search sees the index
     * as of the model's first search, whose packed runs and replica later
@@ -1458,22 +1487,19 @@ object IVFModel {
     * index. */
   def load(spark: SparkSession, path: String): IVFModel = {
     import spark.implicits._
-    val meta = checkVersion(spark, path)
-    val params = IVFIndex.Params(
-      k = meta.getAs[Long]("k").toInt,
-      totalBits = meta.getAs[Long]("total_bits").toInt,
-      seed = meta.getAs[Long]("seed"))
-    val dim = meta.getAs[Long]("dim").toInt
-    val centroids = spark.read.parquet(s"$path/centroids")
-      .select("cluster_id", "centroid")
-      .as[(Int, Array[Float])].collect().sortBy(_._1).map(_._2)
-    val matrix = spark.read.parquet(s"$path/rotation")
-      .select("row_idx", "row")
-      .as[(Int, Array[Float])].collect().sortBy(_._1).map(_._2)
-    val rotator = Rotator.fromMatrix(dim, params.seed, matrix)
+    val (params, rotator, centroids) = readModel(spark, path)
     val index = entriesMinusDeletes(spark, path).as[IVFIndex.Entry]
     new IVFModel(params, rotator, centroids, rotator.rotateAll(centroids), index)
   }
+
+  /** The one on-disk entries layout, written by [[IVFModel.save]] and
+    * [[compact]]: one shuffle on the partition column buys ≤
+    * shuffle-partitions files in (cluster_id, id) order, where a bare
+    * partitionBy writes one file per cluster per task (tasks × K). */
+  private def writeEntries(entries: Dataset[_], dir: String): Unit =
+    entries.repartition(col("cluster_id"))
+      .sortWithinPartitions("cluster_id", "id")
+      .write.mode("overwrite").partitionBy("cluster_id").parquet(dir)
 
   /** Compaction: apply tombstones physically and merge the small files
     * accumulated by streaming ingest into one cluster-partitioned
@@ -1488,10 +1514,11 @@ object IVFModel {
     * untouched, and a crash between the two renames (a tiny metadata
     * window) leaves the complete compacted copy in
     * `entries_compacting` for recovery. The ingest checkpoint is
-    * preserved (it tracks SOURCE offsets, which remain valid). */
+    * preserved (it tracks SOURCE offsets, which remain valid). An index
+    * whose `model.bin` [[load]] refuses is refused before anything moves. */
   def compact(spark: SparkSession, path: String): Unit = {
     import org.apache.hadoop.fs.Path
-    checkVersion(spark, path)
+    readModel(spark, path)
     // reads entries + tombstones; also finishes any interrupted swap
     // first (recoverCompact), so a stale entries_compacting below is
     // genuinely a partial write, never an unconsumed complete copy
@@ -1503,9 +1530,7 @@ object IVFModel {
     // entriesMinusDeletes reads that back as an empty frame with the
     // static Entry schema, and the layout stays uniformly partitioned
     // for later streaming appends
-    compacted.repartition(col("cluster_id"))
-      .sortWithinPartitions("cluster_id", "id") // canonical on-disk order
-      .write.mode("overwrite").partitionBy("cluster_id").parquet(entriesNew.toString)
+    writeEntries(compacted, entriesNew.toString)
     val entries = new Path(s"$path/entries")
     val entriesOld = new Path(s"$path/entries_old")
     fs.delete(entriesOld, true)
@@ -1557,7 +1582,7 @@ final class IVFModel private[graft] (
 
   /** The ACTUAL cell count — ≥ params.k when the fat-cluster split
     * enriched the centroid set (params.k stays the REQUESTED K, which
-    * the meta persists). Every nprobe cap must use this, not params.k:
+    * model.bin persists). Every nprobe cap must use this, not params.k:
     * capping at the requested K on an enriched index silently
     * under-probes and loses recall with no error. */
   def numClusters: Int = centroids.length
@@ -1677,12 +1702,12 @@ final class IVFModel private[graft] (
     new IVFModel(params.copy(queryBits = bits), rotator, centroids,
       rotatedCentroids, index, runs, shared)
 
-  /** Persist the index columnar, partitioned by cluster (the Spark
-    * analogue of IVF::save, IVF.hpp:219-252), so a read filtered to
-    * some clusters opens only those directories. `entries` (`index`),
-    * `centroids`, `rotation` and `meta` ([[saveMeta]]) are the index's
-    * only persisted form: no packed scan runs are written, and a
-    * loaded model packs them from its entries ([[runs]]).
+  /** Persist the index (the Spark analogue of IVF::save,
+    * IVF.hpp:219-252): `entries` (`index`) as columnar parquet
+    * partitioned by cluster, so a read filtered to some clusters opens
+    * only those directories, and `model.bin` ([[saveMeta]]). They are
+    * the index's only persisted form: no packed scan runs are written,
+    * and a loaded model packs them from its entries ([[runs]]).
     *
     * save is a FULL REPLACE of whatever index lived at `path`: besides
     * overwriting entries, it clears tombstones, streaming-ingest batch
@@ -1703,39 +1728,43 @@ final class IVFModel private[graft] (
     val spark = index.sparkSession
     import org.apache.hadoop.fs.Path
     val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    // repartition on the partition column BEFORE partitionBy: without
-    // it every task writes one file per cluster it holds (tasks × K
-    // files — at K=4096 on a 1000-executor cluster that is a
-    // small-files explosion on the index store). One shuffle buys ≤
-    // shuffle-partitions files and the same canonical (cluster_id, id)
-    // on-disk order compact produces, so save and compact emit
-    // identical layouts.
-    index.repartition(col("cluster_id"))
-      .sortWithinPartitions("cluster_id", "id")
-      .write.mode("overwrite").partitionBy("cluster_id").parquet(s"$path/entries")
+    IVFModel.writeEntries(index, s"$path/entries")
     saveMeta(path)
     Seq("deletes", "entries_batches", "_ingest_log", "_ingest_checkpoint",
       "entries_old", "entries_compacting")
       .foreach(d => fs.delete(new Path(s"$path/$d"), true))
   }
 
-  /** Persist only the model metadata (centroids, rotation, params) —
-    * seeds an index directory whose entries arrive separately, e.g.
-    * via the streaming ingest path (IVFIndex.appendStream). */
+  /** Persist only the model metadata, `model.bin`, on the driver with
+    * no Spark job — seeds an index directory whose entries arrive
+    * separately (IVFIndex.appendStream). Big-endian: the ints magic,
+    * [[IVFIndex.FormatVersion]], k and totalBits, the long seed, the ints
+    * dim and centroid count, then the floats of the raw centroids and
+    * the paddedDim² rotation. Written as `_model.bin.inprogress`, then
+    * renamed over `model.bin` (where a rename cannot replace a file, the
+    * old one is deleted first): a reader never sees a partial file. */
   def saveMeta(path: String): Unit = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
-      .toDF("cluster_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    // persist the rotation matrix: loads must not depend on bit-exact
-    // reconstruction in a different environment
-    rotator.matrix.zipWithIndex.map { case (r, i) => (i, r) }.toSeq
-      .toDF("row_idx", "row")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/rotation")
-    Seq((params.k, params.totalBits, params.seed, rotator.dim, IVFIndex.FormatVersion))
-      .toDF("k", "total_bits", "seed", "dim", "format_version")
-      .coalesce(1).write.mode("overwrite").json(s"$path/meta")
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(path).getFileSystem(index.sparkSession.sessionState.newHadoopConf())
+    val tmp = new Path(s"$path/${IVFModel.ModelFileInProgress}")
+    val out = new java.io.DataOutputStream(
+      new java.io.BufferedOutputStream(fs.create(tmp, true), 1 << 16))
+    try {
+      Seq(IVFModel.ModelMagic, IVFIndex.FormatVersion, params.k, params.totalBits)
+        .foreach(out.writeInt)
+      out.writeLong(params.seed)
+      Seq(rotator.dim, centroids.length).foreach(out.writeInt)
+      (centroids.iterator ++ rotator.matrix.iterator).foreach { row =>
+        val buf = java.nio.ByteBuffer.allocate(4 * row.length)
+        buf.asFloatBuffer().put(row)
+        out.write(buf.array())
+      }
+    } finally out.close()
+    val dst = new Path(s"$path/${IVFModel.ModelFile}")
+    if (!fs.rename(tmp, dst)) {
+      fs.delete(dst, false)
+      require(fs.rename(tmp, dst), s"saveMeta: could not rename $tmp to $dst")
+    }
   }
 
   /** Approximate top-k: (query_id, neighbor_id, rk), rk 1-based in

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.Tables
-import graft.ann.{IVFIndex, IVFModel, RaBitQ, SweepEval}
+import graft.ann.{CentroidRouter, IVFIndex, IVFModel, RaBitQ, SweepEval}
 
 /** ANN index-pipeline queries (SURVEY.md §2 B2–B9). These are
   * rows-only-checked by the driver (k-means/rotation are not
@@ -96,7 +96,7 @@ object AnnQueries {
   /** The b3/b9 centroid sidecar (raw-space centroids widened to
     * double): written by BOTH queries so each is self-contained under
     * a Verify subset run; identical content, idempotent overwrite. */
-  private[operators] def writeCentroidSidecar(
+  private[graft] def writeCentroidSidecar(
       spark: SparkSession, m: graft.ann.IVFModel): DataFrame = {
     import spark.implicits._
     val cents = m.centroids.zipWithIndex
@@ -106,20 +106,20 @@ object AnnQueries {
     // writeResidualSidecar discipline): five queries write this
     // sidecar, and two running concurrently in one JVM must not race
     // mode("overwrite") on the same path (one job deleting the dir
-    // while the other commits). A repeat write of the same model's
-    // identical content is skipped; a different model still
-    // overwrites, preserving the sequential last-write semantics.
-    if (OracleSide.enabled) centroidSidecarWritten.synchronized {
-      val key = System.identityHashCode(m)
-      if (!centroidSidecarWritten.contains(key)) {
+    // while the other commits). A repeat write by the model (held
+    // weakly, by identity: identity hashes collide) whose centroids the
+    // sidecar holds is skipped; any other model overwrites, preserving
+    // the sequential last-write semantics.
+    if (OracleSide.enabled) centroidSidecarLock.synchronized {
+      if (centroidSidecarOf.get ne m) {
         OracleSide.write(cents, "b3_centroids")
-        centroidSidecarWritten.add(key)
+        centroidSidecarOf = new java.lang.ref.WeakReference(m)
       }
     }
     cents
   }
-  private val centroidSidecarWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+  private val centroidSidecarLock = new Object
+  private var centroidSidecarOf = new java.lang.ref.WeakReference[graft.ann.IVFModel](null)
 
   def ivfAssign(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.vec_l2sq
@@ -270,9 +270,7 @@ object AnnQueries {
     val m = model(spark, dir)
     val q = VectorQueries.queryVectors(spark, dir, 1).head
     val qRot = m.rotator.rotate(q._2)
-    val nearest = m.rotatedCentroids.zipWithIndex
-      .map { case (c, i) => (graft.functions.VectorFunctions.l2sq(qRot, c), i) }
-      .minBy(_._1)._2
+    val nearest = CentroidRouter.rankFlat(m.rotatedCentroids, qRot, 1)(0)
     val qc = RaBitQ.prepareQuery(qRot, m.rotatedCentroids(nearest))
     val exBits = m.params.exBits
     val dim = m.rotator.paddedDim
@@ -345,9 +343,7 @@ object AnnQueries {
     val m = model(spark, dir)
     val q = VectorQueries.queryVectors(spark, dir, 1).head
     val qRot = m.rotator.rotate(q._2)
-    val nearest = m.rotatedCentroids.zipWithIndex
-      .map { case (c, i) => (graft.functions.VectorFunctions.l2sq(qRot, c), i) }
-      .minBy(_._1)._2
+    val nearest = CentroidRouter.rankFlat(m.rotatedCentroids, qRot, 1)(0)
     val queryBits = 14 // the reference's BQUERY (Searcher.hpp:16)
     val qc = RaBitQ.prepareQuery(qRot, m.rotatedCentroids(nearest), queryBits)
     val dim = m.rotator.paddedDim
@@ -691,7 +687,9 @@ object AnnQueries {
   /** b13: incremental index ingest — the embeddings table arrives as a
     * STREAM, is quantized against the session model's fixed centroids,
     * and lands as cluster-partitioned parquet that IVFModel.load serves
-    * unchanged (continuous corpus growth; the ANN analogue of d6).
+    * unchanged (continuous corpus growth; the ANN analogue of d6). The
+    * index dir is seeded with the model file alone (`saveMeta`, a
+    * driver write with no Spark job), then the stream lands its batches.
     * Output: per-cluster entry counts of the stream-built index. */
   def streamIndexIngest(spark: SparkSession, dir: String): DataFrame =
     // Scratch: repeated bench/verify runs must not accumulate temp
@@ -705,48 +703,13 @@ object AnnQueries {
       // any vector fails the hash
       writeCentroidSidecar(spark, m)
       val src = graft.streaming.EventOps.symlinkedDir(dir, "embeddings.parquet")
-      // §2.6 overlap (r16 verdict item 6): saveMeta (three tiny
-      // single-task write jobs, ~0.75 s of strictly sequential job
-      // floor) touches only centroids/rotation/meta subdirs and
-      // appendStream only _ingest_*/entries_batches — disjoint paths,
-      // neither reads the other's output; only IVFModel.load below
-      // needs both. Submitting saveMeta from its own thread lets the
-      // scheduler back-fill its tasks into the stream's idle gaps
-      // (job descriptions are thread-local, FIFO scheduling). See
-      // [[overlapped]] for the failure contract.
-      overlapped(() => m.saveMeta(idxDir)) {
-        IVFIndex.appendStream(spark, m, src, idxDir)
-      }
+      m.saveMeta(idxDir)
+      IVFIndex.appendStream(spark, m, src, idxDir)
       IVFModel.load(spark, idxDir).index.toDF()
         .groupBy("cluster_id")
         .agg(count(lit(1)).as("n_vectors"))
         .orderBy("cluster_id")
     }
-
-  /** Runs `side` on a pool thread while `body` runs on this one, and
-    * returns only once BOTH have finished — also when `body` throws:
-    * an orphaned side job would keep writing into a directory the
-    * caller is about to unwind (b13: saveMeta into the Scratch dir a
-    * later reap deletes). A `side` failure rethrows its own exception
-    * (not the future's CompletionException wrapper), so b13 never
-    * loads a half-written meta; when both fail, `body`'s exception
-    * wins and carries the side's as suppressed. */
-  private[graft] def overlapped[T](side: () => Unit)(body: => T): T = {
-    val job = java.util.concurrent.CompletableFuture.runAsync(() => side())
-    def await(): Unit =
-      try job.join()
-      catch { case e: java.util.concurrent.CompletionException if e.getCause != null =>
-        throw e.getCause
-      }
-    val out =
-      try body
-      catch { case e: Throwable =>
-        try await() catch { case s: Throwable => e.addSuppressed(s) }
-        throw e
-      }
-    await()
-    out
-  }
 
   /** b14: attribute-filtered search — only even vec_ids are eligible
     * (standing in for any metadata predicate); the filter is a

@@ -223,9 +223,9 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("b13 operator: overlapped saveMeta + ingest still yields the model's counts") {
-    // streamIndexIngest submits saveMeta concurrently with the ingest
-    // stream (§2.6 job overlap); the output must stay exactly the
-    // per-cluster counts of the session model's assignment
+    // streamIndexIngest seeds the index dir with saveMeta and then runs
+    // the ingest stream; the output must stay exactly the per-cluster
+    // counts of the session model's assignment
     val sf = "/root/testdata/sf0.001"
     val out = operators.AnnQueries.streamIndexIngest(spark, sf)
       .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
@@ -234,35 +234,6 @@ class SourcesSpec extends AnyFunSuite {
       .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
     assert(out == expected,
       "overlapped b13 must reproduce the batch assignment counts")
-  }
-
-  test("b13 overlap: a failing ingest waits for saveMeta; a failing saveMeta surfaces its cause") {
-    import operators.AnnQueries.overlapped
-    // the ingest body throws while the meta job is still running: the
-    // exception may surface only after the meta job has finished (an
-    // orphaned saveMeta would keep writing into the unwound Scratch dir)
-    val metaDone = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val ingest = intercept[IllegalStateException] {
-      overlapped(() => { Thread.sleep(300); metaDone.set(true) }) {
-        throw new IllegalStateException("ingest failed")
-      }
-    }
-    assert(ingest.getMessage == "ingest failed")
-    assert(metaDone.get, "the ingest failure surfaced before the meta job finished")
-    // a failing meta job rethrows its own exception, not the future's
-    // CompletionException wrapper, even when the body succeeded
-    val meta = intercept[java.io.IOException] {
-      overlapped(() => throw new java.io.IOException("meta failed"))(42)
-    }
-    assert(meta.getMessage == "meta failed")
-    // both fail: the body's exception wins, the meta failure rides along
-    val both = intercept[IllegalStateException] {
-      overlapped(() => throw new java.io.IOException("meta failed")) {
-        throw new IllegalStateException("ingest failed")
-      }
-    }
-    assert(both.getSuppressed.toSeq.map(_.getMessage) == Seq("meta failed"))
-    assert(overlapped(() => ())(42) == 42)
   }
 
   test("streaming ingest: append to a batch-saved index; second call only new files") {
@@ -517,8 +488,17 @@ class SourcesSpec extends AnyFunSuite {
     m.save(dir)
     assert(!new java.io.File(s"$dir/packed").exists,
       "save must persist entries only, no packed runs")
+    // the index is its entries and one model file: no metadata dataset
+    assert(new java.io.File(dir).list().filterNot(_.startsWith(".")).toSet ==
+      Set("entries", "model.bin"))
     val loaded = IVFModel.load(spark, dir)
     assert(loaded.params == m.params)
+    def bits(rows: Array[Array[Float]]) =
+      rows.map(_.map(java.lang.Float.floatToRawIntBits).toSeq).toSeq
+    assert(loaded.rotator.dim == m.rotator.dim)
+    assert(bits(loaded.rotator.matrix) == bits(m.rotator.matrix))
+    assert(bits(loaded.centroids) == bits(m.centroids))
+    assert(bits(loaded.rotatedCentroids) == bits(m.rotatedCentroids))
     assert(loaded.index.count() == m.index.count())
     val qs = Tables.embeddings(spark, sf)
       .filter($"vec_id" < 4).select($"vec_id".cast("long"), $"embedding")
@@ -530,6 +510,84 @@ class SourcesSpec extends AnyFunSuite {
     try assert(rows(loaded) == a,
       "the packed scan of a loaded model diverged from the source model's scan")
     finally loaded.freeSearchCaches()
+  }
+
+  test("model.bin: saveMeta runs no Spark job; load and compact fail fast on a bad file") {
+    import java.nio.file.{Files, Paths}
+    val sf = "/root/testdata/sf0.001"
+    val m = operators.AnnQueries.model(spark, sf)
+    val dir = Files.createTempDirectory("model_file").toString
+    m.save(dir)
+    val (jobs, _, _) = SparkJobs.jobsAndShuffleBytes(spark)(m.saveMeta(dir))
+    assert(jobs.isEmpty, s"saveMeta ran Spark jobs: $jobs")
+    IVFModel.deleteIds(dir, Seq(1L, 3L).toDF("id"))
+    val file = Paths.get(dir, "model.bin")
+    val good = Files.readAllBytes(file)
+    // a file edited in place loses its checksum shadow too: the local
+    // file system would otherwise reject it before its header is read
+    def put(bytes: Array[Byte]): Unit = {
+      Files.write(file, bytes)
+      Files.deleteIfExists(Paths.get(dir, ".model.bin.crc"))
+    }
+    def tree(): Set[(String, Long)] = {
+      val walk = Files.walk(Paths.get(dir, "entries"))
+      try walk.iterator.asScala.map(p => (p.toString, Files.size(p))).toSet
+      finally walk.close()
+    }
+    val entries = tree()
+    val v2 = good.clone()
+    java.nio.ByteBuffer.wrap(v2).putInt(4, 2)
+    for ((name, arrange, says) <- Seq[(String, () => Unit, String)](
+        ("missing", () => Files.delete(file), "rebuild"),
+        ("truncated", () => put(good.dropRight(4)), "bytes"),
+        ("version 2", () => put(v2), "version 2"))) {
+      arrange()
+      for ((op, run) <- Seq[(String, () => Unit)](
+          ("load", () => IVFModel.load(spark, dir)), ("compact", () => IVFModel.compact(spark, dir)))) {
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains(dir) && e.getMessage.contains(says),
+          s"$op on a $name model file: ${e.getMessage}")
+      }
+      assert(tree() == entries, s"a compact refused on a $name model file changed entries/")
+      assert(Files.exists(Paths.get(dir, "deletes")), s"a refused compact dropped the tombstones")
+    }
+    // a leftover in-progress file is never read, and the next saveMeta replaces it
+    put(good)
+    Files.write(Paths.get(dir, "_model.bin.inprogress"), Array.fill[Byte](100)(7))
+    val live = m.index.count() - 2
+    assert(IVFModel.load(spark, dir).index.count() == live)
+    m.saveMeta(dir)
+    assert(!Files.exists(Paths.get(dir, "_model.bin.inprogress")))
+    assert(Files.readAllBytes(file).sameElements(good))
+    IVFModel.compact(spark, dir)
+    assert(IVFModel.load(spark, dir).index.count() == live)
+  }
+
+  test("the b3 centroid sidecar holds the centroids of the last model that wrote it") {
+    import java.nio.file.{Files, Paths}
+    val m = operators.AnnQueries.model(spark, "/root/testdata/sf0.001")
+    val other = new IVFModel(m.params, m.rotator, m.centroids.map(_.map(_ * 2)),
+      m.rotatedCentroids, m.index)
+    def read(): Seq[Seq[Double]] =
+      spark.read.parquet(s"${operators.OracleSide.Dir}/b3_centroids")
+        .orderBy("cluster_id").collect().map(_.getSeq[Double](1)).toSeq
+    def want(model: IVFModel) = model.centroids.map(_.map(_.toDouble).toSeq).toSeq
+    // the sidecar of an earlier oracle run is set aside and put back
+    val side = Paths.get(operators.OracleSide.Dir, "b3_centroids")
+    val kept = Paths.get(operators.OracleSide.Dir, s"b3_centroids.spec-${System.nanoTime}")
+    if (Files.exists(side)) Files.move(side, kept)
+    sys.props("graft.oracle.side") = "1"
+    try {
+      operators.AnnQueries.writeCentroidSidecar(spark, m)
+      operators.AnnQueries.writeCentroidSidecar(spark, other)
+      assert(read() == want(other), "a second model skipped its sidecar write")
+      operators.AnnQueries.writeCentroidSidecar(spark, m)
+      assert(read() == want(m), "a model written before the last one skipped its write")
+    } finally {
+      sys.props -= "graft.oracle.side"
+      org.apache.commons.io.FileUtils.deleteDirectory(side.toFile)
+      if (Files.exists(kept)) Files.move(kept, side)
+    }
   }
 
   test("a loaded model searches the index as of its first search; a reload sees the change") {

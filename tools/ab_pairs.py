@@ -2,7 +2,8 @@
 """Paired, order-alternating A/B of two checkouts on one benchmark workload.
 
     python3 tools/ab_pairs.py --parent <checkout> --change <checkout> \\
-        --workload <name> --pairs N [--seed-base S] [--seconds 8] [--out f.json]
+        --workload <name> --pairs N [--seed-base S] [--seconds 8] [--out f.json] \\
+        [--detail save_s,load_s,compact_s]
 
 Pair i runs both checkouts at seed S+i: the parent first on even pairs,
 the change first on odd ones, because the side that runs first can win
@@ -26,6 +27,14 @@ and a verdict:
                     reads better than every parent run;
   flat              neither.
 
+`--detail a,b` also reports the named detail metrics, read from each
+run's `perfbench: detail <name> = <value> <unit>` stderr lines (a name
+matches a detail called exactly that or ending in `.<name>`, so
+`save_s` finds `ann.IVFModel.save_s`): both medians, the parent's
+Q3-Q1, the change in % and the change's wins split by run order, where
+a win is a lower value (a higher one for a rate, unit `1/s`). Details
+are not end-to-end metrics, so they get no verdict.
+
 The JSON report (every run's seed, order, exit code, result and the
 summary) is written under .bench_build/ of the current directory, which
 is git-ignored; so are the records perfbench leaves in each checkout's
@@ -35,12 +44,14 @@ name .bench_build/x.json; a name that leaves .bench_build/ is rejected.
 import argparse
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
 import time
 
 OUT_DIR = ".bench_build"
+DETAIL = re.compile(r"perfbench: detail (\S+) = (\S+) (\S+)$")
 
 
 def quartiles(xs):
@@ -60,7 +71,15 @@ def run_one(checkout, workload, seed, seconds):
     env.pop("CARGO_TARGET_DIR", None)
     t0 = time.time()
     p = subprocess.run(cmd, cwd=checkout, env=env, capture_output=True, text=True)
-    rec = {"exit": p.returncode, "wall_s": round(time.time() - t0, 1), "result": None}
+    rec = {"exit": p.returncode, "wall_s": round(time.time() - t0, 1), "result": None,
+           "detail": {}}
+    for ln in p.stderr.splitlines():
+        m = DETAIL.match(ln.strip())
+        if m:
+            try:
+                rec["detail"][m.group(1)] = {"value": float(m.group(2)), "unit": m.group(3)}
+            except ValueError:
+                pass
     lines = [ln for ln in p.stdout.splitlines() if ln.strip()]
     try:
         rec["result"] = json.loads(lines[-1])
@@ -77,44 +96,89 @@ def metric(rec, name):
     return v.get("value") if isinstance(v, dict) else v
 
 
+def detail(rec, name):
+    """(value, unit) of the run's detail metric `name` or `*.name`."""
+    if rec["exit"] != 0:
+        return None, None
+    for k, v in rec.get("detail", {}).items():
+        if k == name or k.endswith("." + name):
+            return v["value"], v["unit"]
+    return None, None
+
+
+def compare(runs, get, higher):
+    """Medians, quartile spreads, change % and order-split wins of one
+    metric, `get(run, side)` reading its value (None when absent)."""
+    par = [get(r, "parent") for r in runs]
+    chg = [get(r, "change") for r in runs]
+    pv = [v for v in par if v is not None]
+    cv = [v for v in chg if v is not None]
+    if not pv or not cv:
+        return None, pv, cv
+    pq1, pmed, pq3 = quartiles(pv)
+    cq1, cmed, cq3 = quartiles(cv)
+    sign = 1.0 if higher else -1.0
+    wins = {"parent_first": [0, 0], "change_first": [0, 0]}  # [change wins, pairs]
+    for r, p, c in zip(runs, par, chg):
+        if p is None or c is None:
+            continue
+        w = wins["parent_first" if r["parent_first"] else "change_first"]
+        w[1] += 1
+        if sign * (c - p) > 0:
+            w[0] += 1
+    return {"parent_median": pmed, "change_median": cmed, "parent_iqr": pq3 - pq1,
+            "change_pct": 100.0 * (cmed - pmed) / abs(pmed) if pmed else 0.0,
+            "wins": wins,
+            # relative change, positive = better
+            "gain": sign * (cmed - pmed) / abs(pmed) if pmed else 0.0,
+            "spread": max((pq3 - pq1) / abs(pmed) if pmed else 0.0,
+                          (cq3 - cq1) / abs(cmed) if cmed else 0.0),
+            "all_better": min(sign * c for c in cv) > max(sign * p for p in pv)}, pv, cv
+
+
 def summarize(runs, spec):
     out = {}
     for m in spec["end_to_end"]:
         name, bound, higher = m["name"], m["bound"], m["better"] == "higher"
-        par = [metric(r["parent"], name) for r in runs]
-        chg = [metric(r["change"], name) for r in runs]
-        pv = [v for v in par if v is not None]
-        cv = [v for v in chg if v is not None]
-        if not pv or not cv:
+        s, pv, cv = compare(runs, lambda r, side: metric(r[side], name), higher)
+        if s is None:
             out[name] = {"verdict": "no data", "parent_n": len(pv), "change_n": len(cv)}
             continue
-        pq1, pmed, pq3 = quartiles(pv)
-        cq1, cmed, cq3 = quartiles(cv)
-        sign = 1.0 if higher else -1.0
-        # relative change, positive = better
-        gain = sign * (cmed - pmed) / abs(pmed) if pmed else 0.0
-        wins = {"parent_first": [0, 0], "change_first": [0, 0]}  # [change wins, pairs]
-        for r, p, c in zip(runs, par, chg):
-            if p is None or c is None:
-                continue
-            w = wins["parent_first" if r["parent_first"] else "change_first"]
-            w[1] += 1
-            if sign * (c - p) > 0:
-                w[0] += 1
-        spread = max((pq3 - pq1) / abs(pmed) if pmed else 0.0,
-                     (cq3 - cq1) / abs(cmed) if cmed else 0.0)
-        all_better = min(sign * c for c in cv) > max(sign * p for p in pv)
+        gain, all_better = s.pop("gain"), s.pop("all_better")
         if gain < -bound:
             verdict = "worse past bound"
-        elif spread > bound and not all_better:
+        elif s["spread"] > bound and not all_better:
             verdict = "unresolved"
         else:
             verdict = "flat"
-        out[name] = {"parent_median": pmed, "change_median": cmed,
-                     "parent_iqr": pq3 - pq1,
-                     "change_pct": 100.0 * (cmed - pmed) / abs(pmed) if pmed else 0.0,
-                     "wins": wins, "spread": spread, "bound": bound, "verdict": verdict}
+        out[name] = dict(s, bound=bound, verdict=verdict)
     return out
+
+
+def summarize_detail(runs, names):
+    out = {}
+    for name in names:
+        units = {detail(r[side], name)[1] for r in runs for side in ("parent", "change")}
+        units.discard(None)
+        s, pv, cv = compare(runs, lambda r, side: detail(r[side], name)[0], "1/s" in units)
+        if s is None:
+            out[name] = {"parent_n": len(pv), "change_n": len(cv)}
+            continue
+        s.pop("gain")
+        s.pop("all_better")
+        out[name] = dict(s, unit="/".join(sorted(units)))
+    return out
+
+
+def print_rows(rows, tail):
+    for name, s in rows.items():
+        if "parent_median" not in s:
+            print(f"{name:16s} {s.get('verdict', 'no data')}")
+            continue
+        pf, cf = s["wins"]["parent_first"], s["wins"]["change_first"]
+        print(f"{name:16s} {s['parent_median']:10.4g} {s['change_median']:10.4g} "
+              f"{s['parent_iqr']:9.3g} {s['change_pct']:+6.1f}% "
+              f"{pf[0]:>5d}/{pf[1]:<6d} {cf[0]:>5d}/{cf[1]:<6d}  {tail(s)}")
 
 
 def failed_share(runs, side):
@@ -139,6 +203,8 @@ def main():
     ap.add_argument("--seed-base", type=int, default=1)
     ap.add_argument("--seconds", type=float, default=8)
     ap.add_argument("--out", help=f"report file name, written under {OUT_DIR}/")
+    ap.add_argument("--detail", default="",
+                    help="comma-separated detail metrics to report, e.g. save_s,load_s")
     args = ap.parse_args()
     if args.pairs < 1:
         ap.error(f"--pairs must be positive, got {args.pairs}")
@@ -180,26 +246,24 @@ def main():
         runs.append(pair)
 
     summary = summarize(runs, spec)
+    details = summarize_detail(runs, [n for n in args.detail.split(",") if n])
     fails = {s: failed_share(runs, s) for s in ("parent", "change")}
     os.makedirs(os.path.dirname(out), exist_ok=True)
     with open(out, "w") as fh:
         json.dump({"workload": args.workload, "pairs": args.pairs, "seconds": args.seconds,
                    "parent": os.path.abspath(args.parent),
                    "change": os.path.abspath(args.change),
-                   "failed_share": fails, "summary": summary, "runs": runs}, fh, indent=1)
+                   "failed_share": fails, "summary": summary, "detail": details,
+                   "runs": runs}, fh, indent=1)
 
     print(f"{args.workload}: {args.pairs} pairs, failed ops parent {fails['parent']:.1%} "
           f"change {fails['change']:.1%}")
     print(f"{'metric':16s} {'parent':>10s} {'change':>10s} {'par IQR':>9s} {'chg %':>7s} "
           f"{'wins p-first':>12s} {'wins c-first':>12s}  verdict")
-    for name, s in summary.items():
-        if "parent_median" not in s:
-            print(f"{name:16s} {s['verdict']}")
-            continue
-        pf, cf = s["wins"]["parent_first"], s["wins"]["change_first"]
-        print(f"{name:16s} {s['parent_median']:10.4g} {s['change_median']:10.4g} "
-              f"{s['parent_iqr']:9.3g} {s['change_pct']:+6.1f}% "
-              f"{pf[0]:>5d}/{pf[1]:<6d} {cf[0]:>5d}/{cf[1]:<6d}  {s['verdict']}")
+    print_rows(summary, lambda s: s["verdict"])
+    if details:
+        print("detail (not end-to-end: no verdict)")
+        print_rows(details, lambda s: s["unit"])
     print(f"report: {out}")
 
 
