@@ -40,8 +40,12 @@ import graft.ann.{IVFIndex, KnnExact, SweepEval}
   * clusters the reference's flat initializer would. The index is built
   * by graft's one IVF recipe (IVFIndex.Params): exact nearest-centroid
   * assignment plus the fat-cell split, which ships only on its
-  * self-probe's "artifact" verdict; the meta's `split_probe` key
-  * records that probe.
+  * self-probe's "artifact" verdict. The meta records what the build
+  * reports (IVFModel.buildReport): `split_probe` (that self-probe,
+  * null when no cell was fat), `sample_rows`, `train_s` (k-means fit
+  * plus sample fetch), `quantize_s` (assign, rotate, quantize, pack),
+  * `k_trained`, `k_shipped`, and the built index's `max_cell` and
+  * `mean_cell`.
   *
   * Usage: runMain graft.SweepRef [outCsv]   (defaults below; sized by
   * SPARK_GRAFT_SWEEP_{VECS,DIM,K,NQ,TOPK,TRAIN} for smoke runs;
@@ -209,10 +213,13 @@ object SweepRef {
       val model = IVFIndex.build(spark, base,
         IVFIndex.Params(k = kClusters, totalBits = 4, maxTrainRows = trainRows.toLong,
           kmeansInitSteps = initSteps))
-      val splitProbe = IVFIndex.lastSplitProbe
+      // what the build did (IVFModel.buildReport)
+      val report = model.buildReport
+      val train = report.flatMap(_.train)
       val tBuild = (System.nanoTime() - t1) / 1e9
       val kFinal = model.centroids.length
       println(f"index built (K=$kClusters%d -> $kFinal%d cells, B=4) in $tBuild%.1f s")
+      report.foreach(r => println(s"build report: $r"))
 
       // --- exact ground truth with distances (ratio denominator) ---
       val t2 = System.nanoTime()
@@ -350,11 +357,22 @@ object SweepRef {
         // the auto-split self-probe's verdict (raw toString doubles —
         // locale-safe); null when the build never sized cells or found
         // no fat ones
-        val probeJson = splitProbe.map { p =>
+        val probeJson = train.flatMap(_.split.probe).map { p =>
           s"""{"flat_recall":${p.flatRecall},"split_recall":${p.splitRecall},""" +
             s""""nprobe":${p.nprobe},"nq":${p.nQueries},"verdict":"${p.verdict}",""" +
             s""""k_flat":${p.kFlat},"k_split":${p.kSplit}}"""
         }.getOrElse("null")
+        // the rest of the build report, walls rounded like build_s
+        def json(v: Option[Any]): String = v.fold("null")(_.toString)
+        def secs(v: Option[Double]): String = json(v.map(x => math.rint(x * 10) / 10))
+        val reportJson =
+          s""""sample_rows":${json(train.map(_.sampleRows))},""" +
+            s""""train_s":${secs(train.map(_.trainS))},""" +
+            s""""quantize_s":${secs(report.map(_.quantizeS))},""" +
+            s""""k_trained":${json(train.map(_.kTrained))},""" +
+            s""""k_shipped":${json(report.map(_.kShipped))},""" +
+            s""""max_cell":${json(report.map(_.maxCell))},""" +
+            s""""mean_cell":${json(report.map(_.meanCell))}"""
         // the kernel-roofline row: how far the LUT estimate kernel
         // sits from measured stream bandwidth — embeds the committed
         // results/kernel_roofline.json verbatim when present so the
@@ -374,7 +392,7 @@ object SweepRef {
           } else "null"
         }
         val meta =
-          s"""{"commit":"$commit","dim":$dim,"n_vecs":$nVecs,"k":$kClusters,"nq":$nq,"topk":$topk,"mode":"${if (highAcc) "highacc" else "plain"}","batch_nq":$batchNq,"batch_query_bits":14,"build_s":$buildS,"gt_s":$gtS,"topics":$topics,"noise":$noise,"blend":$blend,"init_mode":"k-means||","init_steps":$initSteps,"split_probe":$probeJson,"kernel_roofline":$rooflineJson,"k_final":$kFinal,"calibration_target":"openai1536_exhaf4 row 1 recall@5=0.653; two-knob series (r10): noise alone (0.35:0.807R,0.40:0.884F,0.45:0.892F,0.50:0.354-0.452R; R=rising,F=catch-all-collapsed) and split-factor on the rising corpora (0.50+f4:0.152@5, 0.45+f16:0.197@5 - f16 split the 0.45 regime's single 84%-of-corpus cell). recall@5 on this mixture family is either catch-all-inflated or well below 0.653; the published run keeps the hard-side rising curve (series in SURVEY 6)"}""" + "\n"
+          s"""{"commit":"$commit","dim":$dim,"n_vecs":$nVecs,"k":$kClusters,"nq":$nq,"topk":$topk,"mode":"${if (highAcc) "highacc" else "plain"}","batch_nq":$batchNq,"batch_query_bits":14,"build_s":$buildS,"gt_s":$gtS,"topics":$topics,"noise":$noise,"blend":$blend,"init_mode":"k-means||","init_steps":$initSteps,"split_probe":$probeJson,$reportJson,"kernel_roofline":$rooflineJson,"k_final":$kFinal,"calibration_target":"openai1536_exhaf4 row 1 recall@5=0.653; two-knob series (r10): noise alone (0.35:0.807R,0.40:0.884F,0.45:0.892F,0.50:0.354-0.452R; R=rising,F=catch-all-collapsed) and split-factor on the rising corpora (0.50+f4:0.152@5, 0.45+f16:0.197@5 - f16 split the 0.45 regime's single 84%-of-corpus cell). recall@5 on this mixture family is either catch-all-inflated or well below 0.653; the published run keeps the hard-side rising curve (series in SURVEY 6)"}""" + "\n"
         Files.write(Paths.get(out + ".meta.json"), meta.getBytes(StandardCharsets.UTF_8))
       }
       // write the ladder-only CSV + its meta sibling now: a failure in

@@ -24,7 +24,9 @@ import graft.functions.VectorFunctions.l2sq
   *    runs (the reference's FastScan blocks), the model's one in-memory
   *    form; its `index` Dataset is an uncached view of them. On disk the
   *    entries are parquet partitioned by cluster, beside `model.bin`, the
-  *    header of the reference's single binary blob (IVF.hpp:219-252).
+  *    header of the reference's single binary blob (IVF.hpp:219-252);
+  *  - the built model carries what the build did
+  *    ([[IVFModel.buildReport]]); the library prints nothing.
   *
   * Search (reference: IVF::search, IVF.hpp:295-324):
   *  - one prepare (`IVFModel.prepare`) rotates a query and ranks all K
@@ -515,9 +517,10 @@ object IVFIndex {
     * train time is the dominant one-time build cost. */
   private val KMeansMaxIter = 12
 
-  /** Outcome of the split's build-time self-probe (sweep meta
-    * records it; [[lastSplitProbe]] holds the most recent build's,
-    * None when no cell was fat). `verdict` is "artifact" (the split
+  /** Outcome of the split's build-time self-probe ([[selfProbe]]):
+    * candidate recall of the flat and the split centroids at `nprobe`
+    * over `nQueries` sample queries, and K before (`kFlat`) and after
+    * (`kSplit`) the candidate split. `verdict` is "artifact" (the split
     * ships) or "mass" (the flat centroids ship). */
   final case class SplitProbe(
       flatRecall: Double,
@@ -527,14 +530,45 @@ object IVFIndex {
       verdict: String,
       kFlat: Int,
       kSplit: Int)
-  // ThreadLocal, not a plain var: two builds interleaving on different
-  // driver threads (parallel model builds, parallel suites) must not
-  // misattribute each other's probe verdict to the sweep meta / specs.
-  private val lastSplitProbeTl =
-    ThreadLocal.withInitial[Option[SplitProbe]](() => None)
-  private[graft] def lastSplitProbe: Option[SplitProbe] = lastSplitProbeTl.get
-  private[graft] def lastSplitProbe_=(v: Option[SplitProbe]): Unit =
-    lastSplitProbeTl.set(v)
+
+  /** What [[splitFatClusters]] did, sized on the training sample: the
+    * trained cells held `meanRows` sample rows on average and `maxRows`
+    * at most, and `fatCells` of them held more than `capRows`
+    * ([[AutoSplitFactor]] × `meanRows`). `undersplit` children of the
+    * candidate split still held an estimated share above the cap (the
+    * split's width and depth bounds), the worst `worstResidual` rows.
+    * `probe` is the self-probe's verdict, None when no cell was fat
+    * (the trained centroids ship as they are). */
+  final case class SplitOutcome(
+      fatCells: Int,
+      capRows: Double,
+      meanRows: Double,
+      maxRows: Long,
+      undersplit: Int,
+      worstResidual: Double,
+      probe: Option[SplitProbe])
+
+  /** The training half of a [[BuildReport]]: the sample's rows, the
+    * trainer's wall in seconds (the k-means fit plus the sample's
+    * fetch to the driver), K as trained, and the split's outcome. */
+  final case class TrainReport(
+      sampleRows: Int,
+      trainS: Double,
+      kTrained: Int,
+      split: SplitOutcome)
+
+  /** What a build did, on the model it returns
+    * ([[IVFModel.buildReport]]): its training (None when the centroids
+    * were given, [[buildWithCentroids]]), K as shipped, the wall in
+    * seconds of the assign, rotate, quantize and pack pass (the layout
+    * shuffle included), and the built index's largest cell and its
+    * entries per shipped cell. */
+  final case class BuildReport(
+      train: Option[TrainReport],
+      kShipped: Int,
+      quantizeS: Double,
+      maxCell: Long,
+      meanCell: Double)
 
   /** Exact nearest centroid: one strict-< scan in raw space, the lower
     * index winning a tie. The build's one assignment kernel — the
@@ -681,11 +715,13 @@ object IVFIndex {
     * artifacts (recall holds at equal nprobe), not genuine neighbor
     * mass (the r10 sweep measured recall trading ~1:1 with
     * work-per-probe there); the single quantize pass then assigns
-    * against the centroids returned. */
+    * against the centroids returned. Returns them with the
+    * [[SplitOutcome]] (the sizing, the undersplit children and the
+    * verdict), which [[build]] puts in its [[BuildReport]]. */
   private[graft] def splitFatClusters(
       sample: Array[Array[Float]],
       centroids: Array[Array[Float]],
-      params: Params): Array[Array[Float]] = {
+      params: Params): (Array[Array[Float]], SplitOutcome) = {
     val k0 = centroids.length
     val assign = new Array[Int](sample.length)
     parallelFor(sample.length) { i => assign(i) = nearestCentroid(sample(i), centroids) }
@@ -694,7 +730,9 @@ object IVFIndex {
     val mean = sample.length.toDouble / k0
     val cap = math.max(AutoSplitFactor * mean, 2.0)
     val fat = counts.indices.filter(counts(_) > cap)
-    if (fat.isEmpty) { lastSplitProbe = None; return centroids }
+    def outcome(undersplit: Int, worstResidual: Double, probe: Option[SplitProbe]) =
+      SplitOutcome(fat.length, cap, mean, counts.max, undersplit, worstResidual, probe)
+    if (fat.isEmpty) return (centroids, outcome(0, 0.0, None))
     val keepFrac = new Array[Double](k0)
     fat.foreach { c =>
       val m = math.ceil(counts(c) / cap)
@@ -722,27 +760,17 @@ object IVFIndex {
           params.seed ^ (c * 0xC2B2AE3D27D4EB4FL), 0).foreach { case (cent, est) =>
             // the split bounds width at pts.length/8 and depth at 4, so
             // a cell needing more than ~512 children (or a stubborn
-            // depth-4 residual) can terminate above cap — make that
-            // LOUD instead of invisible (the cap is a contract)
+            // depth-4 residual) can terminate above cap — the outcome
+            // counts those children (the cap is a contract)
             if (est > cap) { undersplit += 1; worstResidual = math.max(worstResidual, est) }
             out += cent
           }
       }
     }
-    println(f"[split] fat=${fat.length}%d of $k0%d cells " +
-      f"(cap=$cap%.1f sample rows, mean=$mean%.1f, max=${counts.max}%d); " +
-      f"K $k0%d -> ${out.length}%d")
-    if (undersplit > 0)
-      println(f"[split] WARNING: $undersplit%d terminal child(ren) still above cap " +
-        f"after splitting (worst est ${worstResidual}%.0f vs cap $cap%.1f) — " +
-        f"width/depth bounds hit; raise the member subsample or lower the factor")
     val enriched = out.toArray
     val probe = selfProbe(sample, centroids, enriched, params)
-    lastSplitProbe = Some(probe)
-    println(f"[split-probe] flat=${probe.flatRecall}%.3f split=${probe.splitRecall}%.3f " +
-      f"@nprobe=${probe.nprobe}%d (${probe.nQueries}%d sample queries) -> " +
-      f"${probe.verdict}%s (K=${if (probe.verdict == "artifact") enriched.length else k0}%d)")
-    if (probe.verdict == "artifact") enriched else centroids
+    (if (probe.verdict == "artifact") enriched else centroids,
+      outcome(undersplit, worstResidual, Some(probe)))
   }
 
   /** The split's self-probe: does replacing the fat centroids with
@@ -805,7 +833,9 @@ object IVFIndex {
   }
 
   /** Train centroids (k-means, then the fat-cell split) + assign +
-    * quantize. `df` must have (idCol: long, vecCol: array<float>). */
+    * quantize. `df` must have (idCol: long, vecCol: array<float>). The
+    * model's [[IVFModel.buildReport]] says what the build did
+    * ([[BuildReport]]), the split's verdict included. */
   def build(
       spark: SparkSession,
       df: DataFrame,
@@ -853,6 +883,7 @@ object IVFIndex {
     // from on micro-topic corpora
     val train = sampledP.toDF("vec")
       .withColumn("features", array_to_vector(col("vec")))
+    val t0 = System.nanoTime()
     val (trained, sample) = try {
       val trained = new KMeans()
         .setK(params.k).setSeed(params.seed)
@@ -866,18 +897,25 @@ object IVFIndex {
       sampledP.toLocalIterator.foreach(rows += _)
       (trained, rows.toArray)
     } finally sampledP.unpersist(blocking = false)
-    val centroids = splitFatClusters(sample, trained, params)
+    val trainS = (System.nanoTime() - t0) / 1e9
+    val (centroids, split) = splitFatClusters(sample, trained, params)
 
-    buildWithCentroids(spark, data, centroids, dim, params)
+    buildWithCentroids(spark, data, centroids, dim, params,
+      Some(TrainReport(sample.length, trainS, trained.length, split)))
   }
 
+  /** The build after training: assign, rotate, quantize and pack `data`
+    * against `centroids`. The model's [[BuildReport]] carries `train`
+    * (None when the centroids were given). */
   private[graft] def buildWithCentroids(
       spark: SparkSession,
       data: DataFrame,
       centroids: Array[Array[Float]],
       dim: Int,
-      params: Params): IVFModel = {
+      params: Params,
+      train: Option[TrainReport] = None): IVFModel = {
     import spark.implicits._
+    val t0 = System.nanoTime()
     val rotator = new Rotator(dim, params.seed)
     val rotatedCentroids = rotator.rotateAll(centroids)
     val bc = spark.sparkContext.broadcast((rotator, centroids, rotatedCentroids))
@@ -911,12 +949,17 @@ object IVFIndex {
     val quantized = entries.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
+      val k = centroids.length
       val runs = IVFModel.packCached(blockLayout(spark, quantized),
-        rotator.paddedDim, exBits, centroids.length)
-      runs.foreach(_ => ()) // materialize before unpersist
+        rotator.paddedDim, exBits, k)
+      // materializes the runs before the unpersist, and sizes the cells
+      val cells = runs.map(_.map(rs => if (rs == null) 0L else rs.iterator.map(_.n.toLong).sum))
+        .fold(new Array[Long](k)) { (a, b) => a.indices.foreach(c => a(c) += b(c)); a }
+      val report = BuildReport(train, k, (System.nanoTime() - t0) / 1e9,
+        cells.max, cells.sum.toDouble / k)
       val index = spark.createDataset(runs.mapPartitions(_.flatMap(unpackRuns)))
-      new IVFModel(params, rotator, centroids, rotatedCentroids, index, runs,
-        new IVFModel.SharedSearchState)
+      new IVFModel(params, rotator, centroids, rotatedCentroids, index,
+        new IVFModel.SharedSearchState(() => runs), Some(report))
     } finally quantized.unpersist(blocking = false)
   }
 
@@ -1178,15 +1221,24 @@ object IVFModel {
     * bytes of all runs ([[IVFIndex.PackedRun.bytes]]). */
   private[graft] final case class Layout(clusterParts: Array[Array[Int]], packedBytes: Long)
 
-  /** Search-time state SHARED across [[IVFModel.withQueryBits]] copies,
-    * all of it a function of the centroids and the runs, and all of it
-    * dropped by [[IVFModel.freeSearchCaches]]: the broadcast of the
+  /** Search-time state SHARED across [[IVFModel.withQueryBits]] copies:
+    * the model's runs, made by `makeRuns` on first use, and, all of it
+    * a function of the centroids and the runs and all of it dropped by
+    * [[IVFModel.freeSearchCaches]], the broadcast of the
     * [[PrepareState]], the runs' [[Layout]], and the replica with its
     * broadcast. A call-scoped model ([[IVFModel.searchFiltered]]) has
     * its parent's rotator and centroids, so its state reads the
     * parent's prepare broadcast (`prepareOwner`) and makes none. */
-  private[graft] final class SharedSearchState(parent: SharedSearchState = null) {
+  private[graft] final class SharedSearchState(
+      makeRuns: () => RDD[IVFIndex.Runs], parent: SharedSearchState = null) {
     val prepareOwner: SharedSearchState = if (parent == null) this else parent.prepareOwner
+    @volatile private var runsV: RDD[IVFIndex.Runs] = _
+    def runs: RDD[IVFIndex.Runs] = Option(runsV).getOrElse(synchronized {
+      if (runsV == null) runsV = makeRuns()
+      runsV
+    })
+    /** The runs if they were made: what a release frees. */
+    def madeRuns: Option[RDD[IVFIndex.Runs]] = Option(runsV)
     @volatile var prepareBc: Broadcast[PrepareState] = _
     @volatile var layout: Layout = _
     @volatile var replica: IVFIndex.Runs = _
@@ -1208,8 +1260,10 @@ object IVFModel {
   /** A model's runs: `entries` packed into one [[IVFIndex.Runs]] per
     * partition ([[IVFIndex.packRuns]]; `dim` is the padded dim, the
     * residual and ex_code length), each run trimmed, persisted
-    * MEMORY_AND_DISK, filled by the first action over them (adaptive
-    * execution runs an `entries` plan's exchanges here). */
+    * MEMORY_AND_DISK, filled by the first action over them. Adaptive
+    * execution runs an `entries` plan's exchanges (a tombstone
+    * anti-join's broadcast) here, so a model over `entries` calls this
+    * on its first search ([[SharedSearchState.runs]]), not when made. */
   private[ann] def packCached(entries: Dataset[IVFIndex.Entry], dim: Int, exBits: Int,
       nClusters: Int): RDD[IVFIndex.Runs] =
     entries.rdd.mapPartitions(it =>
@@ -1472,11 +1526,13 @@ object IVFModel {
   /** Load a persisted index (analogue of IVF::load, IVF.hpp:254-293)
     * from its one on-disk form: `model.bin`, read on the driver, and
     * `entries` plus any committed ingest batches. Tombstoned ids (see
-    * [[deleteIds]]) are subtracted with an anti-join. Packed scan runs
-    * are never read from disk: the loaded model's `index` is that
-    * uncached read, and its first search packs the runs from it
-    * ([[IVFModel.runs]]) and, under the replica cap, fetches its
-    * replica from them ([[IVFModel.replica]]). Directories left by
+    * [[deleteIds]]) are subtracted with an anti-join. Load runs no
+    * Spark job. Packed scan runs are never read from disk: the loaded
+    * model's `index` is that uncached read, and its first search packs
+    * the runs from it ([[IVFModel.runs]]) and, under the replica cap,
+    * fetches its replica from them ([[IVFModel.replica]]); that search
+    * also runs the anti-join's broadcast when `deletes/` exists. The
+    * model has no [[IVFModel.buildReport]]. Directories left by
     * older builds (`packed/`, `centroids/`, `rotation/`, `meta/`) are
     * ignored and can be deleted by hand.
     *
@@ -1560,25 +1616,37 @@ object IVFModel {
   * ([[IVFIndex.unpackRuns]]); a loaded or hand-made model keeps the
   * `index` it was given and packs its runs from it on first use. Under
   * the replica cap the searches scan the model's [[replica]], a driver
-  * copy of the runs in one canonical order, instead. */
+  * copy of the runs in one canonical order, instead.
+  *
+  * `buildReport` says what the build did ([[IVFIndex.BuildReport]]):
+  * set on a model made by [[IVFIndex.build]] (or from given centroids)
+  * and on its [[withQueryBits]] copies, None on a loaded, a hand-made
+  * or a call-scoped model. */
 final class IVFModel private[graft] (
     val params: IVFIndex.Params,
     val rotator: Rotator,
     val centroids: Array[Array[Float]],
     val rotatedCentroids: Array[Array[Float]],
     val index: Dataset[IVFIndex.Entry],
-    @transient private[graft] val runs: RDD[IVFIndex.Runs],
-    @transient private[graft] val shared: IVFModel.SharedSearchState) extends Serializable {
+    @transient private[graft] val shared: IVFModel.SharedSearchState,
+    val buildReport: Option[IVFIndex.BuildReport]) extends Serializable {
   import IVFIndex.Entry
 
   /** A model over `index`: its runs are `index` packed per partition in
-    * `index`'s order ([[IVFModel.packCached]]), filled by the first search. */
+    * `index`'s order ([[IVFModel.packCached]]), made and filled by the
+    * first search, so making the model runs no Spark job. */
   def this(params: IVFIndex.Params, rotator: Rotator,
       centroids: Array[Array[Float]], rotatedCentroids: Array[Array[Float]],
       index: Dataset[IVFIndex.Entry]) =
     this(params, rotator, centroids, rotatedCentroids, index,
-      IVFModel.packCached(index, rotator.paddedDim, params.exBits, centroids.length),
-      new IVFModel.SharedSearchState)
+      new IVFModel.SharedSearchState(() =>
+        IVFModel.packCached(index, rotator.paddedDim, params.exBits, centroids.length)),
+      None)
+
+  /** The packed runs, one [[IVFIndex.Runs]] per partition: a built
+    * model's from its build, any other's packed from `index` on first
+    * use and shared with its [[withQueryBits]] copies. */
+  private[graft] def runs: RDD[IVFIndex.Runs] = shared.runs
 
   /** The ACTUAL cell count — ≥ params.k when the fat-cluster split
     * enriched the centroid set (params.k stays the REQUESTED K, which
@@ -1596,15 +1664,18 @@ final class IVFModel private[graft] (
     * model recomputes them from its build's shuffle output, any other
     * re-packs them from `index`). For long-lived sessions cycling
     * through many models, where N throwaway models would otherwise pin
-    * N packed copies until GC.
+    * N packed copies until GC. On a model never searched it makes
+    * nothing and runs no job.
     *
     * The replica's broadcast is DESTROYED: a [[searchAll]] frame built
     * under the replica cap before this call fails if run after it, so
     * build the frame again. */
   def freeSearchCaches(): Unit = {
     shared.synchronized {
-      runs.unpersist(blocking = true) // so no async removal races the re-cache
-      runs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      shared.madeRuns.foreach { runs =>
+        runs.unpersist(blocking = true) // so no async removal races the re-cache
+        runs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }
       // the prepare broadcast is unpersisted, not destroyed: an
       // over-cap searchAll frame not yet run still holds the old handle
       // and can re-fetch it. The replica's is destroyed: unpersist keeps
@@ -1695,12 +1766,12 @@ final class IVFModel private[graft] (
       shared.replicaBc
     })
 
-  /** Same model, same runs and index, same shared search state,
-    * different query-side estimate precision (Params.queryBits) — the
-    * knob costs nothing to flip. */
+  /** Same model, same runs and index, same shared search state and
+    * build report, different query-side estimate precision
+    * (Params.queryBits) — the knob costs nothing to flip. */
   def withQueryBits(bits: Int): IVFModel =
     new IVFModel(params.copy(queryBits = bits), rotator, centroids,
-      rotatedCentroids, index, runs, shared)
+      rotatedCentroids, index, shared, buildReport)
 
   /** Persist the index (the Spark analogue of IVF::save,
     * IVF.hpp:219-252): `entries` (`index`) as columnar parquet
@@ -1774,7 +1845,11 @@ final class IVFModel private[graft] (
     *
     * A model's first search runs one job over its [[runs]], the
     * [[layout]], whose packed byte count picks the path for the model's
-    * life. Under the replica cap ([[IVFModel.replicaMaxBytes]]) the
+    * life. On a model that did not come from a build, that search also
+    * makes the runs from `index`, and so runs whatever jobs `index`'s
+    * plan needs first (a loaded index's tombstone broadcast, see
+    * [[IVFModel.load]]). An empty query set runs no job. Under the
+    * replica cap ([[IVFModel.replicaMaxBytes]]) the
     * call scans the model's [[replica]] on the driver, query slices
     * spread across driver cores, one pool per query: the layout job
     * also ships the runs the replica is built from (unless a runs
@@ -1798,7 +1873,8 @@ final class IVFModel private[graft] (
       k: Int,
       nprobe: Int): DataFrame = {
     IVFModel.requireKNprobe(k, nprobe)
-    replica().fold(searchOnDriver(spark, queries, k, nprobe)) { r =>
+    if (queries.isEmpty) new KnnExact.DriverTopK(k).frame(spark, Array.emptyLongArray)
+    else replica().fold(searchOnDriver(spark, queries, k, nprobe)) { r =>
       val probes = prepareAll(queries, nprobe)
       val accs = IVFIndex.searchAccs(spark)
       val n = probes.length
@@ -1843,24 +1919,24 @@ final class IVFModel private[graft] (
       nprobe: Int,
       allowedIds: DataFrame): DataFrame = {
     IVFModel.requireKNprobe(k, nprobe)
-    if (queries.isEmpty) new KnnExact.DriverTopK(k).frame(spark, Array.emptyLongArray)
-    else withAllowed(allowedIds, queries, nprobe)(_.search(spark, queries, k, nprobe))
+    withAllowed(allowedIds, queries, nprobe)(_.search(spark, queries, k, nprobe))
   }
 
   /** `body` run on [[searchFiltered]]'s call-scoped model: the entries
     * of [[allowedOnly]] in the clusters `queries` probe (a `cluster_id
     * isin` filter, which prunes whole partition directories on a loaded
     * index), with this model's rotator, centroids, params and prepare
-    * broadcast. The scoped model's runs are unpersisted before this
-    * returns; the prepare broadcast is this model's and stays. */
+    * broadcast. The scoped model's runs, if `body` made them, are
+    * unpersisted before this returns; the prepare broadcast is this
+    * model's and stays. */
   private[graft] def withAllowed[T](allowedIds: DataFrame,
       queries: Array[(Long, Array[Float])], nprobe: Int)(body: IVFModel => T): T = {
     val probed = prepareAll(queries, nprobe).flatMap(_._3).distinct
     val entries = allowedOnly(allowedIds).filter(col("cluster_id").isin(probed.toIndexedSeq: _*))
-    val scoped = new IVFModel(params, rotator, centroids, rotatedCentroids, entries,
-      IVFModel.packCached(entries, rotator.paddedDim, params.exBits, numClusters),
-      new IVFModel.SharedSearchState(shared))
-    try body(scoped) finally scoped.runs.unpersist(blocking = true)
+    val state = new IVFModel.SharedSearchState(() =>
+      IVFModel.packCached(entries, rotator.paddedDim, params.exBits, numClusters), shared)
+    try body(new IVFModel(params, rotator, centroids, rotatedCentroids, entries, state, None))
+    finally state.madeRuns.foreach(_.unpersist(blocking = true))
   }
 
   /** The index semi-joined to `allowedIds`: [[searchFiltered]]'s
@@ -2044,8 +2120,8 @@ final class IVFModel private[graft] (
     * global top-k under that order is the top-k of the partition
     * top-k's, so the rows, rk included, are those of the distributed
     * merge ([[KnnExact.mergeTopK]]) whatever order partitions finish in.
-    * The query broadcast is destroyed once the job has finished. An
-    * empty query set runs no job. */
+    * The query broadcast is destroyed once the job has finished.
+    * [[search]] never calls it with an empty query set. */
   private[graft] def searchOnDriver(
       spark: SparkSession,
       queries: Array[(Long, Array[Float])],
@@ -2053,21 +2129,19 @@ final class IVFModel private[graft] (
       nprobe: Int): DataFrame = {
     IVFModel.requireKNprobe(k, nprobe)
     val top = new KnnExact.DriverTopK(k)
-    if (queries.nonEmpty) {
-      // locals only: the closure below must not capture the model
-      val sbc = prepareBroadcast(spark)
-      val bc = spark.sparkContext.broadcast(prepareAll(queries, nprobe))
-      val accs = IVFIndex.searchAccs(spark)
-      val (qb, eb) = (params.queryBits, params.exBits)
-      val candidates = runs.mapPartitions { it =>
-        val rotCents = sbc.value._2
-        it.flatMap(IVFIndex.scanRuns(bc.value, _, rotCents, k, qb, eb, accs))
-      }
-      try spark.sparkContext.runJob(candidates,
-        (it: Iterator[(Long, Array[Long], Array[Double])]) => it.toArray,
-        (_: Int, rows: Array[(Long, Array[Long], Array[Double])]) => top.add(rows))
-      finally bc.destroy()
+    // locals only: the closure below must not capture the model
+    val sbc = prepareBroadcast(spark)
+    val bc = spark.sparkContext.broadcast(prepareAll(queries, nprobe))
+    val accs = IVFIndex.searchAccs(spark)
+    val (qb, eb) = (params.queryBits, params.exBits)
+    val candidates = runs.mapPartitions { it =>
+      val rotCents = sbc.value._2
+      it.flatMap(IVFIndex.scanRuns(bc.value, _, rotCents, k, qb, eb, accs))
     }
+    try spark.sparkContext.runJob(candidates,
+      (it: Iterator[(Long, Array[Long], Array[Double])]) => it.toArray,
+      (_: Int, rows: Array[(Long, Array[Long], Array[Double])]) => top.add(rows))
+    finally bc.destroy()
     top.frame(spark, queries.map(_._1))
   }
 

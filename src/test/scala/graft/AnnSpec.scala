@@ -769,10 +769,13 @@ class AnnSpec extends AnyFunSuite {
       val rnd = new scala.util.Random(i * 2654435761L)
       Array.fill(dim)(rnd.nextGaussian().toFloat * 3.0f)
     }
-    /** (flat centroids, `splitFatClusters`' output) for `region ++ far`. */
-    def runCase(region: Seq[Array[Float]]): (Array[Array[Float]], Array[Array[Float]]) = {
+    /** (flat centroids, `splitFatClusters`' centroids, its outcome) for
+      * `region ++ far`. */
+    def runCase(region: Seq[Array[Float]])
+        : (Array[Array[Float]], Array[Array[Float]], IVFIndex.SplitOutcome) = {
       val flat = Array.tabulate(dim)(_ => 0.0f) +: farCentroids
-      (flat, IVFIndex.splitFatClusters((region ++ far).toArray, flat, params))
+      val (out, outcome) = IVFIndex.splitFatClusters((region ++ far).toArray, flat, params)
+      (flat, out, outcome)
     }
   }
 
@@ -780,9 +783,9 @@ class AnnSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions.{count => cnt, lit, max => fmax}
     import SplitFixture._
-    val (flatA, outA) = runCase(artifactRegion)
-    assert(IVFIndex.lastSplitProbe.map(_.verdict).contains("artifact"),
-      s"planted sub-blob cell must split: ${IVFIndex.lastSplitProbe}")
+    val (flatA, outA, splitA) = runCase(artifactRegion)
+    assert(splitA.probe.map(_.verdict).contains("artifact"),
+      s"planted sub-blob cell must split: ${splitA.probe}")
     assert(outA.length > flatA.length,
       s"fat cell must split: K ${flatA.length} -> ${outA.length}")
 
@@ -828,21 +831,21 @@ class AnnSpec extends AnyFunSuite {
     // per cell against a cap of 120) nothing is sized fat, no probe
     // runs, and the SAME centroid array passes through
     val farC = farCentroids
-    val untouched = IVFIndex.splitFatClusters(far.toArray, farC, params)
+    val (untouched, balanced) = IVFIndex.splitFatClusters(far.toArray, farC, params)
     assert(untouched eq farC, "no cell over cap: the centroid set must pass through unchanged")
-    assert(IVFIndex.lastSplitProbe.isEmpty, "no fat cell: no self-probe verdict")
+    assert(balanced.probe.isEmpty, "no fat cell: no self-probe verdict")
   }
 
   test("auto split policy: self-probe ships the split on artifact cells, vetoes it on mass") {
     import SplitFixture._
-    val (flatA, outA) = runCase(artifactRegion)
-    val probeA = IVFIndex.lastSplitProbe.get
+    val (flatA, outA, splitA) = runCase(artifactRegion)
+    val probeA = splitA.probe.get
     assert(probeA.verdict == "artifact", s"planted sub-blob cell must split: $probeA")
     assert(outA.length > flatA.length, s"artifact verdict must ship the enriched set")
     assert(probeA.splitRecall >= probeA.flatRecall - 0.02, probeA.toString)
 
-    val (flatM, outM) = runCase(massRegion)
-    val probeM = IVFIndex.lastSplitProbe.get
+    val (flatM, outM, splitM) = runCase(massRegion)
+    val probeM = splitM.probe.get
     assert(probeM.verdict == "mass", s"wide-ball cell must NOT split: $probeM")
     assert(outM.length == flatM.length &&
       outM.zip(flatM).forall { case (a, b) => a sameElements b },
@@ -986,6 +989,42 @@ class AnnSpec extends AnyFunSuite {
       assert(IVFIndex.unpackRuns(rolled).map(fields).toSeq == entries.map(fields),
         s"B=$bits, rolled runs")
     }
+  }
+
+  test("build reports what it did on its model; other models report nothing") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(37)
+    val n = 600
+    val df = (0 until n).map(i => (i.toLong, randVec(rnd, 16))).toDF("vec_id", "embedding")
+    val m = IVFIndex.build(spark, df, IVFIndex.Params(k = 8, totalBits = 4))
+    val r = m.buildReport.getOrElse(fail("a built model has no build report"))
+    val t = r.train.getOrElse(fail("a build's report has no training"))
+    // the whole corpus fits the training budget: the sample is the corpus
+    assert(t.sampleRows == n && t.kTrained == 8 && t.trainS > 0 && r.quantizeS > 0, r.toString)
+    assert(r.kShipped == m.numClusters, r.toString)
+    // the cap is the whole sample: no cell is fat, no probe runs, and
+    // the trained centroids ship (the split specs cover the probe)
+    val s = t.split
+    assert(s.meanRows == n / 8.0 && s.capRows == n && s.maxRows >= s.meanRows &&
+      s.fatCells == 0 && s.probe.isEmpty && r.kShipped == t.kTrained, s.toString)
+    val cells = m.index.groupBy("cluster_id").count().as[(Int, Long)].collect().map(_._2)
+    assert(r.maxCell == cells.max && r.meanCell == n.toDouble / m.numClusters, r.toString)
+    assert(m.withQueryBits(14).buildReport == m.buildReport, "withQueryBits dropped the report")
+    // given centroids train nothing
+    val preset = IVFIndex.buildWithCentroids(spark, df, m.centroids, 16,
+      IVFIndex.Params(k = 8, totalBits = 4)).buildReport
+    assert(preset.exists(g => g.train.isEmpty && g.kShipped == m.numClusters &&
+      g.maxCell == r.maxCell), s"buildWithCentroids reported $preset")
+    val dir = java.nio.file.Files.createTempDirectory("build_report").toString
+    m.save(dir)
+    val qs = Array(0L -> randVec(rnd, 16))
+    for ((what, other) <- Seq(
+        "a loaded model" -> graft.ann.IVFModel.load(spark, dir),
+        "a hand-made model" -> new graft.ann.IVFModel(m.params, m.rotator, m.centroids,
+          m.rotatedCentroids, m.index),
+        "a call-scoped model" -> m.withAllowed(Seq(1L).toDF("id"), qs, 3)(scoped => scoped)))
+      assert(other.buildReport.isEmpty, s"$what reports a build")
+    m.freeSearchCaches()
   }
 
   test("a built and searched model caches one copy of its index: the packed runs") {
@@ -1182,6 +1221,12 @@ class AnnSpec extends AnyFunSuite {
     }
     val fresh = new graft.ann.IVFModel(m.params, m.rotator, m.centroids,
       m.rotatedCentroids, m.index)
+    // no queries: nothing to scan, so no layout and no job
+    val (idleJobs, _, _) = jobsAndShuffleBytes {
+      assert(fresh.search(spark, Array.empty, 10, 12).collect().isEmpty)
+    }
+    assert(idleJobs.isEmpty, s"a fresh model's search of no queries ran ${idleJobs.length} " +
+      s"Spark jobs, want 0: ${idleJobs.mkString("; ")}")
     val (layoutJobs, _, _) = jobsAndShuffleBytes(fresh.layout())
     assert(layoutJobs.length == 1,
       s"a fresh model's layout ran ${layoutJobs.length} Spark jobs, want 1: ${layoutJobs.mkString("; ")}")

@@ -11,12 +11,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * library object is an input no caller can see, and a stray value in
   * any deployment silently changes behaviour. The mains directly under
   * `graft/` (Bench, Verify, the sweeps and probes) are the only env
-  * readers, and they reject a malformed value by name. */
+  * readers, and they reject a malformed value by name. Nor does library
+  * code print: what it did is a value it returns (e.g. a built model's
+  * `buildReport`), and the mains print. */
 class LibraryEnvSpec extends AnyFunSuite {
   val LibraryPackages =
     Seq("ann", "ops", "operators", "functions", "streaming", "sources", "plans")
 
-  test("library packages read no environment variables") {
+  val EnvReads = Seq("sys.env", "System.getenv")
+  val Prints = Seq("println", "System.out", "System.err", "Console.")
+
+  /** One scan of the library sources: each line holding an [[EnvReads]]
+    * or a [[Prints]] pattern, with the patterns it holds. */
+  lazy val hits: Seq[(String, Seq[String])] = {
     val root = Paths.get("src/main/scala/graft")
     val files = LibraryPackages.flatMap { pkg =>
       val dir = root.resolve(pkg)
@@ -26,12 +33,25 @@ class LibraryEnvSpec extends AnyFunSuite {
       finally walk.close()
     }
     assert(files.size > 20, s"scan found only ${files.size} library sources")
-    val hits = for {
+    for {
       f <- files
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      if line.contains("sys.env") || line.contains("System.getenv")
-    } yield s"$f:${i + 1}: ${line.trim}"
-    assert(hits.isEmpty, hits.mkString("library code reads the environment:\n", "\n", ""))
+      found = (EnvReads ++ Prints).filter(line.contains)
+      if found.nonEmpty
+    } yield (s"$f:${i + 1}: ${line.trim}", found)
+  }
+
+  def assertNone(patterns: Seq[String], what: String): Unit = {
+    val bad = hits.collect { case (at, found) if found.exists(patterns.contains) => at }
+    assert(bad.isEmpty, bad.mkString(s"$what:\n", "\n", ""))
+  }
+
+  test("library packages read no environment variables") {
+    assertNone(EnvReads, "library code reads the environment")
+  }
+
+  test("library packages print nothing") {
+    assertNone(Prints, "library code prints")
   }
 
   test("a main's malformed numeric knob is rejected with a message naming it") {

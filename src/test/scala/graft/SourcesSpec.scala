@@ -521,6 +521,16 @@ class SourcesSpec extends AnyFunSuite {
     val (jobs, _, _) = SparkJobs.jobsAndShuffleBytes(spark)(m.saveMeta(dir))
     assert(jobs.isEmpty, s"saveMeta ran Spark jobs: $jobs")
     IVFModel.deleteIds(dir, Seq(1L, 3L).toDF("id"))
+    // load runs no job, tombstones included: the runs, and with them the
+    // anti-join's broadcast, wait for the first search; freeing a model
+    // never searched makes none
+    var loaded: IVFModel = null
+    val (loadJobs, _, _) = SparkJobs.jobsAndShuffleBytes(spark) {
+      loaded = IVFModel.load(spark, dir)
+      loaded.freeSearchCaches()
+    }
+    assert(loadJobs.isEmpty && loaded.shared.madeRuns.isEmpty,
+      s"load and a free ran ${loadJobs.length} Spark jobs: ${loadJobs.mkString("; ")}")
     val file = Paths.get(dir, "model.bin")
     val good = Files.readAllBytes(file)
     // a file edited in place loses its checksum shadow too: the local
