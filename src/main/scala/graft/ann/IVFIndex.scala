@@ -959,7 +959,7 @@ object IVFIndex {
         cells.max, cells.sum.toDouble / k)
       val index = spark.createDataset(runs.mapPartitions(_.flatMap(unpackRuns)))
       new IVFModel(params, rotator, centroids, rotatedCentroids, index,
-        new IVFModel.SharedSearchState(() => runs), Some(report))
+        new IVFModel.SharedSearchState(runs), Some(report))
     } finally quantized.unpersist(blocking = false)
   }
 
@@ -1222,7 +1222,8 @@ object IVFModel {
   private[graft] final case class Layout(clusterParts: Array[Array[Int]], packedBytes: Long)
 
   /** Search-time state SHARED across [[IVFModel.withQueryBits]] copies:
-    * the model's runs, made by `makeRuns` on first use, and, all of it
+    * the model's runs, a build's as given, any other model's made by
+    * `makeRuns` on first use, and, all of it
     * a function of the centroids and the runs and all of it dropped by
     * [[IVFModel.freeSearchCaches]], the broadcast of the
     * [[PrepareState]], the runs' [[Layout]], and the replica with its
@@ -1231,6 +1232,9 @@ object IVFModel {
     * parent's prepare broadcast (`prepareOwner`) and makes none. */
   private[graft] final class SharedSearchState(
       makeRuns: () => RDD[IVFIndex.Runs], parent: SharedSearchState = null) {
+    /** State over runs already made (a build's): a release frees them
+      * even when the model was never searched. */
+    def this(made: RDD[IVFIndex.Runs]) = { this(() => made); runsV = made }
     val prepareOwner: SharedSearchState = if (parent == null) this else parent.prepareOwner
     @volatile private var runsV: RDD[IVFIndex.Runs] = _
     def runs: RDD[IVFIndex.Runs] = Option(runsV).getOrElse(synchronized {

@@ -1024,7 +1024,12 @@ class AnnSpec extends AnyFunSuite {
           m.rotatedCentroids, m.index),
         "a call-scoped model" -> m.withAllowed(Seq(1L).toDF("id"), qs, 3)(scoped => scoped)))
       assert(other.buildReport.isEmpty, s"$what reports a build")
+    // never searched, the built model still holds its build's runs:
+    // a release frees them
     m.freeSearchCaches()
+    org.apache.spark.GraftBlocks.settle(spark.sparkContext)
+    assert(!spark.sparkContext.getRDDStorageInfo.exists(_.id == m.runs.id),
+      "freeSearchCaches kept an unsearched built model's runs")
   }
 
   test("a built and searched model caches one copy of its index: the packed runs") {
